@@ -122,12 +122,6 @@ object GraftSource {
   /** Resolve the config's view in the engine catalog (db-scoped view
     * first, session view fallback — the same visibility CALL and the
     * REST routes use). */
-  /** Free the write path's compaction state for `view` (the last two
-    * generations' localCheckpoint blocks) — called when the table is
-    * dropped or re-created; see [[GraftWrites.release]]. */
-  def releaseCompactState(spark: SparkSession, view: String): Unit =
-    GraftWrites.release(spark, view)
-
   def resolveView(cfg: Config): String = resolveView(cfg, SparkSession.active)
 
   /** [[resolveView]] against an explicit session — the db registry is
@@ -290,21 +284,26 @@ private[sources] class GraftScan(cfg: GraftSource.Config,
       s"ReadSchema: ${required.simpleString}, " +
       s"PushedFilters: [${pushed.mkString(", ")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  // Spark asks again from a copied BatchScanExec; one snapshot per scan
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  private lazy val partitions: Array[InputPartition] = {
     val spark = SparkSession.active
     val view = GraftSource.resolveView(cfg)
     val base0 = spark.table(GraftSource.quote(view))
     val base = pushed.flatMap(GraftSource.toColumn)
       .foldLeft(base0)((d, c) => d.filter(c))
-    // defensive byte/row budget (post-pushdown): refuse to snapshot an
-    // offline-sized table onto the driver. BOUNDED probe — limit(B+1)
-    // stops counting at the budget, so the common in-budget read pays
-    // at most one budget-bounded pass instead of a full count() per
-    // scan; failing here with a named alternative beats an opaque
-    // driver OOM mid-collect
+    // defensive row budget (post-pushdown): refuse to snapshot an
+    // offline-sized table into local memory. ONE bounded pass — the
+    // collect stops one row past the budget, so it never holds more
+    // than an in-budget read would; failing here with a named
+    // alternative beats an opaque OOM mid-collect. A 0-column
+    // read (count-style) keeps the row count and ships no values.
     val probeCap = math.min(cfg.maxScanRows, (Int.MaxValue - 1).toLong).toInt + 1
-    val cnt = base.limit(probeCap).count()
-    if (cnt > cfg.maxScanRows) throw new IllegalStateException(
+    val rows: Array[Row] = base.select(
+      required.fieldNames.map(n => col(GraftSource.quote(n))).toSeq: _*)
+      .limit(probeCap).collect()
+    if (rows.length > cfg.maxScanRows) throw new IllegalStateException(
       s"graft scan of ${cfg.db}.${cfg.table} would snapshot more than " +
         s"${cfg.maxScanRows} rows " +
         s"(after pushdown) onto the driver, over the maxScanRows budget " +
@@ -312,11 +311,6 @@ private[sources] class GraftScan(cfg: GraftSource.Config,
         s"serving tier; for offline-scale data read the table's offline " +
         s"path (LOAD DATA ... OPTIONS(execute_mode='offline') + " +
         s"spark.read.parquet) or raise the 'maxScanRows' option.")
-    // 0-column read (count-style): keep the row count, ship no values
-    val rows: Array[Row] =
-      if (required.isEmpty) base.select().collect()
-      else base.select(
-        required.fieldNames.map(n => col(GraftSource.quote(n))): _*).collect()
     val n = math.max(1, if (cfg.numPartitions > 0) cfg.numPartitions
       else math.min(spark.sparkContext.defaultParallelism,
         math.max(1, rows.length / 1024)))
@@ -362,112 +356,31 @@ private[sources] class GraftWriteBuilder(cfg: GraftSource.Config,
 }
 
 private[sources] object GraftWrites {
-  // serializes the read-union-replace append: the streaming face
-  // commits from the stream-execution thread, so a concurrent batch
-  // write into the same table would otherwise lose whichever
-  // createOrReplaceTempView lands first (in-JVM lock — the catalog is
-  // session-scoped by contract, so cross-process writers don't exist)
-  private val commitLock = new Object
-
-  // per-view commit counter + the LogicalRDD ids of OUR last TWO
-  // compactions, for the epoch-depth bound below: the previous
-  // generation is kept alive for one more compaction cycle so a
-  // DataFrame a user derived from the view shortly before a
-  // compaction (whose lineage the local checkpoint truncated) stays
-  // readable for a full CompactEvery window before its blocks free
-  private val compactState = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Set[Int], Set[Int])]
-
-  /** How many commits may stack on a view before it is compacted into
-    * an eager local checkpoint (bounds the union/anti-join plan depth
-    * a long-running stream would otherwise grow without limit). */
-  private val CompactEvery = 16L
-
-  /** Drop `view`'s compaction generations: unpersist the last two
-    * generations' localCheckpoint blocks and forget the commit
-    * counter. Called from DROP TABLE / CREATE TABLE (re-incarnation) —
-    * without this the final two generations (potentially the whole
-    * table) stay pinned forever after a drop. */
-  def release(spark: SparkSession, view: String): Unit =
-    commitLock.synchronized {
-      compactState.remove(view).foreach { case (_, lastIds, prevIds) =>
-        val ids = lastIds ++ prevIds
-        if (ids.nonEmpty)
-          spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-            if (ids.contains(id)) rdd.unpersist(false)
-          }
-      }
-    }
-
   /** Driver-side commit shared by the batch and streaming faces: ONE
-    * catalog append of the buffered task rows. putIfAbsent routes
-    * through INSERT OR IGNORE (full-row dedup against the current
+    * catalog append of the buffered task rows, through the store's
+    * per-table lock (the streaming face commits from the
+    * stream-execution thread, beside any batch writer). putIfAbsent
+    * routes through INSERT OR IGNORE (full-row dedup against the current
     * snapshot) — which also makes streaming epoch REPLAYS idempotent. */
   def applyRows(cfg: GraftSource.Config, schema: StructType,
-      messages: Array[WriterCommitMessage],
-      spark: SparkSession): Unit = commitLock.synchronized {
+      messages: Array[WriterCommitMessage], spark: SparkSession): Unit = {
     val view = GraftSource.resolveView(cfg, spark)
+    val target = spark.table(GraftSource.quote(view)).schema
+    // rows arrive in WRITE-schema order; reorder to the live view's
+    val at = target.fieldNames.map(c =>
+      schema.fieldNames.indexWhere(_.equalsIgnoreCase(c)))
     val rows = messages.iterator.flatMap {
-      case GraftCommitRows(rs) => rs.iterator.map(Row.fromSeq)
+      case GraftCommitRows(rs) => rs.iterator.map(r => Row.fromSeq(at.map(r)))
       case _                   => Iterator.empty
     }.toSeq
-    val cur = spark.table(GraftSource.quote(view))
-    // rows arrive in WRITE-schema order; build with that schema, then
-    // reorder to the live view's column order (insertInto compares the
-    // (name, type) sequences positionally)
-    val df0 = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, math.max(1, messages.length)),
-      StructType(schema.fields.map(f =>
-        f.copy(nullable = true, metadata = Metadata.empty))))
-    val df = df0.select(
-      cur.columns.map(c => df0(GraftSource.quote(c))).toSeq: _*)
     // insertIgnore dedups against the current SNAPSHOT; the reference's
     // per-row put_if_absent also keeps exactly one of two identical NEW
     // rows arriving in the same batch/epoch — distinct() closes that gap
-    // (cheap: one exchange over commit-buffered rows, snapshot-bounded)
     if (cfg.putIfAbsent)
-      graft.GraftCatalog.insertIgnore(spark, view, df.distinct())
-    else graft.GraftCatalog.insertInto(spark, view, df)
-    compactIfDue(spark, view)
-  }
-
-  /** Every [[CompactEvery]] commits, replace the view's union chain
-    * with an eager local checkpoint: without this a long-running
-    * stream re-analyzes and re-executes an ever-deeper union (plus a
-    * full anti-join per epoch under putIfAbsent) — per-epoch cost
-    * growing with epoch count. The online store is memory-resident by
-    * contract, so the checkpointed blocks are the table itself.
-    * Generational free: local checkpoints TRUNCATE lineage, so a
-    * DataFrame a user derived from the view cannot recompute its
-    * LogicalRDD blocks once they unpersist — we therefore keep the
-    * previous compaction's blocks pinned through one further cycle
-    * (free generation N−2 when building N). A handle held across TWO
-    * compactions (≥ 2×CompactEvery commits) still invalidates — re-read
-    * `spark.table(...)` for a fresh snapshot; at steady state the
-    * overhead is one extra generation (bounded by table size). */
-  private def compactIfDue(spark: SparkSession, view: String): Unit = {
-    val (n, lastIds, prevIds) =
-      compactState.getOrElse(view, (0L, Set.empty[Int], Set.empty[Int]))
-    if ((n + 1) % CompactEvery != 0L) {
-      compactState(view) = (n + 1, lastIds, prevIds)
-      return
-    }
-    val compacted = spark.table(GraftSource.quote(view)).localCheckpoint(true)
-    compacted.createOrReplaceTempView(GraftSource.quote(view))
-    val newIds = compacted.queryExecution.analyzed.collectLeaves().collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-    }.toSet
-    // free only blocks WE pinned two compactions ago (never a user's
-    // own checkpointed data), now out of their grace window
-    spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (prevIds.contains(id) && !newIds.contains(id) &&
-          !lastIds.contains(id)) rdd.unpersist(false)
-    }
-    // putIfAbsent delta checkpoints superseded by this compaction join
-    // the N−1 generation: freed at the NEXT compaction (same grace
-    // window as the compaction snapshots themselves)
-    val drained = graft.GraftCatalog.drainPinnedDeltas(view)
-    compactState(view) = (n + 1, newIds, lastIds ++ drained)
+      graft.GraftCatalog.insertIgnore(spark, view, spark.createDataFrame(
+        java.util.Arrays.asList(rows: _*),
+        StructType(target.fields.map(_.copy(nullable = true)))).distinct())
+    else graft.GraftCatalog.insertValues(spark, view, rows)
   }
 }
 

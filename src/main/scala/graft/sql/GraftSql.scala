@@ -3215,16 +3215,11 @@ object GraftSql {
         p.expect("DROP"); p.expect("TABLE")
         if (p.accept("IF")) p.expect("EXISTS")
         val dropName = readTableName(p)
-        // free any INSERT OR IGNORE delta checkpoints pinned for the
-        // table (nothing can read them once the view is gone)
-        graft.GraftCatalog.freePinnedDeltas(spark, dropName)
-        graft.GraftCatalog.freePinnedDeltas(spark,
-          qualifyTable(spark, dropName))
-        spark.catalog.dropTempView(quoteId(dropName))
+        graft.GraftCatalog.drop(spark, dropName)
         // under USE db (or a db-qualified name) the real view carries
         // the db prefix — drop that too, or the table survives its
         // own DROP (surfaced by DROP DATABASE's not-empty check)
-        spark.catalog.dropTempView(quoteId(qualifyTable(spark, dropName)))
+        graft.GraftCatalog.drop(spark, qualifyTable(spark, dropName))
         idxMetaOf(spark).remove(dropName.toLowerCase)
         tableStatusOf(spark)._2.remove(dropName.toLowerCase)
         tableStatusOf(spark)._2.remove(
@@ -4454,10 +4449,10 @@ object GraftSql {
     sessionVarsOf(spark).clear()
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("__graftdb__"))
-      .foreach(n => spark.catalog.dropTempView(quoteId(n)))
+      .foreach(n => graft.GraftCatalog.drop(spark, n))
     // tables created through CREATE TABLE this session — dropping only
     // these leaves other suites' temp views alone
-    createdOf(spark).foreach(n => spark.catalog.dropTempView(quoteId(n)))
+    createdOf(spark).foreach(n => graft.GraftCatalog.drop(spark, n))
     createdOf(spark).clear()
   }
 

@@ -10,8 +10,7 @@ import graft.streaming.StreamingDedup
   * StreamingDedup.firstSeen operator over the FULL documents corpus of
   * a scale dir, delivered as a file stream in many micro-batches,
   * sinking the survivors through `writeStream.format("graft")` with
-  * putIfAbsent — enough epochs to cross the sink's CompactEvery=16
-  * epoch-compaction boundary. Records throughput (rows/sec), epoch
+  * putIfAbsent, in about 20 epochs. Records throughput (rows/sec), epoch
   * count, and the state-store trajectory (rows + bytes per progress
   * event), and asserts the end state: the sink table holds exactly one
   * row per distinct text, and state rows never exceed the distinct-
@@ -29,7 +28,7 @@ object StreamSoak {
     import spark.implicits._
 
     // deliver the corpus as 40 parquet files → 20 micro-batches at
-    // maxFilesPerTrigger=2 (crosses the sink's 16-commit compaction)
+    // maxFilesPerTrigger=2
     val srcDir = java.nio.file.Files
       .createTempDirectory("graft_soak_src").toString
     val ckpt = java.nio.file.Files

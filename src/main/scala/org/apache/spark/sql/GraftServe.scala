@@ -25,9 +25,10 @@ object GraftServe {
   private def cs(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
 
-  /** DataFrame over driver-built InternalRows with a SMALL stats hint:
-    * the request side of serving joins must stay broadcast-able, and a
-    * stats-less LogicalRDD defaults to `defaultSizeInBytes` (huge). */
+  /** DataFrame over locally built InternalRows with a stats hint. The
+    * request side of serving joins passes a SMALL one so it stays
+    * broadcast-able: a stats-less LogicalRDD defaults to
+    * `defaultSizeInBytes` (huge). */
   def internalRddDf(spark: SparkSession, rdd: RDD[InternalRow],
       schema: StructType, sizeHintBytes: Long): DataFrame = {
     val s = cs(spark)

@@ -189,9 +189,8 @@ class GraftSourceSpec extends SparkSpec {
     }
   }
 
-  test("streaming write into a DB-SCOPED table across many epochs " +
-      "(epoch commits resolve on the default session; union chain " +
-      "compacts past 16 commits)") {
+  test("DB-SCOPED streaming write: 20 epoch commits resolve on the " +
+      "default session") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     ddl("CREATE DATABASE IF NOT EXISTS conndb")
@@ -205,7 +204,7 @@ class GraftSourceSpec extends SparkSpec {
       .option("checkpointLocation", ckpt.toString)
       .outputMode("append").start()
     try {
-      // 20 epochs crosses the CompactEvery=16 compaction boundary
+      // 20 epochs, each one write to the online store
       (1 to 20).foreach { i =>
         mem.addData((i, s"r$i")); q.processAllAvailable()
       }

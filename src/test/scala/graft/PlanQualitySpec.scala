@@ -303,4 +303,55 @@ class PlanQualitySpec extends SparkSpec {
     GraftSql.statement(spark, "SET @@execute_mode = 'online'")
     GraftSql.resetCatalogState(spark)
   }
+
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Int = {
+    var n = 0
+    df.queryExecution.analyzed.foreach(_ => n += 1)
+    n
+  }
+
+  test("online table plan size does not grow with the INSERT count") {
+    import graft.sql.GraftSql
+    GraftSql.statement(spark, "CREATE TABLE pq_ins (id bigint, v string)")
+    try {
+      def insert(i: Int): Unit =
+        GraftSql.statement(spark, s"INSERT INTO pq_ins VALUES ($i, 'v$i')")
+      def shape = {
+        val df = spark.table("pq_ins")
+        (planNodes(df), df.rdd.getNumPartitions)
+      }
+      insert(1)
+      val one = shape
+      (2 to 60).foreach(insert)
+      assert(shape == one, s"after 1 insert: $one, after 60: $shape")
+      assert(spark.table("pq_ins").filter("id > 50").count() == 10)
+    } finally GraftSql.statement(spark, "DROP TABLE pq_ins")
+  }
+
+  test("a fold keeps an earlier DataFrame readable; DROP frees its blocks") {
+    import graft.sql.GraftSql
+    val sc = spark.sparkContext
+    GraftSql.statement(spark, "CREATE TABLE pq_fold (id bigint, v string)")
+    val n = GraftCatalog.FoldRows + 1
+    // each call appends past the fold constant, so each one folds
+    def append(from: Int): Unit = GraftCatalog.insertValues(spark, "pq_fold",
+      (from until from + n).map(i => org.apache.spark.sql.Row(i.toLong, s"v$i")))
+    def pinned: Set[Int] = spark.table("pq_fold").queryExecution.analyzed
+      .collectLeaves().collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      }.toSet.intersect(sc.getPersistentRDDs.keySet.toSet)
+    append(0)
+    val first = pinned
+    assert(first.nonEmpty, "the fold pinned no blocks")
+    val derived = spark.table("pq_fold").filter("id % 2 = 0")
+    val evens = derived.count()
+    append(n)
+    val second = pinned
+    assert(second.nonEmpty && second.intersect(first).isEmpty)
+    assert(derived.count() == evens)
+    assert(spark.table("pq_fold").count() == 2L * n)
+    GraftSql.statement(spark, "DROP TABLE pq_fold")
+    val left = (first ++ second).intersect(sc.getPersistentRDDs.keySet.toSet)
+    assert(left.isEmpty, s"blocks still pinned after DROP: $left")
+  }
 }

@@ -13,14 +13,13 @@ import graft.sql.GraftSql
   * serving template (GraftSql.serveRequest) must see each epoch's
   * rows the moment the sink commits them (its staleness check
   * invalidates on the view re-registration the commit performs), and
-  * must never serve a frame from a half-committed batch. ≥10 epochs,
-  * crossing no compaction boundary is NOT assumed — 20 epochs crosses
-  * the CompactEvery=16 localCheckpoint compaction too. */
+  * must never serve a frame from a half-committed batch. 20 epochs,
+  * each one append to the table's tail in the online store. */
 class ServeWhileIngestSpec extends SparkSpec {
   import spark.implicits._
 
-  test("served responses equal the batch answer over each epoch's " +
-      "committed snapshot (20 epochs, across a compaction)") {
+  test("served responses equal the batch answer after each of 20 " +
+      "epoch commits") {
     implicit val sqlCtx = spark.sqlContext
     Seq.empty[(Long, Long, Double)].toDF("event_id", "user_id", "value")
       .withColumn("ts_ms", col("event_id"))
