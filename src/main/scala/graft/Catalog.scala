@@ -38,7 +38,7 @@ object GraftCatalog {
   private[graft] val FoldRows = 4096
 
   /** One table of one session; its monitor is the table's write lock. */
-  private final class Table {
+  private[graft] final class Table {
     var base: DataFrame = _
     var tail = Vector.empty[InternalRow]
     /** The temp view this store last registered for the table. */
@@ -55,14 +55,10 @@ object GraftCatalog {
   private final case class Replace(base: Option[DataFrame],
       release: Boolean) extends Change
 
-  private val tables = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[String, Table]]()
-
-  private def tableOf(spark: SparkSession, name: String): Table =
-    tables.synchronized {
-      tables.computeIfAbsent(spark, _ => scala.collection.mutable.Map.empty)
-        .getOrElseUpdate(name.toLowerCase, new Table)
-    }
+  private def tableOf(spark: SparkSession, name: String): Table = {
+    val tables = SessionState.of(spark).tables
+    tables.synchronized { tables.getOrElseUpdate(name.toLowerCase, new Table) }
+  }
 
   /** Quote a view name for parser-bound catalog APIs when it contains
     * characters an unquoted identifier cannot (back-quoted source

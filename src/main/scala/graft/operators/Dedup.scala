@@ -582,8 +582,10 @@ object Dedup {
     //
     // Pair DISTINCTNESS (r20, guide §2.4 "remove shuffles outright"):
     // in the uncapped shape each banded row carries its doc's full
-    // band-hash array (bands × 8 bytes — the banded exchange stays
-    // O(n·bands)) and the join condition conjoins
+    // band-hash array (bands × 8 bytes, so the banded exchange of
+    // n·bands rows is O(n·bands²); r20 measured only the bench's
+    // bands = 8, so re-measure if `bands` is raised well past that)
+    // and the join condition conjoins
     // `first_band_match(a.__bv, b.__bv, band)` — TRUE iff no EARLIER
     // band already matched the pair. Evaluated as the equi-join's
     // pushed residual (one JIT'd walk of < bands longs per probed

@@ -3,6 +3,7 @@ package graft.sql
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
+import graft.{CatalogState, Deployment, Procedure, SessionState}
 import graft.operators.{LastJoin, WindowOps}
 
 /** SQL front-end for the OpenMLDB dialect: standard SELECT plus the
@@ -586,19 +587,6 @@ object GraftSql {
     // time-bucket replication of bounded ROWS_RANGE windows so a hot
     // partition key splits across tasks — see planWindows/SkewWindow
     "window_skew_opt" -> "false")
-  private val sessionVarsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def sessionVarsOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    sessionVarsBySession.synchronized {
-      var m = sessionVarsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]()
-        sessionVarsBySession.put(spark, m)
-      }
-      m
-    }
 
   private val FlagCol = "__graft_primary"
   private val RequestFlagCol = "__graft_is_request"
@@ -648,22 +636,11 @@ object GraftSql {
   // resolve against the default database first. `defaultDb` on sql()
   // overrides per call (the test harness's case-level db).
   // ------------------------------------------------------------------
-  private val sessionDbs = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Set[String]]())
-  private val sessionCurDb = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def dbsOf(spark: SparkSession): scala.collection.mutable.Set[String] = {
-    var s = sessionDbs.get(spark)
-    if (s == null) { s = scala.collection.mutable.Set.empty[String]
-      sessionDbs.put(spark, s) }
-    s
-  }
   private val defaultDbTL = new ThreadLocal[Option[String]] {
     override def initialValue(): Option[String] = None
   }
   private def curDb(spark: SparkSession): Option[String] =
-    defaultDbTL.get.orElse(Option(sessionCurDb.get(spark)))
+    defaultDbTL.get.orElse(SessionState.of(spark).catalog.curDb)
 
   /** Run a dialect query. `tables` overrides/augments the session's
     * temp-view catalog for table-name resolution; `params` bind `?`
@@ -677,7 +654,7 @@ object GraftSql {
       defaultDb: Option[String] = None): DataFrame = {
     ensureFunctions(spark)
     tsHintsTL.set(tsHints)
-    defaultDbTL.set(defaultDb.orElse(Option(sessionCurDb.get(spark))))
+    defaultDbTL.set(defaultDb.orElse(SessionState.of(spark).catalog.curDb))
     cteNamesTL.remove()
     try sqlImpl(spark, text, tables, params)
     finally { tsHintsTL.remove(); defaultDbTL.remove(); cteNamesTL.remove() }
@@ -762,7 +739,8 @@ object GraftSql {
       // plan-shaping session variables are part of the identity: a SET
       // between calls must not resurrect a plan built under the old value
       defaultDbTL.get.getOrElse("") + "|skew=" +
-        sessionVarsOf(spark).getOrElse("window_skew_opt", "false"))
+        SessionState.of(spark).catalog.vars
+          .getOrElse("window_skew_opt", "false"))
     planCache.getOrElse(key, Nil) match {
       case (cachedSrcs, df) :: _
           if cachedSrcs.length == srcs.length &&
@@ -1603,58 +1581,23 @@ object GraftSql {
   // deployment_manage/DEPLOY_STATEMENT.md:97-168)
   // ------------------------------------------------------------------
 
-  /** Deployed request-mode SELECTs by name (DEPLOY name SELECT ...),
-    * validated at deploy time per ONLINE_REQUEST_REQUIREMENTS.md.
-    * Scoped PER SparkSession (weak keys — dropped with the session):
-    * deployments are tenant state, and a process-global registry would
-    * leak them across sessions/tests. */
-  private val deployedBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def deployed(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    deployedBySession.synchronized {
-      var m = deployedBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]()
-        deployedBySession.put(spark, m)
-      }
-      m
-    }
-
+  /** Body SQL of a deployment (see [[graft.Deployment]]). */
   def deployment(spark: SparkSession, name: String): Option[String] =
-    deployed(spark).get(name)
-
-  // Home db of each deployment: the session's current db (USE target)
-  // at DEPLOY time. The reference scopes deployments per-db
-  // (ShowProcedure takes (db, name)); here a deployment made under an
-  // explicit USE is visible only from that db, while default-namespace
-  // deployments stay visible everywhere (CALL's behavior, and what the
-  // restful corpus relies on — it deploys with no USE).
-  private val deployDbBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def deployDbs(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    deployDbBySession.synchronized {
-      var m = deployDbBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]()
-        deployDbBySession.put(spark, m)
-      }
-      m
-    }
+    SessionState.of(spark).catalog.deployments.get(name).map(_.body)
 
   /** Home db a deployment was created under (None = the implicit
     * default namespace — visible from every db). */
   def deploymentDb(spark: SparkSession, name: String): Option[String] =
-    deployDbs(spark).get(name)
+    SessionState.of(spark).catalog.deployments.get(name).flatMap(_.db)
 
   /** Body SQL of a deployment OR stored procedure (CALL and the HTTP
     * serving shim resolve both, like the reference's apiserver — a
     * DEPLOY is an SP there, api_server_impl.cc:451-458). */
-  def callableBody(spark: SparkSession, name: String): Option[String] =
-    deployed(spark).get(name).orElse(procedures(spark).get(name))
+  def callableBody(spark: SparkSession, name: String): Option[String] = {
+    val c = SessionState.of(spark).catalog
+    c.deployments.get(name).map(_.body)
+      .orElse(c.procedures.get(name).map(_.body))
+  }
 
   /** Request-row schema of a deployment/procedure: the body query's
     * root-table schema minus engine-internal columns — what CALL types
@@ -1681,25 +1624,10 @@ object GraftSql {
         .map(_.copy(nullable = true)))
   }
 
-  /** DEPLOY OPTIONS by deployment name (long_windows, overwrite, …) —
-    * serving consults them (StreamDeploy routes eligible windows
-    * through the pre-agg partials when long_windows names them). */
-  private val deployOptsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Map[String, String]]]()
-  private def deployOpts(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Map[String, String]] =
-    deployOptsBySession.synchronized {
-      var m = deployOptsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Map[String, String]]()
-        deployOptsBySession.put(spark, m)
-      }
-      m
-    }
-
+  /** DEPLOY OPTIONS of a deployment (long_windows, overwrite, …). */
   def deploymentOptions(spark: SparkSession, name: String): Map[String, String] =
-    deployOpts(spark).getOrElse(name, Map.empty)
+    SessionState.of(spark).catalog.deployments.get(name).map(_.options)
+      .getOrElse(Map.empty)
 
   /** Parse a `long_windows="w1:1d,w2:30m"` option value into window
     * name → bucket size (DEPLOY_STATEMENT.md:108-125: default 1d).
@@ -1745,34 +1673,18 @@ object GraftSql {
   // behavior (STOP_JOB.md:10-12).
   // ------------------------------------------------------------------
 
-  private[sql] case class JobInfo(id: Long, jobType: String, state: String,
+  private[graft] case class JobInfo(id: Long, jobType: String, state: String,
       startTime: Long, endTime: Long, parameter: String,
       cluster: String, applicationId: String, error: String,
       log: Seq[String])
-
-  private val jobsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      (java.util.concurrent.atomic.AtomicLong,
-        scala.collection.concurrent.TrieMap[Long, JobInfo])]()
-  private def jobsOf(spark: SparkSession)
-      : (java.util.concurrent.atomic.AtomicLong,
-        scala.collection.concurrent.TrieMap[Long, JobInfo]) =
-    jobsBySession.synchronized {
-      var m = jobsBySession.get(spark)
-      if (m == null) {
-        m = (new java.util.concurrent.atomic.AtomicLong(0),
-          scala.collection.concurrent.TrieMap[Long, JobInfo]())
-        jobsBySession.put(spark, m)
-      }
-      m
-    }
 
   /** Run `body` as a tracked offline job. The job row is visible to
     * SHOW JOBS for the life of the session (or until DELETE JOB). */
   private def trackJob[A](spark: SparkSession, jobType: String,
       parameter: String)(body: => A): A = {
-    val (ctr, reg) = jobsOf(spark)
-    val id = ctr.incrementAndGet()
+    val c = SessionState.of(spark).catalog
+    val reg = c.jobs
+    val id = c.jobIds.incrementAndGet()
     val start = System.currentTimeMillis()
     reg.put(id, JobInfo(id, jobType, "RUNNING", start, 0L, parameter,
       spark.sparkContext.master, spark.sparkContext.applicationId, "",
@@ -1865,72 +1777,19 @@ object GraftSql {
   }
 
   private def jobOrFail(spark: SparkSession, id: Long): JobInfo =
-    jobsOf(spark)._2.getOrElse(id,
+    SessionState.of(spark).catalog.jobs.getOrElse(id,
       throw new IllegalArgumentException(s"job $id does not exist"))
-
-  /** Stored procedures by name (CREATE PROCEDURE ... BEGIN sql END) —
-    * the reference's SP surface over its request engine
-    * (docs/en/openmldb_sql/deployment_manage; procedures are
-    * deploy-shaped). Session-scoped like deployments. */
-  private val proceduresBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def procedures(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    proceduresBySession.synchronized {
-      var m = proceduresBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]()
-        proceduresBySession.put(spark, m)
-      }
-      m
-    }
-
-  // procedure signatures: name → (param, type, isConst) in declared
-  // order; const params are the reference's COMMON columns
-  private val procedureSigsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        Seq[(String, org.apache.spark.sql.types.DataType, Boolean)]]]()
-  private def procedureSigs(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String,
-        Seq[(String, org.apache.spark.sql.types.DataType, Boolean)]] =
-    procedureSigsBySession.synchronized {
-      var m = procedureSigsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String,
-          Seq[(String, org.apache.spark.sql.types.DataType, Boolean)]]()
-        procedureSigsBySession.put(spark, m)
-      }
-      m
-    }
 
   /** Declared signature of a stored procedure (REST shim surface):
     * (param name, type, isConst) in order — const params are the
     * common columns the HTTP procedures route splits out. */
   def procedureSignature(spark: SparkSession, name: String)
       : Option[Seq[(String, org.apache.spark.sql.types.DataType, Boolean)]] =
-    procedureSigs(spark).get(name)
-
-  // original CREATE PROCEDURE statement text (the reference's
-  // ShowProcedure echoes it verbatim)
-  private val procedureRawBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def procedureRaw(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    procedureRawBySession.synchronized {
-      var m = procedureRawBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]()
-        procedureRawBySession.put(spark, m)
-      }
-      m
-    }
+    SessionState.of(spark).catalog.procedures.get(name).flatMap(_.signature)
 
   /** The CREATE PROCEDURE statement as originally written. */
   def procedureText(spark: SparkSession, name: String): Option[String] =
-    procedureRaw(spark).get(name)
+    SessionState.of(spark).catalog.procedures.get(name).map(_.text)
 
   /** Physical tables a query reads (FROM + JOIN sides, depth-first,
     * deduped in first-reference order) — the reference's SP info
@@ -1976,28 +1835,15 @@ object GraftSql {
     *    parameter name; rows with a NULL argument are skipped (the
     *    reference's non-ARG_NULLABLE behavior).
     */
-  private[sql] case class UserFn(
+  private[graft] case class UserFn(
       name: String, isAggregate: Boolean,
       params: Seq[(String, String)], returns: String,
       options: Map[String, String])
-  private val userFnsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, UserFn]]()
   /** Bumped on every CREATE/DROP FUNCTION — part of [[ServeKey]], so a
     * redefined function can never be served from a stale compiled
     * template (sourcesFresh only watches table relations). */
   private[sql] val userFnsVersion =
     new java.util.concurrent.atomic.AtomicLong(0)
-  private[sql] def userFns(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, UserFn] =
-    userFnsBySession.synchronized {
-      var m = userFnsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, UserFn]()
-        userFnsBySession.put(spark, m)
-      }
-      m
-    }
 
   /** SQL type name (CREATE FUNCTION surface) → Spark SQL DDL type. */
   private def fnSqlType(t: String): String =
@@ -2117,7 +1963,7 @@ object GraftSql {
     * batch-request path; RequestStream serves the streaming path). */
   def serveDeployment(spark: SparkSession, name: String, requests: DataFrame,
       tables: Map[String, DataFrame] = Map.empty): DataFrame =
-    serveRequest(spark, deployed(spark).getOrElse(name,
+    serveRequest(spark, deployment(spark, name).getOrElse(
       throw new IllegalArgumentException(s"no deployment named '$name'")),
       requests, tables)
 
@@ -2350,7 +2196,7 @@ object GraftSql {
                   }
               case _ => ()
             }
-            sessionVarsOf(spark).put(vn,
+            SessionState.of(spark).catalog.vars.put(vn,
               if (vn == "spark_config") vvRaw else vv)
         }
         None
@@ -2360,9 +2206,9 @@ object GraftSql {
         // are an error, like the reference
         p.expect("USE")
         val db = unq(p.next())
-        if (!dbsOf(spark).contains(db))
+        if (!SessionState.of(spark).catalog.dbs.contains(db))
           throw new IllegalArgumentException(s"database '$db' does not exist")
-        sessionCurDb.put(spark, db)
+        SessionState.of(spark).catalog.curDb = Some(db)
         None
 
       case "DESC" =>
@@ -2384,7 +2230,8 @@ object GraftSql {
         import spark.implicits._
         p.next().toUpperCase match {
           case "DATABASES" =>
-            Some(dbsOf(spark).toSeq.sorted.toDF("Databases"))
+            Some(SessionState.of(spark).catalog.dbs.toSeq.sorted
+              .toDF("Databases"))
           case "CURRENT_USER" =>
             // SHOW CURRENT_USER (ddl/SHOW_CURRENT_USER_STATEMENT.md);
             // sessions here are single-user root, like the reference's
@@ -2393,14 +2240,14 @@ object GraftSql {
           case "VARIABLES" =>
             // SHOW VARIABLES: session system variables with defaults
             // (ddl/SET_STATEMENT.md)
-            val vars = sessionVarDefaults ++ sessionVarsOf(spark)
+            val vars = sessionVarDefaults ++ SessionState.of(spark).catalog.vars
             Some(vars.toSeq.sortBy(_._1).toDF("Variable_name", "Value"))
           case "COMPONENTS" =>
             // SHOW COMPONENTS (ddl/SHOW_COMPONENTS.md): the modeled
             // topology — on Spark the real components are the cluster
             // manager's executors, so this surfaces the virtual
             // tablets validated by CREATE TABLE distribution
-            val rows = tabletsOf(spark).map(e =>
+            val rows = SessionState.of(spark).tablets.map(e =>
               (e, "tablet", "online")) :+ (("nameserver", "nameserver",
               "online"))
             Some(rows.toDF("Endpoint", "Role", "Status"))
@@ -2411,7 +2258,8 @@ object GraftSql {
             // id 11 only parses upstream)
             p.expect("PROCEDURE")
             val pn = readTableName(p)
-            Some(procedures(spark).get(pn).toSeq.map((pn, _))
+            Some(SessionState.of(spark).catalog.procedures.get(pn).toSeq
+              .map(r => (pn, r.body))
               .toDF("Procedure", "SQL"))
           case "CREATE" =>
             // SHOW CREATE TABLE t (ddl/SHOW_CREATE_TABLE_STATEMENT.md):
@@ -2491,7 +2339,7 @@ object GraftSql {
               case (None, Some(db)) => all.filter(_._1 == db)
               case (None, None)     => all
             }
-            val (_, statusReg) = tableStatusOf(spark)
+            val statusReg = SessionState.of(spark).catalog.tableStatus
             val rows = visible.sortBy(t => (t._1, t._2)).map {
               case (db, short, catName) =>
                 val meta = statusReg.get(catName.toLowerCase)
@@ -2507,7 +2355,7 @@ object GraftSql {
                 // snapshot plan actually changed.
                 val planKey = df.queryExecution.analyzed.canonicalized
                   .semanticHash()
-                val stats = tableRowStatsOf(spark)
+                val stats = SessionState.of(spark).catalog.rowStats
                 val (nRows, bytes) = stats.get(catName.toLowerCase) match {
                   case Some((k, r, b)) if k == planKey => (r, b)
                   case _ =>
@@ -2557,13 +2405,16 @@ object GraftSql {
             throw new IllegalArgumentException(
               s"unexpected token '${p.peek}' after SHOW DEPLOYMENTS")
           case "DEPLOYMENTS" =>
-            Some(deployed(spark).keys.toSeq.sorted.toDF("Deployment"))
+            Some(SessionState.of(spark).catalog.deployments.keys.toSeq.sorted
+              .toDF("Deployment"))
           case "PROCEDURES" =>
-            Some(procedures(spark).keys.toSeq.sorted.toDF("Procedure"))
+            Some(SessionState.of(spark).catalog.procedures.keys.toSeq.sorted
+              .toDF("Procedure"))
           case "FUNCTIONS" =>
             // SHOW FUNCTIONS (ddl/SHOW_FUNCTIONS.md): the registered
             // user-defined functions
-            val rows = userFns(spark).values.toSeq.sortBy(_.name).map(f =>
+            val rows = SessionState.of(spark).userFns.values.toSeq
+              .sortBy(_.name).map(f =>
               (f.name, f.returns.toLowerCase,
                 f.params.map(_._2.toLowerCase).mkString(","),
                 f.isAggregate,
@@ -2588,7 +2439,7 @@ object GraftSql {
             val like = if (p.accept("LIKE")) Some(stripQuotes(p.next()))
               else None
             val all = if (target == "NAMESERVER") Seq.empty[JobInfo]
-              else jobsOf(spark)._2.values.toSeq
+              else SessionState.of(spark).catalog.jobs.values.toSeq
             val rows = like match {
               case None => all
               case Some(pat) =>
@@ -2616,7 +2467,7 @@ object GraftSql {
             // session-flat, so a qualified name resolves its short name
             // (test_show_deploy id 3)
             val dn = readTableName(p).split("\\.").last
-            val sqlText = deployed(spark).getOrElse(dn,
+            val sqlText = deployment(spark, dn).getOrElse(
               throw new IllegalArgumentException(
                 s"deployment '$dn' does not exist"))
             Some(Seq((dn, sqlText)).toDF("Deployment", "SQL"))
@@ -2633,7 +2484,7 @@ object GraftSql {
         val un = unq(p.next())
         val pw = userPasswordOpt(parseOptions(p)).getOrElse("")
         if (p.p != p.toks.length) p.fail("trailing tokens")
-        val users = usersOf(spark)
+        val users = SessionState.of(spark).users
         if (users.contains(un)) {
           if (!ifNot) throw new IllegalArgumentException(
             s"user '$un' already exists")
@@ -2650,7 +2501,7 @@ object GraftSql {
           if (p.accept("SET")) userPasswordOpt(parseOptions(p))
           else None
         if (p.p != p.toks.length) p.fail("trailing tokens")
-        val users = usersOf(spark)
+        val users = SessionState.of(spark).users
         if (!users.contains(un)) {
           if (!ifEx) throw new IllegalArgumentException(
             s"user '$un' does not exist")
@@ -2665,16 +2516,16 @@ object GraftSql {
         val ifEx = if (p.accept("IF")) { p.expect("EXISTS"); true } else false
         val dbn = unq(p.next())
         if (p.p != p.toks.length) p.fail("trailing tokens")
-        if (!dbsOf(spark).contains(dbn)) {
+        val c = SessionState.of(spark).catalog
+        if (!c.dbs.contains(dbn)) {
           if (!ifEx) throw new IllegalArgumentException(
             s"database '$dbn' does not exist")
         } else {
           val pfx = dbViewName(s"$dbn.")
           if (spark.catalog.listTables().collect().exists(_.name.startsWith(pfx)))
             throw new IllegalArgumentException("database not empty")
-          dbsOf(spark) -= dbn
-          if (Option(sessionCurDb.get(spark)).contains(dbn))
-            sessionCurDb.remove(spark)
+          c.dbs -= dbn
+          if (c.curDb.contains(dbn)) c.curDb = None
         }
         None
 
@@ -2685,7 +2536,7 @@ object GraftSql {
         if (p.p != p.toks.length) p.fail("trailing tokens")
         if (un == "root") throw new IllegalArgumentException(
           "the user 'root' cannot be deleted")
-        val users = usersOf(spark)
+        val users = SessionState.of(spark).users
         if (!users.contains(un) && !ifEx)
           throw new IllegalArgumentException(s"user '$un' does not exist")
         users.remove(un)
@@ -2694,7 +2545,7 @@ object GraftSql {
       case "CREATE" if p.toks.lift(1).exists(_.equalsIgnoreCase("DATABASE")) =>
         p.expect("CREATE"); p.expect("DATABASE")
         if (p.accept("IF")) { p.expect("NOT"); p.expect("EXISTS") }
-        dbsOf(spark) += unq(p.next())
+        SessionState.of(spark).catalog.dbs += unq(p.next())
         None
 
       case "CREATE" if p.toks.lift(1).exists(_.equalsIgnoreCase("PROCEDURE")) =>
@@ -2704,7 +2555,7 @@ object GraftSql {
         // SP compile against a request row)
         p.expect("CREATE"); p.expect("PROCEDURE")
         val pn = readTableName(p)
-        if (p.peek == "(") {
+        val sig = if (p.peek != "(") None else {
           // signature: [const] name type, ... — const marks COMMON
           // columns (shared across a batch request, the reference's
           // ColumnIndicesSet; the HTTP procedures route splits its
@@ -2712,7 +2563,7 @@ object GraftSql {
           val close = matchClose(p.toks, p.p)
           val sigToks = p.toks.slice(p.p + 1, close)
           p.p = close + 1
-          val sig = splitTokenArgs(sigToks).map { entry =>
+          Some(splitTokenArgs(sigToks).map { entry =>
             val (isConst, rest) =
               if (entry.headOption.exists(_.equalsIgnoreCase("const")))
                 (true, entry.tail)
@@ -2721,8 +2572,7 @@ object GraftSql {
               s"procedure parameter must be [const] name type: " +
                 entry.mkString(" "))
             (unq(rest(0)), parseColType(rest(1)), isConst)
-          }
-          procedureSigs(spark).put(pn, sig)
+          })
         }
         p.expect("BEGIN")
         val endIdx = p.toks.lastIndexWhere(_.equalsIgnoreCase("END"))
@@ -2731,8 +2581,8 @@ object GraftSql {
           .mkString(" ").stripSuffix(";")
         p.p = p.toks.length
         parseQueryText(body) // structural validation only
-        procedures(spark).put(pn, body)
-        procedureRaw(spark).put(pn, text.trim)
+        SessionState.of(spark).catalog.procedures
+          .put(pn, Procedure(body, sig, text.trim))
         None
 
       case "CREATE" if p.toks.lift(1).exists(_.equalsIgnoreCase("INDEX")) =>
@@ -2779,7 +2629,7 @@ object GraftSql {
         }
         val spec = s"$iname:${keys.result().mkString("|")}:" +
           tsOpt.getOrElse("")
-        val prev = indexesOf(spark).get(tname.toLowerCase)
+        val prev = SessionState.of(spark).catalog.indexes.get(tname.toLowerCase)
           .map(_.map { case (ks, ts) =>
             s"prev:${ks.mkString("|")}:${ts.getOrElse("")}" })
           .getOrElse(Seq.empty)
@@ -2788,8 +2638,9 @@ object GraftSql {
         // metadata with bound-less specs
         registerTableIndexes(spark, None, tname, prev :+ spec,
           updateTtlMeta = false)
-        idxMetaOf(spark).put(tname.toLowerCase,
-          idxMetaOf(spark).getOrElse(tname.toLowerCase, Seq.empty) :+
+        val idxMeta = SessionState.of(spark).catalog.idxMeta
+        idxMeta.put(tname.toLowerCase,
+          idxMeta.getOrElse(tname.toLowerCase, Seq.empty) :+
             IndexMeta(keys.result(), tsOpt, ttlSpec, Some(iname)))
         None
 
@@ -2802,22 +2653,15 @@ object GraftSql {
         if (dn.contains('.'))
           throw new IllegalArgumentException(
             "DROP DEPLOYMENT takes an unqualified name")
-        if (deployed(spark).remove(dn).isEmpty)
+        if (SessionState.of(spark).catalog.deployments.remove(dn).isEmpty)
           throw new IllegalArgumentException(
             s"deployment '$dn' does not exist")
-        deployOpts(spark).remove(dn)
-        deployDbs(spark).remove(dn)
         None
 
       case "DROP" if p.toks.lift(1).exists(_.equalsIgnoreCase("PROCEDURE")) =>
         p.expect("DROP"); p.expect("PROCEDURE")
         if (p.accept("IF")) p.expect("EXISTS")
-        locally {
-          val dn = readTableName(p)
-          procedures(spark) -= dn
-          procedureSigs(spark) -= dn
-          procedureRaw(spark) -= dn
-        }
+        SessionState.of(spark).catalog.procedures -= readTableName(p)
         None
 
       case "DROP" if p.toks.lift(1).exists(_.equalsIgnoreCase("INDEX")) =>
@@ -2837,21 +2681,22 @@ object GraftSql {
         val iname = parts.last
         val tbl = parts.init.mkString(".")
         val vn = (if (tbl.contains('.')) dbViewName(tbl) else tbl).toLowerCase
-        val metas = idxMetaOf(spark).getOrElse(vn, Seq.empty)
+        val c = SessionState.of(spark).catalog
+        val metas = c.idxMeta.getOrElse(vn, Seq.empty)
         val pos = metas.lastIndexWhere(
           _.name.exists(_.equalsIgnoreCase(iname)))
         if (pos >= 0) {
           val dropped = metas(pos)
-          idxMetaOf(spark).put(vn, metas.patch(pos, Nil, 1))
-          val specs = indexesOf(spark).getOrElse(vn, Seq.empty)
+          c.idxMeta.put(vn, metas.patch(pos, Nil, 1))
+          val specs = c.indexes.getOrElse(vn, Seq.empty)
           val spos = specs.lastIndexWhere { case (ks, ts) =>
             ks == dropped.keys && ts == dropped.ts
           }
           if (spos >= 0)
-            indexesOf(spark).put(vn, specs.patch(spos, Nil, 1))
+            c.indexes.put(vn, specs.patch(spos, Nil, 1))
         } else {
-          indexesOf(spark).remove(vn)
-          idxMetaOf(spark).remove(vn)
+          c.indexes.remove(vn)
+          c.idxMeta.remove(vn)
         }
         None
 
@@ -2861,7 +2706,7 @@ object GraftSql {
         val ifExists = if (p.accept("IF")) { p.expect("EXISTS"); true } else false
         val fn = unq(p.next()).toLowerCase
         if (p.p != p.toks.length) p.fail("trailing tokens after DROP FUNCTION")
-        userFns(spark).remove(fn) match {
+        SessionState.of(spark).userFns.remove(fn) match {
           case None if !ifExists =>
             throw new IllegalArgumentException(s"function '$fn' does not exist")
           case Some(f) =>
@@ -2902,14 +2747,14 @@ object GraftSql {
         parseColType(rt)
         val opts = parseOptions(p)
         if (p.p != p.toks.length) p.fail("trailing tokens after CREATE FUNCTION")
-        if (userFns(spark).contains(fname) ||
+        if (SessionState.of(spark).userFns.contains(fname) ||
             spark.catalog.functionExists(fname))
           throw new IllegalArgumentException(
             s"function '$fname' already exists")
         val fn = UserFn(fname, isAgg, params.result(), rt,
           opts.map { case (k, v) => k -> stripQuotes(v) })
         registerUserFn(spark, fn)
-        userFns(spark).put(fname, fn)
+        SessionState.of(spark).userFns.put(fname, fn)
         userFnsVersion.incrementAndGet()
         None
 
@@ -2970,7 +2815,7 @@ object GraftSql {
               s"CREATE TABLE LIKE supports PARQUET|HIVE, got '$other'")
           }
           graft.GraftCatalog.createTable(spark, name, schema)
-          createdOf(spark) += name
+          SessionState.of(spark).catalog.created += name
           return None
         }
         if (p.peek != "(") {
@@ -2980,7 +2825,7 @@ object GraftSql {
           if (p.p != p.toks.length) p.fail("expected a column list")
           graft.GraftCatalog.createTable(spark, name,
             org.apache.spark.sql.types.StructType(Seq.empty))
-          createdOf(spark) += name
+          SessionState.of(spark).catalog.created += name
           return None
         }
         p.expect("(")
@@ -3094,15 +2939,14 @@ object GraftSql {
           }
         }
         graft.GraftCatalog.createTable(spark, name, schema)
-        createdOf(spark) += name
-        locally { // SHOW TABLE STATUS row: id + storage options
-          val (ctr, reg) = tableStatusOf(spark)
-          reg.put(name.toLowerCase,
-            TableStatusMeta(ctr.incrementAndGet(), tblOpts))
-        }
+        val c = SessionState.of(spark).catalog
+        c.created += name
+        // SHOW TABLE STATUS row: id + storage options
+        c.tableStatus.put(name.toLowerCase,
+          TableStatusMeta(c.tableIds.incrementAndGet(), tblOpts))
         if (notNullBuf.nonEmpty)
-          notNullColsOf(spark).put(name.toLowerCase, notNullBuf.toSet)
-        else notNullColsOf(spark).remove(name.toLowerCase)
+          c.notNullCols.put(name.toLowerCase, notNullBuf.toSet)
+        else c.notNullCols.remove(name.toLowerCase)
         registerTableIndexes(spark, None, name,
           indexSpecs.result().map { case (ks, ts, _) =>
             s"idx:${ks.mkString("|")}:${ts.getOrElse("")}" },
@@ -3123,8 +2967,8 @@ object GraftSql {
               case _ => true
             }).map(f => IndexMeta(Seq(f.name), None,
               graft.operators.Ttl.TtlSpec("absolute", 0, 0))).toSeq
-          if (metas.nonEmpty) idxMetaOf(spark).put(name.toLowerCase, metas)
-          else idxMetaOf(spark).remove(name.toLowerCase)
+          if (metas.nonEmpty) c.idxMeta.put(name.toLowerCase, metas)
+          else c.idxMeta.remove(name.toLowerCase)
         }
         None
 
@@ -3138,9 +2982,10 @@ object GraftSql {
         if (!spark.catalog.tableExists(quoteId(atName)))
           throw new IllegalArgumentException(
             s"table '$atName' does not exist")
-        val (ctr, reg) = tableStatusOf(spark)
+        val c = SessionState.of(spark).catalog
+        val reg = c.tableStatus
         var meta = reg.getOrElse(atName.toLowerCase,
-          TableStatusMeta(ctr.incrementAndGet()))
+          TableStatusMeta(c.tableIds.incrementAndGet()))
         var more = true
         while (more) {
           val action = p.next().toUpperCase
@@ -3168,8 +3013,7 @@ object GraftSql {
         // rule for hard copies + symlinks).
         locally {
           val key = atName.toLowerCase
-          val info0 = offlineOf(spark)
-            .getOrElse(key, OfflineInfo(None, Vector.empty))
+          val info0 = c.offline.getOrElse(key, OfflineInfo(None, Vector.empty))
           val keep = info0.sym.filter(sp => meta.symPaths.contains(sp.path))
           val opts = info0.sym.headOption
             .map(_.options).getOrElse(Map.empty[String, String])
@@ -3177,8 +3021,8 @@ object GraftSql {
             .filterNot(pth => keep.exists(_.path == pth))
             .map(pth => SymPath(pth, info0.format, opts))
           val info1 = info0.copy(sym = keep ++ added.toVector)
-          if (info1.exists || offlineOf(spark).contains(key))
-            offlineOf(spark).put(key, info1)
+          if (info1.exists || c.offline.contains(key))
+            c.offline.put(key, info1)
         }
         None
 
@@ -3220,19 +3064,18 @@ object GraftSql {
         // the db prefix — drop that too, or the table survives its
         // own DROP (surfaced by DROP DATABASE's not-empty check)
         graft.GraftCatalog.drop(spark, qualifyTable(spark, dropName))
-        idxMetaOf(spark).remove(dropName.toLowerCase)
-        tableStatusOf(spark)._2.remove(dropName.toLowerCase)
-        tableStatusOf(spark)._2.remove(
-          qualifyTable(spark, dropName).toLowerCase)
-        notNullColsOf(spark).remove(dropName.toLowerCase)
-        notNullColsOf(spark).remove(
-          qualifyTable(spark, dropName).toLowerCase)
+        val c = SessionState.of(spark).catalog
+        val keys = Seq(dropName, qualifyTable(spark, dropName))
+          .map(_.toLowerCase).distinct
+        keys.foreach { k =>
+          c.indexes.remove(k); c.idxMeta.remove(k)
+          c.tableStatus.remove(k); c.notNullCols.remove(k)
+        }
         // dropping a table clears its offline info AND its hard-copy
         // files ("If we recreate table, this dir will be cleaned too",
         // LoadDataPlan.scala:152; test_select_into_load_data.yaml id
         // 37-2 re-imports with errorifexists after a drop+recreate)
-        Seq(dropName.toLowerCase, qualifyTable(spark, dropName).toLowerCase)
-          .flatMap(offlineOf(spark).remove).flatMap(_.dataPath)
+        keys.flatMap(c.offline.remove).flatMap(_.dataPath)
           .foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(
             new java.io.File(d)))
         None
@@ -3285,8 +3128,8 @@ object GraftSql {
             "Offline execute mode only supports INSERT, not INSERT OR " +
               "IGNORE")
           val key = name.toLowerCase
-          val info = offlineOf(spark)
-            .getOrElse(key, OfflineInfo(None, Vector.empty))
+          val c = SessionState.of(spark).catalog
+          val info = c.offline.getOrElse(key, OfflineInfo(None, Vector.empty))
           if (info.sym.nonEmpty)
             throw new IllegalArgumentException(
               "can't insert into table with soft copied data")
@@ -3297,10 +3140,10 @@ object GraftSql {
             org.apache.commons.io.FileUtils.deleteQuietly(
               new java.io.File(dir))
           df.write.mode("append").parquet(dir)
-          offlineOf(spark).put(key, info.copy(dataPath = Some(dir)))
+          c.offline.put(key, info.copy(dataPath = Some(dir)))
           // offline writes change data under an unchanged plan — the
           // stored-stats cache cannot see them through its plan hash
-          tableRowStatsOf(spark).remove(key)
+          c.rowStats.remove(key)
         } else if (orIgnore) {
           val df = spark.createDataFrame(
             spark.sparkContext.parallelize(rows.result()), schema)
@@ -3323,7 +3166,7 @@ object GraftSql {
             endTime = if (j.endTime == 0L) System.currentTimeMillis()
               else j.endTime,
             log = j.log :+ s"job $id stopped")
-        jobsOf(spark)._2.put(id, updated)
+        SessionState.of(spark).catalog.jobs.put(id, updated)
         Some(jobFrame(spark, Seq(updated)))
 
       case "DELETE" if p.toks.lift(1).exists(_.equalsIgnoreCase("JOB")) =>
@@ -3332,7 +3175,7 @@ object GraftSql {
         p.expect("DELETE"); p.expect("JOB")
         val id = jobIdArg(p)
         jobOrFail(spark, id)
-        jobsOf(spark)._2.remove(id)
+        SessionState.of(spark).catalog.jobs.remove(id)
         None
 
       case "DELETE" =>
@@ -3340,7 +3183,7 @@ object GraftSql {
         val name = qualifyTable(spark, readTableName(p))
         p.expect("WHERE")
         val condToks = p.toks.slice(p.p, p.toks.length).toVector
-        indexesOf(spark).get(name.toLowerCase) match {
+        SessionState.of(spark).catalog.indexes.get(name.toLowerCase) match {
           case Some(indexes) =>
             // reference DELETE: an equality conjunction covering the
             // key set of exactly one index; OR / inequalities /
@@ -3524,7 +3367,8 @@ object GraftSql {
         val rawName = readTableName(p)
         // loading into `db.t` registers the database too
         // (test_out_in.yaml id 30)
-        if (rawName.contains('.')) dbsOf(spark) += rawName.split("\\.").head
+        if (rawName.contains('.'))
+          SessionState.of(spark).catalog.dbs += rawName.split("\\.").head
         val name = qualifyTable(spark, rawName)
         val opts = parseOptions(p)
         // the reference requires the target table to exist
@@ -3536,8 +3380,8 @@ object GraftSql {
         // the plan-hash key of the stored-stats cache cannot see them —
         // invalidate explicitly (online loads re-register the view and
         // invalidate through the hash)
-        tableRowStatsOf(spark).remove(name.toLowerCase)
-        tableRowStatsOf(spark).remove(rawName.toLowerCase)
+        SessionState.of(spark).catalog.rowStats --=
+          Seq(name, rawName).map(_.toLowerCase)
         val schema = spark.table(name).schema
         val mode = opts.get("mode").map(stripQuotes).map(_.toLowerCase)
           .map { case "error_if_exists" => "errorifexists"; case m => m }
@@ -3567,7 +3411,7 @@ object GraftSql {
               // NULL (the tablet rejects a keyless ts put — pinned by
               // ids 25-1/34-1: header-as-data / column-shifted rows
               // die HERE, not in the permissive read)
-              val tsCols = indexesOf(spark)
+              val tsCols = SessionState.of(spark).catalog.indexes
                 .get(name.toLowerCase).toSeq.flatten.flatMap(_._2)
                 .flatMap(ts => schema.fields.map(_.name)
                   .find(_.equalsIgnoreCase(ts))).distinct
@@ -3588,7 +3432,7 @@ object GraftSql {
           // OFFLINE import (LoadDataPlan.scala:86-196): soft copies
           // edit the symbolic-path list, deep copies write parquet
           // into the table's internal data path.
-          val store = offlineOf(spark)
+          val store = SessionState.of(spark).catalog.offline
           val key = name.toLowerCase
           val info = store.getOrElse(key, OfflineInfo(None, Vector.empty))
           if (mode == "errorifexists" && info.exists)
@@ -3701,17 +3545,12 @@ object GraftSql {
         }
         val overwrite = opts.get("overwrite")
           .map(stripQuotes).exists(_.equalsIgnoreCase("true"))
-        val reg = deployed(spark)
-        if (!overwrite && reg.contains(name))
+        val c = SessionState.of(spark).catalog
+        if (!overwrite && c.deployments.contains(name))
           throw new IllegalArgumentException(
             s"deployment '$name' already exists (use OPTIONS(overwrite=true))")
-        reg.put(name, rest.mkString(" "))
-        Option(sessionCurDb.get(spark)) match {
-          case Some(db) => deployDbs(spark).put(name, db)
-          case None     => deployDbs(spark).remove(name)
-        }
-        deployOpts(spark).put(name,
-          opts.map { case (k, v) => k -> stripQuotes(v) })
+        c.deployments.put(name, Deployment(rest.mkString(" "), c.curDb,
+          opts.map { case (k, v) => k -> stripQuotes(v) }))
         // pre-compile the serving template at DEPLOY time (the
         // reference compiles here too, engine.cc — the first POST/CALL
         // otherwise pays the build's optimizer sweep). Best-effort:
@@ -3799,19 +3638,20 @@ object GraftSql {
     * (test harness surface for the out_in corpus). */
   def registerDbTable(spark: SparkSession, db: String, name: String,
       df: DataFrame): Unit = {
-    dbsOf(spark) += db
+    SessionState.of(spark).catalog.dbs += db
     df.createOrReplaceTempView(quoteId(dbViewName(s"$db.$name")))
   }
 
   /** Databases created in the session (REST shim surface — the
     * reference's SHOW DATABASES; the unprefixed `default` namespace is
     * implicit and not listed). */
-  def databases(spark: SparkSession): Set[String] = dbsOf(spark).toSet
+  def databases(spark: SparkSession): Set[String] =
+    SessionState.of(spark).catalog.dbs.toSet
 
   /** The session's current db (USE target), if any (REST shim
     * surface: ExecuteSQL scopes a statement to the URL's db). */
   def currentDb(spark: SparkSession): Option[String] =
-    Option(sessionCurDb.get(spark))
+    SessionState.of(spark).catalog.curDb
 
   /** Run `body` with the session's current db set to `db` (None = the
     * implicit default namespace), restoring the previous current db
@@ -3819,16 +3659,11 @@ object GraftSql {
     * to the URL's db rather than whatever the session last USE'd. */
   def withCurrentDb[A](spark: SparkSession, db: Option[String])(
       body: => A): A = {
-    val prev = Option(sessionCurDb.get(spark))
-    db match {
-      case Some(d) => sessionCurDb.put(spark, d)
-      case None    => sessionCurDb.remove(spark)
-    }
+    val c = SessionState.of(spark).catalog
+    val prev = c.curDb
+    c.curDb = db
     try body
-    finally prev match {
-      case Some(d) => sessionCurDb.put(spark, d)
-      case None    => sessionCurDb.remove(spark)
-    }
+    finally c.curDb = prev
   }
 
   /** Catalog view name of a db-scoped table, when it exists (REST
@@ -3838,7 +3673,8 @@ object GraftSql {
     * any existing db, matching how deployments resolve. */
   def resolveDbTable(spark: SparkSession, db: String,
       table: String): Option[String] = {
-    val dbOk = db == "default" || dbsOf(spark).contains(db)
+    val dbOk =
+      db == "default" || SessionState.of(spark).catalog.dbs.contains(db)
     if (!dbOk || table.isEmpty) None
     else {
       val scopedName = dbViewName(s"$db.$table")
@@ -3849,23 +3685,6 @@ object GraftSql {
     }
   }
 
-  // table → index specs (key columns, ts column); DELETE validates its
-  // condition against these when present (DELETE_STATEMENT.md: the
-  // condition must be key equality over one index)
-  private val indexRegistryBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[(Seq[String], Option[String])]]]()
-  private def indexesOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Seq[(Seq[String], Option[String])]] =
-    indexRegistryBySession.synchronized {
-      var m = indexRegistryBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Seq[(Seq[String], Option[String])]]()
-        indexRegistryBySession.put(spark, m)
-      }
-      m
-    }
-
   /** Full index metadata (keys, ts column, TTL) per engine-managed
     * table, in declaration order — the reference's table_info
     * column_key list. Drives SHOW/desc-style introspection and
@@ -3873,31 +3692,15 @@ object GraftSql {
   final case class IndexMeta(keys: Seq[String], ts: Option[String],
       ttl: graft.operators.Ttl.TtlSpec, name: Option[String] = None)
 
-  // NOT NULL columns by table (CREATE TABLE decl flags) — the view
-  // schema stays nullable (enforcement is a write-path concern); the
-  // metadata surfaces (REST table info, strict inserts) read this
-  private val notNullColsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Set[String]]]()
-  private def notNullColsOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Set[String]] =
-    notNullColsBySession.synchronized {
-      var m = notNullColsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Set[String]]()
-        notNullColsBySession.put(spark, m)
-      }
-      m
-    }
-
   /** Columns declared NOT NULL in CREATE TABLE (metadata surface). */
   def notNullColumns(spark: SparkSession, table: String): Set[String] =
-    notNullColsOf(spark).getOrElse(table.toLowerCase, Set.empty)
+    SessionState.of(spark).catalog.notNullCols
+      .getOrElse(table.toLowerCase, Set.empty)
 
   /** CREATE TABLE OPTIONS of a table (metadata surface). */
   def tableOptions(spark: SparkSession, table: String): Map[String, String] =
-    tableStatusOf(spark)._2.get(table.toLowerCase).map(_.opts)
-      .getOrElse(Map.empty)
+    SessionState.of(spark).catalog.tableStatus.get(table.toLowerCase)
+      .map(_.opts).getOrElse(Map.empty)
 
   /** Short names of the tables visible from `db` (REST shim surface):
     * the db's prefixed views plus the session's unprefixed tables —
@@ -3913,26 +3716,13 @@ object GraftSql {
     val plain = all.filterNot(_.startsWith("__graft"))
     (scoped ++ plain).distinct.sorted
   }
-  private val idxMetaBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Seq[IndexMeta]]]()
-  private def idxMetaOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, Seq[IndexMeta]] =
-    idxMetaBySession.synchronized {
-      var m = idxMetaBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, Seq[IndexMeta]]()
-        idxMetaBySession.put(spark, m)
-      }
-      m
-    }
 
   /** Indexes the engine has registered for `name` (CREATE TABLE
     * clauses, the auto-created default index, CREATE INDEX additions). */
   def tableIndexMeta(spark: SparkSession, name: String,
       db: Option[String] = None): Seq[IndexMeta] = {
     val vn = db.map(d => dbViewName(s"$d.$name")).getOrElse(name)
-    idxMetaOf(spark).getOrElse(vn.toLowerCase, Seq.empty)
+    SessionState.of(spark).catalog.idxMeta.getOrElse(vn.toLowerCase, Seq.empty)
   }
 
   // ------------------------------------------------------------------
@@ -3942,20 +3732,13 @@ object GraftSql {
   // cluster manager's job, so the model validates the spec exactly as
   // the reference's nameserver does and records nothing.
   // ------------------------------------------------------------------
-  private val tabletsBySession =
-    new java.util.WeakHashMap[SparkSession, Seq[String]]()
   /** The virtual tablet endpoints validated against (default 3). */
   def setClusterTablets(spark: SparkSession, eps: Seq[String]): Unit =
-    tabletsBySession.synchronized { tabletsBySession.put(spark, eps) }
-  private def tabletsOf(spark: SparkSession): Seq[String] =
-    tabletsBySession.synchronized {
-      Option(tabletsBySession.get(spark))
-        .getOrElse(Seq("tablet0", "tablet1", "tablet2"))
-    }
+    SessionState.of(spark).tablets = eps
 
   private def validateTableOptions(spark: SparkSession,
       opts: Map[String, String]): Unit = {
-    val tablets = tabletsOf(spark)
+    val tablets = SessionState.of(spark).tablets
     def intOpt(k: String): Option[Int] = opts.get(k).map { v0 =>
       val s = stripQuotes(v0).trim
       if (!s.matches("\\d+")) throw new IllegalArgumentException(
@@ -4074,8 +3857,9 @@ object GraftSql {
   def clearTableIndexes(spark: SparkSession, db: Option[String],
       name: String): Unit = {
     val vn = db.map(d => dbViewName(s"$d.$name")).getOrElse(name)
-    indexesOf(spark).remove(vn.toLowerCase)
-    idxMetaOf(spark).remove(vn.toLowerCase)
+    val c = SessionState.of(spark).catalog
+    c.indexes.remove(vn.toLowerCase)
+    c.idxMeta.remove(vn.toLowerCase)
   }
 
   def registerTableIndexes(spark: SparkSession, db: Option[String],
@@ -4087,7 +3871,8 @@ object GraftSql {
     val specs = parts.filter(_.length >= 2)
       .map(p => (p(1).split("\\|").toSeq.map(_.trim),
         p.lift(2).map(_.trim).filter(_.nonEmpty)))
-    if (specs.nonEmpty) indexesOf(spark).put(vn.toLowerCase, specs)
+    if (specs.nonEmpty)
+      SessionState.of(spark).catalog.indexes.put(vn.toLowerCase, specs)
     if (!updateTtlMeta) return
     val metas = parts.filter(p => p.length >= 3 && p(2).nonEmpty).map { p =>
       val bound = p.lift(3).getOrElse("")
@@ -4103,7 +3888,8 @@ object GraftSql {
       IndexMeta(p(1).split("\\|").toSeq.map(_.trim), Some(p(2)), spec,
         Some(p(0)).filter(_.nonEmpty))
     }
-    if (metas.nonEmpty) idxMetaOf(spark).put(vn.toLowerCase, metas)
+    if (metas.nonEmpty)
+      SessionState.of(spark).catalog.idxMeta.put(vn.toLowerCase, metas)
   }
 
   /** Long-window pre-aggregation restricts *_where conditions to
@@ -4282,21 +4068,15 @@ object GraftSql {
     }
   }
 
-  /** Drop all deployments of a session (test harness isolation —
-    * repeated `DEPLOY t0 ...` cases would otherwise collide on the
-    * duplicate-name check). */
+  /** Drop all deployments and stored procedures of a session (test
+    * harness isolation — repeated `DEPLOY t0 ...` cases would otherwise
+    * collide on the duplicate-name check). */
   def resetDeployments(spark: SparkSession): Unit = {
-    deployed(spark).clear()
-    deployOpts(spark).clear()
-    deployDbs(spark).clear()
-    procedureSigs(spark).clear()
-    procedureRaw(spark).clear()
+    val c = SessionState.of(spark).catalog
+    c.deployments.clear()
+    c.procedures.clear()
   }
 
-  /** Full per-case catalog isolation for the test harness: clears
-    * deployments, databases, USE state, index specs, and db-scoped
-    * views — session state would otherwise leak between corpus cases
-    * (test_out_in.yaml id 6 expects `db1.t0` to be unknown). */
   // ------------------------------------------------------------------
   // Offline storage (cluster edition). A table owns TWO stores: the
   // online view (session temp view, the serving store) and its OFFLINE
@@ -4316,9 +4096,9 @@ object GraftSql {
   // is a file-level add, and offline queries are plain parquet scans
   // with pushdown; nothing is held on the driver.
   // ------------------------------------------------------------------
-  private case class SymPath(path: String, format: String,
+  private[graft] case class SymPath(path: String, format: String,
       options: Map[String, String])
-  private case class OfflineInfo(dataPath: Option[String],
+  private[graft] case class OfflineInfo(dataPath: Option[String],
       sym: Vector[SymPath]) {
     def exists: Boolean = dataPath.nonEmpty || sym.nonEmpty
     /** current format of the offline info: the hard store is always
@@ -4327,36 +4107,10 @@ object GraftSql {
       if (dataPath.nonEmpty) "parquet"
       else sym.headOption.map(_.format).getOrElse("parquet")
   }
-  private val sessionOffline = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, OfflineInfo]]())
-  private def offlineOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, OfflineInfo] = {
-    var m = sessionOffline.get(spark)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap[String, OfflineInfo]()
-      sessionOffline.put(spark, m)
-    }
-    m
-  }
-  // hard-store root epoch: bumped on resetCatalogState so a fresh
-  // logical catalog never collides with a previous incarnation's files
-  private val sessionOfflineEpoch = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      java.util.concurrent.atomic.AtomicLong]())
-  private def offlineEpoch(spark: SparkSession)
-      : java.util.concurrent.atomic.AtomicLong = {
-    var c = sessionOfflineEpoch.get(spark)
-    if (c == null) {
-      c = new java.util.concurrent.atomic.AtomicLong(0)
-      sessionOfflineEpoch.put(spark, c)
-    }
-    c
-  }
   private def offlineDataPath(spark: SparkSession, key: String): String =
     "/tmp/graft_offline/s" +
       Integer.toHexString(System.identityHashCode(spark)) +
-      "/e" + offlineEpoch(spark).get() + "/" +
+      "/e" + SessionState.of(spark).catalog.offlineEpoch + "/" +
       key.replaceAll("[^A-Za-z0-9_]", "_")
 
   /** Load editions, mirroring the reference's two deployments:
@@ -4364,17 +4118,15 @@ object GraftSql {
     * loads, online import requires explicit mode='append', offline
     * dual storage; "standalone" = the single-node CLI — strict local
     * csv loads, no storage split (the v040-era corpus semantics). */
-  private val sessionEdition = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
   def setLoadEdition(spark: SparkSession, edition: String): Unit = {
     require(Set("cluster", "standalone")(edition), edition)
-    sessionEdition.put(spark, edition)
+    SessionState.of(spark).catalog.edition = edition
   }
   private def clusterEdition(spark: SparkSession): Boolean =
-    sessionEdition.getOrDefault(spark, "cluster") == "cluster"
+    SessionState.of(spark).catalog.edition == "cluster"
 
   private def execMode(spark: SparkSession): String =
-    sessionVarsOf(spark).getOrElse("execute_mode", "online")
+    SessionState.of(spark).catalog.vars.getOrElse("execute_mode", "online")
   private def offlineMode(spark: SparkSession): Boolean =
     clusterEdition(spark) && execMode(spark) == "offline"
 
@@ -4389,7 +4141,8 @@ object GraftSql {
     * schema when the table has no offline info. */
   private def offlineFrame(spark: SparkSession, key: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val parts: Seq[DataFrame] = offlineOf(spark).get(key) match {
+    val offline = SessionState.of(spark).catalog.offline
+    val parts: Seq[DataFrame] = offline.get(key) match {
       case None => Seq.empty
       case Some(info) =>
         // existence through the path's own filesystem (hdfs/s3-safe),
@@ -4414,13 +4167,13 @@ object GraftSql {
     * symbolic paths, format). */
   def offlineTableInfo(spark: SparkSession, name: String)
       : Option[(Option[String], Seq[String], String)] =
-    offlineOf(spark).get(offlineKey(spark, name))
+    SessionState.of(spark).catalog.offline.get(offlineKey(spark, name))
       .map(i => (i.dataPath, i.sym.map(_.path), i.format))
 
   /** Every offline Data/Symbolic path registered in the session (the
     * test harness's expect.offlineInfo surface). */
   def allOfflinePaths(spark: SparkSession): Seq[String] =
-    offlineOf(spark).values.toSeq
+    SessionState.of(spark).catalog.offline.values.toSeq
       .flatMap(i => i.dataPath.toSeq ++ i.sym.map(_.path))
 
   /** CTE names of the query being planned — a WITH name shadows any
@@ -4430,97 +4183,45 @@ object GraftSql {
       scala.collection.mutable.Set.empty
   }
 
+  /** Full per-case catalog isolation for the test harness: session
+    * state would otherwise leak between corpus cases (test_out_in.yaml
+    * id 6 expects `db1.t0` to be unknown). The session's
+    * [[graft.CatalogState]] is replaced by a fresh one, which clears:
+    *  - deployments and stored procedures;
+    *  - databases, the USE target and SET variables;
+    *  - the load edition (back to "cluster");
+    *  - offline table info (the next offline epoch starts a new
+    *    hard-store root);
+    *  - jobs, index specs and metadata, NOT NULL columns, table status
+    *    and stored stats.
+    * The tables made by CREATE TABLE and every db-scoped view are
+    * dropped. Users, user functions, the tablet list, every other temp
+    * view and the dialect's function registration are kept. */
   def resetCatalogState(spark: SparkSession): Unit = {
-    deployed(spark).clear()
-    deployOpts(spark).clear()
-    deployDbs(spark).clear()
-    offlineOf(spark).clear()
-    offlineEpoch(spark).incrementAndGet()
-    sessionEdition.remove(spark)
-    locally { val (ctr, reg) = jobsOf(spark); reg.clear(); ctr.set(0) }
-    locally { val (ctr, reg) = tableStatusOf(spark); reg.clear(); ctr.set(0) }
-    tableRowStatsOf(spark).clear()
-    notNullColsOf(spark).clear()
-    procedures(spark).clear()
-    dbsOf(spark).clear()
-    sessionCurDb.remove(spark)
-    indexesOf(spark).clear()
-    idxMetaOf(spark).clear()
-    sessionVarsOf(spark).clear()
+    val st = SessionState.of(spark)
+    val old = st.synchronized {
+      val c = st.catalog
+      st.catalog = new CatalogState(c.offlineEpoch + 1)
+      c
+    }
     spark.catalog.listTables().collect().map(_.name)
       .filter(_.startsWith("__graftdb__"))
       .foreach(n => graft.GraftCatalog.drop(spark, n))
-    // tables created through CREATE TABLE this session — dropping only
-    // these leaves other suites' temp views alone
-    createdOf(spark).foreach(n => graft.GraftCatalog.drop(spark, n))
-    createdOf(spark).clear()
+    old.created.foreach(n => graft.GraftCatalog.drop(spark, n))
   }
 
   /** Table-status metadata recorded at CREATE TABLE (storage options)
     * and edited by ALTER TABLE (offline symbolic paths) — the surface
     * SHOW TABLE STATUS reports (ddl/SHOW_TABLE_STATUS.md,
     * dml/ALTER_STATEMENT.md). */
-  private case class TableStatusMeta(id: Long,
+  private[graft] case class TableStatusMeta(id: Long,
       opts: Map[String, String] = Map.empty,
       symPaths: Seq[String] = Seq.empty)
-  // stored row/size stats for SHOW TABLE STATUS: table →
-  // (canonical-plan hash, rows, bytes); invalidated by plan identity,
-  // not by hooks — every mutation path re-registers the temp view with
-  // a new plan, so a changed hash IS the mutation signal
-  private val tableRowStatsBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, (Int, Long, Long)]]()
-  private def tableRowStatsOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, (Int, Long, Long)] =
-    tableRowStatsBySession.synchronized {
-      var m = tableRowStatsBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, (Int, Long, Long)]()
-        tableRowStatsBySession.put(spark, m)
-      }
-      m
-    }
-  private val tableStatusBySession =
-    new java.util.WeakHashMap[SparkSession,
-      (java.util.concurrent.atomic.AtomicLong,
-        scala.collection.concurrent.TrieMap[String, TableStatusMeta])]()
-  private def tableStatusOf(spark: SparkSession)
-      : (java.util.concurrent.atomic.AtomicLong,
-        scala.collection.concurrent.TrieMap[String, TableStatusMeta]) =
-    tableStatusBySession.synchronized {
-      var s = tableStatusBySession.get(spark)
-      if (s == null) {
-        s = (new java.util.concurrent.atomic.AtomicLong(0),
-          scala.collection.concurrent.TrieMap[String, TableStatusMeta]())
-        tableStatusBySession.put(spark, s)
-      }
-      s
-    }
-
-  /** User registry (ddl/{CREATE,ALTER,DROP}_USER_STATEMENT.md,
-    * SHOW_CURRENT_USER_STATEMENT.md): user → password, seeded with
-    * `root`. Authentication itself is the cluster manager's concern in
-    * this architecture; the registry models the statement surface and
-    * its validation rules (only `password` in OPTIONS, root
-    * undeletable). */
-  private val usersBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
-  private def usersOf(spark: SparkSession)
-      : scala.collection.concurrent.TrieMap[String, String] =
-    usersBySession.synchronized {
-      var m = usersBySession.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap[String, String]("root" -> "")
-        usersBySession.put(spark, m)
-      }
-      m
-    }
 
   /** The stored password for a user, if the user exists (test/tooling
     * surface — the reference exposes this via its auth tables). */
   def userPassword(spark: SparkSession, name: String): Option[String] =
-    usersOf(spark).get(name)
+    SessionState.of(spark).users.get(name)
 
   /** OPTIONS for user statements allow ONLY `password` (the docs'
     * note 2); returns it stripped, or None when absent. */
@@ -4533,25 +4234,11 @@ object GraftSql {
       .map(_._2)).map(stripQuotes)
   }
 
-  private val createdBySession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.mutable.Set[String]]()
-  private def createdOf(spark: SparkSession)
-      : scala.collection.mutable.Set[String] =
-    createdBySession.synchronized {
-      var s = createdBySession.get(spark)
-      if (s == null) {
-        s = scala.collection.mutable.Set[String]()
-        createdBySession.put(spark, s)
-      }
-      s
-    }
-
   /** database names visible to a query (scope keys + session state) */
   private def knownDbs(spark: SparkSession,
       scope: Map[String, DataFrame]): Set[String] =
     scope.keys.filter(_.contains('.')).map(_.split("\\.").head).toSet ++
-      curDb(spark).toSet ++ dbsOf(spark)
+      curDb(spark).toSet ++ SessionState.of(spark).catalog.dbs
 
   /** `db.t.c` three-part column references → `<qualifier>.c`, where
     * the qualifier is the frame alias chosen by [[dbQualifier]]
@@ -4823,10 +4510,11 @@ object GraftSql {
   private def applyIndexTtl(spark: SparkSession, name: String,
       df: DataFrame, where: Option[String],
       accessKeySets: Seq[Set[String]] = Seq.empty): DataFrame = {
-    if (idxMetaOf(spark).isEmpty) return df // fast path: no DDL tables
-    val metas = idxMetaOf(spark).getOrElse(name.toLowerCase, {
+    val idxMeta = SessionState.of(spark).catalog.idxMeta
+    if (idxMeta.isEmpty) return df // fast path: no DDL tables
+    val metas = idxMeta.getOrElse(name.toLowerCase, {
       val q = try qualifyTable(spark, name) catch { case _: Throwable => name }
-      idxMetaOf(spark).getOrElse(q.toLowerCase, Seq.empty)
+      idxMeta.getOrElse(q.toLowerCase, Seq.empty)
     })
     if (metas.isEmpty || !metas.exists(_.ttl.hasBound)) return df
     // equality-covered columns of a pure AND conjunction
@@ -6585,20 +6273,21 @@ object GraftSql {
   }
 
   // one-time per-session registration of dialect functions for SQL text
-  private val registeredSessions =
-    java.util.Collections.newSetFromMap(
-      new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
-  private[sql] def ensureFunctions(spark: SparkSession): Unit = synchronized {
-    if (registeredSessions.add(spark)) {
-      // the dialect is non-ANSI: x % 0 and x DIV 0 are NULL, failable
-      // casts are NULL, integral overflow wraps (test_arithmetic.yaml
-      // ids 0-4/17, docs/en/openmldb_sql/functions_and_operators)
-      spark.conf.set("spark.sql.ansi.enabled", "false")
-      // duplicate map keys are legal (reference keeps the first match;
-      // pair order is reversed at rewrite so LAST_WIN yields it)
-      spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      graft.functions.GraftScalars.registerAll(spark)
-      graft.functions.GraftAggregates.registerAll(spark)
+  private[sql] def ensureFunctions(spark: SparkSession): Unit = {
+    val st = SessionState.of(spark)
+    synchronized {
+      if (!st.functionsRegistered) {
+        st.functionsRegistered = true
+        // the dialect is non-ANSI: x % 0 and x DIV 0 are NULL, failable
+        // casts are NULL, integral overflow wraps (test_arithmetic.yaml
+        // ids 0-4/17, docs/en/openmldb_sql/functions_and_operators)
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        // duplicate map keys are legal (reference keeps the first match;
+        // pair order is reversed at rewrite so LAST_WIN yields it)
+        spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+        graft.functions.GraftScalars.registerAll(spark)
+        graft.functions.GraftAggregates.registerAll(spark)
+      }
     }
   }
 
@@ -6646,7 +6335,8 @@ object GraftSql {
       val t = toks(i).toLowerCase
       val isCall = i + 1 < toks.length && toks(i + 1) == "("
       val userAgg =
-        if (isCall) userFns(df.sparkSession).get(t).filter(_.isAggregate)
+        if (isCall)
+          SessionState.of(df.sparkSession).userFns.get(t).filter(_.isAggregate)
           // `fn(v) OVER w` belongs to the window planner (the window
           // dispatch folds the frame array) — only bare calls expand
           // to the grouped collect_list fold here. The projection's
@@ -7132,7 +6822,7 @@ object GraftSql {
     // (auto_gen_case_0) — those are window heads too; so are the
     // session's CREATE AGGREGATE FUNCTION registrations
     def isWinHead(t: String): Boolean = winHeads(t) ||
-      userFns(base.sparkSession).get(t).exists(_.isAggregate) ||
+      SessionState.of(base.sparkSession).userFns.get(t).exists(_.isAggregate) ||
       t.startsWith("__graft_topnk_") ||
       t.startsWith("__graft_topnv_") ||
       (t.startsWith("__graft_") && t.endsWith("_cate_int")) ||
@@ -7451,7 +7141,7 @@ object GraftSql {
     // Unbounded frames and frameless offset functions (lag/at reach
     // arbitrarily far back) stay unbucketed; request mode is excluded
     // like the reference (offline-only opt).
-    val skewOpt = !requestMode && sessionVarsOf(spark)
+    val skewOpt = !requestMode && SessionState.of(spark).catalog.vars
       .getOrElse("window_skew_opt", "false") == "true"
     val SwRoleCol = "__graft_swrole"
     // window signature -> bucket column, live between explode/collapse.
@@ -7763,7 +7453,7 @@ object GraftSql {
       val plain = !w.isExtended && !requestMode
       // CREATE AGGREGATE FUNCTION registrations have no Spark function
       // to expr() — they always take the frame-array fold path
-      val isUserAgg = userFns(base.sparkSession).get(fn)
+      val isUserAgg = SessionState.of(base.sparkSession).userFns.get(fn)
         .exists(_.isAggregate)
       // an argument referencing a window result (__graft_wN) needs the
       // current-row-binding HOF path — never the native window branches
@@ -8048,7 +7738,7 @@ object GraftSql {
                 // argument: fold the substituted per-frame-row values
                 // with the registered INIT/STEP/OUTPUT (same expansion
                 // as the shared-frame user-agg path; NULLs skipped)
-                val uf = userFns(base.sparkSession)(f)
+                val uf = SessionState.of(base.sparkSession).userFns(f)
                 expr(udafFoldSql(uf, s"transform($nn, " +
                   s"__x -> CAST(($sub) AS ${fnSqlType(uf.params.head._2)}))"))
               case other =>
@@ -8245,14 +7935,14 @@ object GraftSql {
                   args(1).trim.toInt.toDouble, Some(fld))
               else WindowOps.aggTopK(arr, args(1).trim.toInt,
                 integral = integral)
-            case f if userFns(base.sparkSession).get(f)
+            case f if SessionState.of(base.sparkSession).userFns.get(f)
                 .exists(_.isAggregate) =>
               // CREATE AGGREGATE FUNCTION over a window frame: fold the
               // shared frame's value field (newest-first order, NULLs
               // skipped) with the registered INIT/STEP/OUTPUT — the same
               // codegen'd higher-order aggregate the grouped expansion
               // uses, over the already-membership-filtered frame buffer
-              val uf = userFns(base.sparkSession)(f)
+              val uf = SessionState.of(base.sparkSession).userFns(f)
               val vSql = s"transform(filter($arrName, " +
                 s"__x -> __x.v.$fld IS NOT NULL), " +
                 s"__x -> CAST(__x.v.$fld AS ${fnSqlType(uf.params.head._2)}))"

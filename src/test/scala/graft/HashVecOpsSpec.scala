@@ -461,8 +461,9 @@ class HashVecOpsSpec extends SparkSpec {
   test("QuantizeInt8Expr == the aggregate-scale + transform chain, " +
       "incl. NaN / null-element / null-vector / empty / all-zero") {
     // verbatim pre-r20 Similarity.quantizeInt8: the transform's
-    // col("qscale") resolves against the CHILD plan's double column;
-    // only the output qscale is float-cast
+    // col("qscale") resolves to the float-cast lateral alias of the
+    // same select, so the chain divides by the float scale (as
+    // QuantizeInt8Expr does; see the VecOps scaladoc)
     val v = transform(col("v"), x => x.cast("double"))
     val scale = aggregate(v, lit(0.0),
       (acc, x) => greatest(acc, abs(x))) / 127.0

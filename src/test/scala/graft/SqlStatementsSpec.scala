@@ -621,4 +621,118 @@ class SqlStatementsSpec extends SparkSpec {
       }
     }
   }
+
+  // ---- per-session state (SessionState): a procedure is one record,
+  // DROP TABLE forgets the table's index spec, sessions do not share
+  // catalog state ----
+
+  private val procWithSig =
+    "CREATE PROCEDURE rp (kk string, const tts bigint) " +
+      "BEGIN SELECT kk FROM rp_ev; END"
+
+  test("procedure record: resetCatalogState drops its signature and " +
+      "text") {
+    val s = spark.newSession()
+    GraftSql.statement(s, procWithSig)
+    assert(GraftSql.procedureSignature(s, "rp").map(_.map(_._3))
+      .contains(Seq(false, true)))
+    assert(GraftSql.procedureText(s, "rp").contains(procWithSig))
+    GraftSql.resetCatalogState(s)
+    assert(GraftSql.procedureSignature(s, "rp").isEmpty)
+    assert(GraftSql.procedureText(s, "rp").isEmpty)
+    assert(GraftSql.callableBody(s, "rp").isEmpty)
+  }
+
+  test("procedure record: resetDeployments drops the procedure") {
+    val s = spark.newSession()
+    GraftSql.statement(s, procWithSig)
+    GraftSql.resetDeployments(s)
+    assert(GraftSql.callableBody(s, "rp").isEmpty)
+    assert(GraftSql.procedureSignature(s, "rp").isEmpty)
+  }
+
+  test("procedure record: re-CREATE without a signature drops the old " +
+      "signature") {
+    val s = spark.newSession()
+    GraftSql.statement(s, procWithSig)
+    val plain = "CREATE PROCEDURE rp BEGIN SELECT kk, tts FROM rp_ev; END"
+    GraftSql.statement(s, plain)
+    assert(GraftSql.procedureSignature(s, "rp").isEmpty)
+    assert(GraftSql.procedureText(s, "rp").contains(plain))
+    assert(GraftSql.callableBody(s, "rp").exists(_.contains("tts")))
+  }
+
+  test("procedure record: a CREATE whose body does not parse leaves " +
+      "none") {
+    val s = spark.newSession()
+    intercept[Exception] {
+      GraftSql.statement(s,
+        "CREATE PROCEDURE bad_p (kk string) BEGIN NOT A QUERY; END")
+    }
+    assert(GraftSql.procedureSignature(s, "bad_p").isEmpty)
+    assert(GraftSql.procedureText(s, "bad_p").isEmpty)
+    assert(GraftSql.callableBody(s, "bad_p").isEmpty)
+  }
+
+  test("DROP TABLE drops the index spec DELETE validates against") {
+    val s = spark.newSession()
+    def deleteByC2(t: String): Seq[(String, Long)] = {
+      GraftSql.statement(s, s"INSERT INTO $t VALUES ('a', 1), ('b', 2)")
+      GraftSql.statement(s, s"DELETE FROM $t WHERE c2 = 1")
+      GraftSql.sql(s, s"SELECT c1, c2 FROM $t").as[(String, Long)]
+        .collect().toSeq
+    }
+    GraftSql.statement(s, "CREATE TABLE di_fresh (c1 string, c2 bigint)")
+    val fresh = deleteByC2("di_fresh")
+    assert(fresh == Seq(("b", 2L)))
+    GraftSql.statement(s,
+      "CREATE TABLE di_t (c1 string, c2 bigint, INDEX(key=c1))")
+    GraftSql.statement(s, "DROP TABLE di_t")
+    GraftSql.statement(s, "CREATE TABLE di_t (c1 string, c2 bigint)")
+    assert(deleteByC2("di_t") == fresh)
+  }
+
+  test("session state is per SparkSession; reset keeps users and " +
+      "functions") {
+    val a = spark.newSession()
+    val b = spark.newSession()
+    for (s <- Seq(a, b))
+      s.createDataFrame(Seq(("u1", 10L, 1.0))).toDF("k", "ts", "v")
+        .createOrReplaceTempView("si_ev")
+    GraftSql.statement(a, "CREATE TABLE si_a (k string, v bigint)")
+    GraftSql.statement(a, "INSERT INTO si_a VALUES ('x', 1)")
+    GraftSql.statement(a, "DEPLOY si_da SELECT k FROM si_ev")
+    def mode(s: org.apache.spark.sql.SparkSession) =
+      GraftSql.statement(s, "SHOW VARIABLES").get.collect()
+        .find(_.getString(0) == "execute_mode").map(_.getString(1))
+
+    GraftSql.statement(b, "SET @@execute_mode = 'offline'")
+    GraftSql.statement(b, "CREATE DATABASE si_db")
+    GraftSql.statement(b, "USE si_db")
+    GraftSql.statement(b, "DEPLOY si_db_dep SELECT k FROM si_ev")
+    GraftSql.statement(b, procWithSig)
+    GraftSql.statement(b, "CREATE USER si_user")
+    GraftSql.statement(b,
+      "CREATE FUNCTION si_inc(x bigint) RETURNS bigint " +
+        "OPTIONS (RETURN='x + 1')")
+
+    assert(mode(b).contains("offline"))
+    assert(mode(a).contains("online"))
+    assert(!GraftSql.databases(a).contains("si_db"))
+    assert(GraftSql.currentDb(a).isEmpty)
+    assert(GraftSql.deployment(a, "si_db_dep").isEmpty)
+    assert(GraftSql.callableBody(a, "rp").isEmpty)
+    assert(GraftSql.userPassword(a, "si_user").isEmpty)
+
+    GraftSql.resetCatalogState(b)
+    assert(GraftSql.deployment(b, "si_db_dep").isEmpty)
+    assert(GraftSql.currentDb(b).isEmpty)
+    assert(!GraftSql.databases(b).contains("si_db"))
+    assert(GraftSql.userPassword(b, "si_user").contains(""))
+    assert(GraftSql.statement(b, "SHOW FUNCTIONS").get.collect()
+      .exists(_.getString(0) == "si_inc"))
+    assert(GraftSql.deployment(a, "si_da").isDefined)
+    assert(GraftSql.sql(a, "SELECT k, v FROM si_a").as[(String, Long)]
+      .collect().toSeq == Seq(("x", 1L)))
+  }
 }

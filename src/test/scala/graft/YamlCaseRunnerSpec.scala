@@ -352,7 +352,7 @@ class YamlCaseRunnerSpec extends SparkSpec {
         s0.replace("{auto}",
           "auto_" + c.key.replaceAll("[^A-Za-z0-9_]", "_"))
           // virtual cluster endpoints (ddl/test_options.yaml;
-          // GraftSql.tabletsOf defaults)
+          // SessionState.tablets defaults)
           .replace("{tb_endpoint_0}", "tablet0")
           .replace("{tb_endpoint_1}", "tablet1")
           .replace("{tb_endpoint_2}", "tablet2")) {
