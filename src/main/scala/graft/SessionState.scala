@@ -5,8 +5,8 @@ import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.DataType
-import graft.sql.GraftSql.{IndexMeta, JobInfo, OfflineInfo, TableStatusMeta,
-  UserFn}
+import graft.sql.GraftSql.{JobInfo, OfflineInfo, TableIndexes,
+  TableStatusMeta, UserFn}
 
 /** A deployment (DEPLOY name SELECT ...): the body SQL, validated at
   * DEPLOY time per ONLINE_REQUEST_REQUIREMENTS.md, and the OPTIONS
@@ -83,12 +83,8 @@ private[graft] final class CatalogState(val offlineEpoch: Long) {
   /** Offline jobs by id; `jobIds` hands out the ids. */
   val jobIds = new AtomicLong(0)
   val jobs = TrieMap[Long, JobInfo]()
-  /** table → index specs (key columns, ts column); DELETE validates its
-    * condition against these when present (DELETE_STATEMENT.md: the
-    * condition must be key equality over one index). */
-  val indexes = TrieMap[String, Seq[(Seq[String], Option[String])]]()
-  /** table → full index metadata, see [[graft.sql.GraftSql.IndexMeta]]. */
-  val idxMeta = TrieMap[String, Seq[IndexMeta]]()
+  /** table → its indexes, see [[graft.sql.GraftSql.TableIndexes]]. */
+  val tableIndexes = TrieMap[String, TableIndexes]()
   /** NOT NULL columns by table (CREATE TABLE decl flags) — the view
     * schema stays nullable (enforcement is a write-path concern); the
     * metadata surfaces (REST table info, strict inserts) read this. */

@@ -71,38 +71,15 @@ object LastJoin {
       .agg(max_by(struct(payloadCols.map(col): _*), ord).as("__last"))
       .select(rightKeys.map(col) ++ Seq(col("__last")): _*)
     val renamed = rightKeys.foldLeft(reduced)((d, k) => d.withColumnRenamed(k, s"__rk_$k"))
-    // r19 (settles the VERDICT r18 q_last_join sf1 watch, MEASURED):
-    // the aggregate feeding the join shares the join's partitioning —
-    // no stage boundary — so AQE never sees the post-reduction size
-    // and the sf1 plan goes sort-merge (ratio 1.226 r18) while sf0.1
-    // broadcasts (0.87). The verdict's proposed fix — hint broadcast
-    // when the optimizer ESTIMATE of the reduced side fits a budget —
-    // was implemented and measured at sf1: the forced
-    // BroadcastHashJoin (1.5M reduced lineitem keys, plan confirmed
-    // via PlanProbe) read 2.57 s / ratio 1.524 vs sort-merge's 1.17 s
-    // / 1.226 — the broadcast BUILD costs more than the shuffle it
-    // saves on local[32], where shuffle is nearly free (the scaladoc's
-    // standing note). SMJ is genuinely optimal here; the hint ships
-    // OFF by default (budget 0) as a knob for network-bound clusters,
-    // where shipping one copy of the reduced side beats re-shuffling
-    // the big probe side.
-    val budget = java.lang.Long.parseLong(left.sparkSession.conf.get(
-      "spark.graft.lastjoin.broadcast.budget", "0"))
-    // stats runs full analysis+optimization of the right subplan —
-    // driver-side planning cost that can never pay off when the knob is
-    // off, so skip it entirely at the default budget 0.
-    val rightSide =
-      if (budget > 0 &&
-          renamed.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
-        broadcast(renamed)
-      else renamed
     // Plain equality: a NULL left key matches nothing (standard SQL join
     // semantics and the reference's stock-Spark fallback) — the left row
     // survives the left-outer join with nulls on the right.
     val cond = leftKeys.zip(rightKeys)
-      .map { case (l, r) => left(l) === rightSide(s"__rk_$r") }
+      .map { case (l, r) => left(l) === renamed(s"__rk_$r") }
       .reduce(_ && _)
-    val joined = left.join(rightSide, cond, "left")
+    // No broadcast hint on the reduced side: forcing one measured slower
+    // at sf1 (2.57 s vs sort-merge's 1.17 s on local[32]).
+    val joined = left.join(renamed, cond, "left")
     // Explode the struct back to the right-side payload columns.
     val rightOut = payloadCols.map(c => col(s"__last.$c").as(c))
     joined.select(left.columns.map(left(_)).toSeq ++ rightOut: _*)

@@ -10,6 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.types._
 
+import graft.operators.Ttl
 import graft.sql.GraftSql
 
 /** HTTP serving shim over the deployment registry — the engine-side
@@ -612,12 +613,12 @@ object ApiServer {
       m.ts.foreach(ko.put("ts_name", _))
       val ttl = ko.putObject("ttl")
       ttl.put("ttl_type", m.ttl.kind)
-      m.ttl.kind match {
-        case "latest" => ttl.put("lat_ttl", m.ttl.lat)
-        case "absolute" => ttl.put("abs_ttl", m.ttl.absMs / 60000L)
-        case _ =>
-          ttl.put("abs_ttl", m.ttl.absMs / 60000L)
-          ttl.put("lat_ttl", m.ttl.lat)
+      m.ttl match {
+        case Ttl.LatestCount(n) => ttl.put("lat_ttl", n)
+        case Ttl.AbsoluteTime(_) => ttl.put("abs_ttl", m.ttl.absMinutes)
+        case t =>
+          ttl.put("abs_ttl", t.absMinutes)
+          ttl.put("lat_ttl", t.lat)
       }
       ck.add(ko)
     }

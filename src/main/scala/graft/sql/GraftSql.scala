@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import graft.{CatalogState, Deployment, Procedure, SessionState}
-import graft.operators.{LastJoin, WindowOps}
+import graft.operators.{LastJoin, Ttl, WindowOps}
 
 /** SQL front-end for the OpenMLDB dialect: standard SELECT plus the
   * three feature-engineering extensions — `LAST JOIN`,
@@ -1026,9 +1026,7 @@ object GraftSql {
       tables: Map[String, DataFrame] = Map.empty): DataFrame = {
     val viaTemplate =
       try serveViaTemplate(spark, text, requests, tables)
-      catch { case scala.util.control.NonFatal(e) =>
-        if (sys.env.contains("GRAFT_SERVE_DEBUG")) e.printStackTrace()
-        None }
+      catch { case scala.util.control.NonFatal(_) => None }
     viaTemplate.getOrElse(requestMode(spark, text, requests, tables))
   }
 
@@ -1200,25 +1198,14 @@ object GraftSql {
         (slot.placeholder, spark.sparkContext.parallelize(rows, 1))
       }
       val swaps = (t.placeholder, newRdd) +: histSwaps
-      val dbg = sys.env.contains("GRAFT_SERVE_TIMING")
-      val t1 = if (dbg) System.nanoTime() else 0L
       // serving-shaped batches run the prepared physical template
       // (1-partition exchanges, shared dim broadcasts); larger batches
       // re-plan physical at the session's parallelism
       val collected =
         t.phys match {
           case Some(p) if internal.length <= 1024 =>
-            val sub = GraftServe.substitutePhysical(p, swaps, pruneSets)
-            val t2 = if (dbg) System.nanoTime() else 0L
-            val out = GraftServe.executeCollectPhysical(spark, sub)
-            if (dbg) {
-              val t3 = System.nanoTime()
-              // scalastyle:off println
-              println(f"[serve-timing] substitute=${(t2 - t1) / 1e6}%.1f " +
-                f"execute=${(t3 - t2) / 1e6}%.1f ms")
-              // scalastyle:on println
-            }
-            out
+            GraftServe.executeCollectPhysical(spark,
+              GraftServe.substitutePhysical(p, swaps, pruneSets))
           case _ =>
             val sub = GraftServe.substituteRdd(t.optimized, swaps,
               spark, 16L * 1024, pruneSets)
@@ -1960,7 +1947,7 @@ object GraftSql {
       s"collect_list(CAST(($argSql) AS ${fnSqlType(fn.params.head._2)}))")
 
   /** Serve a batch of request rows against a deployed query (the
-    * batch-request path; RequestStream serves the streaming path). */
+    * batch-request path; StreamDeploy serves the streaming path). */
   def serveDeployment(spark: SparkSession, name: String, requests: DataFrame,
       tables: Map[String, DataFrame] = Map.empty): DataFrame =
     serveRequest(spark, deployment(spark, name).getOrElse(
@@ -2282,14 +2269,13 @@ object GraftSql {
                 case other => other.simpleString
               }
             }
-            def ttlText(t: graft.operators.Ttl.TtlSpec): String = {
-              def m = s"${(t.absMs + 59999) / 60000}m"
-              t.kind match {
-                case "latest" => s"TTL_TYPE=LATEST, TTL=${t.lat}"
-                case "absandlat" => s"TTL_TYPE=ABSANDLAT, TTL=($m,${t.lat})"
-                case "absorlat" => s"TTL_TYPE=ABSORLAT, TTL=($m,${t.lat})"
-                case _ => s"TTL_TYPE=ABSOLUTE, TTL=$m"
+            def ttlText(t: Ttl): String = {
+              val v = t match {
+                case Ttl.LatestCount(n)  => s"$n"
+                case Ttl.AbsoluteTime(_) => s"${t.absMinutes}m"
+                case _                   => s"(${t.absMinutes}m,${t.lat})"
               }
+              s"TTL_TYPE=${t.kind.toUpperCase}, TTL=$v"
             }
             val cols = schema.fields
               .filterNot(_.name.startsWith("__graft"))
@@ -2616,32 +2602,14 @@ object GraftSql {
         }
         // TTL options validate exactly like CREATE TABLE's INDEX()
         val ttlKindOpt = opts.get("ttl_type").map(stripQuotes)
-        val ttlSpec = opts.get("ttl").map(stripQuotes) match {
-          case Some(v) => graft.operators.Ttl.parse(v, ttlKindOpt)
-          case None =>
-            ttlKindOpt.foreach { kd =>
-              if (!Set("absolute", "latest", "absandlat", "absorlat")(
-                kd.trim.toLowerCase))
-                throw new IllegalArgumentException(s"unknown TTL_TYPE '$kd'")
-            }
-            graft.operators.Ttl.TtlSpec(
-              ttlKindOpt.map(_.toLowerCase).getOrElse("absolute"), 0, 0)
-        }
-        val spec = s"$iname:${keys.result().mkString("|")}:" +
-          tsOpt.getOrElse("")
-        val prev = SessionState.of(spark).catalog.indexes.get(tname.toLowerCase)
-          .map(_.map { case (ks, ts) =>
-            s"prev:${ks.mkString("|")}:${ts.getOrElse("")}" })
-          .getOrElse(Seq.empty)
-        // this path maintains idxMeta itself (the parsed TTL options) —
-        // registerTableIndexes must not clobber the existing richer
-        // metadata with bound-less specs
-        registerTableIndexes(spark, None, tname, prev :+ spec,
-          updateTtlMeta = false)
-        val idxMeta = SessionState.of(spark).catalog.idxMeta
-        idxMeta.put(tname.toLowerCase,
-          idxMeta.getOrElse(tname.toLowerCase, Seq.empty) :+
-            IndexMeta(keys.result(), tsOpt, ttlSpec, Some(iname)))
+        val ttl = opts.get("ttl").map(stripQuotes)
+          .map(Ttl.parse(_, ttlKindOpt)).getOrElse(Ttl.ofKind(ttlKindOpt))
+        val added = IndexMeta(keys.result(), tsOpt, ttl, Some(iname))
+        SessionState.of(spark).catalog.tableIndexes
+          .updateWith(tname.toLowerCase) { t =>
+            val cur = t.getOrElse(TableIndexes(None, None))
+            Some(cur.copy(declared = Some(cur.declared.getOrElse(Nil) :+ added)))
+          }
         None
 
       case "DROP" if p.toks.lift(1).exists(_.equalsIgnoreCase("DEPLOYMENT")) =>
@@ -2665,14 +2633,14 @@ object GraftSql {
         None
 
       case "DROP" if p.toks.lift(1).exists(_.equalsIgnoreCase("INDEX")) =>
-        // DROP INDEX [db.]table.index removes the NEWEST registered
-        // index with that name from the advisory registries (LAST JOIN
-        // ts hints, DELETE key validation, DESC output) — per-name
+        // DROP INDEX [db.]table.index removes the NEWEST declared index
+        // with that name from the table's indexes (DELETE key
+        // validation, TTL routing, SHOW CREATE TABLE) — per-name
         // semantics pinned by integration_test/ddl/test_delete_index
         // .yaml (ids 0-3: a created-then-dropped index leaves the
         // original intact; id 4: an unqualified name is an error).
-        // Entries registered without names (legacy paths) fall back to
-        // clearing the table's registry.
+        // A name no declared index carries (CREATE TABLE's indexes are
+        // unnamed) clears the table's indexes.
         p.expect("DROP"); p.expect("INDEX")
         val parts = readTableName(p).split("\\.")
         if (parts.length < 2)
@@ -2681,23 +2649,14 @@ object GraftSql {
         val iname = parts.last
         val tbl = parts.init.mkString(".")
         val vn = (if (tbl.contains('.')) dbViewName(tbl) else tbl).toLowerCase
-        val c = SessionState.of(spark).catalog
-        val metas = c.idxMeta.getOrElse(vn, Seq.empty)
-        val pos = metas.lastIndexWhere(
-          _.name.exists(_.equalsIgnoreCase(iname)))
-        if (pos >= 0) {
-          val dropped = metas(pos)
-          c.idxMeta.put(vn, metas.patch(pos, Nil, 1))
-          val specs = c.indexes.getOrElse(vn, Seq.empty)
-          val spos = specs.lastIndexWhere { case (ks, ts) =>
-            ks == dropped.keys && ts == dropped.ts
-          }
-          if (spos >= 0)
-            c.indexes.put(vn, specs.patch(spos, Nil, 1))
-        } else {
-          c.indexes.remove(vn)
-          c.idxMeta.remove(vn)
-        }
+        SessionState.of(spark).catalog.tableIndexes.updateWith(vn)(_.flatMap {
+          t =>
+            val declared = t.declared.getOrElse(Nil)
+            val pos = declared.lastIndexWhere(
+              _.name.exists(_.equalsIgnoreCase(iname)))
+            if (pos < 0) None
+            else Some(t.copy(declared = Some(declared.patch(pos, Nil, 1))))
+        })
         None
 
       case "DROP" if p.toks.lift(1).exists(_.equalsIgnoreCase("FUNCTION")) =>
@@ -2833,8 +2792,7 @@ object GraftSql {
         // INDEX(KEY=..., TS=..., TTL=..., TTL_TYPE=...) — storage
         // hints; scan/partition planning is Spark's job here, but the
         // SPEC still validates (test_create.yaml ids 11/12/15-18)
-        val indexSpecs = Seq.newBuilder[
-          (Seq[String], Option[String], Option[graft.operators.Ttl.TtlSpec])]
+        val declared = Seq.newBuilder[IndexMeta]
         val notNullBuf = scala.collection.mutable.LinkedHashSet[String]()
         var more = true
         while (more && p.peek != ")") {
@@ -2870,14 +2828,11 @@ object GraftSql {
               } else k += 1
             }
             // validate eagerly: an illegal TTL fails the CREATE
-            // (ddl/test_ttl.yaml ids 3-5/7/9/12/14/16-19)
-            val ttl = ttlVal.map(v => graft.operators.Ttl.parse(v, ttlKind))
-            if (ttl.isEmpty) ttlKind.foreach { kd =>
-              if (!Set("absolute", "latest", "absandlat", "absorlat")(
-                kd.trim.toLowerCase))
-                throw new IllegalArgumentException(s"unknown TTL_TYPE '$kd'")
-            }
-            indexSpecs += ((keys, tsCol, ttl))
+            // (ddl/test_ttl.yaml ids 3-5/7/9/12/14/16-19); a TTL_TYPE
+            // without a TTL is checked, and the index expires nothing
+            Ttl.ofKind(ttlKind)
+            declared += IndexMeta(keys, tsCol,
+              ttlVal.map(Ttl.parse(_, ttlKind)).getOrElse(Ttl.Never))
           } else {
             val cn = unq(p.next())
             // a back-quoted keyword IS a legal name (back_quote corpus)
@@ -2910,7 +2865,8 @@ object GraftSql {
           k.toLowerCase -> stripQuotes(v) }
         validateTableOptions(spark, tblOpts)
         val schema = org.apache.spark.sql.types.StructType(fields.result())
-        indexSpecs.result().foreach { case (keys, tsCol, _) =>
+        val indexes = declared.result()
+        indexes.foreach { case IndexMeta(keys, tsCol, _, _) =>
           keys.foreach { kc =>
             val f = schema.fields.find(_.name.equalsIgnoreCase(kc))
               .getOrElse(throw new IllegalArgumentException(
@@ -2947,29 +2903,16 @@ object GraftSql {
         if (notNullBuf.nonEmpty)
           c.notNullCols.put(name.toLowerCase, notNullBuf.toSet)
         else c.notNullCols.remove(name.toLowerCase)
-        registerTableIndexes(spark, None, name,
-          indexSpecs.result().map { case (ks, ts, _) =>
-            s"idx:${ks.mkString("|")}:${ts.getOrElse("")}" },
-          updateTtlMeta = false) // the block below sets the parsed TTLs
-        // index metadata: declared indexes, or the auto-created default
-        // index on the first non-float/double column
-        // (schema/index_util.cc:101 AddDefaultIndex)
-        locally {
-          val declared = indexSpecs.result().map { case (ks, ts, ttl) =>
-            IndexMeta(ks, ts,
-              ttl.getOrElse(graft.operators.Ttl.TtlSpec("absolute", 0, 0)))
-          }
-          val metas =
-            if (declared.nonEmpty) declared
-            else schema.fields.find(f => f.dataType match {
+        // declared indexes, or the auto-created default index on the
+        // first non-float/double column (schema/index_util.cc:101
+        // AddDefaultIndex)
+        c.tableIndexes.put(name.toLowerCase,
+          if (indexes.nonEmpty) TableIndexes(None, Some(indexes))
+          else TableIndexes(schema.fields.find(f => f.dataType match {
               case org.apache.spark.sql.types.FloatType |
                    org.apache.spark.sql.types.DoubleType => false
               case _ => true
-            }).map(f => IndexMeta(Seq(f.name), None,
-              graft.operators.Ttl.TtlSpec("absolute", 0, 0))).toSeq
-          if (metas.nonEmpty) c.idxMeta.put(name.toLowerCase, metas)
-          else c.idxMeta.remove(name.toLowerCase)
-        }
+            }).map(f => IndexMeta(Seq(f.name), None, Ttl.Never)), None))
         None
 
       case "ALTER" =>
@@ -3068,7 +3011,7 @@ object GraftSql {
         val keys = Seq(dropName, qualifyTable(spark, dropName))
           .map(_.toLowerCase).distinct
         keys.foreach { k =>
-          c.indexes.remove(k); c.idxMeta.remove(k)
+          c.tableIndexes.remove(k)
           c.tableStatus.remove(k); c.notNullCols.remove(k)
         }
         // dropping a table clears its offline info AND its hard-copy
@@ -3183,7 +3126,8 @@ object GraftSql {
         val name = qualifyTable(spark, readTableName(p))
         p.expect("WHERE")
         val condToks = p.toks.slice(p.p, p.toks.length).toVector
-        SessionState.of(spark).catalog.indexes.get(name.toLowerCase) match {
+        SessionState.of(spark).catalog.tableIndexes.get(name.toLowerCase)
+            .flatMap(_.declared) match {
           case Some(indexes) =>
             // reference DELETE: an equality conjunction covering the
             // key set of exactly one index; OR / inequalities /
@@ -3213,7 +3157,7 @@ object GraftSql {
                   other.mkString(" "))
             }
             val colSet = eqs.map(_._1.toLowerCase).toSet
-            if (!indexes.exists(_._1.map(_.toLowerCase).toSet == colSet))
+            if (!indexes.exists(_.keys.map(_.toLowerCase).toSet == colSet))
               throw new IllegalArgumentException(
                 s"DELETE condition columns ${colSet.mkString(",")} do " +
                   "not match the key set of any index")
@@ -3411,8 +3355,7 @@ object GraftSql {
               // NULL (the tablet rejects a keyless ts put — pinned by
               // ids 25-1/34-1: header-as-data / column-shifted rows
               // die HERE, not in the permissive read)
-              val tsCols = SessionState.of(spark).catalog.indexes
-                .get(name.toLowerCase).toSeq.flatten.flatMap(_._2)
+              val tsCols = tableIndexMeta(spark, name).flatMap(_.ts)
                 .flatMap(ts => schema.fields.map(_.name)
                   .find(_.equalsIgnoreCase(ts))).distinct
               tsCols.foreach { ts =>
@@ -3685,12 +3628,22 @@ object GraftSql {
     }
   }
 
-  /** Full index metadata (keys, ts column, TTL) per engine-managed
-    * table, in declaration order — the reference's table_info
-    * column_key list. Drives SHOW/desc-style introspection and
-    * read-time TTL visibility (operators/Ttl.scala). */
+  /** One index: key columns, ts column and TTL — the reference's
+    * IndexDef (fe_type.proto:88-96). CREATE INDEX and harness specs
+    * name theirs; DROP INDEX matches on the name. */
   final case class IndexMeta(keys: Seq[String], ts: Option[String],
-      ttl: graft.operators.Ttl.TtlSpec, name: Option[String] = None)
+      ttl: Ttl, name: Option[String] = None)
+
+  /** A table's indexes, in the reference's table_info column_key order:
+    * the auto-created default index of a table created with no INDEX
+    * clause, then the declared ones. `declared` is None until an index
+    * is declared; from then on DELETE validates its condition against
+    * the declared indexes, so once DROP INDEX removed the last one
+    * every DELETE is rejected. */
+  final case class TableIndexes(auto: Option[IndexMeta],
+      declared: Option[Seq[IndexMeta]]) {
+    def all: Seq[IndexMeta] = auto.toSeq ++ declared.getOrElse(Nil)
+  }
 
   /** Columns declared NOT NULL in CREATE TABLE (metadata surface). */
   def notNullColumns(spark: SparkSession, table: String): Set[String] =
@@ -3722,7 +3675,8 @@ object GraftSql {
   def tableIndexMeta(spark: SparkSession, name: String,
       db: Option[String] = None): Seq[IndexMeta] = {
     val vn = db.map(d => dbViewName(s"$d.$name")).getOrElse(name)
-    SessionState.of(spark).catalog.idxMeta.getOrElse(vn.toLowerCase, Seq.empty)
+    SessionState.of(spark).catalog.tableIndexes.get(vn.toLowerCase)
+      .map(_.all).getOrElse(Seq.empty)
   }
 
   // ------------------------------------------------------------------
@@ -3826,8 +3780,6 @@ object GraftSql {
     }
   }
 
-  /** Register index specs ("name:keys:ts[:bound:kind]" strings, keys
-    * `|`-separated) for DELETE-condition validation. */
   /** One `index:` string may carry several comma-separated specs
     * (query corpus "index2:col2:col5,index0:col0:col5"); commas inside
     * parens belong to a ttl 2-tuple like "(10m,4)". */
@@ -3845,51 +3797,38 @@ object GraftSql {
     out.result().map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Register harness-style "name:keys:ts[:bound[:kind]]" index specs:
-    * key/ts pairs for join-order metadata AND full TTL metadata so
-    * read-time expiry ([[applyIndexTtl]]) sees these tables exactly
-    * like DDL-created ones (disk_table ids 17/18 route scans per
-    * index). Kindless bounds infer latest for bare counts, absolute
-    * for time-with-unit. */
   /** Drop all index/TTL metadata for `name` — a harness replacing a
     * temp view must clear the old table's registration or stale TTLs
     * would expire the new snapshot's rows. */
   def clearTableIndexes(spark: SparkSession, db: Option[String],
       name: String): Unit = {
     val vn = db.map(d => dbViewName(s"$d.$name")).getOrElse(name)
-    val c = SessionState.of(spark).catalog
-    c.indexes.remove(vn.toLowerCase)
-    c.idxMeta.remove(vn.toLowerCase)
+    SessionState.of(spark).catalog.tableIndexes.remove(vn.toLowerCase)
   }
 
+  /** Register harness-style "name:keys[:ts[:bound[:kind]]]" index
+    * specs (keys `|`-separated) as the table's declared indexes, so
+    * DELETE validation and read-time expiry ([[applyIndexTtl]]) see
+    * these tables exactly like DDL-created ones (disk_table ids 17/18
+    * route scans per index). Kindless bounds infer latest for bare
+    * counts, absolute for time-with-unit; no bound is the reference's
+    * default TTL, which expires nothing. */
   def registerTableIndexes(spark: SparkSession, db: Option[String],
-      name: String, indexs: Seq[String],
-      updateTtlMeta: Boolean = true): Unit = {
+      name: String, indexs: Seq[String]): Unit = {
     val vn = db.map(d => dbViewName(s"$d.$name")).getOrElse(name)
-    val parts = indexs.flatMap(splitIndexSpecs)
-      .map(_.split(":", -1).map(_.trim))
-    val specs = parts.filter(_.length >= 2)
-      .map(p => (p(1).split("\\|").toSeq.map(_.trim),
-        p.lift(2).map(_.trim).filter(_.nonEmpty)))
-    if (specs.nonEmpty)
-      SessionState.of(spark).catalog.indexes.put(vn.toLowerCase, specs)
-    if (!updateTtlMeta) return
-    val metas = parts.filter(p => p.length >= 3 && p(2).nonEmpty).map { p =>
-      val bound = p.lift(3).getOrElse("")
-      val kind = p.lift(4).filter(_.nonEmpty)
-      // kindless non-empty bounds infer from shape: bare count =
-      // latest, time-with-unit = absolute; NO bound = unbounded
-      // absolute (the reference's default TTL)
-      val spec =
-        if (bound.isEmpty)
-          graft.operators.Ttl.TtlSpec(kind.getOrElse("absolute"), 0, 0)
-        else graft.operators.Ttl.parse(bound, Some(kind.getOrElse(
-          if (bound.forall(_.isDigit)) "latest" else "absolute")))
-      IndexMeta(p(1).split("\\|").toSeq.map(_.trim), Some(p(2)), spec,
-        Some(p(0)).filter(_.nonEmpty))
-    }
-    if (metas.nonEmpty)
-      SessionState.of(spark).catalog.idxMeta.put(vn.toLowerCase, metas)
+    val metas = indexs.flatMap(splitIndexSpecs)
+      .map(_.split(":", -1).map(_.trim)).filter(_.length >= 2).map { p =>
+        val bound = p.lift(3).getOrElse("")
+        val kind = p.lift(4).filter(_.nonEmpty)
+        val ttl =
+          if (bound.isEmpty) Ttl.ofKind(kind)
+          else Ttl.parse(bound, Some(kind.getOrElse(
+            if (bound.forall(_.isDigit)) "latest" else "absolute")))
+        IndexMeta(p(1).split("\\|").toSeq.map(_.trim),
+          p.lift(2).filter(_.nonEmpty), ttl, Some(p(0)).filter(_.nonEmpty))
+      }
+    if (metas.nonEmpty) SessionState.of(spark).catalog.tableIndexes
+      .put(vn.toLowerCase, TableIndexes(None, Some(metas)))
   }
 
   /** Long-window pre-aggregation restricts *_where conditions to
@@ -4510,12 +4449,12 @@ object GraftSql {
   private def applyIndexTtl(spark: SparkSession, name: String,
       df: DataFrame, where: Option[String],
       accessKeySets: Seq[Set[String]] = Seq.empty): DataFrame = {
-    val idxMeta = SessionState.of(spark).catalog.idxMeta
-    if (idxMeta.isEmpty) return df // fast path: no DDL tables
-    val metas = idxMeta.getOrElse(name.toLowerCase, {
+    val indexes = SessionState.of(spark).catalog.tableIndexes
+    if (indexes.isEmpty) return df // fast path: no DDL tables
+    val metas = indexes.get(name.toLowerCase).orElse {
       val q = try qualifyTable(spark, name) catch { case _: Throwable => name }
-      idxMeta.getOrElse(q.toLowerCase, Seq.empty)
-    })
+      indexes.get(q.toLowerCase)
+    }.map(_.all).getOrElse(Seq.empty)
     if (metas.isEmpty || !metas.exists(_.ttl.hasBound)) return df
     // equality-covered columns of a pure AND conjunction
     val eq: Set[String] = where.map { w =>

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.streaming.RequestStream.{AbsAndLat, AbsoluteTime, AbsOrLat, LatestCount, Ttl}
+import graft.operators.Ttl
 
 /** Generic streaming DEPLOY: serve an arbitrary deployed SELECT over a
   * stream of events, where every arriving event is simultaneously an
@@ -209,19 +209,11 @@ object StreamDeploy {
     }
 
   private def evict(rows: List[BufRow], ttl: Ttl, nowMs: Long,
-      exclCTSlack: Boolean = false): List[BufRow] =
-    ttl match {
-      case AbsoluteTime(ms) => rows.filter(_.ts >= nowMs - ms)
-      case LatestCount(n)   =>
-        val keep = countKeep(rows, n, exclCTSlack)
-        rows.filter(r => keep(r.seq))
-      case AbsAndLat(ms, n) => // keep while within EITHER limit
-        val keep = countKeep(rows, n, exclCTSlack)
-        rows.filter(r => r.ts >= nowMs - ms || keep(r.seq))
-      case AbsOrLat(ms, n)  => // keep only while within BOTH
-        val keep = countKeep(rows, n, exclCTSlack)
-        rows.filter(r => r.ts >= nowMs - ms && keep(r.seq))
-    }
+      exclCTSlack: Boolean = false): List[BufRow] = {
+    val keep =
+      if (ttl.lat > 0) countKeep(rows, ttl.lat, exclCTSlack) else Set.empty[Long]
+    rows.filterNot(r => ttl.expires(r.ts < nowMs - ttl.absMs, !keep(r.seq)))
+  }
 
   /** TTL derived from the deployed windows (reference: DEPLOY builds
     * index TTL from its window clauses). Rows are kept while inside the
@@ -245,7 +237,8 @@ object StreamDeploy {
         else fp.rowCap + fp.skipNewest + 1
       } else math.max(fp.rowCap, 0) + 1 // MAXSIZE on a range frame
     } :+ (lagDepth + 1)
-    AbsAndLat(spans.foldLeft(1L)(math.max), rowCounts.foldLeft(1)(math.max))
+    Ttl.AbsAndLat(spans.foldLeft(1L)(math.max),
+      rowCounts.foldLeft(1)(math.max))
   }
 
   /** Long view of an aggregate input (integral-sum accumulation). */
@@ -595,20 +588,16 @@ object StreamDeploy {
     // (LatestCount / AbsOrLat) or an absolute span narrower than the
     // frame would make the two paths answer differently, so those
     // serve raw. Anything else falls back to the raw full-frame path.
-    def ttlCovers(span: Long): Boolean = effTtl match {
-      case AbsoluteTime(ms) => ms >= span
-      case AbsAndLat(ms, _) => ms >= span // keep-if-EITHER: span kept
-      case _                => false      // count eviction can cut mid-frame
-    }
+    // Covered: no row within `span` of the newest expires, however far
+    // past the count bound it ranks.
+    def ttlCovers(span: Long): Boolean =
+      !effTtl.expires(pastTime = effTtl.absMs < span, pastCount = true)
     // row-count coverage: the raw path truncates a ROWS frame to the
     // surviving newest-n rows; bucket partials never forget. Only a
-    // retention that always keeps the newest `cap` rows (LatestCount /
-    // AbsAndLat's keep-if-EITHER) makes the two paths agree.
-    def ttlCoversRows(cap: Int): Boolean = effTtl match {
-      case LatestCount(n)  => n >= cap
-      case AbsAndLat(_, n) => n >= cap
-      case _               => false
-    }
+    // retention that always keeps the newest `cap` rows, however old,
+    // makes the two paths agree.
+    def ttlCoversRows(cap: Int): Boolean =
+      !effTtl.expires(pastTime = true, pastCount = effTtl.lat < cap)
     def lwBucketFor(p: Pre): Long = lwByDef.get(p.w) match {
       // time bucket (+ms): plain RANGE frame ending at CURRENT ROW
       case Some(bms) if bms > 0 && !p.frameless && !p.w.isRows &&
@@ -705,12 +694,9 @@ object StreamDeploy {
     // proportional for short spans so the behavior stays testable.
     def withSlack(ms: Long): Long = ms + math.min(60000L, math.max(ms, 500L))
     val idleTimeoutMs: Option[Long] =
-      if (!idleStateGc) None
-      else effTtl match {
-        case AbsoluteTime(ms) => Some(withSlack(ms))
-        case AbsOrLat(ms, _)  => Some(withSlack(ms))
-        case _                => None
-      }
+      if (idleStateGc && effTtl.expires(pastTime = true, pastCount = false))
+        Some(withSlack(effTtl.absMs))
+      else None
     val timeoutConf =
       if (idleTimeoutMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
       else GroupStateTimeout.NoTimeout

@@ -109,8 +109,7 @@ object GraftServe {
     // every request (compilation is cached, generation is not) — and a
     // one-row serving job gains nothing from codegen; interpreted
     // volcano execution removes the dominant driver-side cost
-    conf.setConf(internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED,
-      sys.env.get("GRAFT_SERVE_CODEGEN").contains("1"))
+    conf.setConf(internal.SQLConf.WHOLESTAGE_CODEGEN_ENABLED, false)
     val phys = internal.SQLConf.withExistingConf(conf) {
       QueryExecution.prepareExecutedPlan(cs(spark), plan)
     }

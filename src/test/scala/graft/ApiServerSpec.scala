@@ -279,6 +279,30 @@ class ApiServerSpec extends SparkSpec {
     }
   }
 
+  test("GET table rounds a sub-minute absolute TTL up to one minute") {
+    // the reference stores absolute TTLs in whole minutes, and 0 means
+    // no expiry, so 30s must not read as 0
+    GraftSql.statement(spark,
+      """CREATE TABLE api_ttl (c1 string, c7 timestamp,
+        |INDEX(KEY=c1, TS=c7, TTL=30s, TTL_TYPE=absolute),
+        |INDEX(KEY=c1, TS=c7, TTL=(90s, 3), TTL_TYPE=absandlat))""".stripMargin)
+    val srv = ApiServer.start(spark)
+    try {
+      val keys = parse(get(srv.port, "/dbs/default/tables/api_ttl"))
+        .get("table").get("column_key")
+      val abs = keys.get(0).get("ttl")
+      assert(abs.get("ttl_type").asText() == "absolute", abs.toString)
+      assert(abs.get("abs_ttl").asLong() == 1L, abs.toString)
+      val both = keys.get(1).get("ttl")
+      assert(both.get("ttl_type").asText() == "absandlat", both.toString)
+      assert(both.get("abs_ttl").asLong() == 2L, both.toString)
+      assert(both.get("lat_ttl").asLong() == 3L, both.toString)
+    } finally {
+      srv.stop()
+      GraftSql.statement(spark, "DROP TABLE api_ttl")
+    }
+  }
+
   test("procedures route serves stored procedures; nulls round-trip") {
     GraftSql.resetDeployments(spark)
     Seq(("u1", 10L, 1.0), ("u1", 20L, 2.0))

@@ -140,7 +140,7 @@ class LongWindowServeSpec extends SparkSpec {
   }
 
   test("count-limited TTLs force the raw path (partials never forget)") {
-    import graft.streaming.RequestStream.{AbsoluteTime, LatestCount}
+    import graft.operators.Ttl.{AbsoluteTime, LatestCount}
     val events = mkEvents(300)
     val sql = """SELECT key, ts, sum(qty) OVER w AS s FROM events
       WINDOW w AS (PARTITION BY key ORDER BY ts

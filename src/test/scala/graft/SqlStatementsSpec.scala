@@ -692,6 +692,83 @@ class SqlStatementsSpec extends SparkSpec {
     assert(deleteByC2("di_t") == fresh)
   }
 
+  /** DELETE's answer: None when it ran, else the rejection message. */
+  private def deleteRejection(s: org.apache.spark.sql.SparkSession,
+      t: String, cond: String): Option[String] =
+    try { GraftSql.statement(s, s"DELETE FROM $t WHERE $cond"); None }
+    catch { case e: IllegalArgumentException => Some(e.getMessage) }
+
+  private val noKeyMatch = "do not match the key set of any index"
+
+  test("index registry: a table without an INDEX clause leaves DELETE " +
+      "unvalidated") {
+    val s = spark.newSession()
+    GraftSql.statement(s, "CREATE TABLE ir_a (c1 string, c2 bigint)")
+    GraftSql.statement(s, "INSERT INTO ir_a VALUES ('a', 1), ('b', 2)")
+    assert(deleteRejection(s, "ir_a", "c2 = 1").isEmpty)
+    assert(GraftSql.sql(s, "SELECT c1 FROM ir_a").as[String].collect()
+      .toSeq == Seq("b"))
+  }
+
+  test("index registry: DELETE validates against a declared INDEX") {
+    val s = spark.newSession()
+    GraftSql.statement(s,
+      "CREATE TABLE ir_b (c1 string, c2 bigint, INDEX(KEY=c1))")
+    GraftSql.statement(s, "INSERT INTO ir_b VALUES ('a', 1), ('b', 2)")
+    assert(deleteRejection(s, "ir_b", "c2 = 1").exists(
+      _.contains(noKeyMatch)))
+    assert(deleteRejection(s, "ir_b", "c1 = 'a'").isEmpty)
+  }
+
+  test("index registry: CREATE INDEX, then DROP INDEX of the last " +
+      "declared index") {
+    val s = spark.newSession()
+    GraftSql.statement(s, "CREATE TABLE ir_c (c1 string, c2 bigint)")
+    GraftSql.statement(s, "INSERT INTO ir_c VALUES ('a', 1), ('b', 2)")
+    def indexLines(): Seq[String] =
+      GraftSql.statement(s, "SHOW CREATE TABLE ir_c").get.collect()
+        .head.getString(1).split("\n").toSeq.map(_.trim)
+        .filter(_.startsWith("INDEX"))
+    def metas(): Seq[(Seq[String], Option[String])] =
+      GraftSql.tableIndexMeta(s, "ir_c").map(m => (m.keys, m.name))
+    val auto = "INDEX (KEY=(`c1`), TTL_TYPE=ABSOLUTE, TTL=0m),"
+    GraftSql.statement(s, "CREATE INDEX i ON ir_c (c2)")
+    // only the declared index validates, not the auto-created default
+    assert(deleteRejection(s, "ir_c", "c1 = 'a'").exists(
+      _.contains(noKeyMatch)))
+    assert(deleteRejection(s, "ir_c", "c2 = 1").isEmpty)
+    assert(metas() == Seq((Seq("c1"), None), (Seq("c2"), Some("i"))))
+    assert(indexLines() == Seq(auto,
+      "INDEX (KEY=(`c2`), TTL_TYPE=ABSOLUTE, TTL=0m)"))
+    // after the last declared index is dropped, every DELETE is
+    // rejected: the table once declared an index
+    GraftSql.statement(s, "DROP INDEX ir_c.i")
+    assert(metas() == Seq((Seq("c1"), None)))
+    assert(indexLines() == Seq(auto.stripSuffix(",")))
+    assert(deleteRejection(s, "ir_c", "c2 = 2").exists(
+      _.contains(noKeyMatch)))
+    assert(deleteRejection(s, "ir_c", "c1 = 'b'").exists(
+      _.contains(noKeyMatch)))
+  }
+
+  test("index registry: an unknown TTL_TYPE fails CREATE TABLE and " +
+      "CREATE INDEX alike") {
+    val s = spark.newSession()
+    def rejection(sql: String): String =
+      intercept[IllegalArgumentException](GraftSql.statement(s, sql))
+        .getMessage
+    val msg = "unknown TTL_TYPE 'bogus'"
+    assert(rejection("CREATE TABLE ir_d (c1 string, c7 timestamp, " +
+      "INDEX(KEY=c1, TS=c7, TTL_TYPE=bogus))") == msg)
+    assert(rejection("CREATE TABLE ir_d (c1 string, c7 timestamp, " +
+      "INDEX(KEY=c1, TS=c7, TTL=10m, TTL_TYPE=bogus))") == msg)
+    GraftSql.statement(s, "CREATE TABLE ir_d (c1 string, c7 timestamp)")
+    assert(rejection(
+      "CREATE INDEX i ON ir_d (c1) OPTIONS(ts=c7, ttl_type='bogus')") == msg)
+    assert(rejection("CREATE INDEX i ON ir_d (c1) " +
+      "OPTIONS(ts=c7, ttl=10m, ttl_type='bogus')") == msg)
+  }
+
   test("session state is per SparkSession; reset keeps users and " +
       "functions") {
     val a = spark.newSession()

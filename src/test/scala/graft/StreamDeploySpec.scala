@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.sql.{GraftSql, StreamDeploy}
-import graft.streaming.RequestStream.LatestCount
+import graft.operators.Ttl
+import graft.operators.Ttl.{AbsAndLat, AbsoluteTime, AbsOrLat, LatestCount}
 
 case class Ev(user: String, ts: Long, amt: Double, qty: Long, tag: String)
 
@@ -224,6 +225,43 @@ class StreamDeploySpec extends SparkSpec {
     assert(c(("u1", 50L)) == 2L)
   }
 
+  /** count(amt) over a 1000 ms frame, served under `ttl`, by (user, ts):
+    * u1 arrives at 10, 20, 30 and 200, u2 at 15. */
+  private def countsUnder(ttl: Ttl): Map[(String, Long), Long] =
+    StreamDeploy.serve(spark,
+      """SELECT user, ts, count(amt) OVER w AS c FROM events
+        WINDOW w AS (PARTITION BY user ORDER BY ts
+          ROWS_RANGE BETWEEN 1000 PRECEDING AND CURRENT ROW)""",
+      Seq(Ev("u1", 10L, 1.0, 1L, "a"), Ev("u1", 20L, 2.0, 2L, "a"),
+        Ev("u1", 30L, 3.0, 3L, "a"), Ev("u1", 200L, 4.0, 4L, "a"),
+        Ev("u2", 15L, 10.0, 5L, "a")).toDF(),
+      ttl = Some(ttl))
+      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2))
+      .toMap
+
+  test("TTL abs-or-lat evicts a row past either limit") {
+    assert(countsUnder(AbsOrLat(15L, 10))(("u1", 30L)) == 2L) // ts 10 too old
+    assert(countsUnder(AbsOrLat(1000L, 2))(("u1", 200L)) == 2L) // 2 newest
+  }
+
+  test("TTL abs-and-lat keeps a row inside either limit") {
+    // ts 10 is past the 15 ms span but among the 10 newest
+    assert(countsUnder(AbsAndLat(15L, 10))(("u1", 30L)) == 3L)
+    // every row is inside the 1000 ms span, though past the 2 newest
+    assert(countsUnder(AbsAndLat(1000L, 2))(("u1", 200L)) == 4L)
+    // ts 10 and 20 are past both limits
+    assert(countsUnder(AbsAndLat(15L, 2))(("u1", 200L)) == 2L)
+  }
+
+  test("a 0 TTL component is no bound: the whole history is kept") {
+    for (ttl <- Seq(AbsoluteTime(0L), LatestCount(0), AbsAndLat(0L, 1),
+        AbsOrLat(0L, 0))) {
+      val c = countsUnder(ttl)
+      assert(c(("u1", 200L)) == 4L, ttl)
+      assert(c(("u2", 15L)) == 1L, ttl)
+    }
+  }
+
   test("non-streamable constructs are rejected at deploy time") {
     val ev = evs.toDF()
     def rejects(sql: String, frag: String): Unit = {
@@ -270,7 +308,6 @@ class StreamDeploySpec extends SparkSpec {
     // real-time-feed gc makes. Opt-in requires a processing-time
     // trigger (continuous triggers would busy-loop no-data batches).
     implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.RequestStream.AbsoluteTime
     import org.apache.spark.sql.streaming.Trigger
     val sql = """SELECT user, ts, sum(amt) OVER w AS s FROM events
       WINDOW w AS (PARTITION BY user ORDER BY ts

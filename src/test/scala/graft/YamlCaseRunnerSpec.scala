@@ -316,7 +316,7 @@ class YamlCaseRunnerSpec extends SparkSpec {
         val inferred = kind.getOrElse(
           if (bound.forall(_.isDigit)) "latest" else "absolute")
         val spec =
-          if (bound.isEmpty) Ttl.TtlSpec(inferred, 0, 0)
+          if (bound.isEmpty) Ttl.ofKind(Some(inferred))
           else Ttl.parse(bound, Some(inferred))
         (p(1).split("\\|").toSeq.map(_.trim), p(2), spec)
       }
@@ -515,14 +515,13 @@ class YamlCaseRunnerSpec extends SparkSpec {
       // them (declaration order) followed by CREATE INDEX additions.
       // Only the server's auto-created default index on an index-less
       // input (index_util.cc:101) needs synthesizing here.
-      val autoMetas: Seq[(Seq[String], Option[String], Ttl.TtlSpec)] =
+      val autoMetas: Seq[(Seq[String], Option[String], Ttl)] =
         in match {
           case Some(i) if i.indexs.isEmpty && i.create.isEmpty &&
               i.columns.nonEmpty =>
             val parts = i.columns.map(declParts)
             parts.find(pp => !Set("float", "double")(pp.last.toLowerCase))
-              .map(pp => (Seq(pp(0)), None: Option[String],
-                Ttl.TtlSpec("absolute", 0, 0))).toSeq
+              .map(pp => (Seq(pp(0)), None: Option[String], Ttl.Never)).toSeq
           case _ => Seq.empty
         }
       // db-scoped inputs (input-level `db:` or the case-level default)
@@ -534,12 +533,11 @@ class YamlCaseRunnerSpec extends SparkSpec {
       val got = autoMetas ++ engineMetas
       // the reference stores absolute TTLs in whole minutes, rounded
       // up (1s renders as 1min — test_create_index.yaml id 9)
-      def mins(ms: Long): Long = (ms + 59999L) / 60000L
-      def renderTtl(s: Ttl.TtlSpec): (String, String) = s.kind match {
-        case "latest"    => (s.lat.toString, "kLatestTime")
-        case "absandlat" => (s"${mins(s.absMs)}min&&${s.lat}", "kAbsAndLat")
-        case "absorlat"  => (s"${mins(s.absMs)}min||${s.lat}", "kAbsOrLat")
-        case _           => (s"${mins(s.absMs)}min", "kAbsoluteTime")
+      def renderTtl(s: Ttl): (String, String) = s match {
+        case _: Ttl.LatestCount  => (s.lat.toString, "kLatestTime")
+        case _: Ttl.AbsAndLat    => (s"${s.absMinutes}min&&${s.lat}", "kAbsAndLat")
+        case _: Ttl.AbsOrLat     => (s"${s.absMinutes}min||${s.lat}", "kAbsOrLat")
+        case _: Ttl.AbsoluteTime => (s"${s.absMinutes}min", "kAbsoluteTime")
       }
       assert(got.length == want.length,
         s"idxs count: got ${got.length}, want ${want.length}")
