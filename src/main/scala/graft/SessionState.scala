@@ -3,10 +3,11 @@ package graft
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.DataType
-import graft.sql.GraftSql.{JobInfo, OfflineInfo, TableIndexes,
-  TableStatusMeta, UserFn}
+import graft.sql.GraftSql.{JobInfo, OfflineInfo, PlanKey, ServeKey,
+  ServeTemplate, TableIndexes, TableStatusMeta, UserFn}
 
 /** A deployment (DEPLOY name SELECT ...): the body SQL, validated at
   * DEPLOY time per ONLINE_REQUEST_REQUIREMENTS.md, and the OPTIONS
@@ -32,9 +33,14 @@ private[graft] final case class Procedure(body: String,
     signature: Option[Seq[(String, DataType, Boolean)]], text: String)
 
 /** Everything the engine keeps for one SparkSession. Session state is
-  * tenant state: [[SessionState.of]] keys it weakly, so it is dropped
-  * with its session, where a process-global registry would leak it
-  * across sessions and tests.
+  * tenant state: one session never sees another's, where a
+  * process-global registry would leak it across sessions and tests.
+  * [[SessionState.of]] keys it weakly, but the values hold DataFrames
+  * (online tables, cached plans, serving templates) that reference
+  * their session, so a weak key alone never frees it: the state of a
+  * session whose SparkContext has stopped is dropped when the next new
+  * session's state is made. A session of a running context may keep
+  * its state as long as the context runs.
   *
   * The fields here survive `GraftSql.resetCatalogState`; everything it
   * drops is in [[catalog]], which the reset replaces whole. */
@@ -56,13 +62,28 @@ private[graft] final class SessionState {
     * guarded by GraftSql's monitor. */
   var functionsRegistered = false
   @volatile var catalog = new CatalogState(0L)
+  /** `GraftSql.sql`'s compiled plans; used only when every table comes
+    * from the call's explicit table map, verified against those tables'
+    * canonical plans on a hit. */
+  val planCache =
+    TrieMap[PlanKey, List[(Seq[(String, LogicalPlan)], DataFrame)]]()
+  /** Compiled serving templates (`GraftSql.serveRequest`), LRU-evicted. */
+  val serveTemplates = TrieMap[ServeKey, ServeTemplate]()
+  /** Serving keys whose template cannot be built, by last-touched
+    * tick (LRU-evicted): they take the dynamic path without retrying. */
+  val serveUncacheable = TrieMap[ServeKey, Long]()
 }
 
 private[graft] object SessionState {
   private val states = new java.util.WeakHashMap[SparkSession, SessionState]()
 
   def of(spark: SparkSession): SessionState = states.synchronized {
-    states.computeIfAbsent(spark, _ => new SessionState)
+    Option(states.get(spark)).getOrElse {
+      states.keySet.removeIf(_.sparkContext.isStopped)
+      val st = new SessionState
+      states.put(spark, st)
+      st
+    }
   }
 }
 

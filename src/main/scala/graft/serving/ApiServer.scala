@@ -98,15 +98,6 @@ object ApiServer {
         s"procedure not found, msg: $name does not exist in $db"))
   }
 
-  /** Run `body` under the deployment's home db when it has one (a
-    * USE-scoped DEPLOY), else under the session's current db as-is. */
-  private def inHomeDb[A](spark: SparkSession, name: String)(
-      body: => A): A =
-    GraftSql.deploymentDb(spark, name) match {
-      case some @ Some(_) => GraftSql.withCurrentDb(spark, some)(body)
-      case None           => body
-    }
-
   private def handle(spark: SparkSession, ex: HttpExchange): Unit = {
     val reply =
       try {
@@ -117,19 +108,11 @@ object ApiServer {
             // only the procedures route honors common (const) columns
             // (api_server_impl.cc:451-458 binds has_common_col)
             val bodySql = resolveCallable(spark, db, name)
-            // a db-scoped deployment's body may use plain table names
-            // that only resolve under its home db — execute there,
-            // like the reference (an SP runs in its own db)
-            inHomeDb(spark, name) {
-              execute(spark, name, bodySql, body,
-                hasCommon = kind == "procedures")
-            }
+            execute(spark, name, bodySql, body,
+              hasCommon = kind == "procedures")
           case ("GET", CallRoute(db, _, name)) =>
             val bodySql = resolveCallable(spark, db, name)
-            inHomeDb(spark, name) {
-              envelope(0, "ok",
-                Some(procedureInfo(spark, name, bodySql)))
-            }
+            envelope(0, "ok", Some(procedureInfo(spark, name, bodySql)))
           case ("PUT", TableRoute(db, table)) =>
             val body = new String(ex.getRequestBody.readAllBytes(),
               StandardCharsets.UTF_8)
@@ -395,7 +378,11 @@ object ApiServer {
     // literal rows driver-side — no checkpoint/probe jobs per request
     val reqDf = spark.createDataFrame(
       java.util.Arrays.asList(rows.toIndexedSeq: _*), schema)
-    val out = GraftSql.serveRequest(spark, bodySql, reqDf)
+    // a db-scoped deployment's body may use plain table names that only
+    // resolve under its home db — execute there, like the reference (an
+    // SP runs in its own db)
+    val out = GraftSql.serveRequest(spark, bodySql, reqDf,
+      db = GraftSql.deploymentDb(spark, name))
     val collected = out.collect()
 
     val data = M.createObjectNode()
@@ -449,7 +436,8 @@ object ApiServer {
       }
     }
     schemaArr("input_schema", inSchema)
-    val outSchema = GraftSql.sql(spark, bodySql).schema
+    val outSchema = GraftSql.sql(spark, bodySql,
+      defaultDb = GraftSql.deploymentDb(spark, name)).schema
     schemaArr("output_schema", outSchema)
     val inCommon = data.putArray("input_common_cols")
     consts.foreach(inCommon.add)
@@ -505,13 +493,10 @@ object ApiServer {
           else v.asDouble()
         }
       }.getOrElse(Seq.empty)
-    // run under the requested execute_mode AND the URL's db (the
-    // reference's route binds execution to the path db, not whatever
-    // the session last USE'd), restoring both after. The session-
-    // global mutate-and-restore is race-free only because requests
-    // serialize — `start` uses setExecutor(null) (caller thread per
-    // exchange) and this lock pins that invariant even if the server
-    // ever grows a thread pool.
+    // run in the URL's db (the reference's route binds execution to the
+    // path db; `default` runs in the session's current db) under the
+    // requested execute_mode, restoring the mode after. The lock
+    // serializes this route's session-global mode mutate-and-restore.
     sqlRouteLock.synchronized {
       val prev = GraftSql.statement(spark, "SHOW VARIABLES").get
         .collect().find(_.getString(0) == "execute_mode")
@@ -524,10 +509,10 @@ object ApiServer {
       val isQuery = up.startsWith("SELECT") || up.startsWith("WITH")
       val urlDb = if (db == "default") None else Some(db)
       val result =
-        try GraftSql.withCurrentDb(spark, urlDb) {
+        try {
           if (isQuery && params.nonEmpty)
-            Some(GraftSql.sql(spark, sql, params = params))
-          else GraftSql.statement(spark, sql, params.toList)
+            Some(GraftSql.sql(spark, sql, params = params, defaultDb = urlDb))
+          else GraftSql.statement(spark, sql, params.toList, urlDb)
         } finally GraftSql.statement(spark, s"SET @@execute_mode = '$prev'")
       result match {
         case None => envelope(0, "ok", None)

@@ -618,50 +618,56 @@ object GraftSql {
     case n                  => Vector(String.valueOf(n))
   }
 
-  /** Per-table ORDER hints for unordered LAST JOIN: the reference's
-    * storage iterates each table by its index TS column descending, so
-    * "last" without an ORDER BY picks the max-ts matching row
-    * (union_query.yml id 0). Keyed by table name → ts column; set for
-    * the duration of one sql() call. */
-  private val tsHintsTL =
-    new ThreadLocal[Map[String, String]] {
-      override def initialValue(): Map[String, String] = Map.empty
-    }
-
   // ------------------------------------------------------------------
   // Database namespaces (docs/en/openmldb_sql/ddl/
   // USE_DATABASE_STATEMENT.md, CREATE_DATABASE_STATEMENT.md): a
   // database is a table-name prefix. CREATE DATABASE registers the
   // namespace, USE sets the session's default; unqualified names
-  // resolve against the default database first. `defaultDb` on sql()
-  // overrides per call (the test harness's case-level db).
+  // resolve against the planning context's db first. The entry points
+  // take a db that overrides the session's per call (the test
+  // harness's case-level db, a deployment's home db, a REST URL's db).
   // ------------------------------------------------------------------
-  private val defaultDbTL = new ThreadLocal[Option[String]] {
-    override def initialValue(): Option[String] = None
-  }
-  private def curDb(spark: SparkSession): Option[String] =
-    defaultDbTL.get.orElse(SessionState.of(spark).catalog.curDb)
+
+  /** What planning one query reads besides the query itself, as one
+    * value built once per entry point:
+    *  - `db`: the database unqualified table names resolve in first
+    *    (None = the implicit default namespace);
+    *  - `tsHints`: per-table ORDER hints for unordered LAST JOIN, table
+    *    name → ts column. The reference's storage iterates each table
+    *    by its index TS column descending, so "last" without an ORDER
+    *    BY picks the max-ts matching row (union_query.yml id 0);
+    *  - `ctes`: the lowercase WITH names in lexical scope. A WITH name
+    *    shadows any physical table, so offline routing must not
+    *    reinterpret it;
+    *  - `template`: the serving template being built, if any. */
+  private[sql] final case class PlanCtx(spark: SparkSession,
+      db: Option[String], tsHints: Map[String, String] = Map.empty,
+      ctes: Set[String] = Set.empty, template: Option[TemplateBuild] = None)
+
+  /** The context of a call in `db`, or in the session's current db when
+    * `db` is None. */
+  private[sql] def planCtx(spark: SparkSession, db: Option[String],
+      tsHints: Map[String, String] = Map.empty): PlanCtx =
+    PlanCtx(spark, db.orElse(SessionState.of(spark).catalog.curDb), tsHints)
 
   /** Run a dialect query. `tables` overrides/augments the session's
     * temp-view catalog for table-name resolution; `params` bind `?`
     * placeholders in order (the reference's parameterized query mode —
     * cases/query/parameterized_query.yaml); `tsHints` name each table's
-    * index TS column (storage iteration order for unordered LAST JOIN). */
+    * index TS column (storage iteration order for unordered LAST JOIN);
+    * `defaultDb` overrides the session's current db. */
   def sql(spark: SparkSession, text: String,
       tables: Map[String, DataFrame] = Map.empty,
       params: Seq[Any] = Nil,
       tsHints: Map[String, String] = Map.empty,
       defaultDb: Option[String] = None): DataFrame = {
     ensureFunctions(spark)
-    tsHintsTL.set(tsHints)
-    defaultDbTL.set(defaultDb.orElse(SessionState.of(spark).catalog.curDb))
-    cteNamesTL.remove()
-    try sqlImpl(spark, text, tables, params)
-    finally { tsHintsTL.remove(); defaultDbTL.remove(); cteNamesTL.remove() }
+    sqlImpl(planCtx(spark, defaultDb, tsHints), text, tables, params)
   }
 
-  private def sqlImpl(spark: SparkSession, text: String,
+  private def sqlImpl(ctx: PlanCtx, text: String,
       tables: Map[String, DataFrame], params: Seq[Any]): DataFrame = {
+    import ctx.spark
     var remaining = params
     val toks = tokenize(text).flatMap {
       case "?" if remaining.nonEmpty =>
@@ -679,7 +685,7 @@ object GraftSql {
     if (q.selects.length == 1 && q.ctes.isEmpty &&
         selC.config.get("execute_mode").contains("request") &&
         selC.configValues.nonEmpty) {
-      val hist = resolveRef(spark, selC.fromTable, tables)
+      val hist = resolveRef(ctx, selC.fromTable, tables)
       val reqCols = selC.configValues.zip(hist.schema.fields.toSeq).map {
         case (vt, f) =>
           import org.apache.spark.sql.types._
@@ -702,7 +708,7 @@ object GraftSql {
           c.as(f.name)
       }
       val requests = spark.range(1).select(reqCols: _*)
-      return requestModeQuery(spark,
+      return requestModeQuery(ctx,
         q.copy(selects = Seq(selC.copy(config = Map.empty, configValues = Nil))),
         requests, tables)
     }
@@ -716,50 +722,35 @@ object GraftSql {
     // replaced by DML between calls, so catalog-resolved plans are
     // never cached. Hits verify the sources with semanticEquals, not
     // just a hash.
-    def refNames(qq: Query): Seq[String] = {
-      def ofRef(r: TRef): Seq[String] = r match {
-        case Left(n)    => Seq(n)
-        case Right(sub) => refNames(sub)
-      }
-      val cteNames = qq.ctes.map(_._1.toLowerCase).toSet
-      (qq.ctes.flatMap(c => refNames(c._2)) ++
-        qq.selects.flatMap { s =>
-          ofRef(s.fromTable) ++ s.joins.flatMap(j => ofRef(j.table)) ++
-            s.windows.values.flatMap(_.unions.flatMap(ofRef))
-        }).filterNot(n => cteNames(n.toLowerCase))
-    }
-    val refs = refNames(q)
-    val cacheable = refs.nonEmpty &&
-      refs.forall(n => n.nonEmpty && tables.contains(n))
-    if (!cacheable) return planQuery(spark, q, tables)
-    val srcs = refs.distinct.sorted.map(n =>
+    val refs = tableRefNames(q)
+    if (refs.isEmpty || !refs.forall(tables.contains))
+      return planQuery(ctx, q, tables)
+    val srcs = refs.sorted.map(n =>
       n -> tables(n).queryExecution.analyzed.canonicalized)
-    val key = (spark, text, params.map(String.valueOf).mkString(""),
-      tsHintsTL.get.toSeq.sorted.mkString(","),
+    val st = SessionState.of(spark)
+    val key = (text, params.map(String.valueOf).mkString(""),
+      ctx.tsHints.toSeq.sorted.mkString(","),
       // plan-shaping session variables are part of the identity: a SET
       // between calls must not resurrect a plan built under the old value
-      defaultDbTL.get.getOrElse("") + "|skew=" +
-        SessionState.of(spark).catalog.vars
-          .getOrElse("window_skew_opt", "false"))
-    planCache.getOrElse(key, Nil) match {
+      ctx.db.getOrElse("") + "|skew=" +
+        st.catalog.vars.getOrElse("window_skew_opt", "false"))
+    st.planCache.getOrElse(key, Nil) match {
       case (cachedSrcs, df) :: _
           if cachedSrcs.length == srcs.length &&
             cachedSrcs.zip(srcs).forall { case ((n1, p1), (n2, p2)) =>
               n1 == n2 && p1 == p2 } =>
         df
       case _ =>
-        val df = planQuery(spark, q, tables)
-        if (planCache.size > 256) planCache.clear()
-        planCache.put(key, List((srcs, df)))
+        val df = planQuery(ctx, q, tables)
+        if (st.planCache.size > 256) st.planCache.clear()
+        st.planCache.put(key, List((srcs, df)))
         df
     }
   }
 
-  private type PlanKey = (SparkSession, String, String, String, String)
-  private val planCache = new scala.collection.concurrent.TrieMap[
-    PlanKey,
-    List[(Seq[(String, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      DataFrame)]]()
+  /** [[SessionState.planCache]]'s key: query text, bound parameters, ts
+    * hints, then the db and the plan-shaping session variables. */
+  private[graft] type PlanKey = (String, String, String, String)
 
   /** Request mode: compute the query's features point-in-time for each
     * request row against the stored history — the reference's DEPLOY /
@@ -770,7 +761,12 @@ object GraftSql {
     * (PhysicalRequestUnionNode, physical_op.h:1504). Returns one output
     * row per request row. */
   def requestMode(spark: SparkSession, text: String, requests: DataFrame,
-      tables: Map[String, DataFrame] = Map.empty): DataFrame = {
+      tables: Map[String, DataFrame] = Map.empty): DataFrame =
+    requestMode(planCtx(spark, None), text, requests, tables)
+
+  private def requestMode(ctx: PlanCtx, text: String, requests: DataFrame,
+      tables: Map[String, DataFrame]): DataFrame = {
+    import ctx.spark
     ensureFunctions(spark)
     val parser = new Parser(tokenize(text))
     val q = parser.parseQuery()
@@ -803,7 +799,7 @@ object GraftSql {
           .withColumn(ReqUidCol, monotonically_increasing_id())
           .localCheckpoint(true)
     }
-    val out = requestModeQuery(spark, q, tagged, tables)
+    val out = requestModeQuery(ctx, q, tagged, tables)
     out.drop(out.columns.filter(_.startsWith(ReqUidCol)).toIndexedSeq: _*)
   }
 
@@ -832,37 +828,33 @@ object GraftSql {
   //    r17 dynamic path: 601 ms / 15.5).
   // ------------------------------------------------------------------
 
-  /** True while a serving template is being PLANNED on this thread:
-    * plan construction must stay request-VALUE-independent (pruning
-    * switches from InSet literals to broadcast key joins). */
-  private val templateModeTL = new ThreadLocal[Boolean] {
-    override def initialValue(): Boolean = false
+  /** One serving-template build. While it is planned, plan
+    * construction must stay request-VALUE-independent (pruning switches
+    * from InSet literals to broadcast key joins). `placeholder` is the
+    * request relation's RDD (identity check: expression-based pruning
+    * only fires against the RAW request relation, never a derived
+    * subquery whose key values differ from the raw rows the per-request
+    * injector reads). Two buffers collect, for this build only:
+    *  - `pruneLists`: PARTITION BY key lists routed to
+    *    ServeKeyMembership, in listIdx order — resolved to
+    *    request-schema ordinals and stored on the template for
+    *    per-request key-set extraction;
+    *  - `histSlots`: indexed-history slots. The pruned FROM history is
+    *    replaced by an opaque placeholder whose rows the serving layer
+    *    looks up per request from a driver-side key→row-positions index
+    *    (the reference tablet's per-key skiplist seek,
+    *    src/storage/mem_table.cc — a request reads ITS keys' rows, never
+    *    a scan). */
+  private[sql] final class TemplateBuild(
+      val placeholder: org.apache.spark.rdd.RDD[
+        org.apache.spark.sql.catalyst.InternalRow]) {
+    val pruneLists = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val histSlots = scala.collection.mutable.ArrayBuffer.empty[HistSlot0]
   }
-  // the placeholder RDD of the template being built (identity check:
-  // expression-based pruning only fires against the RAW request
-  // relation, never a derived subquery whose key values differ from
-  // the raw rows the per-request injector reads)
-  private val templatePlaceholderTL = new ThreadLocal[AnyRef]
-  // PARTITION BY key lists routed to ServeKeyMembership during the
-  // build, in listIdx order — resolved to request-schema ordinals and
-  // stored on the template for per-request key-set extraction
-  private val pruneListsTL =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[Seq[String]]] {
-      override def initialValue() =
-        scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
-    }
-  // indexed-history slots registered during a template build: the
-  // pruned FROM history is replaced by an opaque placeholder whose
-  // rows the serving layer looks up per request from a driver-side
-  // key→row-positions index (the reference tablet's per-key skiplist
-  // seek, src/storage/mem_table.cc — a request reads ITS keys' rows,
-  // never a scan)
-  private final case class HistSlot0(
+  private[sql] final case class HistSlot0(
       placeholder: org.apache.spark.rdd.RDD[
         org.apache.spark.sql.catalyst.InternalRow],
       history: DataFrame, keyLists: Seq[Seq[String]])
-  private val histSlotsTL =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[HistSlot0]]
   /** Online histories up to this (estimated) size serve from the
     * driver-resident index; larger ones keep the scan-side membership
     * filter. The serving view is the TTL-bounded ONLINE slice — the
@@ -873,14 +865,14 @@ object GraftSql {
     * order — uid/tie order identical to the scan the placeholder
     * replaced) plus, per key list, request-schema fields and the
     * key→positions map. */
-  private final case class HistSlot(
+  private[graft] final case class HistSlot(
       placeholder: org.apache.spark.rdd.RDD[
         org.apache.spark.sql.catalyst.InternalRow],
       rows: Array[org.apache.spark.sql.catalyst.InternalRow],
       lists: IndexedSeq[(Seq[(Int, org.apache.spark.sql.types.DataType)],
         java.util.HashMap[Any, Array[Int]])])
 
-  private final case class ServeTemplate(
+  private[graft] final case class ServeTemplate(
       optimized: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       placeholder: org.apache.spark.rdd.RDD[
         org.apache.spark.sql.catalyst.InternalRow],
@@ -913,18 +905,12 @@ object GraftSql {
       touched: java.util.concurrent.atomic.AtomicLong =
         new java.util.concurrent.atomic.AtomicLong(0))
 
-  // key: (session, query text, current db, ts hints, request
-  // signature, user-function registry version). The version component
-  // makes CREATE/DROP FUNCTION invalidate compiled templates — the
-  // per-request sourcesFresh check only watches TABLES.
-  private type ServeKey =
-    (SparkSession, String, String, String, String, Long)
-  private val serveTemplates =
-    new scala.collection.concurrent.TrieMap[ServeKey, ServeTemplate]()
-  // value = last-touched tick, for LRU eviction (was a Set; clear-all
-  // eviction made the 513th uncacheable query forget every prior one)
-  private val serveUncacheable =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), Long]()
+  /** The key of [[SessionState.serveTemplates]] and
+    * [[SessionState.serveUncacheable]]: (query text, db, ts hints,
+    * request signature, user-function registry version). The version
+    * component makes CREATE/DROP FUNCTION invalidate compiled templates
+    * — the per-request sourcesFresh check only watches TABLES. */
+  private[graft] type ServeKey = (String, String, String, String, Long)
   /** Template (re)builds — observable for specs pinning cache reuse. */
   private[sql] val serveTemplateBuilds =
     new java.util.concurrent.atomic.AtomicLong(0)
@@ -934,27 +920,13 @@ object GraftSql {
   private[sql] var serveTemplateCap = 64
   private val serveUncacheableCap = 512
 
-  /** Evict down to `cap`: stopped-session entries first, then oldest-
-    * touched one at a time — a fleet serving cap+1 hot deployments
-    * loses ONE template per new build, not all of them (the old
-    * clear-all forced a correlated re-plan spike across every hot
-    * deployment). */
-  private def evictLru[K](m: scala.collection.concurrent.TrieMap[K, Long],
-      cap: Int, stopped: K => Boolean): Unit =
-    if (m.size > cap) {
-      m.keysIterator.filter(stopped).toList.foreach(m.remove)
-      while (m.size > cap)
-        m.remove(m.minBy(_._2)._1)
-    }
-
-  private def evictTemplates(): Unit =
-    if (serveTemplates.size > serveTemplateCap) {
-      serveTemplates.keysIterator
-        .filter(_._1.sparkContext.isStopped).toList
-        .foreach(serveTemplates.remove)
-      while (serveTemplates.size > serveTemplateCap)
-        serveTemplates.remove(serveTemplates.minBy(_._2.touched.get)._1)
-    }
+  /** Evict down to `cap`, oldest-touched one at a time — a fleet
+    * serving cap+1 hot deployments loses ONE template per new build, not
+    * all of them (the old clear-all forced a correlated re-plan spike
+    * across every hot deployment). */
+  private def evictLru[K, V](m: scala.collection.concurrent.TrieMap[K, V],
+      cap: Int)(touched: V => Long): Unit =
+    while (m.size > cap) m.remove(m.minBy(e => touched(e._2))._1)
 
   private def unwrapView(
       p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
@@ -985,30 +957,30 @@ object GraftSql {
     * compared per request against the template's captured one; any
     * INSERT / DELETE / stream commit re-registers the view with a new
     * plan, so read-your-commits serving stays exact. */
-  private def currentSource(spark: SparkSession, name: String)
+  private def currentSource(ctx: PlanCtx, name: String)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
-    unwrapView(resolve(spark, name, Map.empty).queryExecution.analyzed)
+    unwrapView(resolve(ctx, name, Map.empty).queryExecution.analyzed)
 
   /** The catalog name `resolve` would read for a bare table ref —
     * mirrors resolve()'s db-qualification so the raw-instance lookup
     * sees the same view. */
-  private def resolvedViewName(spark: SparkSession, name: String): String =
+  private def resolvedViewName(ctx: PlanCtx, name: String): String =
     if (name.contains('.')) dbViewName(name)
-    else curDb(spark) match {
-      case Some(db) if spark.catalog.tableExists(
+    else ctx.db match {
+      case Some(db) if ctx.spark.catalog.tableExists(
           quoteId(dbViewName(s"$db.$name"))) => dbViewName(s"$db.$name")
       case _ => name
     }
 
-  private def sourcesFresh(spark: SparkSession, t: ServeTemplate): Boolean =
+  private def sourcesFresh(ctx: PlanCtx, t: ServeTemplate): Boolean =
     t.sources.forall { case (n, raw, p) =>
       val rawNow = org.apache.spark.sql.GraftServe.rawTempView(
-        spark, resolvedViewName(spark, n))
+        ctx.spark, resolvedViewName(ctx, n))
       (raw, rawNow) match {
         case (Some(a), Some(b)) if a eq b => true // no analyzer run
         case _ =>
           try {
-            val cur = currentSource(spark, n)
+            val cur = currentSource(ctx, n)
             (cur eq p) || cur.sameResult(p)
           } catch { case scala.util.control.NonFatal(_) => false }
       }
@@ -1021,21 +993,31 @@ object GraftSql {
     * Falls back to [[requestMode]] whenever the template path cannot
     * apply (non-literal request batches, explicit table maps, offline
     * mode, template build/execution failure) — never fails a request
-    * the dynamic path would answer. */
+    * the dynamic path would answer. `db` overrides the session's
+    * current db (a deployment serves in its home db). */
   def serveRequest(spark: SparkSession, text: String, requests: DataFrame,
-      tables: Map[String, DataFrame] = Map.empty): DataFrame = {
+      tables: Map[String, DataFrame] = Map.empty,
+      db: Option[String] = None): DataFrame = {
+    val ctx = planCtx(spark, db)
     val viaTemplate =
-      try serveViaTemplate(spark, text, requests, tables)
+      try serveViaTemplate(ctx, text, requests, tables)
       catch { case scala.util.control.NonFatal(_) => None }
-    viaTemplate.getOrElse(requestMode(spark, text, requests, tables))
+    viaTemplate.getOrElse(requestMode(ctx, text, requests, tables))
   }
 
-  private def serveViaTemplate(spark: SparkSession, text: String,
+  private def serveViaTemplate(ctx: PlanCtx, text: String,
       requests: DataFrame, tables: Map[String, DataFrame])
       : Option[DataFrame] = {
     import org.apache.spark.sql.GraftServe
+    import ctx.spark
     if (tables.nonEmpty || offlineMode(spark)) return None
-    if (serveUncacheable.contains((spark, text))) return None
+    val st = SessionState.of(spark)
+    val sig = reqSigOf(requests)
+    val key: ServeKey = (text, ctx.db.getOrElse(""),
+      ctx.tsHints.toSeq.sorted.mkString(","),
+      sig.map { case (n, t) => s"$n:${t.sql}" }.mkString(","),
+      userFnsVersion.get)
+    if (st.serveUncacheable.contains(key)) return None
     // literal request batches only — the shape every serving surface
     // (HTTP POST, CALL, SDK-style embedded) builds. Logical-plan match
     // first: the hot surfaces build LocalRelation directly, so the
@@ -1051,11 +1033,6 @@ object GraftSql {
           case _ => None
         }
       }).getOrElse(return None)
-    val sig = reqSigOf(requests)
-    val key: ServeKey = (spark, text, defaultDbTL.get.getOrElse(""),
-      tsHintsTL.get.toSeq.sorted.mkString(","),
-      sig.map { case (n, t) => s"$n:${t.sql}" }.mkString(","),
-      userFnsVersion.get)
 
     def buildTemplate(): Option[ServeTemplate] = {
       serveTemplateBuilds.incrementAndGet()
@@ -1069,7 +1046,7 @@ object GraftSql {
       if (names.isEmpty) return None
       val sources = names.map { n =>
         (n, org.apache.spark.sql.GraftServe.rawTempView(
-          spark, resolvedViewName(spark, n)), currentSource(spark, n))
+          spark, resolvedViewName(ctx, n)), currentSource(ctx, n))
       }
       val taggedSchema = org.apache.spark.sql.types.StructType(
         requests.schema.fields :+ org.apache.spark.sql.types.StructField(
@@ -1078,21 +1055,9 @@ object GraftSql {
         Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
       val tagged = GraftServe.internalRddDf(spark, placeholder,
         taggedSchema, 16L * 1024)
-      templateModeTL.set(true)
-      templatePlaceholderTL.set(placeholder)
-      pruneListsTL.set(
-        scala.collection.mutable.ArrayBuffer.empty[Seq[String]])
-      histSlotsTL.set(
-        scala.collection.mutable.ArrayBuffer.empty[HistSlot0])
-      val (out, pruneKeyNames, histSlots0) =
-        try (requestModeQuery(spark, q, tagged, Map.empty),
-          pruneListsTL.get.toIndexedSeq, histSlotsTL.get.toIndexedSeq)
-        finally {
-          templateModeTL.set(false)
-          templatePlaceholderTL.remove()
-          pruneListsTL.remove()
-          histSlotsTL.remove()
-        }
+      val build = new TemplateBuild(placeholder)
+      val out = requestModeQuery(ctx.copy(template = Some(build)), q,
+        tagged, Map.empty)
       def reqFieldsOf(keys: Seq[String]): Seq[
           (Int, org.apache.spark.sql.types.DataType)] =
         keys.map { k =>
@@ -1103,11 +1068,11 @@ object GraftSql {
       // key names (validated present in the request schema by
       // pruneHistoryForRequests) → request-schema ordinals + types,
       // for the per-request key-set extraction
-      val pruneLists = pruneKeyNames.map(reqFieldsOf)
+      val pruneLists = build.pruneLists.toIndexedSeq.map(reqFieldsOf)
       // collect each indexed history ONCE (template build / DEPLOY
       // time) and build its key→positions maps — per-request lookups
       // are then O(request keys), the reference's skiplist-seek analog
-      val histSlots: IndexedSeq[HistSlot] = histSlots0.map { s0 =>
+      val histSlots = build.histSlots.toIndexedSeq.map { s0 =>
         val rows = s0.history.queryExecution.executedPlan.executeCollect()
         val hSchema = s0.history.schema
         val lists = s0.keyLists.toIndexedSeq.map { keys =>
@@ -1155,20 +1120,19 @@ object GraftSql {
         pruneLists, histSlots))
     }
 
-    val cached = serveTemplates.get(key).filter(t =>
-      t.reqSig == sig && sourcesFresh(spark, t))
+    val cached = st.serveTemplates.get(key).filter(t =>
+      t.reqSig == sig && sourcesFresh(ctx, t))
     cached.foreach(_.touched.set(serveClock.incrementAndGet()))
     val tpl = cached.orElse {
       buildTemplate() match {
         case Some(t) =>
           t.touched.set(serveClock.incrementAndGet())
-          serveTemplates.put(key, t)
-          evictTemplates()
+          st.serveTemplates.put(key, t)
+          evictLru(st.serveTemplates, serveTemplateCap)(_.touched.get)
           Some(t)
         case None =>
-          serveUncacheable.put((spark, text), serveClock.incrementAndGet())
-          evictLru(serveUncacheable, serveUncacheableCap,
-            (k: (SparkSession, String)) => k._1.sparkContext.isStopped)
+          st.serveUncacheable.put(key, serveClock.incrementAndGet())
+          evictLru(st.serveUncacheable, serveUncacheableCap)(identity)
           None
       }
     }
@@ -1218,7 +1182,7 @@ object GraftSql {
     }
   }
 
-  private def requestModeQuery(spark: SparkSession, q: Query,
+  private def requestModeQuery(ctx: PlanCtx, q: Query,
       requests: DataFrame, tables: Map[String, DataFrame]): DataFrame = {
     require(q.ctes.isEmpty && q.selects.length == 1,
       "request mode supports a single SELECT")
@@ -1232,7 +1196,7 @@ object GraftSql {
     // (fz_ddl corpus: `select * from (select reqId as reqId_1 ...) as
     // out0 last join ... on out0.reqId_1 = ...`)
     val reqRows = sel.fromTable match {
-      case Right(sub) => requestModeQuery(spark, sub, requests, tables)
+      case Right(sub) => requestModeQuery(ctx, sub, requests, tables)
       case _          => requests
     }
     // a LAST JOIN right side that derives from the SAME request table
@@ -1259,7 +1223,7 @@ object GraftSql {
             if mainRoot.isDefined && requestPlannable(sub) &&
               rootName(jc.table).map(_.toLowerCase) == mainRoot =>
           val nm = s"__graft_req_join_$k"
-          val planned = requestModeQuery(spark, sub, requests, tables)
+          val planned = requestModeQuery(ctx, sub, requests, tables)
           // both sides carry the request-row identity: join on it too,
           // so duplicate user-level join keys across concurrent
           // requests still pair each request with ITS derived row
@@ -1294,10 +1258,10 @@ object GraftSql {
       val req =
         if (fromName.nonEmpty && sel.fromAlias.isEmpty) reqRows.alias(fromName)
         else reqRows
-      return planSelect(spark, selJ.copy(fromTable = Left(RequestRowsTable)),
+      return planSelect(ctx, selJ.copy(fromTable = Left(RequestRowsTable)),
         tablesJ + (RequestRowsTable -> req))
     }
-    val history0 = resolveRef(spark, sel.fromTable, tables)
+    val history0 = resolveRef(ctx, sel.fromTable, tables)
     // Serving-path key pruning — the reference's per-key index scan
     // analog (its tablet answers a request from the skiplist segment of
     // the request's key, src/storage/mem_table.cc; it never scans other
@@ -1310,7 +1274,7 @@ object GraftSql {
     // Batch-request mode (large request sets) keeps the full history:
     // the filter would not prune. Measured (ServingBench shape, 2
     // windows + 2 LAST JOINs): p50 1.55 s → see SERVING_BENCH artifact.
-    val history = pruneHistoryForRequests(spark, history0, sel, reqRows)
+    val history = pruneHistoryForRequests(ctx, history0, sel, reqRows)
     // union with provenance flag; the request row is the only primary.
     // History goes FIRST so its uids are lower: a request row whose ts
     // ties stored rows must still see them at-or-before itself
@@ -1325,7 +1289,7 @@ object GraftSql {
     // coalesce is not a shuffle). Order is preserved (history
     // partition first), so uid assignment is unchanged.
     val flagged0 =
-      if (templateModeTL.get) flagged00.coalesce(1) else flagged00
+      if (ctx.template.isDefined) flagged00.coalesce(1) else flagged00
     // keep the FROM table's name resolvable as a qualifier — the query
     // text may reference `t0.c7` (test_batch_request.yaml)
     val fromName0 = sel.fromTable.left.toOption.getOrElse("")
@@ -1333,7 +1297,7 @@ object GraftSql {
       if (fromName0.nonEmpty && sel.fromAlias.isEmpty) flagged0.alias(fromName0)
       else flagged0
     val sel2 = selJ.copy(fromTable = Left(RequestUnionTable))
-    planSelect(spark, sel2, tablesJ + (RequestUnionTable -> flagged),
+    planSelect(ctx, sel2, tablesJ + (RequestUnionTable -> flagged),
       requestMode = true)
   }
 
@@ -1352,7 +1316,7 @@ object GraftSql {
     * frame. WINDOW UNION side tables are not touched (only the FROM
     * history is pruned; union rows join frames keyed the same way, so
     * dropping non-matching FROM rows stays lossless). */
-  private def pruneHistoryForRequests(spark: SparkSession,
+  private def pruneHistoryForRequests(ctx: PlanCtx,
       history: DataFrame, sel: Select, requests: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
     // Nested inline OVER specs (`abs(sum(b) OVER (PARTITION BY c2 ...))`)
@@ -1404,7 +1368,8 @@ object GraftSql {
     val keyLists = defs.map(plainKeys)
     if (keyLists.exists(_.isEmpty)) return history
     val distinctLists = keyLists.flatten.distinct
-    if (templateModeTL.get) {
+    if (ctx.template.isDefined) {
+      val build = ctx.template.get
       // compiled serving template: request VALUES are unknown at
       // template-build time. Preferred: a ServeKeyMembership filter
       // whose key set the serving layer injects per request from the
@@ -1417,8 +1382,7 @@ object GraftSql {
       // too, one job per list per request).
       val rawPlaceholder = requests.queryExecution.logical match {
         case l: org.apache.spark.sql.execution.LogicalRDD =>
-          templatePlaceholderTL.get != null &&
-            (l.rdd eq templatePlaceholderTL.get)
+          l.rdd eq build.placeholder
         case _ => false
       }
       def keyTypeOk(k: String): Boolean = {
@@ -1446,17 +1410,16 @@ object GraftSql {
           try history.queryExecution.optimizedPlan.stats.sizeInBytes
           catch { case scala.util.control.NonFatal(_) =>
             BigInt(Long.MaxValue) }
-        val slots = histSlotsTL.get
-        if (slots != null && histBytes <= MaxIndexedHistoryBytes) {
-          val ph = spark.sparkContext.parallelize(
+        if (histBytes <= MaxIndexedHistoryBytes) {
+          val ph = ctx.spark.sparkContext.parallelize(
             Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
-          slots += HistSlot0(ph, history, distinctLists)
+          build.histSlots += HistSlot0(ph, history, distinctLists)
           return org.apache.spark.sql.GraftServe.internalRddDf(
-            spark, ph, history.schema, 1L << 20)
+            ctx.spark, ph, history.schema, 1L << 20)
         }
         // large histories: ServeKeyMembership filter riding the main
         // job's scan (key sets injected per request, no extra jobs)
-        val buf = pruneListsTL.get
+        val buf = build.pruneLists
         val preds = distinctLists.map { keys =>
           val idx = buf.length
           buf += keys
@@ -1590,7 +1553,8 @@ object GraftSql {
     * root-table schema minus engine-internal columns — what CALL types
     * its literal args by and the HTTP API types JSON input rows by
     * (the reference reads the same input schema off the SP,
-    * api_server_impl.cc:524-531). */
+    * api_server_impl.cc:524-531). The root table resolves in the
+    * deployment's home db. */
   def requestSchemaFor(spark: SparkSession, name: String)
       : org.apache.spark.sql.types.StructType = {
     val bodySql = callableBody(spark, name).getOrElse(
@@ -1601,7 +1565,8 @@ object GraftSql {
       case Left(n)    => n
       case Right(sub) => rootOf(sub.selects.head.fromTable)
     }
-    val rootTable = qualifyTable(spark, rootOf(cq.selects.head.fromTable))
+    val rootTable = qualifyTable(planCtx(spark, deploymentDb(spark, name)),
+      rootOf(cq.selects.head.fromTable))
     // request rows may carry nulls even when the stored history's
     // schema is non-nullable (a Seq-of-tuples view infers primitive
     // fields as required) — the request-row schema is always nullable
@@ -1946,13 +1911,14 @@ object GraftSql {
     udafFoldSql(fn,
       s"collect_list(CAST(($argSql) AS ${fnSqlType(fn.params.head._2)}))")
 
-  /** Serve a batch of request rows against a deployed query (the
-    * batch-request path; StreamDeploy serves the streaming path). */
+  /** Serve a batch of request rows against a deployed query in its home
+    * db (the batch-request path; StreamDeploy serves the streaming
+    * path). */
   def serveDeployment(spark: SparkSession, name: String, requests: DataFrame,
       tables: Map[String, DataFrame] = Map.empty): DataFrame =
     serveRequest(spark, deployment(spark, name).getOrElse(
       throw new IllegalArgumentException(s"no deployment named '$name'")),
-      requests, tables)
+      requests, tables, deploymentDb(spark, name))
 
   /** Clause legality for online request mode
     * (ONLINE_REQUEST_REQUIREMENTS.md): a single SELECT; no set ops or
@@ -2126,11 +2092,12 @@ object GraftSql {
   /** Execute one statement. DQL returns Some(result); DDL/DML/IO return
     * None after executing eagerly. `params` bind `?` placeholders in an
     * INSERT's VALUES positionally (the reference's PreparedStatement
-    * surface — test_insert_prepared.yaml). */
+    * surface — test_insert_prepared.yaml). The statement runs in `db`,
+    * or in the session's current db when `db` is None. */
   def statement(spark: SparkSession, text: String,
-      params: Seq[Any] = Nil): Option[DataFrame] = {
+      params: Seq[Any] = Nil, db: Option[String] = None): Option[DataFrame] = {
     ensureFunctions(spark)
-    cteNamesTL.remove()
+    val ctx = planCtx(spark, db)
     val p = new Parser(tokenize(text.trim.stripSuffix(";")))
     p.peekUp match {
       case "SET" =>
@@ -2204,7 +2171,7 @@ object GraftSql {
         // back_quote_identifier.yaml id 4)
         p.expect("DESC")
         import spark.implicits._
-        val name = qualifyTable(spark, readTableName(p))
+        val name = qualifyTable(ctx, readTableName(p))
         val fields = spark.table(quoteId(name)).schema.fields.toSeq
         Some(fields.map(f =>
             (f.name, f.dataType.simpleString,
@@ -2252,7 +2219,7 @@ object GraftSql {
             // SHOW CREATE TABLE t (ddl/SHOW_CREATE_TABLE_STATEMENT.md):
             // reconstructed DDL from the schema + index metadata
             p.expect("TABLE")
-            val tn = qualifyTable(spark, readTableName(p))
+            val tn = qualifyTable(ctx, readTableName(p))
             val schema = spark.table(quoteId(tn)).schema
             def sqlType(dt: org.apache.spark.sql.types.DataType): String = {
               import org.apache.spark.sql.types._
@@ -2303,7 +2270,7 @@ object GraftSql {
               case c if "\\.[]{}()*+?^$|".contains(c) => "\\" + c
               case c => c.toString
             }
-            val cur = curDb(spark)
+            val cur = ctx.db
             // (database, short name, catalog name) of every visible
             // table: unprefixed views live in the default db
             val all = spark.catalog.listTables().collect().toSeq
@@ -2358,8 +2325,8 @@ object GraftSql {
                 // offline columns come from the live offline store
                 // (LOAD DATA / offline INSERT / ALTER edits), falling
                 // back to ALTER-only legacy metadata
-                val oinfo = offlineTableInfo(spark, catName)
-                  .orElse(offlineTableInfo(spark, short))
+                val oinfo = offlineTableInfo(spark, catName, ctx.db)
+                  .orElse(offlineTableInfo(spark, short, ctx.db))
                 val symPaths = oinfo.map(_._2.toSeq)
                   .filter(_.nonEmpty).getOrElse(meta.symPaths)
                 (meta.id, short, db, storage, nRows,
@@ -2376,7 +2343,7 @@ object GraftSql {
               "Partition", "Partition_unalive", "Replica", "Offline_path",
               "Offline_format", "Offline_symbolic_paths", "Warnings"))
           case "TABLES" =>
-            val db = curDb(spark)
+            val db = ctx.db
             val pfx = db.map(d => dbViewName(s"$d.")).getOrElse("")
             val names = spark.catalog.listTables().collect().toSeq
               .map(_.name)
@@ -2579,7 +2546,7 @@ object GraftSql {
         p.expect("CREATE"); p.expect("INDEX")
         val iname = readTableName(p)
         p.expect("ON")
-        val tname = qualifyTable(spark, readTableName(p))
+        val tname = qualifyTable(ctx, readTableName(p))
         p.expect("(")
         val keys = Seq.newBuilder[String]
         keys += unq(p.next())
@@ -2744,7 +2711,7 @@ object GraftSql {
             "create", "insert", "delete", "index")(rawName.toLowerCase))
           throw new IllegalArgumentException(
             s"reserved keyword '$rawName' cannot name a table")
-        val name = qualifyTable(spark, rawName)
+        val name = qualifyTable(ctx, rawName)
         // creating an existing table is an error (test_create.yaml 26)
         if (spark.catalog.tableExists(quoteId(name))) {
           if (ifNotExists) return None
@@ -2921,7 +2888,7 @@ object GraftSql {
         // updatable; surfaced via SHOW TABLE STATUS
         // Offline_symbolic_paths
         p.expect("ALTER"); p.expect("TABLE")
-        val atName = qualifyTable(spark, readTableName(p))
+        val atName = qualifyTable(ctx, readTableName(p))
         if (!spark.catalog.tableExists(quoteId(atName)))
           throw new IllegalArgumentException(
             s"table '$atName' does not exist")
@@ -2996,7 +2963,8 @@ object GraftSql {
         reqSchema.fields.zip(argToks).foreach { case (f, ts) =>
           reqRow = reqRow.withColumn(f.name, callArgColumn(ts, f.dataType))
         }
-        Some(serveRequest(spark, bodySql, reqRow.drop("__call_seed")))
+        Some(serveRequest(spark, bodySql, reqRow.drop("__call_seed"),
+          db = deploymentDb(spark, cn).orElse(ctx.db)))
 
       case "DROP" =>
         p.expect("DROP"); p.expect("TABLE")
@@ -3006,9 +2974,9 @@ object GraftSql {
         // under USE db (or a db-qualified name) the real view carries
         // the db prefix — drop that too, or the table survives its
         // own DROP (surfaced by DROP DATABASE's not-empty check)
-        graft.GraftCatalog.drop(spark, qualifyTable(spark, dropName))
+        graft.GraftCatalog.drop(spark, qualifyTable(ctx, dropName))
         val c = SessionState.of(spark).catalog
-        val keys = Seq(dropName, qualifyTable(spark, dropName))
+        val keys = Seq(dropName, qualifyTable(ctx, dropName))
           .map(_.toLowerCase).distinct
         keys.foreach { k =>
           c.tableIndexes.remove(k)
@@ -3031,7 +2999,7 @@ object GraftSql {
           if (p.accept("OR")) { p.expect("IGNORE"); true }
           else p.accept("IGNORE")
         p.expect("INTO")
-        val name = qualifyTable(spark, readTableName(p))
+        val name = qualifyTable(ctx, readTableName(p))
         val schema = spark.table(quoteId(name)).schema
         val cols: Seq[String] =
           if (p.peek == "(") {
@@ -3123,7 +3091,7 @@ object GraftSql {
 
       case "DELETE" =>
         p.expect("DELETE"); p.expect("FROM")
-        val name = qualifyTable(spark, readTableName(p))
+        val name = qualifyTable(ctx, readTableName(p))
         p.expect("WHERE")
         val condToks = p.toks.slice(p.p, p.toks.length).toVector
         SessionState.of(spark).catalog.tableIndexes.get(name.toLowerCase)
@@ -3223,7 +3191,7 @@ object GraftSql {
           p.expect("INTO")
           val dstRaw = readTableName(p)
           if (p.p != p.toks.length) p.fail("trailing tokens after DEDUP")
-          val src = qualifyTable(spark, srcRaw)
+          val src = qualifyTable(ctx, srcRaw)
           if (!spark.catalog.tableExists(src))
             throw new IllegalArgumentException(
               s"DEDUP source table '$srcRaw' does not exist")
@@ -3263,7 +3231,7 @@ object GraftSql {
                 df(quoteId(idCol)) === kept("__graft_keep_id"),
                 "left_semi")
             }
-          out.createOrReplaceTempView(quoteId(qualifyTable(spark, dstRaw)))
+          out.createOrReplaceTempView(quoteId(qualifyTable(ctx, dstRaw)))
           return Some(out)
         }
         val keys = Seq.newBuilder[String]
@@ -3284,7 +3252,7 @@ object GraftSql {
         p.expect("INTO")
         val dstRaw = readTableName(p)
         if (p.p != p.toks.length) p.fail("trailing tokens after DEDUP")
-        val src = qualifyTable(spark, srcRaw)
+        val src = qualifyTable(ctx, srcRaw)
         if (!spark.catalog.tableExists(src))
           throw new IllegalArgumentException(
             s"DEDUP source table '$srcRaw' does not exist")
@@ -3301,7 +3269,7 @@ object GraftSql {
           .groupBy(keys.result().map(k => col(quoteId(k))): _*)
           .agg(picked.as("__graft_keep"))
           .select(col("__graft_keep.*"))
-        out.createOrReplaceTempView(quoteId(qualifyTable(spark, dstRaw)))
+        out.createOrReplaceTempView(quoteId(qualifyTable(ctx, dstRaw)))
         Some(out)
 
       case "LOAD" =>
@@ -3313,7 +3281,7 @@ object GraftSql {
         // (test_out_in.yaml id 30)
         if (rawName.contains('.'))
           SessionState.of(spark).catalog.dbs += rawName.split("\\.").head
-        val name = qualifyTable(spark, rawName)
+        val name = qualifyTable(ctx, rawName)
         val opts = parseOptions(p)
         // the reference requires the target table to exist
         // (test_out_in.yaml id 26; LOAD_DATA_STATEMENT.md)
@@ -3470,7 +3438,7 @@ object GraftSql {
         // compile at deploy time, like the reference: a missing table
         // or type error must fail the DEPLOY, not the first request
         // (test_create_deploy id 7)
-        planQuery(spark, q, Map.empty)
+        planQuery(ctx, q, Map.empty)
         // the reference errors on duplicate deployment names
         // (deployment_manage/DEPLOY_STATEMENT.md); OPTIONS(overwrite=true)
         // opts into replacement
@@ -3492,7 +3460,7 @@ object GraftSql {
         if (!overwrite && c.deployments.contains(name))
           throw new IllegalArgumentException(
             s"deployment '$name' already exists (use OPTIONS(overwrite=true))")
-        c.deployments.put(name, Deployment(rest.mkString(" "), c.curDb,
+        c.deployments.put(name, Deployment(rest.mkString(" "), ctx.db,
           opts.map { case (k, v) => k -> stripQuotes(v) }))
         // pre-compile the serving template at DEPLOY time (the
         // reference compiles here too, engine.cc — the first POST/CALL
@@ -3504,7 +3472,7 @@ object GraftSql {
           try serveRequest(spark, rest.mkString(" "),
             spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              requestSchemaFor(spark, name)))
+              requestSchemaFor(spark, name)), db = ctx.db)
           catch { case scala.util.control.NonFatal(_) => () }
         None
 
@@ -3515,7 +3483,7 @@ object GraftSql {
           val path = stripQuotes(p.next())
           val opts = parseOptions(p)
           if (p.p != p.toks.length) p.fail("trailing tokens")
-          val exported = planQuery(spark, q, Map.empty)
+          val exported = planQuery(ctx, q, Map.empty)
           // SELECT INTO OUTFILE is a job-producing statement
           // (SUBMIT_JOB.md) — tracked like the reference's
           // ExportOfflineData TaskManager job
@@ -3532,22 +3500,25 @@ object GraftSql {
           Some(exported)
         } else {
           if (p.p != p.toks.length) p.fail("trailing tokens")
-          Some(planQuery(spark, q, Map.empty))
+          Some(planQuery(ctx, q, Map.empty))
         }
 
       case other => p.fail(s"unsupported statement '$other'")
     }
   }
 
-  private def planQuery(spark: SparkSession, q: Query,
+  private def planQuery(ctx0: PlanCtx, q: Query,
       scope0: Map[String, DataFrame]): DataFrame = {
     // a CTE's name qualifies its columns downstream (`t2.c5` where t2
-    // is a WITH name — with.yaml id 2), so alias the planned frame
-    val scope = q.ctes.foldLeft(scope0) { case (sc, (name, sub)) =>
-      cteNamesTL.get += name.toLowerCase // shields it from offline routing
-      sc + (name -> planQuery(spark, sub, sc).alias(name))
+    // is a WITH name — with.yaml id 2), so alias the planned frame. The
+    // name is in scope for the CTEs after it and the main body only:
+    // its own body still reads the physical table of that name.
+    val (scope, ctx) = q.ctes.foldLeft((scope0, ctx0)) {
+      case ((sc, cx), (name, sub)) =>
+        (sc + (name -> planQuery(cx, sub, sc).alias(name)),
+          cx.copy(ctes = cx.ctes + name.toLowerCase))
     }
-    val planned = q.selects.map(planSelect(spark, _, scope))
+    val planned = q.selects.map(planSelect(ctx, _, scope))
     q.setOps.zip(planned.tail).foldLeft(planned.head) {
       case (acc, ("all", df))      => acc.unionAll(df)
       case (acc, (_, df))          => acc.union(df).distinct()
@@ -3567,12 +3538,12 @@ object GraftSql {
     name
   }
 
-  /** DDL/DML target name under the session's database: dotted names
-    * and names under a USE'd database map to the internal view
-    * encoding; plain names with no current database stay plain. */
-  private def qualifyTable(spark: SparkSession, raw: String): String =
+  /** DDL/DML target name in the context's database: dotted names and
+    * names in a database map to the internal view encoding; plain names
+    * with no database stay plain. */
+  private def qualifyTable(ctx: PlanCtx, raw: String): String =
     if (raw.contains('.')) dbViewName(raw)
-    else curDb(spark) match {
+    else ctx.db match {
       case Some(db) => dbViewName(s"$db.$raw")
       case None     => raw
     }
@@ -3595,19 +3566,6 @@ object GraftSql {
     * surface: ExecuteSQL scopes a statement to the URL's db). */
   def currentDb(spark: SparkSession): Option[String] =
     SessionState.of(spark).catalog.curDb
-
-  /** Run `body` with the session's current db set to `db` (None = the
-    * implicit default namespace), restoring the previous current db
-    * after — the reference's apiserver binds each ExecuteSQL request
-    * to the URL's db rather than whatever the session last USE'd. */
-  def withCurrentDb[A](spark: SparkSession, db: Option[String])(
-      body: => A): A = {
-    val c = SessionState.of(spark).catalog
-    val prev = c.curDb
-    c.curDb = db
-    try body
-    finally c.curDb = prev
-  }
 
   /** Catalog view name of a db-scoped table, when it exists (REST
     * shim surface). The db must exist (`default` = the implicit
@@ -4072,8 +4030,8 @@ object GraftSql {
   /** The offline-store key for a (possibly db-qualified) table name —
     * the same identity qualifyTable gives the online view, so LOAD /
     * INSERT / SELECT agree on which store they touch. */
-  private def offlineKey(spark: SparkSession, name: String): String =
-    qualifyTable(spark, name).toLowerCase
+  private def offlineKey(ctx: PlanCtx, name: String): String =
+    qualifyTable(ctx, name).toLowerCase
 
   /** The offline frame of a table: hard parquet + each symbolic path
     * read with its recorded reader options; EMPTY with the declared
@@ -4103,10 +4061,13 @@ object GraftSql {
   }
 
   /** Offline table info for DESC / the test harness: (hard data path,
-    * symbolic paths, format). */
-  def offlineTableInfo(spark: SparkSession, name: String)
+    * symbolic paths, format). A plain `name` resolves in `db`, or in
+    * the session's current db when `db` is None. */
+  def offlineTableInfo(spark: SparkSession, name: String,
+      db: Option[String] = None)
       : Option[(Option[String], Seq[String], String)] =
-    SessionState.of(spark).catalog.offline.get(offlineKey(spark, name))
+    SessionState.of(spark).catalog.offline
+      .get(offlineKey(planCtx(spark, db), name))
       .map(i => (i.dataPath, i.sym.map(_.path), i.format))
 
   /** Every offline Data/Symbolic path registered in the session (the
@@ -4114,13 +4075,6 @@ object GraftSql {
   def allOfflinePaths(spark: SparkSession): Seq[String] =
     SessionState.of(spark).catalog.offline.values.toSeq
       .flatMap(i => i.dataPath.toSeq ++ i.sym.map(_.path))
-
-  /** CTE names of the query being planned — a WITH name shadows any
-    * physical table, so offline routing must not reinterpret it. */
-  private val cteNamesTL = new ThreadLocal[scala.collection.mutable.Set[String]] {
-    override def initialValue(): scala.collection.mutable.Set[String] =
-      scala.collection.mutable.Set.empty
-  }
 
   /** Full per-case catalog isolation for the test harness: session
     * state would otherwise leak between corpus cases (test_out_in.yaml
@@ -4173,18 +4127,17 @@ object GraftSql {
       .map(_._2)).map(stripQuotes)
   }
 
-  /** database names visible to a query (scope keys + session state) */
-  private def knownDbs(spark: SparkSession,
+  /** database names visible to a query (scope keys + context + session) */
+  private def knownDbs(ctx: PlanCtx,
       scope: Map[String, DataFrame]): Set[String] =
     scope.keys.filter(_.contains('.')).map(_.split("\\.").head).toSet ++
-      curDb(spark).toSet ++ SessionState.of(spark).catalog.dbs
+      ctx.db ++ SessionState.of(ctx.spark).catalog.dbs
 
-  /** `db.t.c` three-part column references → `<qualifier>.c`, where
-    * the qualifier is the frame alias chosen by [[dbQualifier]]
-    * (multiple_databases corpus). Needs `scope` to know which bare
-    * names are ambiguous. */
-  private def stripDbPrefixes(toks: Vector[String], dbs: Set[String],
-      scope: Map[String, DataFrame] = Map.empty): Vector[String] = {
+  /** `db.t.c` three-part column references (`dbs` from [[knownDbs]])
+    * → `<qualifier>.c`, where the qualifier is the frame alias chosen by
+    * [[dbQualifier]] (multiple_databases corpus). */
+  private def stripDbPrefixes(ctx: PlanCtx, dbs: Set[String],
+      toks: Vector[String]): Vector[String] = {
     if (dbs.isEmpty) return toks
     val out = Vector.newBuilder[String]
     var i = 0
@@ -4194,7 +4147,7 @@ object GraftSql {
           (i == 0 || toks(i - 1) != ".") &&
           toks(i + 2).headOption.exists(c => c.isLetter || c == '_') &&
           toks(i + 4).headOption.exists(c => c.isLetter || c == '_')) {
-        out += dbQualifier(scope, s"${toks(i)}.${toks(i + 2)}")
+        out += dbQualifier(ctx, s"${toks(i)}.${toks(i + 2)}")
         out += "."; out += toks(i + 4)
         i += 5
       } else { out += toks(i); i += 1 }
@@ -4208,16 +4161,16 @@ object GraftSql {
     * table is qualified "db__table", so an unqualified reference to it
     * fails to resolve exactly as the reference's planner does
     * (multiple_databases ids 3/8/12). */
-  private def dbQualifier(scope: Map[String, DataFrame],
-      qualified: String): String = {
+  private def dbQualifier(ctx: PlanCtx, qualified: String): String = {
     val db = qualified.substring(0, qualified.lastIndexOf('.'))
     val bare = qualified.substring(qualified.lastIndexOf('.') + 1)
-    if (defaultDbTL.get.contains(db)) bare
+    if (ctx.db.contains(db)) bare
     else qualified.replace(".", "__")
   }
 
-  private def resolve(spark: SparkSession, name: String,
+  private def resolve(ctx: PlanCtx, name: String,
       scope: Map[String, DataFrame]): DataFrame = {
+    import ctx.spark
     // offline execute_mode reads the table's OFFLINE store — empty
     // when it has none (OpenmldbSession registers an empty frame for
     // tables without offline info). The online frame still resolves
@@ -4225,25 +4178,24 @@ object GraftSql {
     // offline frame borrows its schema. WITH names shadow physical
     // tables, so they are never rerouted.
     def route(df: DataFrame): DataFrame =
-      if (offlineMode(spark) &&
-          !cteNamesTL.get.contains(name.toLowerCase))
+      if (offlineMode(spark) && !ctx.ctes.contains(name.toLowerCase))
         // re-alias: the swapped frame must keep answering qualified
         // column references ({0}.card_no) like the spark.table view did
-        offlineFrame(spark, offlineKey(spark, name), df.schema)
+        offlineFrame(spark, offlineKey(ctx, name), df.schema)
           .alias(name.split("\\.").last)
       else df
     def aliased(df: DataFrame, n: String): DataFrame =
-      if (n.contains('.')) df.alias(dbQualifier(scope, n))
+      if (n.contains('.')) df.alias(dbQualifier(ctx, n))
       else df
     scope.get(name).map(d => aliased(route(d), name))
       .orElse(if (!name.contains('.'))
-        curDb(spark).flatMap(db => scope.get(s"$db.$name"))
+        ctx.db.flatMap(db => scope.get(s"$db.$name"))
           .map(d => route(d).alias(name))
       else None)
       .getOrElse {
         if (name.contains('.'))
           aliased(route(spark.table(quoteId(dbViewName(name)))), name)
-        else curDb(spark) match {
+        else ctx.db match {
           case Some(db) if spark.catalog.tableExists(
               quoteId(dbViewName(s"$db.$name"))) =>
             route(spark.table(quoteId(dbViewName(s"$db.$name"))))
@@ -4253,11 +4205,11 @@ object GraftSql {
       }
   }
 
-  private[sql] def resolveRef(spark: SparkSession, ref: TRef,
+  private[sql] def resolveRef(ctx: PlanCtx, ref: TRef,
       scope: Map[String, DataFrame]): DataFrame = ref match {
-    case Left("")   => spark.range(1).toDF() // constant select anchor
-    case Left(name) => resolve(spark, name, scope)
-    case Right(sub) => planQuery(spark, sub, scope)
+    case Left("")   => ctx.spark.range(1).toDF() // constant select anchor
+    case Left(name) => resolve(ctx, name, scope)
+    case Right(sub) => planQuery(ctx, sub, scope)
   }
 
   private[sql] def projName(pr: Proj, i: Int): String =
@@ -4287,14 +4239,14 @@ object GraftSql {
     * Shared by the batch planner and the streaming deploy compiler —
     * the right sides are static, so the same plan shapes
     * (broadcast-able pre-reduced equi-join) serve both modes. */
-  private[sql] def applyJoins(spark: SparkSession, df0: DataFrame,
+  private[sql] def applyJoins(ctx: PlanCtx, df0: DataFrame,
       joins: Seq[JoinClause], scope: Map[String, DataFrame]): DataFrame = {
     var df = df0
     joins.foreach { jc =>
-      var right = resolveRef(spark, jc.table, scope)
+      var right = resolveRef(ctx, jc.table, scope)
       jc.alias.foreach(a => right = right.alias(a))
-      val condToks0 = stripDbPrefixes(tokenize(jc.cond),
-        knownDbs(spark, scope), scope)
+      val condToks0 = stripDbPrefixes(ctx, knownDbs(ctx, scope),
+        tokenize(jc.cond))
       // interval literals ARE legal in join range conditions
       // (`t2.std_ts between t1.std_ts - 30d and t1.std_ts - 1d`,
       // cases/plan/join_query.yaml ids 7-1/7-2) — rewrite to Spark
@@ -4332,7 +4284,7 @@ object GraftSql {
           // int16/int32/int64/timestamp (test_lastjoin_simple.yaml ids
           // 7-10/29 expect failure on float/double/date/string/bool)
           val jOrder = jc.order.map(o =>
-            stripDbPrefixes(tokenize(o), knownDbs(spark, scope), scope)
+            stripDbPrefixes(ctx, knownDbs(ctx, scope), tokenize(o))
               .mkString(" "))
           jOrder.foreach { o =>
             try {
@@ -4352,7 +4304,7 @@ object GraftSql {
           }
           val rightQual = jc.alias
             .orElse(jc.table.left.toOption.map(n =>
-              if (n.contains('.')) dbQualifier(scope, n) else n))
+              if (n.contains('.')) dbQualifier(ctx, n) else n))
             .getOrElse("")
           // "last" picks by the join's ORDER BY; WITHOUT one it follows
           // the reference's STORAGE iteration — each table's index TS
@@ -4365,7 +4317,7 @@ object GraftSql {
           val rightO = right.withColumn(JOrd, monotonically_increasing_id())
             .alias(rightQual)
           def hintFor(t: TRef): Option[String] = t match {
-            case Left(name) => tsHintsTL.get.get(name)
+            case Left(name) => ctx.tsHints.get(name)
             case Right(sub) =>
               val hs = sub.selects.map(_.fromTable).flatMap(hintFor).distinct
               if (hs.length == 1) Some(hs.head) else None
@@ -4446,13 +4398,13 @@ object GraftSql {
     * 21-32). A full scan of an engine-created table reads its first
     * index. Tables registered outside the engine (temp views, scope
     * frames) fall through untouched — their snapshot is authoritative. */
-  private def applyIndexTtl(spark: SparkSession, name: String,
+  private def applyIndexTtl(ctx: PlanCtx, name: String,
       df: DataFrame, where: Option[String],
       accessKeySets: Seq[Set[String]] = Seq.empty): DataFrame = {
-    val indexes = SessionState.of(spark).catalog.tableIndexes
+    val indexes = SessionState.of(ctx.spark).catalog.tableIndexes
     if (indexes.isEmpty) return df // fast path: no DDL tables
     val metas = indexes.get(name.toLowerCase).orElse {
-      val q = try qualifyTable(spark, name) catch { case _: Throwable => name }
+      val q = try qualifyTable(ctx, name) catch { case _: Throwable => name }
       indexes.get(q.toLowerCase)
     }.map(_.all).getOrElse(Seq.empty)
     if (metas.isEmpty || !metas.exists(_.ttl.hasBound)) return df
@@ -4494,9 +4446,9 @@ object GraftSql {
     }
   }
 
-  private def planSelect(spark: SparkSession, s: Select,
+  private def planSelect(ctx: PlanCtx, s: Select,
       scope: Map[String, DataFrame], requestMode: Boolean = false): DataFrame = {
-    var df = resolveRef(spark, s.fromTable, scope)
+    var df = resolveRef(ctx, s.fromTable, scope)
     s.fromTable match {
       case Left(name) if name.nonEmpty && !scope.contains(name) =>
         // window PARTITION BY columns (named + inline windows) are
@@ -4506,17 +4458,17 @@ object GraftSql {
             s.projs.flatMap(_.over.flatMap(_.toOption))).map(w =>
             w.partition.map(p => unq(
               tokenize(p).last).toLowerCase).toSet)
-        df = applyIndexTtl(spark, name, df, s.where, winKeySets)
+        df = applyIndexTtl(ctx, name, df, s.where, winKeySets)
       case _ => ()
     }
     s.fromAlias.foreach(a => df = df.alias(a))
-    df = applyJoins(spark, df, s.joins, scope)
+    df = applyJoins(ctx, df, s.joins, scope)
 
     // dialect token rewrites over every expression position (the type
     // resolver sees the post-join schema)
     val rt: String => Option[org.apache.spark.sql.types.DataType] =
       t => resolveTypeCached(df, t)
-    val dbs = knownDbs(spark, scope)
+    val dbs = knownDbs(ctx, scope)
     // duplicate projections with the same alias that resolve to the
     // SAME source attribute collapse to one — the reference keys
     // projections by column id, so `col1 as id, col1 as id,
@@ -4544,7 +4496,7 @@ object GraftSql {
     }
     val s1 = s.copy(
       projs = dedupedProjs.zipWithIndex.map { case (p0, pi) =>
-        val p = p0.copy(tokens = stripDbPrefixes(p0.tokens, dbs, scope))
+        val p = p0.copy(tokens = stripDbPrefixes(ctx, dbs, p0.tokens))
         rejectIntervalLits(p.tokens)
         // pin the output name from the PRE-rewrite source text — the
         // reference names unaliased computed projections by what the
@@ -4555,15 +4507,15 @@ object GraftSql {
         named.copy(tokens = rewriteDialect(named.tokens, rt))
       },
       where = s.where.map { w =>
-        val t = stripDbPrefixes(tokenize(w), dbs, scope); rejectIntervalLits(t)
+        val t = stripDbPrefixes(ctx, dbs, tokenize(w)); rejectIntervalLits(t)
         rewriteDialect(t, rt).mkString(" ")
       },
       having = s.having.map { h =>
-        val t = stripDbPrefixes(tokenize(h), dbs, scope); rejectIntervalLits(t)
+        val t = stripDbPrefixes(ctx, dbs, tokenize(h)); rejectIntervalLits(t)
         rewriteDialect(t, rt).mkString(" ")
       },
       groupBy = s.groupBy.map { g =>
-        val t = stripDbPrefixes(tokenize(g), dbs, scope); rejectIntervalLits(t)
+        val t = stripDbPrefixes(ctx, dbs, tokenize(g)); rejectIntervalLits(t)
         rewriteDialect(t, rt).mkString(" ")
       })
 
@@ -4575,9 +4527,9 @@ object GraftSql {
       if (dbs.isEmpty) w
       else w.copy(
         partition = w.partition.map(t =>
-          stripDbPrefixes(tokenize(t), dbs, scope).mkString(" ")),
+          stripDbPrefixes(ctx, dbs, tokenize(t)).mkString(" ")),
         order = w.order.map(t =>
-          stripDbPrefixes(tokenize(t), dbs, scope).mkString(" ")))
+          stripDbPrefixes(ctx, dbs, tokenize(t)).mkString(" ")))
     val s2 =
       if (dbs.isEmpty) s1
       else s1.copy(
@@ -4590,7 +4542,7 @@ object GraftSql {
     var out: DataFrame =
       if (s2.groupBy.nonEmpty) planAggregate(s2, df)
       else if (s2.projs.exists(p => p.over.isDefined || p.hasNestedOver))
-        planWindows(spark, s2, df, scope, requestMode)
+        planWindows(ctx, s2, df, scope, requestMode)
       else if (s1.projs.length == 1 && s1.projs.head.exprText == "*") df
       else df.select(s1.projs.zipWithIndex.map { case (pr, i) =>
         if (isStarProj(pr.tokens)) starCol(pr.tokens)
@@ -6936,7 +6888,7 @@ object GraftSql {
 
   /** Compute each extracted window call as a hidden window column, then
     * evaluate the outer expressions. */
-  private def planWindows(spark: SparkSession, s: Select, base: DataFrame,
+  private def planWindows(ctx: PlanCtx, s: Select, base: DataFrame,
       scope: Map[String, DataFrame], requestMode: Boolean = false): DataFrame = {
     val (outerTokens, exprs0) = extractWinCalls(s, base)
 
@@ -7080,7 +7032,7 @@ object GraftSql {
     // Unbounded frames and frameless offset functions (lag/at reach
     // arbitrarily far back) stay unbucketed; request mode is excluded
     // like the reference (offline-only opt).
-    val skewOpt = !requestMode && SessionState.of(spark).catalog.vars
+    val skewOpt = !requestMode && SessionState.of(ctx.spark).catalog.vars
       .getOrElse("window_skew_opt", "false") == "true"
     val SwRoleCol = "__graft_swrole"
     // window signature -> bucket column, live between explode/collapse.
@@ -7225,7 +7177,7 @@ object GraftSql {
       // already coalesced to one partition (SinglePartition satisfies
       // every window distribution) — an explicit repartition would
       // reintroduce the exchange/stage the coalesce removed
-      if (templateModeTL.get) return df0
+      if (ctx.template.isDefined) return df0
       // skew mode: the bucket column joins the hash keys — hash(keys)
       // alone would satisfy the windows' (keys, bucket) clustering and
       // silently undo the bucket split. Multiple bucket columns (mixed
@@ -7957,7 +7909,7 @@ object GraftSql {
       // multi-group path doubles them; 2^45 blocks overflowed at 2048).
       if (exprs.nonEmpty) df = df.withColumn(UidCol, monotonically_increasing_id())
       if (unionTables.nonEmpty) {
-        val sides = unionTables.map(t => checkUnionSchema(resolveRef(spark, t, scope)))
+        val sides = unionTables.map(t => checkUnionSchema(resolveRef(ctx, t, scope)))
         df = df.withColumn(FlagCol, lit(true))
         sides.zipWithIndex.foreach { case (side, k) =>
           df = df.unionByName(
@@ -7996,7 +7948,7 @@ object GraftSql {
         var dfg =
           if (unions.isEmpty) df0
           else {
-            val sides = unions.map(t => checkUnionSchema(resolveRef(spark, t, scope)))
+            val sides = unions.map(t => checkUnionSchema(resolveRef(ctx, t, scope)))
             // sides union FIRST, then one uid generator — per-side
             // generators would collide (the r3 uid-collision class)
             // side uids sit BELOW every primary uid in per-table blocks

@@ -269,7 +269,7 @@ object StreamDeploy {
   }
 
   /** Serve `events` through a deployment previously registered with
-    * `DEPLOY name SELECT ...`. */
+    * `DEPLOY name SELECT ...`, in the deployment's home db. */
   def serveDeployment(spark: SparkSession, name: String, events: DataFrame,
       ttl: Option[Ttl] = None,
       tables: Map[String, DataFrame] = Map.empty): DataFrame = {
@@ -285,20 +285,22 @@ object StreamDeploy {
     val gc = opts.get("idle_state_gc").exists(_.equalsIgnoreCase("true"))
     serve(spark, GraftSql.deployment(spark, name).getOrElse(
       throw new IllegalArgumentException(s"no deployment named '$name'")),
-      events, ttl, tables, lw, gc)
+      events, ttl, tables, lw, gc, GraftSql.deploymentDb(spark, name))
   }
 
   /** Compile `sqlText` (a deployable SELECT) into a streaming (or
     * batch — flatMapGroupsWithState runs in both modes) DataFrame over
     * `events`. Dimension tables for LAST JOIN resolve from `tables` or
-    * the session catalog; joins run stream-static before the stateful
-    * stage. */
+    * the session catalog, in `db` or, when it is None, in the session's
+    * current db; joins run stream-static before the stateful stage. */
   def serve(spark: SparkSession, sqlText: String, events: DataFrame,
       ttl: Option[Ttl] = None,
       tables: Map[String, DataFrame] = Map.empty,
       longWindows: Map[String, Long] = Map.empty,
-      idleStateGc: Boolean = false): DataFrame = {
+      idleStateGc: Boolean = false,
+      db: Option[String] = None): DataFrame = {
     ensureFunctions(spark)
+    val ctx = planCtx(spark, db)
     val q = parseQueryText(sqlText)
     validateRequestQuery(q)
     val sel = q.selects.head
@@ -311,7 +313,7 @@ object StreamDeploy {
 
     var base = events
     sel.fromAlias.foreach(a => base = base.alias(a))
-    base = applyJoins(spark, base, sel.joins, tables)
+    base = applyJoins(ctx, base, sel.joins, tables)
 
     // LAST JOIN flattening: the stateful stage serializes rows, which
     // drops column QUALIFIERS — after a join, `t1.col1` would either
@@ -414,7 +416,7 @@ object StreamDeploy {
       .sortBy(_.head._1)
     val withIds: DataFrame =
       if (sigGroups.length == 1)
-        runSignature(spark, base, winExprs, ttl, tables, lwByDef, idleStateGc)
+        runSignature(ctx, base, winExprs, ttl, tables, lwByDef, idleStateGc)
       else {
         if (events.isStreaming)
           notStreamable("multiple window signatures over a stream " +
@@ -423,7 +425,7 @@ object StreamDeploy {
         val tagged = base.withColumn(uid, monotonically_increasing_id())
           .localCheckpoint(true)
         sigGroups.zipWithIndex.map { case (g, gi) =>
-          val out = runSignature(spark, tagged, g, ttl, tables, lwByDef,
+          val out = runSignature(ctx, tagged, g, ttl, tables, lwByDef,
             idleStateGc)
           if (gi == 0) out
           else out.select(col(uid) +: g.map(e => col(e._1)): _*)
@@ -446,7 +448,7 @@ object StreamDeploy {
     * groupByKey + flatMapGroupsWithState buffer replay, integral-sum
     * wraparound. Returns the base columns plus one column per window
     * id in `winExprs`. */
-  private def runSignature(spark: SparkSession, base: DataFrame,
+  private def runSignature(ctx: PlanCtx, base: DataFrame,
       winExprs: Seq[(String, String, WinDef)],
       ttl: Option[Ttl],
       tables: Map[String, DataFrame] = Map.empty,
@@ -513,7 +515,7 @@ object StreamDeploy {
       if (!hasUnion) base.withColumn(FlagCol2, lit(0))
       else unions.zipWithIndex.foldLeft(
           base.withColumn(FlagCol2, lit(0))) { case (acc, (u, k)) =>
-        val side0 = resolveRef(spark, u, tables)
+        val side0 = resolveRef(ctx, u, tables)
         val missing = alignCols.filterNot(side0.columns.contains)
         if (missing.nonEmpty)
           throw new IllegalArgumentException(

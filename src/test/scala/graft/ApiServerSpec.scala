@@ -168,13 +168,12 @@ class ApiServerSpec extends SparkSpec {
     GraftSql.statement(spark, "CREATE DATABASE IF NOT EXISTS sc2")
     GraftSql.registerDbTable(spark, "sc1", "sc_ev",
       Seq(("u1", 10L, 1.0)).toDF("k", "ts", "v"))
-    // deployed under USE sc1 → home db sc1
-    GraftSql.withCurrentDb(spark, Some("sc1")) {
-      GraftSql.statement(spark,
-        """DEPLOY sc_d SELECT k, sum(v) OVER w AS s FROM sc_ev
-          |WINDOW w AS (PARTITION BY k ORDER BY ts
-          |  ROWS_RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)""".stripMargin)
-    }
+    // deployed in db sc1 → home db sc1
+    GraftSql.statement(spark,
+      """DEPLOY sc_d SELECT k, sum(v) OVER w AS s FROM sc_ev
+        |WINDOW w AS (PARTITION BY k ORDER BY ts
+        |  ROWS_RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)""".stripMargin,
+      db = Some("sc1"))
     val srv = ApiServer.start(spark)
     try {
       // home db executes it — the body's plain table name resolves in
@@ -195,6 +194,55 @@ class ApiServerSpec extends SparkSpec {
       assert(parse(get(srv.port, "/dbs/sc1/deployments/sc_d"))
         .get("code").asInt() == 0)
     } finally {
+      srv.stop()
+      GraftSql.resetDeployments(spark)
+    }
+  }
+
+  test("concurrent CALLs to deployments homed in two dbs each answer " +
+      "from their own db and leave the current db alone") {
+    GraftSql.resetDeployments(spark)
+    GraftSql.statement(spark, "CREATE DATABASE IF NOT EXISTS cc1")
+    GraftSql.statement(spark, "CREATE DATABASE IF NOT EXISTS cc2")
+    GraftSql.registerDbTable(spark, "cc1", "cc_ev",
+      Seq(("u1", 10L, 1.0)).toDF("k", "ts", "v"))
+    GraftSql.registerDbTable(spark, "cc2", "cc_ev",
+      Seq(("u1", 10L, 100.0)).toDF("k", "ts", "v"))
+    // the same body text in both dbs: only the home db tells them apart
+    val body = """SELECT k, sum(v) OVER w AS s FROM cc_ev
+      |WINDOW w AS (PARTITION BY k ORDER BY ts
+      |  ROWS_RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)""".stripMargin
+    for (db <- Seq("cc1", "cc2"))
+      GraftSql.statement(spark, s"DEPLOY cc_d_$db $body", db = Some(db))
+    val before = GraftSql.currentDb(spark)
+    val srv = ApiServer.start(spark, threads = 8)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val client = HttpClient.newHttpClient()
+    try {
+      val calls = (0 until 200).map { i =>
+        val db = if (i % 2 == 0) "cc1" else "cc2"
+        pool.submit(new java.util.concurrent.Callable[(String, String)] {
+          def call(): (String, String) = {
+            val req = HttpRequest.newBuilder(URI.create(
+                s"http://127.0.0.1:${srv.port}/dbs/$db/deployments/cc_d_$db"))
+              .POST(HttpRequest.BodyPublishers.ofString(
+                """{"input": [["u1", 30, 3.0]]}""", StandardCharsets.UTF_8))
+              .build()
+            (db, client.send(req, HttpResponse.BodyHandlers.ofString()).body())
+          }
+        })
+      }
+      val wrong = calls.map(_.get()).filterNot { case (db, reply) =>
+        val r = parse(reply)
+        r.get("code").asInt() == 0 &&
+          r.get("data").get("data").get(0).get(1).asDouble() ==
+            (if (db == "cc1") 4.0 else 103.0)
+      }
+      assert(wrong.isEmpty, s"${wrong.size} of 200 answers wrong, e.g. " +
+        wrong.headOption)
+      assert(GraftSql.currentDb(spark) == before)
+    } finally {
+      pool.shutdownNow()
       srv.stop()
       GraftSql.resetDeployments(spark)
     }

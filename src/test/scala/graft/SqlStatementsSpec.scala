@@ -812,4 +812,21 @@ class SqlStatementsSpec extends SparkSpec {
     assert(GraftSql.sql(a, "SELECT k, v FROM si_a").as[(String, Long)]
       .collect().toSeq == Seq(("x", 1L)))
   }
+
+  test("a WITH name is in scope after its definition only: in offline " +
+      "mode a CTE named after its source reads the offline store") {
+    val s = spark.newSession()
+    GraftSql.statement(s, "CREATE TABLE cte_t (k bigint, src string)")
+    GraftSql.statement(s, "INSERT INTO cte_t VALUES (1, 'online')")
+    GraftSql.statement(s, "SET @@execute_mode = 'offline'")
+    GraftSql.statement(s, "INSERT INTO cte_t VALUES (2, 'offline')")
+    val plain = "SELECT k, src FROM cte_t"
+    val cte = s"WITH cte_t AS ($plain) $plain"
+    def viaSql(q: String) = GraftSql.sql(s, q).as[(Long, String)].collect().toSeq
+    def viaStatement(q: String) =
+      GraftSql.statement(s, q).get.as[(Long, String)].collect().toSeq
+    assert(viaSql(plain) == Seq((2L, "offline")))
+    assert(viaSql(cte) == viaSql(plain))
+    assert(viaStatement(cte) == viaSql(plain))
+  }
 }

@@ -386,4 +386,29 @@ class StreamDeploySpec extends SparkSpec {
       assert(out.count() == evs.length)
     } finally spark.catalog.dropTempView("events")
   }
+
+  test("serveDeployment plans its LAST JOIN in the deployment's home " +
+      "db, not the session's current db") {
+    val s = spark.newSession()
+    GraftSql.statement(s, "CREATE DATABASE sdh1")
+    GraftSql.statement(s, "CREATE DATABASE sdh2")
+    val users = Seq("u1", "u2", "u3")
+    GraftSql.registerDbTable(s, "sdh1", "sdh_dim",
+      s.createDataFrame(users.map((_, "home"))).toDF("dk", "tier"))
+    GraftSql.registerDbTable(s, "sdh2", "sdh_dim",
+      s.createDataFrame(users.map((_, "other"))).toDF("dk", "tier"))
+    GraftSql.registerDbTable(s, "sdh1", "sdh_ev", s.createDataFrame(evs))
+    GraftSql.statement(s, "USE sdh1")
+    GraftSql.statement(s,
+      """DEPLOY sdh_dep SELECT user, ts, sum(amt) OVER w AS s, tier
+        FROM sdh_ev LAST JOIN sdh_dim ON user = dk
+        WINDOW w AS (PARTITION BY user ORDER BY ts
+          ROWS_RANGE BETWEEN 25 PRECEDING AND CURRENT ROW)""")
+    GraftSql.statement(s, "USE sdh2")
+    val out = StreamDeploy.serveDeployment(s, "sdh_dep",
+      s.createDataFrame(evs))
+    assert(out.count() == evs.length)
+    assert(out.select("tier").distinct().collect().map(_.getString(0))
+      .toSeq == Seq("home"))
+  }
 }

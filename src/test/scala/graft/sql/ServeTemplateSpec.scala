@@ -2,6 +2,7 @@ package graft.sql
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
@@ -158,5 +159,66 @@ class ServeTemplateSpec extends SparkSpec {
       hist.schema)
     assert(sortedRows(GraftSql.serveRequest(spark, qj, r)) ==
       sortedRows(GraftSql.requestMode(spark, qj, r)))
+  }
+
+  private def post(port: Int, path: String, body: String): String = {
+    import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+    val req = HttpRequest.newBuilder(
+        java.net.URI.create(s"http://127.0.0.1:$port$path"))
+      .POST(HttpRequest.BodyPublishers.ofString(body)).build()
+    HttpClient.newHttpClient()
+      .send(req, HttpResponse.BodyHandlers.ofString()).body()
+  }
+
+  test("a deployment made under USE is compiled at DEPLOY: its first " +
+      "CALL through its db's route builds no template") {
+    val s = spark.newSession()
+    GraftSql.statement(s, "CREATE DATABASE stk1")
+    GraftSql.registerDbTable(s, "stk1", "sv_hist",
+      s.createDataFrame(hist.collect().toList.asJava, hist.schema))
+    GraftSql.statement(s, "USE stk1")
+    GraftSql.statement(s, s"DEPLOY stk_dep $q2win")
+    val srv = graft.serving.ApiServer.start(s)
+    try {
+      val b0 = GraftSql.serveTemplateBuilds.get()
+      val reply = post(srv.port, "/dbs/stk1/deployments/stk_dep",
+        """{"input": [["u1", "gA", 25, 100.0]]}""")
+      assert(reply.contains("103.0"), reply)
+      assert(GraftSql.serveTemplateBuilds.get() == b0,
+        "the DEPLOY-time template must be the one the CALL hits")
+    } finally srv.stop()
+  }
+
+  test("the same query text served in two dbs keeps one template per db") {
+    for ((db, scale) <- Seq("stk_a" -> 1.0, "stk_b" -> 10.0))
+      GraftSql.registerDbTable(spark, db, "stk_h",
+        hist.withColumn("v", col("v") * scale))
+    val q = q2win.replace("sv_hist", "stk_h")
+    val r = req(("u1", "gA", 25L, 100.0))
+    val b0 = GraftSql.serveTemplateBuilds.get()
+    for (_ <- 1 to 3; (db, want) <- Seq("stk_a" -> 103.0, "stk_b" -> 130.0))
+      assert(GraftSql.serveRequest(spark, q, r, db = Some(db))
+        .collect()(0).getDouble(2) == want)
+    assert(GraftSql.serveTemplateBuilds.get() == b0 + 2,
+      "alternating dbs must not rebuild each other's template")
+  }
+
+  test("serving templates are per session: a new session starts with " +
+      "none and builds its own") {
+    hist.createOrReplaceTempView("sv_hist")
+    val r = req(("u1", "gA", 25L, 100.0))
+    GraftSql.serveRequest(spark, q2win, r).collect()
+    assert(graft.SessionState.of(spark).serveTemplates.nonEmpty)
+    val s = spark.newSession()
+    assert(graft.SessionState.of(s).serveTemplates.isEmpty)
+    s.createDataFrame(hist.collect().toList.asJava, hist.schema)
+      .createOrReplaceTempView("sv_hist")
+    val b0 = GraftSql.serveTemplateBuilds.get()
+    val out = GraftSql.serveRequest(s, q2win,
+      s.createDataFrame(java.util.Arrays.asList(Row("u1", "gA", 25L, 100.0)),
+        hist.schema))
+    assert(out.collect()(0).getDouble(2) == 103.0)
+    assert(GraftSql.serveTemplateBuilds.get() == b0 + 1)
+    assert(graft.SessionState.of(s).serveTemplates.size == 1)
   }
 }
