@@ -54,7 +54,7 @@ private[graft] final class SessionState {
   val userFns = TrieMap[String, UserFn]()
   /** The virtual tablet endpoints CREATE TABLE OPTIONS validate
     * against. */
-  @volatile var tablets: Seq[String] = Seq("tablet0", "tablet1", "tablet2")
+  val tablets: Seq[String] = Seq("tablet0", "tablet1", "tablet2")
   /** The online store's tables by lowercase name ([[GraftCatalog]]);
     * guarded by its own monitor. */
   val tables = mutable.Map.empty[String, GraftCatalog.Table]

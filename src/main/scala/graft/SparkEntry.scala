@@ -528,7 +528,8 @@ object SparkEntry {
     // thresholded flags the oracle can assert; raw pairs are covered by
     // DedupSimilaritySpec). Reference analog: multi-mode consistency
     // checks, hybridse/src/testing/engine_test_base.h:75-100.
-    // floors set from measurement (tools/QualityProbe at sf0.01):
+    // floors set from measurement at sf0.01 (with
+    // src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6):
     // bands=8 rows=3 → recall 0.945, MAE 0.079. The exact-Jaccard truth
     // side runs on a deterministic 1/5 document subset (doc_id % 5 = 0):
     // recall measured on the subset is the same statistic, and the
@@ -553,7 +554,8 @@ object SparkEntry {
     // must CORRELATE with true word-set Jaccard over a deterministic
     // sample of all pair kinds (every 97th (id1,id2) pair — J spans
     // 0.1..1.0 on this corpus). Measured corr 0.53 at sf0.01
-    // (tools/QualityProbe; bucket means rise monotonically 0.57→0.75);
+    // (src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6;
+    // bucket means rise monotonically 0.57→0.75);
     // floor 0.40. Fingerprint rows themselves are spec-covered.
     "q_dedup_simhash" -> q { (s, d) =>
       val docs = T(s, d, "documents")
@@ -659,7 +661,8 @@ object SparkEntry {
       val hits = exact.join(approx, Seq("qid", "vec_id"), "left_semi")
         .groupBy(col("qid")).agg(count(lit(1)).as("n_hit"))
       // floor from measurement: planes=3 tables=12 → min per-query hits
-      // 2 of 3, aggregate recall 0.967 (tools/QualityProbe at sf0.01)
+      // 2 of 3, aggregate recall 0.967 at sf0.01
+      // (src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6)
       qs.select(col("vec_id").as("qid")).join(hits, Seq("qid"), "left")
         .select(col("qid"),
           when(coalesce(col("n_hit"), lit(0L)) >= 2, 1).otherwise(0)
@@ -668,7 +671,8 @@ object SparkEntry {
 
     // int8-quantized brute force (faiss-style SQ8: 4× smaller corpus
     // scans), gated on per-query recall@3 vs the full-precision twin —
-    // measured min 2/3, mean 2.96/3 at sf0.01 (tools/QualityProbe)
+    // measured min 2/3, mean 2.96/3 at sf0.01
+    // (src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6)
     "q_ann_quant" -> q { (s, d) =>
       val e = T(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 10)
@@ -689,7 +693,8 @@ object SparkEntry {
     // per-query recall on uniform synthetic embeddings is high-variance
     // (true neighbors scatter across lists), so the stable measured
     // quantity is the mean: nlist=8 nprobe=4 iters=5 → 0.78 at sf0.01
-    // scanning ~half the corpus (tools/QualityProbe); floor 0.70
+    // scanning ~half the corpus; floor 0.70
+    // (src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6)
     "q_ann_ivf" -> q { (s, d) =>
       val e = T(s, d, "embeddings")
       val qs = e.filter(col("vec_id") < 50)
@@ -3423,7 +3428,8 @@ object SparkEntry {
     // synthetic corpus the cap's count window costs more than it saves
     // (~9.8 s vs ~7.9 s uncapped at sf0.1) because the first-seen
     // join-back is already linear in bucket size; under a real mega
-    // bucket it helps only mildly for the same reason (SkewCapProbe,
+    // bucket it helps only mildly for the same reason
+    // (src/main/scala/graft/tools/SkewCapProbe.scala at commit fbc33c6,
     // 10% boilerplate fixture at sf0.1: 7.49 s uncapped → 7.14 s
     // capped). The operator whose complexity the cap actually bounds
     // is the PAIRS form — see q_dedup_minhash_skew below.
@@ -3447,8 +3453,9 @@ object SparkEntry {
     // The hot-bucket cap under REAL bucket skew (VERDICT r15 item 1):
     // 10% of the corpus rewritten to one boilerplate template — one
     // mega bucket per band, the O(bucket²) pair-enumeration case the
-    // cap exists for. Measured at sf0.1 (graft.tools.SkewCapProbe,
-    // best-of-3): uncapped 10.15 s; cap=16 0.57 s; cap=64 0.61 s;
+    // cap exists for. Measured at sf0.1 (best-of-3, with
+    // src/main/scala/graft/tools/SkewCapProbe.scala at commit fbc33c6):
+    // uncapped 10.15 s; cap=16 0.57 s; cap=64 0.61 s;
     // cap=256 1.11 s — the cap wins 16.8× at 64, and 64 is the default
     // recommendation (retains more small-cluster recall than 16 at the
     // same cost; 256 already doubles the runtime). The skew fixture is

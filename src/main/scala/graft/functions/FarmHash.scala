@@ -19,7 +19,6 @@ object FarmHash extends Serializable {
   private val k0 = 0xc3a5c85c97cb3127L
   private val k1 = 0xb492b66fbe98f273L
   private val k2 = 0x9ae16a3b2f90404fL
-  private val kMul = 0x9ddfea08eb382d69L
 
   @inline private def fetch64(b: Array[Byte], i: Int): Long =
     (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) | ((b(i + 2) & 0xffL) << 16) |

@@ -641,10 +641,11 @@ case class DistinctSizeExpr(child: Expression)
 
 /** `size(array_distinct(TextOps.wordNgramsOf(ws, n)))` in one pass for
   * n >= 2 — the duplicate-n-gram counter of TextOps.dupNgramFractionOf.
-  * N-grams compare as their space-joined strings (`array_join` skips
-  * null words), identically to the Column form, so two windows whose
-  * joins collide count once; a document shorter than n yields ONE
-  * whole-sequence gram. A NULL array returns -1 (the callers' `when`
+  * N-grams compare as the bytes of their space-joined strings
+  * (`array_join` skips null words), identically to the Column form,
+  * so two windows whose joins collide count once and words that differ
+  * only in invalid UTF-8 bytes count apart; a document shorter than n
+  * yields ONE whole-sequence gram. A NULL array returns -1 (the callers' `when`
   * guard keeps the Column form's null path; the value only documents
   * size-of-null). Returns int, like `size`. */
 case class DistinctNgramSizeExpr(child: Expression, n: Int)
@@ -658,21 +659,17 @@ case class DistinctNgramSizeExpr(child: Expression, n: Int)
     if (v == null) return -1
     val arr = v.asInstanceOf[ArrayData]
     val m = arr.numElements()
-    val seen = new java.util.HashSet[String]()
-    // one gram = words [i, i+n) space-joined, nulls skipped (array_join)
-    @inline def gram(start: Int, end: Int): String = {
-      val sb = new java.lang.StringBuilder
+    val seen = new java.util.HashSet[UTF8String]()
+    // one gram = words [i, i+n) space-joined, nulls skipped (array_join
+    // and concatWs both skip them)
+    val words = new Array[UTF8String](math.min(m, n))
+    @inline def gram(start: Int, end: Int): UTF8String = {
       var j = start
-      var first = true
       while (j < end) {
-        if (!arr.isNullAt(j)) {
-          if (!first) sb.append(' ')
-          sb.append(arr.getUTF8String(j).toString)
-          first = false
-        }
+        words(j - start) = if (arr.isNullAt(j)) null else arr.getUTF8String(j)
         j += 1
       }
-      sb.toString
+      UTF8String.concatWs(DistinctNgramSizeExpr.Space, words: _*)
     }
     if (m < n) { seen.add(gram(0, m)); return 1 }
     var i = 0
@@ -683,4 +680,8 @@ case class DistinctNgramSizeExpr(child: Expression, n: Int)
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
   override def prettyName: String = "distinct_ngram_size"
+}
+
+object DistinctNgramSizeExpr {
+  private val Space = UTF8String.fromString(" ")
 }

@@ -193,10 +193,6 @@ object GraftScalars {
     Some(sb.toString)
   }
 
-  /** OpenMLDB timestamp(int64) is MILLISECONDS since epoch
-    * (date_and_time_types.md:10-14) — not seconds like a Spark cast. */
-  def timestamp_ms(msCol: Column): Column = timestamp_millis(msCol.cast("long"))
-
   /** Register OpenMLDB-specific SQL names on a session. Aliases of
     * builtins resolve to the same codegen'd expressions via SQL; the
     * handful of genuinely custom functions are registered as UDFs

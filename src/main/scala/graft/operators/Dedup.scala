@@ -515,8 +515,10 @@ object Dedup {
     * `maxBucketSize` caps the O(bucket²) pair enumeration: a band
     * bucket over the cap (a boilerplate-pattern cluster) is skipped
     * entirely — a deliberate recall trade. Measured under a real mega
-    * bucket (graft.tools.SkewCapProbe: 10% of the sf0.1 corpus
-    * rewritten to one template, best-of-3): uncapped 10.15 s,
+    * bucket (with
+    * src/main/scala/graft/tools/SkewCapProbe.scala at commit fbc33c6:
+    * 10% of the sf0.1 corpus rewritten to one template, best-of-3):
+    * uncapped 10.15 s,
     * cap=16 0.57 s, cap=64 0.61 s, cap=256 1.11 s — 64 is the
     * recommended production cap (16.8× over uncapped, with more
     * small-cluster recall headroom than 16; 256 already doubles the
@@ -782,7 +784,8 @@ object Dedup {
     * shingle hashes ([[shingleHashes]]), which discriminate far better
     * than single words on template-heavy corpora (shared vocabulary
     * saturates word-level votes; measured sep 0.03 word-level vs n-gram
-    * at sf0.01 — see tools/QualityProbe). */
+    * at sf0.01 — see
+    * src/main/scala/graft/tools/QualityProbe.scala at commit fbc33c6). */
   def simhashOfHashes(hashCol: Column): Column =
     // r19: one imperative int[64] vote walk (functions.SimHash64Expr)
     // — the 64-lane zip_with fold rebuilt two interpreted arrays per

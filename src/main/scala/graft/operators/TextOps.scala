@@ -27,9 +27,6 @@ object TextOps {
   def charCount(text: Column): Column =
     length(regexp_replace(text, "\\s+", ""))
 
-  def avgWordLen(text: Column): Column =
-    charCount(text).cast("double") / tokenCount(text)
-
   private val EN = Seq("the", "a", "and", "of", "to", "in", "is")
   private val ES = Seq("el", "la", "de", "y", "que", "los")
   private val DE = Seq("der", "die", "das", "und", "ist", "ein")
@@ -37,13 +34,9 @@ object TextOps {
 
   private def hitsOf(ws: Column, stop: Seq[String]): Column =
     size(filter(ws, w => lower(w).isin(stop: _*)))
-  private def hits(text: Column, stop: Seq[String]): Column =
-    hitsOf(words(text), stop)
 
   def stopwordRatioOf(ws: Column): Column =
     hitsOf(ws, EN).cast("double") / size(ws)
-  def stopwordRatio(text: Column): Column =
-    stopwordRatioOf(words(text))
 
   /** Heuristic quality score in [0,1]: length, information density and
     * word-shape terms (deterministic; thresholds are pipeline config).
@@ -74,10 +67,6 @@ object TextOps {
   /** Content fingerprint: md5 of case/whitespace-normalized text. */
   def fingerprint(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
-
-  /** 64-bit fingerprint (xxhash64 of the normalized text). */
-  def fingerprint64(text: Column): Column =
-    xxhash64(lower(regexp_replace(trim(text), "\\s+", " ")))
 
   /** Overlapping token-window chunks — the context-window preparation
     * step of an LLM training pipeline. Chunk i covers tokens
@@ -149,8 +138,9 @@ object TextOps {
     // r20: the n-gram string building (interpreted transform +
     // array_join per window) and the array_distinct + size collapse
     // into one imperative pass (functions.DistinctNgramSizeExpr):
-    // grams compare as their space-joined strings, exactly like the
-    // Column chain, so colliding windows still count once
+    // grams compare as the bytes of their space-joined strings,
+    // exactly like the Column chain, so colliding windows still count
+    // once
     // (HashVecOpsSpec pins bit-equality).
     val distinctGrams =
       if (n == 1) graft.functions.HashOps.distinctSize(ws)

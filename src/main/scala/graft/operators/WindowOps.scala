@@ -470,14 +470,10 @@ object WindowOps {
     }
   }
 
-  /** window_split(str, delim): every row's split list, concatenated in
-    * frame order (newest first, matching the reference's reverse-ts
-    * iteration — feature_zero_def.cc window_split family). Returns
-    * array<string>. */
-  def aggWindowSplit(arr: Column, delim: String): Column =
-    flatten(transform(arr,
-      x => graft.functions.GraftScalars.fz_split(x("v"), delim)))
-
+  /** window_split_by_key / _by_value(str, delim, kv_delim): every row's
+    * split list, concatenated in frame order (newest first, matching the
+    * reference's reverse-ts iteration — feature_zero_def.cc window_split
+    * family). Return array<string>. */
   def aggWindowSplitByKey(arr: Column, delim: String, kvDelim: String): Column =
     flatten(transform(arr,
       x => graft.functions.GraftScalars.fz_split_by_key(x("v"), delim, kvDelim)))

@@ -58,8 +58,8 @@ object ApiServer {
     * read the actual one off the returned handle). `threads` > 0 backs
     * the server with a fixed pool so concurrent requests execute in
     * parallel (Spark schedules their jobs concurrently — the serving
-    * throughput path ServingBench measures); the default single-thread
-    * dispatch is plenty at spec scale. */
+    * throughput path perfbench's `online_serve` measures); the default
+    * single-thread dispatch is plenty at spec scale. */
   def start(spark: SparkSession, port: Int = 0, threads: Int = 0): Handle = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
     server.createContext("/", (ex: HttpExchange) => handle(spark, ex))
@@ -456,9 +456,9 @@ object ApiServer {
     * takes runs here (the reference routes DDL through it too); a
     * result set renders as {"data": {"schema": ["Int32", ...],
     * "data": [[...]]}} with the capitalized type vocabulary. The mode
-    * maps onto the session's execute_mode (online/offline dual-store
-    * routing); sync-vs-async is a job-scheduling concern the local
-    * engine runs synchronously either way. */
+    * is the statement's execute_mode (online/offline dual-store
+    * routing) for this request only; sync-vs-async is a job-scheduling
+    * concern the local engine runs synchronously either way. */
   private def executeSql(spark: SparkSession, db: String,
       body: String): String = {
     val doc =
@@ -473,9 +473,9 @@ object ApiServer {
     val sql = doc.get("sql").asText()
     val mode = Option(doc.get("mode")).filterNot(_.isNull)
       .map(_.asText().toLowerCase).getOrElse("offsync")
-    val online = mode match {
-      case "offsync" | "offasync" => false
-      case "online" | "onsync"    => true
+    val executeMode = mode match {
+      case "offsync" | "offasync" => Some("offline")
+      case "online" | "onsync"    => Some("online")
       case other => return envelope(-1, s"Invalid mode $other", None)
     }
     if (db != "default" && !GraftSql.databases(spark).contains(db))
@@ -495,49 +495,40 @@ object ApiServer {
       }.getOrElse(Seq.empty)
     // run in the URL's db (the reference's route binds execution to the
     // path db; `default` runs in the session's current db) under the
-    // requested execute_mode, restoring the mode after. The lock
-    // serializes this route's session-global mode mutate-and-restore.
-    sqlRouteLock.synchronized {
-      val prev = GraftSql.statement(spark, "SHOW VARIABLES").get
-        .collect().find(_.getString(0) == "execute_mode")
-        .map(_.getString(1)).getOrElse("online")
-      GraftSql.statement(spark,
-        s"SET @@execute_mode = '${if (online) "online" else "offline"}'")
-      // parameterized queries bind through the query front end (the
-      // statement surface's `?` binding covers prepared INSERTs)
-      val up = sql.trim.toUpperCase
-      val isQuery = up.startsWith("SELECT") || up.startsWith("WITH")
-      val urlDb = if (db == "default") None else Some(db)
-      val result =
-        try {
-          if (isQuery && params.nonEmpty)
-            Some(GraftSql.sql(spark, sql, params = params, defaultDb = urlDb))
-          else GraftSql.statement(spark, sql, params.toList, urlDb)
-        } finally GraftSql.statement(spark, s"SET @@execute_mode = '$prev'")
-      result match {
-        case None => envelope(0, "ok", None)
-        case Some(df) =>
-          // the route buffers the whole result on the driver (the
-          // reference's Query route does the same) — cap it so an
-          // offline `SELECT *` over a big table can't OOM the server;
-          // 0 = unlimited, for callers that accept the buffering
-          val cap = spark.conf.getOption(MaxResultRowsKey)
-            .map(_.trim.toLong).getOrElse(DefaultMaxResultRows)
-          val rows =
-            if (cap <= 0) df.collect()
-            else df.limit(
-              math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
-          if (cap > 0 && rows.length > cap)
-            return envelope(-1,
-              s"result exceeds $MaxResultRowsKey=$cap rows; add a " +
-                "LIMIT or raise the cap", None)
-          val data = M.createObjectNode()
-          val sch = data.putArray("schema")
-          df.schema.fields.foreach(f => sch.add(queryType(f.dataType)))
-          val arr = data.putArray("data")
-          rows.foreach(r => arr.add(renderRow(r, df.schema, nanNull)))
-          envelope(0, "ok", Some(data))
-      }
+    // requested execute_mode; the session's own mode is left alone.
+    // Parameterized queries bind through the query front end (the
+    // statement surface's `?` binding covers prepared INSERTs).
+    val up = sql.trim.toUpperCase
+    val isQuery = up.startsWith("SELECT") || up.startsWith("WITH")
+    val urlDb = if (db == "default") None else Some(db)
+    val result =
+      if (isQuery && params.nonEmpty)
+        Some(GraftSql.sql(spark, sql, Map.empty, params, Map.empty, urlDb,
+          executeMode))
+      else GraftSql.statement(spark, sql, params.toList, urlDb, executeMode)
+    result match {
+      case None => envelope(0, "ok", None)
+      case Some(df) =>
+        // the route buffers the whole result on the driver (the
+        // reference's Query route does the same) — cap it so an
+        // offline `SELECT *` over a big table can't OOM the server;
+        // 0 = unlimited, for callers that accept the buffering
+        val cap = spark.conf.getOption(MaxResultRowsKey)
+          .map(_.trim.toLong).getOrElse(DefaultMaxResultRows)
+        val rows =
+          if (cap <= 0) df.collect()
+          else df.limit(
+            math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+        if (cap > 0 && rows.length > cap)
+          return envelope(-1,
+            s"result exceeds $MaxResultRowsKey=$cap rows; add a " +
+              "LIMIT or raise the cap", None)
+        val data = M.createObjectNode()
+        val sch = data.putArray("schema")
+        df.schema.fields.foreach(f => sch.add(queryType(f.dataType)))
+        val arr = data.putArray("data")
+        rows.foreach(r => arr.add(renderRow(r, df.schema, nanNull)))
+        envelope(0, "ok", Some(data))
     }
   }
 
@@ -545,7 +536,6 @@ object ApiServer {
     * buffer on the driver (0 = unlimited). */
   val MaxResultRowsKey = "graft.apiserver.maxResultRows"
   private val DefaultMaxResultRows = 100000L
-  private val sqlRouteLock = new Object
 
   /** Capitalized type vocabulary of the ExecuteSQL result schema
     * (api_server_impl.cc:1292-1330). */

@@ -639,16 +639,26 @@ object GraftSql {
     *  - `ctes`: the lowercase WITH names in lexical scope. A WITH name
     *    shadows any physical table, so offline routing must not
     *    reinterpret it;
-    *  - `template`: the serving template being built, if any. */
+    *  - `template`: the serving template being built, if any;
+    *  - `offline`: reads and writes go to the OFFLINE store (the
+    *    cluster edition under execute_mode 'offline'). */
   private[sql] final case class PlanCtx(spark: SparkSession,
       db: Option[String], tsHints: Map[String, String] = Map.empty,
-      ctes: Set[String] = Set.empty, template: Option[TemplateBuild] = None)
+      ctes: Set[String] = Set.empty, template: Option[TemplateBuild] = None,
+      offline: Boolean = false)
 
-  /** The context of a call in `db`, or in the session's current db when
-    * `db` is None. */
+  /** The context of a call in `db` under `executeMode` ('online' or
+    * 'offline'); None takes the session's current db and
+    * `@@execute_mode`. */
   private[sql] def planCtx(spark: SparkSession, db: Option[String],
-      tsHints: Map[String, String] = Map.empty): PlanCtx =
-    PlanCtx(spark, db.orElse(SessionState.of(spark).catalog.curDb), tsHints)
+      tsHints: Map[String, String] = Map.empty,
+      executeMode: Option[String] = None): PlanCtx = {
+    val c = SessionState.of(spark).catalog
+    val mode =
+      executeMode.getOrElse(c.vars.getOrElse("execute_mode", "online"))
+    PlanCtx(spark, db.orElse(c.curDb), tsHints,
+      offline = clusterEdition(spark) && mode == "offline")
+  }
 
   /** Run a dialect query. `tables` overrides/augments the session's
     * temp-view catalog for table-name resolution; `params` bind `?`
@@ -660,9 +670,18 @@ object GraftSql {
       tables: Map[String, DataFrame] = Map.empty,
       params: Seq[Any] = Nil,
       tsHints: Map[String, String] = Map.empty,
-      defaultDb: Option[String] = None): DataFrame = {
+      defaultDb: Option[String] = None): DataFrame =
+    sql(spark, text, tables, params, tsHints, defaultDb, None)
+
+  /** [[sql]] under `executeMode` instead of the session's
+    * `@@execute_mode` (the REST route's per-request `mode`). */
+  private[graft] def sql(spark: SparkSession, text: String,
+      tables: Map[String, DataFrame], params: Seq[Any],
+      tsHints: Map[String, String], defaultDb: Option[String],
+      executeMode: Option[String]): DataFrame = {
     ensureFunctions(spark)
-    sqlImpl(planCtx(spark, defaultDb, tsHints), text, tables, params)
+    sqlImpl(planCtx(spark, defaultDb, tsHints, executeMode), text, tables,
+      params)
   }
 
   private def sqlImpl(ctx: PlanCtx, text: String,
@@ -997,8 +1016,11 @@ object GraftSql {
     * current db (a deployment serves in its home db). */
   def serveRequest(spark: SparkSession, text: String, requests: DataFrame,
       tables: Map[String, DataFrame] = Map.empty,
-      db: Option[String] = None): DataFrame = {
-    val ctx = planCtx(spark, db)
+      db: Option[String] = None): DataFrame =
+    serveRequest(planCtx(spark, db), text, requests, tables)
+
+  private def serveRequest(ctx: PlanCtx, text: String, requests: DataFrame,
+      tables: Map[String, DataFrame]): DataFrame = {
     val viaTemplate =
       try serveViaTemplate(ctx, text, requests, tables)
       catch { case scala.util.control.NonFatal(_) => None }
@@ -1010,7 +1032,7 @@ object GraftSql {
       : Option[DataFrame] = {
     import org.apache.spark.sql.GraftServe
     import ctx.spark
-    if (tables.nonEmpty || offlineMode(spark)) return None
+    if (tables.nonEmpty || ctx.offline) return None
     val st = SessionState.of(spark)
     val sig = reqSigOf(requests)
     val key: ServeKey = (text, ctx.db.getOrElse(""),
@@ -1272,8 +1294,9 @@ object GraftSql {
     // key values with literal codegen'd predicates BEFORE the union —
     // per-request work becomes O(the keys' history), not O(table).
     // Batch-request mode (large request sets) keeps the full history:
-    // the filter would not prune. Measured (ServingBench shape, 2
-    // windows + 2 LAST JOINs): p50 1.55 s → see SERVING_BENCH artifact.
+    // the filter would not prune. Measured (the serving shape of
+    // src/main/scala/graft/tools/ServingBench.scala at commit fbc33c6:
+    // 2 windows + 2 LAST JOINs): p50 1.55 s → see SERVING_BENCH artifact.
     val history = pruneHistoryForRequests(ctx, history0, sel, reqRows)
     // union with provenance flag; the request row is the only primary.
     // History goes FIRST so its uids are lower: a request row whose ts
@@ -1968,12 +1991,15 @@ object GraftSql {
     if (n.matches("[A-Za-z_][\\w]*")) n
     else "`" + n.replace("`", "``") + "`"
 
-  /** OPTIONS ( k = v, ... ) → string map (lowercased keys). Values
-    * keep their quoting so consumers can type-check (the reference
-    * rejects header='true' — a bool option given a string,
-    * test_out_in.yaml id 13); use [[stripQuotes]] on consumption. */
-  private def parseOptions(p: Parser): Map[String, String] =
-    if (!p.accept("OPTIONS")) Map.empty
+  /** OPTIONS ( k = v, ... ) → string map (lowercased keys); with
+    * `keyword` false, the bare ( k = v, ... ) list (CREATE TABLE's
+    * INDEX(KEY=..., TS=..., TTL=..., TTL_TYPE=...)). Values keep their
+    * quoting so consumers can type-check (the reference rejects
+    * header='true' — a bool option given a string, test_out_in.yaml
+    * id 13); use [[stripQuotes]] on consumption. */
+  private def parseOptions(p: Parser,
+      keyword: Boolean = true): Map[String, String] =
+    if (keyword && !p.accept("OPTIONS")) Map.empty
     else {
       p.expect("(")
       val out = Map.newBuilder[String, String]
@@ -2095,9 +2121,16 @@ object GraftSql {
     * surface — test_insert_prepared.yaml). The statement runs in `db`,
     * or in the session's current db when `db` is None. */
   def statement(spark: SparkSession, text: String,
-      params: Seq[Any] = Nil, db: Option[String] = None): Option[DataFrame] = {
+      params: Seq[Any] = Nil, db: Option[String] = None): Option[DataFrame] =
+    statement(spark, text, params, db, None)
+
+  /** [[statement]] under `executeMode` instead of the session's
+    * `@@execute_mode` (the REST route's per-request `mode`). */
+  private[graft] def statement(spark: SparkSession, text: String,
+      params: Seq[Any], db: Option[String],
+      executeMode: Option[String]): Option[DataFrame] = {
     ensureFunctions(spark)
-    val ctx = planCtx(spark, db)
+    val ctx = planCtx(spark, db, executeMode = executeMode)
     val p = new Parser(tokenize(text.trim.stripSuffix(";")))
     p.peekUp match {
       case "SET" =>
@@ -2764,42 +2797,22 @@ object GraftSql {
         var more = true
         while (more && p.peek != ")") {
           if (p.peekUp == "INDEX") {
-            p.next(); val close = matchClose(p.toks, p.p)
-            val body = p.toks.slice(p.p + 1, close).map(unq)
-            p.p = close + 1
-            var keys = Seq.empty[String]; var tsCol: Option[String] = None
-            var ttlVal: Option[String] = None; var ttlKind: Option[String] = None
-            var k = 0
-            while (k < body.length) {
-              val low = body(k).toLowerCase
-              if (low == "key" && k + 1 < body.length && body(k + 1) == "=") {
-                if (body.lift(k + 2).contains("(")) {
-                  val kc = matchClose(body, k + 2)
-                  keys = body.slice(k + 3, kc).filter(_ != ",").toSeq
-                  k = kc + 1
-                } else { keys = Seq(body(k + 2)); k += 3 }
-              } else if (low == "ts" && k + 1 < body.length &&
-                  body(k + 1) == "=") {
-                tsCol = Some(body(k + 2)); k += 3
-              } else if (low == "ttl" && k + 1 < body.length &&
-                  body(k + 1) == "=") {
-                // the value may be a parenthesized 2-tuple: (10m,10)
-                if (body.lift(k + 2).contains("(")) {
-                  val tc = matchClose(body, k + 2)
-                  ttlVal = Some(body.slice(k + 2, tc + 1).mkString)
-                  k = tc + 1
-                } else { ttlVal = Some(body(k + 2)); k += 3 }
-              } else if (low == "ttl_type" && k + 1 < body.length &&
-                  body(k + 1) == "=") {
-                ttlKind = Some(body(k + 2)); k += 3
-              } else k += 1
+            p.next()
+            val o = parseOptions(p, keyword = false)
+            // KEY=c1 or KEY=(c1, `c 2`): a tuple value comes back as its
+            // joined tokens, so split it with the tokenizer
+            val keys = o.get("key").toSeq.flatMap { v =>
+              if (v.startsWith("("))
+                tokenize(v).filterNot(Set("(", ")", ",")).map(unq)
+              else Seq(v)
             }
+            val ttlKind = o.get("ttl_type")
             // validate eagerly: an illegal TTL fails the CREATE
             // (ddl/test_ttl.yaml ids 3-5/7/9/12/14/16-19); a TTL_TYPE
             // without a TTL is checked, and the index expires nothing
             Ttl.ofKind(ttlKind)
-            declared += IndexMeta(keys, tsCol,
-              ttlVal.map(Ttl.parse(_, ttlKind)).getOrElse(Ttl.Never))
+            declared += IndexMeta(keys, o.get("ts"),
+              o.get("ttl").map(Ttl.parse(_, ttlKind)).getOrElse(Ttl.Never))
           } else {
             val cn = unq(p.next())
             // a back-quoted keyword IS a legal name (back_quote corpus)
@@ -2963,8 +2976,9 @@ object GraftSql {
         reqSchema.fields.zip(argToks).foreach { case (f, ts) =>
           reqRow = reqRow.withColumn(f.name, callArgColumn(ts, f.dataType))
         }
-        Some(serveRequest(spark, bodySql, reqRow.drop("__call_seed"),
-          db = deploymentDb(spark, cn).orElse(ctx.db)))
+        Some(serveRequest(
+          ctx.copy(db = deploymentDb(spark, cn).orElse(ctx.db)), bodySql,
+          reqRow.drop("__call_seed"), Map.empty))
 
       case "DROP" =>
         p.expect("DROP"); p.expect("TABLE")
@@ -3030,7 +3044,7 @@ object GraftSql {
         if (p.p != p.toks.length) p.fail("trailing tokens after INSERT")
         if (bound.hasNext) throw new IllegalArgumentException(
           "INSERT bound more parameters than '?' placeholders")
-        if (offlineMode(spark)) {
+        if (ctx.offline) {
           // offline INSERT appends parquet rows to the table's data
           // path (InsertPlan.scala:55-95, which also rejects tables
           // holding soft-copied data); test_execute_mode.yaml id 5
@@ -3302,7 +3316,7 @@ object GraftSql {
           .forall(_.equalsIgnoreCase("true"))
         val cluster = clusterEdition(spark)
         val fmt = stripQuotes(opts.getOrElse("format", "csv")).toLowerCase
-        if (!offlineMode(spark)) {
+        if (!ctx.offline) {
           // ONLINE import. The cluster edition only accepts explicit
           // mode='append' hard copies (LoadDataPlan.scala:69
           // `require(deepCopy && mode == "append")`;
@@ -3469,10 +3483,10 @@ object GraftSql {
         // request. Long-window deployments serve through the pre-agg
         // partials path, not requestMode — nothing to pre-compile.
         if (!opts.contains("long_windows"))
-          try serveRequest(spark, rest.mkString(" "),
+          try serveRequest(ctx, rest.mkString(" "),
             spark.createDataFrame(
               java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              requestSchemaFor(spark, name)), db = ctx.db)
+              requestSchemaFor(spark, name)), Map.empty)
           catch { case scala.util.control.NonFatal(_) => () }
         None
 
@@ -3492,8 +3506,7 @@ object GraftSql {
             // like any job); the online CLI export writes ONE local
             // file and needs its folder to exist
             graft.sources.Sources.selectInto(exported, path, opts,
-              requireParent = !offlineMode(spark),
-              clientFile = !offlineMode(spark))
+              requireParent = !ctx.offline, clientFile = !ctx.offline)
           }
           // surface the exported frame so callers can count/inspect it
           // (v040/test_out_in_offline.yaml id 0 expects count=6)
@@ -3644,10 +3657,6 @@ object GraftSql {
   // cluster manager's job, so the model validates the spec exactly as
   // the reference's nameserver does and records nothing.
   // ------------------------------------------------------------------
-  /** The virtual tablet endpoints validated against (default 3). */
-  def setClusterTablets(spark: SparkSession, eps: Seq[String]): Unit =
-    SessionState.of(spark).tablets = eps
-
   private def validateTableOptions(spark: SparkSession,
       opts: Map[String, String]): Unit = {
     val tablets = SessionState.of(spark).tablets
@@ -4022,11 +4031,6 @@ object GraftSql {
   private def clusterEdition(spark: SparkSession): Boolean =
     SessionState.of(spark).catalog.edition == "cluster"
 
-  private def execMode(spark: SparkSession): String =
-    SessionState.of(spark).catalog.vars.getOrElse("execute_mode", "online")
-  private def offlineMode(spark: SparkSession): Boolean =
-    clusterEdition(spark) && execMode(spark) == "offline"
-
   /** The offline-store key for a (possibly db-qualified) table name —
     * the same identity qualifyTable gives the online view, so LOAD /
     * INSERT / SELECT agree on which store they touch. */
@@ -4178,7 +4182,7 @@ object GraftSql {
     // offline frame borrows its schema. WITH names shadow physical
     // tables, so they are never rerouted.
     def route(df: DataFrame): DataFrame =
-      if (offlineMode(spark) && !ctx.ctes.contains(name.toLowerCase))
+      if (ctx.offline && !ctx.ctes.contains(name.toLowerCase))
         // re-alias: the swapped frame must keep answering qualified
         // column references ({0}.card_no) like the spark.table view did
         offlineFrame(spark, offlineKey(ctx, name), df.schema)

@@ -248,6 +248,66 @@ class ApiServerSpec extends SparkSpec {
     }
   }
 
+  test("offline ExecuteSQL requests leave concurrent CALLs online and " +
+      "the session's execute_mode alone") {
+    GraftSql.resetDeployments(spark)
+    def st(s: String) = GraftSql.statement(spark, s)
+    def execMode(): String = st("SHOW VARIABLES").get.collect()
+      .find(_.getString(0) == "execute_mode").map(_.getString(1)).get
+    // the cluster edition's two stores hold different rows for u1
+    st("CREATE TABLE xm_ev (k string, ts bigint, v double)")
+    st("INSERT INTO xm_ev VALUES ('u1', 10, 1.0)")
+    st("SET @@execute_mode = 'offline'")
+    st("INSERT INTO xm_ev VALUES ('u1', 10, 100.0)")
+    st("SET @@execute_mode = 'online'")
+    st("""DEPLOY xm_d SELECT k, sum(v) OVER w AS s FROM xm_ev
+         |WINDOW w AS (PARTITION BY k ORDER BY ts
+         |  ROWS_RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)""".stripMargin)
+    val srv = ApiServer.start(spark, threads = 8)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val client = HttpClient.newHttpClient()
+    def send(path: String, body: String): String =
+      client.send(HttpRequest.newBuilder(
+          URI.create(s"http://127.0.0.1:${srv.port}$path"))
+        .POST(HttpRequest.BodyPublishers.ofString(body,
+          StandardCharsets.UTF_8)).build(),
+        HttpResponse.BodyHandlers.ofString()).body()
+    try {
+      // 200 CALLs (online answer 1 + 3 = 4; the offline store would
+      // give 103) interleaved with 100 offline SELECTs
+      val replies = (0 until 300).map { i =>
+        pool.submit(new java.util.concurrent.Callable[(Boolean, String)] {
+          def call(): (Boolean, String) =
+            if (i % 3 == 2) (false, send("/dbs/default",
+              """{"sql": "SELECT k, v FROM xm_ev", "mode": "offsync"}"""))
+            else (true, send("/dbs/default/deployments/xm_d",
+              """{"input": [["u1", 30, 3.0]]}"""))
+        })
+      }.map(_.get())
+      // the one row's second column, or the reply when it has none
+      def answer(reply: String): Either[String, Double] = {
+        val r = parse(reply)
+        val rows = Option(r.get("data")).map(_.get("data"))
+        if (r.get("code").asInt() != 0 || rows.forall(_.size() != 1))
+          Left(reply)
+        else Right(rows.get.get(0).get(1).asDouble())
+      }
+      val calls = replies.collect { case (true, r) => answer(r) }
+      val selects = replies.collect { case (false, r) => answer(r) }
+      assert(calls.size == 200 && selects.size == 100)
+      val wrong = calls.filterNot(_ == Right(4.0))
+      assert(wrong.isEmpty, s"${wrong.size} of 200 CALLs not online: " +
+        wrong.groupBy(identity).map { case (a, n) => s"${n.size}× $a" })
+      assert(selects.forall(_ == Right(100.0)), selects.distinct)
+      assert(execMode() == "online")
+    } finally {
+      pool.shutdownNow()
+      srv.stop()
+      GraftSql.resetDeployments(spark)
+      st("DROP TABLE xm_ev")
+    }
+  }
+
   test("ExecuteSQL scopes to the URL db; row cap; POST /refresh") {
     GraftSql.statement(spark, "CREATE DATABASE IF NOT EXISTS sc3")
     val srv = ApiServer.start(spark)

@@ -458,6 +458,19 @@ class HashVecOpsSpec extends SparkSpec {
     }
   }
 
+  test("DistinctNgramSizeExpr compares grams as bytes: invalid UTF-8 " +
+      "words stay distinct") {
+    // 0xFF and 0xFE both decode to U+FFFD, so grams built through
+    // java Strings would collide: "FF a" == "FE a"
+    val df = spark.range(1).select(array(unhex(lit("FF")).cast("string"),
+      lit("a"), unhex(lit("FE")).cast("string"), lit("a")).as("ws"))
+    val got = df.select(HashOps.distinctNgramSize(col("ws"), 2)).head.getInt(0)
+    val want = df.select(size(array_distinct(
+      graft.operators.TextOps.wordNgramsOf(col("ws"), 2)))).head.getInt(0)
+    assert(want == 3)
+    assert(got == want)
+  }
+
   test("QuantizeInt8Expr == the aggregate-scale + transform chain, " +
       "incl. NaN / null-element / null-vector / empty / all-zero") {
     // verbatim pre-r20 Similarity.quantizeInt8: the transform's

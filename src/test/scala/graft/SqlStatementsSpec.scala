@@ -769,6 +769,29 @@ class SqlStatementsSpec extends SparkSpec {
       "OPTIONS(ts=c7, ttl=10m, ttl_type='bogus')") == msg)
   }
 
+  test("index registry: CREATE TABLE INDEX(...) shapes — key tuple, " +
+      "back-quoted key, TTL tuple, TTL_TYPE without TTL") {
+    import graft.operators.Ttl
+    val s = spark.newSession()
+    def meta(t: String, index: String): Seq[GraftSql.IndexMeta] = {
+      GraftSql.statement(s, s"CREATE TABLE $t (`c-1` string, c2 bigint, " +
+        s"c7 timestamp, $index)")
+      GraftSql.tableIndexMeta(s, t)
+    }
+    assert(meta("ir_e", "INDEX(KEY=(c2,`c-1`), TS=c7)") ==
+      Seq(GraftSql.IndexMeta(Seq("c2", "c-1"), Some("c7"), Ttl.Never)))
+    assert(meta("ir_f", "INDEX(KEY=`c-1`)") ==
+      Seq(GraftSql.IndexMeta(Seq("c-1"), None, Ttl.Never)))
+    // TTL=(abs, lat): 10 minutes or 10 rows
+    assert(meta("ir_g",
+      "INDEX(KEY=c2, TS=c7, TTL=(10m,10), TTL_TYPE=absorlat)") ==
+      Seq(GraftSql.IndexMeta(Seq("c2"), Some("c7"),
+        Ttl.AbsOrLat(600000L, 10))))
+    // a TTL_TYPE without a TTL is checked, and the index expires nothing
+    assert(meta("ir_h", "INDEX(KEY=c2, TS=c7, TTL_TYPE=latest)") ==
+      Seq(GraftSql.IndexMeta(Seq("c2"), Some("c7"), Ttl.Never)))
+  }
+
   test("session state is per SparkSession; reset keeps users and " +
       "functions") {
     val a = spark.newSession()
