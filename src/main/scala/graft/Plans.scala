@@ -56,7 +56,7 @@ object Plans {
         |an option on the sharded release writer
         |(Packing.writeShards(..., zorderDims)).
         |""".stripMargin)
-    Files.writeString(Paths.get("/root/repo/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("[plans] wrote PLANS.md")
     spark.stop()
   }

@@ -210,12 +210,12 @@ object SparkEntry {
       T(s, d, "events").withColumn("__arr", arr)
         .select(
           col("event_id"),
-          round(fagg("sum_double"), 3).as("m_sum"),
+          round(fagg("sum"), 3).as("m_sum"),
           fagg("count").as("m_cnt"),
           fagg("min").as("m_min"),
           fagg("max").as("m_max"),
           round(fagg("avg"), 4).as("m_avg"),
-          fagg("dcount_null").as("m_dc"))
+          fagg("distinct_count").as("m_dc"))
     },
 
     // EXCLUDE CURRENT_TIME over a minute-granular order key (forces
@@ -1228,7 +1228,7 @@ object SparkEntry {
         col("c_nationkey"),
         round(col("c_acctbal") / 100, 4).as("bal_h"),
         fagg("dcount", Some("v")).as("w_dc"),
-        round(fagg("sum_double", Some("v")), 3).as("w_sum"),
+        round(fagg("sum", Some("v")), 3).as("w_sum"),
         fagg("count", Some("v")).as("w_cnt"),
         // avg is (w_sum, w_cnt)-determined; its decimal representation
         // lands exactly on rounding boundaries (2-decimal inputs / small

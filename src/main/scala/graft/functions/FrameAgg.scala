@@ -5,39 +5,29 @@ import org.apache.spark.sql.graftbridge.CatalystBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** One-pass imperative scorer over a collected window frame array —
-  * the scale-safe replacement for per-element Catalyst higher-order
-  * lambdas (`aggregate`/`filter`/`transform`), which are interpreted,
-  * rebuild expression state per ELEMENT, and are the JIT-hostile cost
-  * center of the MAXSIZE/EXCLUDE/UNION window path (the reference
-  * scores each frame with one C-level walk over its HistoryWindow
-  * buffer, hybridse/include/vm/mem_catalog.h:344; this is the JVM
-  * analog: one monomorphic loop over the ArrayData, type dispatch
-  * resolved ONCE at plan time).
+/** One-pass scorer over a collected window frame array: the SQL face
+  * of [[FrameKernel]]'s aggregates, over an `ArrayData` view of the
+  * frame with no copy. Replaces per-element Catalyst higher-order
+  * lambdas (`aggregate`/`filter`/`transform`), which are interpreted
+  * and rebuild expression state per ELEMENT; type dispatch is resolved
+  * ONCE at plan time.
   *
   * Input: `array<struct<..., v: T>>` — the frame-entry shape
   * [[graft.operators.WindowOps.frameArray]] produces (full
-  * `(ts,uid,flag,v)` or the narrowed `(ts,v)`). When `vField` is set,
-  * `v` is a struct and the aggregate reads `v.<vField>` — this lets
-  * the SQL planner score a SHARED multi-aggregate frame without the
-  * per-aggregate interpreted `transform` that used to deep-copy the
-  * array once per aggregate.
+  * `(ts,uid,flag,v)` or the narrowed `(ts,v)`), newest first. When
+  * `vField` is set, `v` is a struct and the aggregate reads
+  * `v.<vField>` — this lets the SQL planner score a SHARED
+  * multi-aggregate frame without a per-aggregate `transform` copy.
   *
-  * Functions (matching the frame-array agg helpers bit-for-bit,
-  * including double accumulation ORDER — newest-first array order):
-  *  - `sum_double`: Σ v as double, NULL on empty/all-null frame
-  *  - `sum_long`: exact integral Σ in a native long; Java two's
-  *    complement overflow IS the reference's 2^64 wraparound
-  *    (the old Decimal(38,0) + wrapToLongRange pair, one pass)
-  *  - `count`: non-null count (0 on empty)
-  *  - `avg`: sum_double / count, NULL when count = 0
-  *  - `min` / `max`: null-skipping, NULL on empty/all-null
-  *  - `dcount_null`: distinct count, NULL COUNTS as a distinct value
-  *    (reference distinct_count, test_udaf_function.yaml id 5 row 4)
-  *  - `dcount`: distinct count over non-null values only
+  * Functions ([[FrameKernel.agg]] has their semantics and
+  * [[FrameKernel.resultType]] their types): sum, count, avg, min, max,
+  * distinct_count (NULL counts as a value), dcount (non-null values
+  * only), median, top1_ratio, drawdown, ew_avg (`arg` = alpha),
+  * topn_frequency and top (`arg` = k), lag (`arg` = frame position),
+  * first_value and last_value (`arg` 1 = ignore nulls).
   *
   * Evaluated via CodegenFallback: the surrounding projection stays
   * whole-stage-codegen'd and calls this eval once per ROW; the loop
@@ -50,393 +40,208 @@ case class FrameAggExpr(child: Expression, fn: String,
   @transient private lazy val entryType: StructType =
     child.dataType.asInstanceOf[ArrayType]
       .elementType.asInstanceOf[StructType]
-  @transient private lazy val entryLen: Int = entryType.length
   @transient private lazy val vOrd: Int = entryType.fieldIndex("v")
   @transient private lazy val vType: DataType = entryType(vOrd).dataType
-  @transient private lazy val valOrd: Int = vField match {
-    case Some(f) => vType.asInstanceOf[StructType].fieldIndex(f)
-    case None    => vOrd
-  }
   @transient private lazy val valType: DataType = vField match {
     case Some(f) =>
       val st = vType.asInstanceOf[StructType]
       st(st.fieldIndex(f)).dataType
     case None => vType
   }
-  @transient private lazy val vStructLen: Int = vField match {
-    case Some(_) => vType.asInstanceOf[StructType].length
-    case None    => 0
+  @transient private lazy val layout = vField match {
+    case Some(f) =>
+      val st = vType.asInstanceOf[StructType]
+      new EntryLayout(entryType.length, vOrd, st.length, st.fieldIndex(f),
+        valType)
+    case None => new EntryLayout(entryType.length, vOrd, 0, vOrd, valType)
   }
+  @transient private lazy val score = FrameKernel.agg(fn, valType, arg)
 
-  override def dataType: DataType = fn match {
-    case "sum_double" | "avg" | "median" | "top1_ratio" |
-         "drawdown" | "ew_avg"               => DoubleType
-    case "sum_long" | "count" | "dcount" | "dcount_null" => LongType
-    case "min" | "max"                       => valType
-    case "topn_freq" | "topk_int" | "topk_double" => StringType
-    case other => throw new IllegalArgumentException(
-      s"FrameAggExpr: unknown fn '$other'")
-  }
+  override def dataType: DataType = FrameKernel.resultType(fn, valType)
   override def nullable: Boolean = true
 
-  /** The row holding the value (the entry itself, or the nested value
-    * struct), or null when the value slot is null at this element. */
-  @inline private def valRow(arr: ArrayData, i: Int): InternalRow = {
-    val e = arr.getStruct(i, entryLen)
-    if (e == null) return null
-    if (vField.isEmpty) e
-    else if (e.isNullAt(vOrd)) null
-    else e.getStruct(vOrd, vStructLen)
-  }
-
-  // numeric getter resolved once at plan time — the loop body stays
-  // monomorphic (same Cast-to-double semantics as the old
-  // `x("v").cast("double")` fold)
-  @transient private lazy val getD: (InternalRow, Int) => Double =
-    valType match {
-      case DoubleType  => (r, o) => r.getDouble(o)
-      case FloatType   => (r, o) => r.getFloat(o).toDouble
-      case LongType    => (r, o) => r.getLong(o).toDouble
-      case IntegerType => (r, o) => r.getInt(o).toDouble
-      case ShortType   => (r, o) => r.getShort(o).toDouble
-      case ByteType    => (r, o) => r.getByte(o).toDouble
-      case BooleanType => (r, o) => if (r.getBoolean(o)) 1.0 else 0.0
-      case d: DecimalType =>
-        (r, o) => r.getDecimal(o, d.precision, d.scale).toDouble
-      case other => throw new IllegalArgumentException(
-        s"FrameAggExpr($fn): non-numeric value type $other")
-    }
-
-  @transient private lazy val getL: (InternalRow, Int) => Long =
-    valType match {
-      case LongType    => (r, o) => r.getLong(o)
-      case IntegerType => (r, o) => r.getInt(o).toLong
-      case ShortType   => (r, o) => r.getShort(o).toLong
-      case ByteType    => (r, o) => r.getByte(o).toLong
-      case BooleanType => (r, o) => if (r.getBoolean(o)) 1L else 0L
-      case other => throw new IllegalArgumentException(
-        s"FrameAggExpr(sum_long): non-integral value type $other")
-    }
-
-  @transient private lazy val ordering: Ordering[Any] =
-    TypeUtils.getInterpretedOrdering(valType)
-
-  // distinct/top1 group values by BOXED equality (HashSet/HashMap).
-  // For floats that diverges from SQL equality on the zero sign:
-  // boxed -0.0 != 0.0 (Double.equals goes through doubleToLongBits)
-  // while the replaced array_distinct formulation — and the
-  // reference's C++ unordered_set over primitive doubles — treat them
-  // as ONE value. Normalize the two zeros (and canonicalize NaN bit
-  // patterns, harmless since doubleToLongBits already collapses them)
-  // before the value becomes a hash key.
-  @transient private lazy val floatingKey: Boolean = valType match {
-    case DoubleType | FloatType => true
-    case _                      => false
-  }
-  @inline private def canonKey(v: Any): Any =
-    if (!floatingKey) v
-    else v match {
-      case d: java.lang.Double =>
-        val x = d.doubleValue
-        if (java.lang.Double.isNaN(x)) FrameAggExpr.CanonNaN
-        else if (x == 0.0d) FrameAggExpr.CanonZeroD else d
-      case f: java.lang.Float =>
-        val x = f.floatValue
-        if (java.lang.Float.isNaN(x)) FrameAggExpr.CanonNaNF
-        else if (x == 0.0f) FrameAggExpr.CanonZeroF else f
-      case other => other
-    }
-
-  // Cast-to-string rendering for the string-valued aggregates —
-  // restricted to the types whose rendering is trivially identical to
-  // Catalyst's Cast (strings verbatim, integrals via toString); other
-  // types keep the Column formulation at the dispatch site.
-  @transient private lazy val getS:
-      (InternalRow, Int) => org.apache.spark.unsafe.types.UTF8String =
-    valType match {
-      case StringType => (r, o) => r.getUTF8String(o)
-      case LongType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          r.getLong(o).toString)
-      case IntegerType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          r.getInt(o).toString)
-      case ShortType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          r.getShort(o).toString)
-      case ByteType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          r.getByte(o).toString)
-      case DoubleType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          java.lang.Double.toString(r.getDouble(o)))
-      case FloatType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          java.lang.Float.toString(r.getFloat(o)))
-      case BooleanType => (r, o) =>
-        org.apache.spark.unsafe.types.UTF8String.fromString(
-          r.getBoolean(o).toString)
-      case other => throw new IllegalArgumentException(
-        s"FrameAggExpr($fn): unsupported value type $other")
-    }
-
-  /** Non-null values as doubles, in frame (array) order. */
-  private def collectDoubles(arr: ArrayData): Array[Double] = {
-    val n = arr.numElements()
-    val out = new Array[Double](n)
-    var m = 0; var i = 0
-    while (i < n) {
-      val r = valRow(arr, i)
-      if (r != null && !r.isNullAt(valOrd)) { out(m) = getD(r, valOrd); m += 1 }
-      i += 1
-    }
-    if (m == n) out else java.util.Arrays.copyOf(out, m)
-  }
-
-  /** Non-null values as longs, in frame order (exact integral top-k —
-    * a double round-trip would lose unit precision past 2^53). */
-  private def collectLongs(arr: ArrayData): Array[Long] = {
-    val n = arr.numElements()
-    val out = new Array[Long](n)
-    var m = 0; var i = 0
-    while (i < n) {
-      val r = valRow(arr, i)
-      if (r != null && !r.isNullAt(valOrd)) { out(m) = getL(r, valOrd); m += 1 }
-      i += 1
-    }
-    if (m == n) out else java.util.Arrays.copyOf(out, m)
-  }
-
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    fn match {
-      case "sum_double" =>
-        var s = 0.0; var any = false; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) { s += getD(r, valOrd); any = true }
-          i += 1
-        }
-        if (any) s else null
-      case "sum_long" =>
-        var s = 0L; var any = false; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) { s += getL(r, valOrd); any = true }
-          i += 1
-        }
-        if (any) s else null
-      case "count" =>
-        var c = 0L; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) c += 1L
-          i += 1
-        }
-        c
-      case "avg" =>
-        var s = 0.0; var c = 0L; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) { s += getD(r, valOrd); c += 1L }
-          i += 1
-        }
-        if (c > 0L) s / c else null
-      case "min" | "max" =>
-        val isMin = fn == "min"
-        var best: Any = null; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) {
-            val v = r.get(valOrd, valType)
-            if (best == null ||
-                (if (isMin) ordering.compare(v, best) < 0
-                 else ordering.compare(v, best) > 0)) best = v
-          }
-          i += 1
-        }
-        best
-      case "dcount" | "dcount_null" =>
-        val seen = new java.util.HashSet[Any]()
-        var sawNull = false; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r == null || r.isNullAt(valOrd)) sawNull = true
-          else seen.add(canonKey(r.get(valOrd, valType)))
-          i += 1
-        }
-        seen.size.toLong +
-          (if (fn == "dcount_null" && sawNull) 1L else 0L)
-      case "median" =>
-        // non-null values as double, ascending sort, middle / mean of
-        // the two middles (exact reference median semantics — the old
-        // array_sort(transform(filter)) chain, one pass + one sort)
-        val vals = collectDoubles(arr)
-        if (vals.isEmpty) null
-        else {
-          java.util.Arrays.sort(vals)
-          val m = vals.length
-          if (m % 2 == 1) vals(m / 2)
-          else (vals(m / 2 - 1) + vals(m / 2)) / 2.0
-        }
-      case "top1_ratio" =>
-        // most-common non-null value count / non-null total, 0.0 when
-        // empty (feature_zero_def.cc:426-471); grouping by the boxed
-        // value gives the same classes as the old cast-to-string
-        // grouping (per-type string rendering is injective)
-        val counts = new java.util.HashMap[Any, java.lang.Long]()
-        var total = 0L; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) {
-            counts.merge(canonKey(r.get(valOrd, valType)),
-              java.lang.Long.valueOf(1L),
-              (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-            total += 1L
-          }
-          i += 1
-        }
-        if (total == 0L) 0.0
-        else {
-          var mx = 0L
-          val it = counts.values().iterator()
-          while (it.hasNext) {
-            val c = it.next().longValue; if (c > mx) mx = c
-          }
-          mx.toDouble / total
-        }
-      case "drawdown" =>
-        // newest-first walk keeping the running min of newer values
-        // (DrawdownUdafDef, default_udf_library.cc:609-655) — exact
-        // replica of the old fold: state (mn, dd), negatives skipped,
-        // dd only advances on valid values, cur computed against the
-        // PRE-update mn
-        var mnSet = false; var mn = 0.0
-        var ddSet = false; var dd = 0.0
-        var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) {
-            val v = getD(r, valOrd)
-            if (v >= 0.0) {
-              val cur =
-                if (mnSet && mn < v && v != 0.0) (v - mn) / v else 0.0
-              dd = math.max(if (ddSet) dd else 0.0, cur); ddSet = true
-              if (!mnSet || v <= mn) { mn = v; mnSet = true }
-            }
-          }
-          i += 1
-        }
-        if (ddSet) dd else null
-      case "ew_avg" =>
-        // weight (1-alpha)^i for the i-th NEWEST non-null value
-        // (EwAvgUdafDef) — same per-term Math.pow and accumulation
-        // order as the old indexed-transform fold
-        val a = arg
-        var s = 0.0; var c = 0.0; var k = 0; var i = 0
-        while (i < n) {
-          val r = valRow(arr, i)
-          if (r != null && !r.isNullAt(valOrd)) {
-            val w = math.pow(1.0 - a, k)
-            s += getD(r, valOrd) * w; c += w; k += 1
-          }
-          i += 1
-        }
-        if (k == 0) null else s / c
-      case "topn_freq" =>
-        // the arg.toInt most frequent non-null values (count desc, key
-        // string asc in BINARY order — the old struct array_sort), as
-        // rendered strings comma-joined, padded with "NULL"; an EMPTY
-        // frame renders "" (test_feature_zero_function.yaml id 4 row 4)
-        val k = arg.toInt
-        if (k <= 0 || n == 0) org.apache.spark.unsafe.types.UTF8String.EMPTY_UTF8
-        else {
-          type U = org.apache.spark.unsafe.types.UTF8String
-          val counts = new java.util.HashMap[U, java.lang.Long]()
-          var i = 0
-          while (i < n) {
-            val r = valRow(arr, i)
-            if (r != null && !r.isNullAt(valOrd))
-              counts.merge(getS(r, valOrd), java.lang.Long.valueOf(1L),
-                (a, b) => java.lang.Long.valueOf(a.longValue + b.longValue))
-            i += 1
-          }
-          val entries = new java.util.ArrayList[
-            java.util.Map.Entry[U, java.lang.Long]](counts.entrySet())
-          entries.sort(new java.util.Comparator[
-              java.util.Map.Entry[U, java.lang.Long]] {
-            override def compare(
-                a: java.util.Map.Entry[U, java.lang.Long],
-                b: java.util.Map.Entry[U, java.lang.Long]): Int = {
-              val c = java.lang.Long.compare(b.getValue, a.getValue)
-              if (c != 0) c else a.getKey.compareTo(b.getKey)
-            }
-          })
-          val sb = new java.lang.StringBuilder
-          var j = 0
-          while (j < k) {
-            if (j > 0) sb.append(',')
-            if (j < entries.size) sb.append(entries.get(j).getKey.toString)
-            else sb.append("NULL")
-            j += 1
-          }
-          org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
-        }
-      case "topk_int" =>
-        // the arg.toInt largest non-null values descending, exact
-        // integral rendering (a double round-trip would lose unit
-        // precision past 2^53)
-        val vals = collectLongs(arr)
-        java.util.Arrays.sort(vals)
-        val take = math.min(arg.toInt, vals.length)
-        val sb = new java.lang.StringBuilder
-        var j = 0
-        while (j < take) {
-          if (j > 0) sb.append(',')
-          sb.append(vals(vals.length - 1 - j).toString)
-          j += 1
-        }
-        org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
-      case "topk_double" =>
-        // floats render %.6f with Locale.US — format_string semantics
-        val vals = collectDoubles(arr)
-        java.util.Arrays.sort(vals)
-        val take = math.min(arg.toInt, vals.length)
-        val sb = new java.lang.StringBuilder
-        var j = 0
-        while (j < take) {
-          if (j > 0) sb.append(',')
-          sb.append(String.format(java.util.Locale.US, "%.6f",
-            java.lang.Double.valueOf(vals(vals.length - 1 - j))))
-          j += 1
-        }
-        org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
-      case other => throw new IllegalArgumentException(
-        s"FrameAggExpr: unknown fn '$other'")
-    }
-  }
+  override def nullSafeEval(input: Any): Any =
+    score(new EntryValues(input.asInstanceOf[ArrayData], layout))
 
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
   override def prettyName: String = s"frame_$fn"
 }
 
-object FrameAggExpr {
-  // shared canonical boxes for the float-key normalization (allocated
-  // once; the hot loop only pays the sign/NaN test per element)
-  private[functions] val CanonNaN   = java.lang.Double.valueOf(Double.NaN)
-  private[functions] val CanonZeroD = java.lang.Double.valueOf(0.0d)
-  private[functions] val CanonNaNF  = java.lang.Float.valueOf(Float.NaN)
-  private[functions] val CanonZeroF = java.lang.Float.valueOf(0.0f)
+/** Where a frame entry keeps its value (`vStructLen` > 0: in field
+  * `valOrd` of the struct at `vOrd`), and the value's getters —
+  * resolved once per expression. */
+private final class EntryLayout(val entryLen: Int, val vOrd: Int,
+    val vStructLen: Int, val valOrd: Int, val vt: DataType) {
+  val isNested: Boolean = vStructLen > 0
+  // numeric getters: Cast-to-double / Cast-to-long semantics for the
+  // numeric and boolean types (non-numeric values are cast before they
+  // are collected)
+  val getD: (InternalRow, Int) => Double = vt match {
+    case DoubleType  => (r, o) => r.getDouble(o)
+    case FloatType   => (r, o) => r.getFloat(o).toDouble
+    case LongType    => (r, o) => r.getLong(o).toDouble
+    case IntegerType => (r, o) => r.getInt(o).toDouble
+    case ShortType   => (r, o) => r.getShort(o).toDouble
+    case ByteType    => (r, o) => r.getByte(o).toDouble
+    case BooleanType => (r, o) => if (r.getBoolean(o)) 1.0 else 0.0
+    case d: DecimalType =>
+      (r, o) => r.getDecimal(o, d.precision, d.scale).toDouble
+    case other => (_, _) => throw new IllegalArgumentException(
+      s"frame aggregate: non-numeric value type $other")
+  }
+  val getL: (InternalRow, Int) => Long = vt match {
+    case LongType    => (r, o) => r.getLong(o)
+    case IntegerType => (r, o) => r.getInt(o).toLong
+    case ShortType   => (r, o) => r.getShort(o).toLong
+    case ByteType    => (r, o) => r.getByte(o).toLong
+    case BooleanType => (r, o) => if (r.getBoolean(o)) 1L else 0L
+    case other => (_, _) => throw new IllegalArgumentException(
+      s"frame aggregate: non-integral value type $other")
+  }
 }
 
-/** Range-cutoff over a frame array: keep entries with `ts >= minTs`,
-  * in one imperative pass (the fast bounded-ROWS path's range bound —
-  * replaces the interpreted higher-order `filter` that walked a
-  * Catalyst tree per element). Entries are REFERENCED, not copied —
-  * same lifetime contract as Catalyst's own ArrayFilter. */
-case class FrameCutoffExpr(left: Expression, right: Expression)
+/** [[FrameKernel.Values]] over a frame array, without copying: the
+  * row holding element i's value is fetched once and reused by the
+  * null test and the getter that follows it. */
+private final class EntryValues(arr: ArrayData, l: EntryLayout)
+    extends FrameKernel.Values {
+  private var at = -1
+  private var row: InternalRow = _
+  private def valRow(i: Int): InternalRow = {
+    if (i != at) {
+      at = i
+      val e = arr.getStruct(i, l.entryLen)
+      row =
+        if (e == null || !l.isNested) e
+        else if (e.isNullAt(l.vOrd)) null
+        else e.getStruct(l.vOrd, l.vStructLen)
+    }
+    row
+  }
+  def length: Int = arr.numElements()
+  def isNull(i: Int): Boolean = {
+    val r = valRow(i); r == null || r.isNullAt(l.valOrd)
+  }
+  def double(i: Int): Double = l.getD(valRow(i), l.valOrd)
+  def long(i: Int): Long = l.getL(valRow(i), l.valOrd)
+  def get(i: Int): Any = valRow(i).get(l.valOrd, l.vt)
+}
+
+/** Frame membership over a collected frame array: the entries of the
+  * current row's frame under [[FrameKernel.members]], newest first by
+  * (ts, uid). One sort by (ts, uid), skipped when the collect order
+  * already is, and one pass with no interpreted per-element lambda.
+  * Entries are REFERENCED, not copied — the same lifetime contract as
+  * Catalyst's own ArrayFilter. Children: the array of
+  * `struct<ts, uid, flag, v>` entries, the current row's ts and uid. */
+case class FrameMemberExpr(arr: Expression, curTs: Expression,
+    curUid: Expression, frame: FrameKernel.Frame)
+    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression
+    with CodegenFallback {
+  @transient private lazy val entryType: StructType =
+    arr.dataType.asInstanceOf[ArrayType]
+      .elementType.asInstanceOf[StructType]
+  @transient private lazy val entryLen: Int = entryType.length
+  @transient private lazy val tsOrd: Int = entryType.fieldIndex("ts")
+  @transient private lazy val uidOrd: Int = entryType.fieldIndex("uid")
+  @transient private lazy val flagOrd: Int = entryType.fieldIndex("flag")
+  @transient private lazy val getTs = FrameMemberExpr.integral(
+    entryType(tsOrd).dataType, "ts")
+  @transient private lazy val getUid = FrameMemberExpr.integral(
+    entryType(uidOrd).dataType, "uid")
+
+  override def first: Expression = arr
+  override def second: Expression = curTs
+  override def third: Expression = curUid
+  override def dataType: DataType = arr.dataType
+  override def nullable: Boolean = arr.nullable
+
+  // a row with a NULL order key has no frame
+  override def eval(input: InternalRow): Any = {
+    val a = arr.eval(input)
+    if (a == null) return null
+    val t = curTs.eval(input); val u = curUid.eval(input)
+    if (t == null || u == null)
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
+    else nullSafeEval(a, t, u)
+  }
+
+  override def nullSafeEval(arrIn: Any, tsIn: Any, uidIn: Any): Any = {
+    val a = arrIn.asInstanceOf[ArrayData]
+    val n = a.numElements()
+    val entries = new Array[InternalRow](n)
+    val tsA = new Array[Long](n)
+    val uidA = new Array[Long](n)
+    var ascending = true
+    var i = 0
+    while (i < n) {
+      val e = a.getStruct(i, entryLen)
+      entries(i) = e
+      tsA(i) = getTs(e, tsOrd); uidA(i) = getUid(e, uidOrd)
+      if (i > 0 && (tsA(i) < tsA(i - 1) ||
+          (tsA(i) == tsA(i - 1) && uidA(i) < uidA(i - 1)))) ascending = false
+      i += 1
+    }
+    // newest first: the collect order reversed, or sorted when ties
+    // arrived out of uid order
+    val order = new Array[Int](n)
+    i = 0
+    while (i < n) { order(i) = n - 1 - i; i += 1 }
+    if (!ascending) {
+      val boxed = order.map(Int.box)
+      java.util.Arrays.sort(boxed, (x: Integer, y: Integer) => {
+        val c = java.lang.Long.compare(tsA(y), tsA(x))
+        if (c != 0) c else java.lang.Long.compare(uidA(y), uidA(x))
+      })
+      i = 0
+      while (i < n) { order(i) = boxed(i); i += 1 }
+    }
+    val rows = new FrameKernel.Rows {
+      def length: Int = n
+      def ts(k: Int): Long = tsA(order(k))
+      def seq(k: Int): Long = uidA(order(k))
+      def primary(k: Int): Boolean = {
+        val e = entries(order(k))
+        e.isNullAt(flagOrd) || e.getBoolean(flagOrd)
+      }
+    }
+    val picked = new Array[Int](n)
+    val m = FrameKernel.members(frame, rows, FrameMemberExpr.asLong(tsIn),
+      FrameMemberExpr.asLong(uidIn), picked)
+    val out = new Array[Any](m)
+    i = 0
+    while (i < m) { out(i) = entries(order(picked(i))); i += 1 }
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+  }
+
+  override protected def withNewChildrenInternal(a: Expression,
+      t: Expression, u: Expression): Expression =
+    copy(arr = a, curTs = t, curUid = u)
+  override def prettyName: String = "frame_members"
+}
+
+object FrameMemberExpr {
+  private[functions] def integral(t: DataType,
+      what: String): (InternalRow, Int) => Long = t match {
+    case LongType    => (r, o) => r.getLong(o)
+    case IntegerType => (r, o) => r.getInt(o).toLong
+    case other => throw new IllegalArgumentException(
+      s"frame array: $what must be an epoch-ms integral, got $other")
+  }
+  private def asLong(x: Any): Long = x match {
+    case l: java.lang.Long    => l
+    case i: java.lang.Integer => i.toLong
+  }
+}
+
+/** The bounded-ROWS fast path's frame: the collected ROWS frame
+  * (ascending by (ts, uid)) reversed to newest first, without the
+  * entries older than `minTs` (the range bound), in one imperative
+  * pass — no interpreted per-element lambda and one array, not a
+  * `reverse` copy and then a filtered one. Entries are REFERENCED, not
+  * copied — same lifetime contract as Catalyst's own ArrayFilter. */
+case class FrameNewestExpr(left: Expression, right: Expression)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
     with CodegenFallback {
   @transient private lazy val entryType: StructType =
@@ -444,13 +249,8 @@ case class FrameCutoffExpr(left: Expression, right: Expression)
       .elementType.asInstanceOf[StructType]
   @transient private lazy val entryLen: Int = entryType.length
   @transient private lazy val tsOrd: Int = entryType.fieldIndex("ts")
-  @transient private lazy val getTs: (InternalRow, Int) => Long =
-    entryType(tsOrd).dataType match {
-      case LongType    => (r, o) => r.getLong(o)
-      case IntegerType => (r, o) => r.getInt(o).toLong
-      case other => throw new IllegalArgumentException(
-        s"frame_cutoff: ts must be an epoch-ms integral, got $other")
-    }
+  @transient private lazy val getTs =
+    FrameMemberExpr.integral(entryType(tsOrd).dataType, "ts")
 
   override def dataType: DataType = left.dataType
   override def nullable: Boolean = left.nullable
@@ -459,43 +259,44 @@ case class FrameCutoffExpr(left: Expression, right: Expression)
     val arr = arrIn.asInstanceOf[ArrayData]
     val minTs = minTsIn.asInstanceOf[Long]
     val n = arr.numElements()
-    var keep = 0
-    var i = 0
-    while (i < n) {
+    val out = new Array[Any](n)
+    var m = 0
+    var i = n - 1
+    while (i >= 0) {
       val e = arr.getStruct(i, entryLen)
-      if (e != null && getTs(e, tsOrd) >= minTs) keep += 1
-      i += 1
+      if (e != null && getTs(e, tsOrd) >= minTs) { out(m) = e; m += 1 }
+      i -= 1
     }
-    if (keep == n) return arr
-    val out = new Array[Any](keep)
-    var j = 0
-    i = 0
-    while (i < n) {
-      val e = arr.getStruct(i, entryLen)
-      if (e != null && getTs(e, tsOrd) >= minTs) { out(j) = e; j += 1 }
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      if (m == n) out else out.take(m))
   }
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Expression = copy(left = l, right = r)
-  override def prettyName: String = "frame_cutoff"
+  override def prettyName: String = "frame_newest"
 }
 
-/** Column-level face of [[FrameAggExpr]] / [[FrameCutoffExpr]]. */
+/** Column-level face of [[FrameAggExpr]], [[FrameMemberExpr]] and
+  * [[FrameNewestExpr]]. */
 object FrameAgg {
   def agg(arr: Column, fn: String, vField: Option[String] = None): Column =
     CatalystBridge.column(
       FrameAggExpr(CatalystBridge.expression(arr), fn, vField))
 
-  /** Parameterized aggregates (ew_avg alpha, topn/topk k). */
+  /** Parameterized aggregates (ew_avg alpha, topn_frequency/top k, lag
+    * position, first/last_value ignore-nulls flag). */
   def aggArg(arr: Column, fn: String, arg: Double,
       vField: Option[String] = None): Column =
     CatalystBridge.column(
       FrameAggExpr(CatalystBridge.expression(arr), fn, vField, arg))
 
-  def cutoff(arr: Column, minTs: Column): Column =
-    CatalystBridge.column(FrameCutoffExpr(
+  def members(arr: Column, curTs: Column, curUid: Column,
+      frame: FrameKernel.Frame): Column =
+    CatalystBridge.column(FrameMemberExpr(CatalystBridge.expression(arr),
+      CatalystBridge.expression(curTs), CatalystBridge.expression(curUid),
+      frame))
+
+  def newestFirst(arr: Column, minTs: Column): Column =
+    CatalystBridge.column(FrameNewestExpr(
       CatalystBridge.expression(arr), CatalystBridge.expression(minTs)))
 }

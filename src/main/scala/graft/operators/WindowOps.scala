@@ -54,17 +54,20 @@ object WindowOps {
   private def entry(ts: Column, uid: Column, flag: Column, v: Column): Column =
     struct(ts.as("ts"), uid.as("uid"), flag.as("flag"), v.as("v"))
 
+  /** Sentinel threshold: a `precedingMs` at or above this is treated as
+    * "no range bound" (pure row-count frame). */
+  val UnboundedMs: Long = graft.functions.FrameKernel.UnboundedMs
+
   /** Collect the ROWS_RANGE frame of `v` as an array, newest-first,
     * applying the OpenMLDB window attributes. Returns a Column of
     * array<struct<ts,uid,flag,v>> ready for [[aggSum]] etc.
     *
-    * @param primaryOnlyOutput when true (WINDOW UNION INSTANCE_NOT_IN_WINDOW),
-    *   frame rows are restricted to NON-primary rows plus the current row.
+    * @param isPrimary the WINDOW UNION provenance flag (true = primary
+    *   table row); null when there is no union.
+    * @param instanceNotInWindow when true (WINDOW UNION
+    *   INSTANCE_NOT_IN_WINDOW, request mode), frame rows are restricted
+    *   to NON-primary rows plus the current row.
     */
-  /** Sentinel threshold: a `precedingMs` at or above this is treated as
-    * "no range bound" (pure row-count frame). */
-  val UnboundedMs: Long = Long.MaxValue / 8
-
   def frameArray(
       v: Column, tsMs: Column, uid: Column,
       partition: Seq[Column],
@@ -101,49 +104,29 @@ object WindowOps {
       // `narrowEntry` — a (ts, v) struct — because every higher-order
       // pass over array<struct> deep-copies each element, so halving the
       // struct width is a measured win (q_window_maxsize ratio
-      // 1.18 → ~1.0 at sf0.1); ts stays for the range cutoff below.
+      // 1.18 → ~1.0 at sf0.1); ts stays for the range bound below.
       val e = if (narrowEntry) struct(tsMs.as("ts"), v.as("v"))
         else entry(tsMs, uid, lit(true), v)
-      var arr = reverse(collect_list(e).over(spec))
-      if (precedingMs < UnboundedMs)
-        // imperative one-pass range bound (FrameCutoffExpr) — the
-        // interpreted higher-order filter walked a Catalyst tree per
-        // element on the hottest window path
-        arr = graft.functions.FrameAgg.cutoff(arr,
-          (tsMs - precedingMs).cast("long"))
-      return arr
+      return graft.functions.FrameAgg.newestFirst(
+        collect_list(e).over(spec),
+        if (precedingMs < UnboundedMs) (tsMs - precedingMs).cast("long")
+        else lit(Long.MinValue))
     }
     require(!narrowEntry,
       "narrowEntry is only valid on the bounded-ROWS fast path " +
         "(strict row order + maxSize, no union/time exclusions)")
+    // general path: collect the range frame, then the frame kernel's
+    // membership rules (strict ties, INSTANCE_NOT_IN_WINDOW, EXCLUDE
+    // CURRENT_TIME / CURRENT_ROW, upper bound, skipped newest rows, row
+    // cap) in one pass over the (ts, uid)-sorted entries
     val spec = rowsRange(partition, tsMs, precedingMs)
     val flag = if (hasUnion) isPrimary else lit(true)
-    val arr0 = collect_list(entry(tsMs, uid, flag, v)).over(spec)
-    val curTs = tsMs
-    val curUid = uid
-    var arr = arr0
-    if (strictRowOrder)
-      // reference ROWS_RANGE: same-ts peers that sort AFTER the current
-      // row (by uid = ingestion order) are not yet in the buffer
-      arr = filter(arr, x => x("ts") =!= curTs || x("uid") <= curUid)
-    if (instanceNotInWindow)
-      arr = filter(arr, x => !x("flag") || x("uid") === curUid)
-    if (excludeCurrentTime)
-      arr = filter(arr, x => x("ts") =!= curTs || x("uid") === curUid)
-    if (excludeCurrentRow)
-      arr = filter(arr, x => x("uid") =!= curUid)
-    if (hiPrecedingMs > 0) {
-      // frame ends hi ms before the current row (upper Prec bound)
-      val maxTs = curTs - hiPrecedingMs
-      arr = filter(arr, x => x("ts") <= maxTs)
-    }
-    // newest first; (ts, uid) is a total order because uid is unique.
-    arr = reverse(array_sort(arr))
-    if (skipNewest > 0)
-      arr = slice(arr, lit(skipNewest + 1),
-        greatest(size(arr) - skipNewest, lit(0)))
-    if (maxSize > 0) arr = slice(arr, 1, maxSize)
-    arr
+    graft.functions.FrameAgg.members(
+      collect_list(entry(tsMs, uid, flag, v)).over(spec), tsMs, uid,
+      graft.functions.FrameKernel.Frame(precedingMs, maxSize,
+        hiPrecedingMs, skipNewest, exclSelf = excludeCurrentRow,
+        exclCT = excludeCurrentTime, inw = instanceNotInWindow,
+        strict = strictRowOrder))
   }
 
   /** Strict-tie plain RANGE frame for decomposable aggregates
@@ -306,9 +289,8 @@ object WindowOps {
     * the reference's 2^64 wraparound (udf sum wrap semantics) — the
     * same final value the old exact-DECIMAL + [[wrapToLongRange]]
     * pair produced, in one pass. NULL on an empty/all-null frame. */
-  def aggSum(arr: Column, integral: Boolean = false): Column =
-    graft.functions.FrameAgg.agg(arr,
-      if (integral) "sum_long" else "sum_double")
+  def aggSum(arr: Column): Column =
+    graft.functions.FrameAgg.agg(arr, "sum")
 
   /** Reduce an exact DECIMAL(38,0) total into Long range with 2^64
     * wraparound (the reference's integral-sum overflow behavior), so
@@ -337,43 +319,7 @@ object WindowOps {
   /** distinct_count counts NULL as a distinct value
     * (test_udaf_function.yaml id 5 row 4). */
   def aggDistinctCount(arr: Column): Column =
-    graft.functions.FrameAgg.agg(arr, "dcount_null")
-
-  /** exact median over a frame (even count → mean of the two middle
-    * values; reference udaf median). Column formulation — the
-    * exotic-type fallback; numeric frames route to the imperative
-    * FrameAggExpr at the SQL dispatch. */
-  def aggMedian(arr: Column): Column = {
-    val vals = array_sort(transform(filter(arr, x => x("v").isNotNull),
-      x => x("v").cast("double")))
-    val n = size(vals)
-    when(n > 0,
-      when(n % 2 === 1, element_at(vals, ((n + 1) / 2).cast("int")))
-        .otherwise((element_at(vals, (n / 2).cast("int")) +
-          element_at(vals, (n / 2).cast("int") + 1)) / 2.0))
-  }
-
-  /** drawdown over a frame: max peak-to-trough decline ratio where the
-    * trough is NEWER than the peak (default_udf_library.cc:609-655,
-    * DrawdownUdafDef — walks newest-first keeping the running min of
-    * newer values; negatives are skipped). The frame array is already
-    * newest-first. NULL when the frame has no valid value. */
-  def aggDrawdown(arr: Column): Column =
-    aggregate(arr,
-      struct(lit(null).cast("double").as("mn"),
-        lit(null).cast("double").as("dd")),
-      (acc, x) => {
-        val v = x("v").cast("double")
-        val valid = v.isNotNull && v >= 0.0
-        val mn = acc("mn")
-        val cur = when(mn.isNotNull && mn < v && v =!= 0.0,
-          (v - mn) / v).otherwise(lit(0.0))
-        struct(
-          when(valid && (mn.isNull || v <= mn), v).otherwise(mn).as("mn"),
-          when(valid, greatest(coalesce(acc("dd"), lit(0.0)), cur))
-            .otherwise(acc("dd")).as("dd"))
-      },
-      acc => acc("dd"))
+    graft.functions.FrameAgg.agg(arr, "distinct_count")
 
   /** top1_ratio over a frame: most-common-value count / total, 0.0 when
     * empty (feature_zero_def.cc:426-471). Quadratic in the frame span —
@@ -381,75 +327,6 @@ object WindowOps {
     * map-accumulator UDAF. */
   def aggTop1Ratio(arr: Column): Column =
     graft.functions.FrameAgg.agg(arr, "top1_ratio") // boxed-equality groups: any type
-
-  /** topn_frequency over a frame: the n most frequent values (count
-    * desc, value asc), comma-joined and padded with "NULL" to n entries
-    * (feature_zero_def.cc:473-588). */
-  def aggTopNFrequency(arr: Column, n: Int): Column = {
-    if (n <= 0) return lit("")
-    val vals = transform(filter(arr, x => x("v").isNotNull),
-      x => x("v").cast("string"))
-    val entries = transform(array_distinct(vals), d =>
-      struct((size(filter(vals, y => y === d)) * -1).as("negc"),
-        d.as("k")))
-    val keys = slice(transform(array_sort(entries), e => e("k")), 1, n)
-    when(size(arr) === 0, lit("")).otherwise(
-      array_join(concat(keys,
-        array_repeat(lit("NULL"), greatest(lit(n) - size(keys), lit(0)))),
-        ","))
-  }
-
-  /** ew_avg over a frame: exponentially-weighted average with weight
-    * (1-alpha)^i for the i-th NEWEST non-null value (the frame array is
-    * newest-first already — EwAvgUdafDef,
-    * default_udf_library.cc:280-325). alpha = 0 degrades to plain avg
-    * per the reference doc. */
-  def aggEwAvg(arr: Column, alpha: Double): Column = {
-    if (alpha == 0.0) return aggAvg(arr)
-    val vals = transform(filter(arr, x => x("v").isNotNull),
-      x => x("v").cast("double"))
-    val terms = transform(vals, (x, i) =>
-      struct((x * pow(lit(1.0 - alpha), i)).as("wx"),
-        pow(lit(1.0 - alpha), i).as("w")))
-    when(size(vals) > 0,
-      aggregate(terms,
-        struct(lit(0.0).as("s"), lit(0.0).as("c")),
-        (acc, e) => struct((acc("s") + e("wx")).as("s"),
-          (acc("c") + e("w")).as("c")),
-        acc => acc("s") / acc("c")))
-  }
-
-  /** top(v, k) over a frame: the k largest non-null values descending,
-    * comma-joined with the reference's rendering (integrals plain,
-    * floats %.6f — TopKDef, containers.h:72-160; same formatting as
-    * the grouped GraftAggregates.topStr). */
-  def aggTopK(arr: Column, k: Int, integral: Boolean): Column = {
-    // kept as the Column formulation: the doc surface runs `top` over
-    // STRING values too (format of the null cast — pinned by
-    // FunctionSurfaceSpec); numeric frames route to the imperative
-    // FrameAggExpr at the SQL dispatch where the argument type is known
-    val vals = slice(reverse(array_sort(
-      transform(filter(arr, x => x("v").isNotNull), x => x("v")))), 1, k)
-    val fmted =
-      if (integral) transform(vals, x => x.cast("long").cast("string"))
-      else transform(vals, x => format_string("%.6f", x.cast("double")))
-    array_join(fmted, ",")
-  }
-
-  /** lag/at over the frame buffer: offset n from the newest row
-    * (lag(v, 0) = newest = current row when not excluded) —
-    * window_functions_def.cc:252 AtList semantics. */
-  def aggLag(arr: Column, n: Int): Column =
-    when(size(arr) > n, element_at(arr, n + 1)("v"))
-
-  /** first_value = the frame's FIRST (oldest) row's value
-    * (corrected post-0.9.0 semantics, window_functions_def.cc:276). */
-  def aggFirstValue(arr: Column): Column =
-    when(size(arr) > 0, element_at(arr, -1)("v"))
-
-  /** last_value = the frame's LAST (newest) row's value. */
-  def aggLastValue(arr: Column): Column =
-    when(size(arr) > 0, element_at(arr, 1)("v"))
 
   /** nth_value_where over a frame array whose `v` entries are
     * `struct(value, cond)`: the idx-th row matching cond, counted from

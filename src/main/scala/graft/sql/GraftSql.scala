@@ -21,9 +21,11 @@ import graft.operators.{LastJoin, Ttl, WindowOps}
   * DataFrame operators: plain frames → `Window.rowsBetween/rangeBetween`
   * (whole-stage codegen), extended frames → the
   * [[graft.operators.WindowOps.frameArray]] pipeline, LAST JOIN →
-  * [[graft.operators.LastJoin]]. No SparkSession fork, no custom
-  * parser dependency — ~500 lines replace the reference's
-  * zetasql + JNI + LLVM stack for the batch path.
+  * [[graft.operators.LastJoin]]. No SparkSession fork and no custom
+  * parser dependency stand in for the reference's zetasql + JNI + LLVM
+  * stack on the batch path; this file alone is about 8,000 lines
+  * (tokenizer, parser, statements, query and window planners, dialect
+  * rewrites, serving).
   */
 object GraftSql {
 
@@ -6280,8 +6282,8 @@ object GraftSql {
           case "topn_frequency" =>
             require(args.length == 2, "topn_frequency expects (value, n)")
             val n = argSql(1).trim.toInt
-            // same formula as the frame dispatch (WindowOps
-            // .aggTopNFrequency) over the group's collected values;
+            // the frame kernel's topn_frequency rule (count desc,
+            // then value asc) over the group's collected values;
             // grouped groups always have rows, so short key lists pad
             // with "NULL" to n entries
             val vv = s"collect_list(CAST(${argSql.head} AS STRING))"
@@ -6632,6 +6634,48 @@ object GraftSql {
     if (w.isRows) base.rowsBetween(lo, hi) else base.rangeBetween(lo, hi)
   }
 
+  /** The frame rules of an extended window, for the frame kernel (both
+    * the batch frame array and the streaming evaluator). A ROWS frame
+    * is an unbounded range capped to the newest (n+1) at-or-before rows
+    * (strict row order makes same-ts peers behave like ROWS); its upper
+    * bound h skips the h newest positions, which already excludes the
+    * current row, so EXCLUDE CURRENT_ROW is a filter only when the frame
+    * still ends at the current row. Strict and INSTANCE_NOT_IN_WINDOW
+    * as the window states them; request mode overrides both. */
+  private[sql] def frameOf(w: WinDef): graft.functions.FrameKernel.Frame = {
+    val hiOffset: Long = w.hi match {
+      case CurrentRow    => 0L
+      case Prec(h, open) => h + (if (open) 1 else 0)
+      case Unbounded =>
+        throw new IllegalArgumentException("UNBOUNDED upper frame bound")
+    }
+    if (w.isRows) {
+      val n = w.lo match {
+        case Prec(n0, open) => n0 - (if (open) 1 else 0)
+        case Unbounded      => -1L
+        case CurrentRow     => 0L
+      }
+      val h = hiOffset.toInt
+      val frameCap =
+        if (n < 0) 0
+        else if (h > 0) (n - h + 1).toInt
+        else (n + (if (w.exclCR) 0 else 1)).toInt
+      val cap =
+        if (w.maxSize > 0 && frameCap > 0) math.min(w.maxSize, frameCap)
+        else math.max(w.maxSize, math.max(frameCap, 0))
+      graft.functions.FrameKernel.Frame(Long.MaxValue / 4, cap, 0L, h,
+        exclSelf = w.exclCR && h == 0, exclCT = w.exclCT, inw = w.inw)
+    } else {
+      val p = w.lo match {
+        case Prec(n, open) => n - (if (open) 1 else 0)
+        case Unbounded     => Long.MaxValue / 4
+        case CurrentRow    => 0L
+      }
+      graft.functions.FrameKernel.Frame(p, w.maxSize, hiOffset, 0,
+        exclSelf = w.exclCR, exclCT = w.exclCT, inw = w.inw)
+    }
+  }
+
   /** window_split family → the per-row scalar split UDF whose results
     * concatenate across the frame (feature_zero_def.cc window_split;
     * test_feature_zero_function.yaml). */
@@ -6952,12 +6996,7 @@ object GraftSql {
     // overflow (test_window.yaml id 21: sum(int32) wraps at 2^31);
     // internal accumulation is wider, the result casts back
     def sumCastType(vText: String): Option[org.apache.spark.sql.types.DataType] =
-      resolveTypeCached(base, vText) match {
-        case Some(t @ (org.apache.spark.sql.types.IntegerType |
-                       org.apache.spark.sql.types.ShortType |
-                       org.apache.spark.sql.types.LongType)) => Some(t)
-        case _ => None
-      }
+      resolveTypeCached(base, vText).filter(graft.functions.FrameKernel.integral)
 
     /** Materialize named columns in dependency layers: columns whose
       * source expression references an earlier window result (nested
@@ -7493,47 +7532,18 @@ object GraftSql {
           val ts0 = w.order.map(o => orderMs(base, o)).getOrElse(lit(0L))
           val ts = if (w.orderDesc) -ts0 else ts0
           val wUid = if (w.orderDesc) -col(UidCol) else col(UidCol)
-          // ROWS frames over an extended window: a row-count frame is an
-          // unbounded range capped to the newest (n+1) at-or-before rows
-          // (strict row order makes same-ts peers behave like ROWS);
-          // a ROWS upper bound h skips the h newest positions.
-          val (preceding, rowCap, strict, hiMs, skipRows, exclCRFilter) =
-            if (w.isRows) {
-              val n = w.lo match {
-                case Prec(n0, open) => n0 - (if (open) 1 else 0)
-                case Unbounded      => -1L
-                case CurrentRow     => 0L
-              }
-              val h = hiOffset.toInt
-              val frameCap =
-                if (n < 0) 0
-                else if (h > 0) (n - h + 1).toInt
-                else (n + (if (w.exclCR) 0 else 1)).toInt
-              val cap =
-                if (w.maxSize > 0 && frameCap > 0) math.min(w.maxSize, frameCap)
-                else math.max(w.maxSize, math.max(frameCap, 0))
-              // h > 0 already excludes the current row; exclCR is only a
-              // filter when the frame still ends at the current row
-              (Long.MaxValue / 4, cap, true, 0L, h,
-                w.exclCR && h == 0)
-            } else {
-              val p = w.lo match {
-                case Prec(n, open) => n - (if (open) 1 else 0)
-                case Unbounded     => Long.MaxValue / 4
-                case CurrentRow    => 0L
-              }
-              // Reference ROWS_RANGE frames hold at-or-before rows in
-              // ingestion order (mem_catalog.h:344) — strict tie
-              // handling, NOT ANSI RANGE peers. WINDOW UNION frames are
-              // strict too: uids are assigned AFTER the union, so
-              // primary rows order before same-ts side rows, exactly
-              // the reference's "original rows first then union rows"
-              // (test_window_union.yaml ids 18-x/19-x). Request frames
-              // stay peer-inclusive: every same-ts HISTORY row is
-              // at-or-before the request row.
-              (p, w.maxSize, !requestMode,
-                hiOffset, 0, w.exclCR)
-            }
+          // Reference ROWS_RANGE frames hold at-or-before rows in
+          // ingestion order (mem_catalog.h:344) — strict tie handling,
+          // NOT ANSI RANGE peers. WINDOW UNION frames are strict too:
+          // uids are assigned AFTER the union, so primary rows order
+          // before same-ts side rows, exactly the reference's "original
+          // rows first then union rows" (test_window_union.yaml ids
+          // 18-x/19-x). Request frames stay peer-inclusive: every same-ts
+          // HISTORY row is at-or-before the request row.
+          val fr = frameOf(w)
+          val strict = w.isRows || !requestMode
+          val (preceding, rowCap, hiMs, skipRows, exclCRFilter) =
+            (fr.precedingMs, fr.rowCap, fr.hiMs, fr.skipNewest, fr.exclSelf)
           val effUnbounded = preceding >= WindowOps.UnboundedMs &&
             rowCap == 0 && hiMs == 0 && skipRows == 0
           val simpleAgg = Set("sum", "count", "avg", "min", "max")(fn)
@@ -7647,13 +7657,38 @@ object GraftSql {
                   s"window-result-bound argument unsupported for '$other'")
             }
           } else {
+          // argument types the frame kernel reads only through a cast
+          // are cast BEFORE they are collected (the same Catalyst Cast
+          // the per-element lambdas applied): the numeric statistics over
+          // non-numeric values, and topn_frequency over types whose
+          // string rendering is not plain (decimal, date, timestamp)
+          val valueCast: Option[String] =
+            if (splitV.isDefined || argText == "*") None
+            else {
+              import org.apache.spark.sql.types._
+              val argType = resolveTypeCached(base, args.head)
+              fn match {
+                case "median" | "drawdown" | "ew_avg" if !argType.exists {
+                    case _: NumericType | BooleanType => true
+                    case _                            => false
+                  } => Some("double")
+                case "topn_frequency" if !argType.exists {
+                    case _: DecimalType                            => false
+                    case _: NumericType | StringType | BooleanType => true
+                    case _                                         => false
+                  } => Some("string")
+                case _ => None
+              }
+            }
           val (arrName, fld) = sharedFrameFor(w.toString,
             if (fn == "nth_value_where") s"nvw:$argText"
             else if (fn == "distinct_count" &&
                 resolveTypeCached(base, args.headOption.getOrElse(""))
                   .contains(org.apache.spark.sql.types.BooleanType))
               s"dcb:${args.head}"
-            else if (argText == "*") "*" else args.head, v,
+            else if (argText == "*") "*"
+            else valueCast.fold(args.head)(c => s"$c:${args.head}"),
+            valueCast.fold(v)(c => expr(args.head).cast(c)),
             sv => WindowOps.frameArray(sv, ts, wUid,
               partCols(w), preceding,
               maxSize = rowCap,
@@ -7672,55 +7707,21 @@ object GraftSql {
               x("flag").as("flag"), x("v")(fld).as("v")))
           // split-valued frames: flatten each row's token array into
           // per-token pseudo-rows so the ordinary aggregate dispatch
-          // operates over the concatenated token stream
+          // operates over the concatenated token stream (tokens read as
+          // doubles for the numeric aggregates)
+          val tokenCast = Set("sum", "avg", "median", "drawdown", "ew_avg")(fn)
           val arr = if (splitV.isDefined)
             flatten(transform(arr0, x => transform(x("v"), e =>
               struct(x("ts").as("ts"), x("uid").as("uid"),
-                x("flag").as("flag"), e.as("v")))))
+                x("flag").as("flag"),
+                (if (tokenCast) e.cast("double") else e).as("v")))))
           else arr0
-          // the six hot simple aggregates score the SHARED frame array
-          // directly via the one-pass FrameAggExpr scorer, navigating
-          // to their field (`v.<fld>`) inside the loop — no interpreted
-          // per-aggregate `transform` copy of the array. Split-valued
-          // frames (flattened token streams) keep the narrowed shape.
-          def argNumeric: Boolean =
-            resolveTypeCached(base, args.headOption.getOrElse(""))
-              .exists {
-                case _: org.apache.spark.sql.types.NumericType => true
-                case org.apache.spark.sql.types.BooleanType    => true
-                case _                                         => false
-              }
-          // distinct_count / top1_ratio group by boxed equality in the
-          // imperative scorer — only atomic value-based-equals types
-          // may take that route (binary is Array[Byte] reference
-          // equality; maps/arrays mix Unsafe/Generic representations).
-          // Exotic types keep the Column formulation's SQL equality.
-          def argAtomicKey: Boolean =
-            resolveTypeCached(base, args.headOption.getOrElse(""))
-              .exists {
-                case _: org.apache.spark.sql.types.NumericType    => true
-                case org.apache.spark.sql.types.StringType |
-                     org.apache.spark.sql.types.BooleanType |
-                     org.apache.spark.sql.types.DateType |
-                     org.apache.spark.sql.types.TimestampType |
-                     org.apache.spark.sql.types.TimestampNTZType => true
-                case _                                            => false
-              }
-          def hotAgg(f: String): Column =
-            if (splitV.isDefined) f match {
-              case "sum" => WindowOps.aggSum(arr,
-                integral = sumIntegralType.isDefined)
-              case "count"          => WindowOps.aggCount(arr)
-              case "avg"            => WindowOps.aggAvg(arr)
-              case "min"            => WindowOps.aggMin(arr)
-              case "max"            => WindowOps.aggMax(arr)
-              case "distinct_count" => WindowOps.aggDistinctCount(arr)
-            } else graft.functions.FrameAgg.agg(col(arrName), f match {
-              case "sum" =>
-                if (sumIntegralType.isDefined) "sum_long" else "sum_double"
-              case "distinct_count" => "dcount_null"
-              case other            => other
-            }, Some(fld))
+          // every frame aggregate is the frame kernel's one-pass scorer;
+          // over the SHARED frame it navigates to its field (`v.<fld>`)
+          // inside the loop — no per-aggregate `transform` copy
+          def frameAgg(f: String, a: Double = 0.0): Column =
+            if (splitV.isDefined) graft.functions.FrameAgg.aggArg(arr, f, a)
+            else graft.functions.FrameAgg.aggArg(col(arrName), f, a, Some(fld))
           fn match {
             case f if windowSplitFns.contains(f) =>
               // the window_split list itself
@@ -7730,106 +7731,35 @@ object GraftSql {
               // tokens joined (test_feature_zero_function.yaml ids 3/5)
               array_join(transform(arr, x => x("v")),
                 unescapeSqlLiteral(stripQuotes(args(1).trim)))
-            case "sum"            =>
-              // sum over an EMPTY frame is NULL in every frame shape —
-              // the pre-0.6.4 engine zero-filled empty pure-history
-              // ROWS frames (old test_window.yaml id 31 pinned 0) but
-              // the integration tree's 0.6.4 revision of the same case
-              // expects NULL, consistent with EXCLUDE CURRENT_ROW
-              // (test_current_row.yaml ids 4/12) and RANGE hi bounds
-              // (test_maxsize.yaml id 6)
-              hotAgg("sum")
-            case "count"          => hotAgg("count")
-            case "avg"            => hotAgg("avg")
-            case "min"            => hotAgg("min")
-            case "max"            => hotAgg("max")
-            case "distinct_count" =>
-              if (splitV.isDefined || argAtomicKey) hotAgg("distinct_count")
-              else WindowOps.aggDistinctCount(arr)
+            // sum over an EMPTY frame is NULL in every frame shape — the
+            // pre-0.6.4 engine zero-filled empty pure-history ROWS frames
+            // (old test_window.yaml id 31 pinned 0) but the integration
+            // tree's 0.6.4 revision of the same case expects NULL,
+            // consistent with EXCLUDE CURRENT_ROW (test_current_row.yaml
+            // ids 4/12) and RANGE hi bounds (test_maxsize.yaml id 6)
+            case "sum" | "count" | "avg" | "min" | "max" | "distinct_count" |
+                 "median" | "drawdown" | "top1_ratio" => frameAgg(fn)
             case "lag" | "at"     =>
               val k = if (args.length > 1) args(1).toInt else 1
-              // lag counts positions from the CURRENT ROW; when the
-              // frame's newest positions are cut (EXCLUDE CURRENT_ROW /
-              // ROWS hi bound) the array index shifts accordingly
-              // (cases/function/window/test_current_row.yaml ids 24-27)
-              val effSkip = math.max(skipRows, if (exclCRFilter) 1 else 0)
-              if (effSkip == 0) WindowOps.aggLag(arr, k)
-              else {
-                val idx = k - effSkip + 1
-                if (idx < 1) lit(null)
-                else when(size(arr) >= idx, element_at(arr, idx)("v"))
-              }
+              frameAgg("lag", fr.lagPosition(k))
             case "first_value" | "last_value" =>
               // optional ignoreNull flag (test_window.yaml id 38)
               val ign = args.length > 1 &&
                 args(1).trim.equalsIgnoreCase("true")
-              val a2 = if (ign) filter(arr, x => x("v").isNotNull) else arr
-              if (fn == "first_value") WindowOps.aggFirstValue(a2)
-              else WindowOps.aggLastValue(a2)
+              frameAgg(fn, if (ign) 1.0 else 0.0)
             case "nth_value_where" =>
               WindowOps.aggNthValueWhere(arr,
                 args(1).replace(" ", "").toInt)
-            // like the six simple aggregates, the frame-statistic
-            // family scores the SHARED frame directly (field
-            // navigation inside the imperative loop) when the frame is
-            // not a flattened token stream
-            case "median" =>
-              if (splitV.isEmpty && argNumeric)
-                graft.functions.FrameAgg.agg(col(arrName), "median",
-                  Some(fld))
-              else WindowOps.aggMedian(arr)
-            case "drawdown" =>
-              if (splitV.isEmpty && argNumeric)
-                graft.functions.FrameAgg.agg(col(arrName), "drawdown",
-                  Some(fld))
-              else WindowOps.aggDrawdown(arr)
-            case "top1_ratio" =>
-              if (splitV.isEmpty && argAtomicKey)
-                graft.functions.FrameAgg.agg(col(arrName), "top1_ratio",
-                  Some(fld))
-              else WindowOps.aggTop1Ratio(arr)
             case "topn_frequency" =>
-              val nTop = args(1).trim.toInt
-              val strRenderable = resolveTypeCached(base,
-                args.headOption.getOrElse("")).exists {
-                  case org.apache.spark.sql.types.StringType => true
-                  case _: org.apache.spark.sql.types.DecimalType => false
-                  case _: org.apache.spark.sql.types.NumericType => true
-                  case org.apache.spark.sql.types.BooleanType => true
-                  case _ => false
-                }
-              if (nTop <= 0) lit("")
-              else if (splitV.isEmpty && strRenderable)
-                graft.functions.FrameAgg.aggArg(col(arrName), "topn_freq",
-                  nTop.toDouble, Some(fld))
-              else WindowOps.aggTopNFrequency(arr, nTop)
+              frameAgg("topn_frequency", args(1).trim.toInt)
             case "ew_avg" =>
               // alpha must be literal (the reference's signature);
               // NULL/0 falls back to plain avg (udfs doc ew_avg)
               val aTxt = args.lift(1).map(_.trim.toLowerCase)
                 .filterNot(_ == "null").getOrElse("0")
               val alpha = aTxt.toDouble
-              if (alpha == 0.0) hotAgg("avg")
-              else if (splitV.isEmpty && argNumeric)
-                graft.functions.FrameAgg.aggArg(col(arrName), "ew_avg",
-                  alpha, Some(fld))
-              else WindowOps.aggEwAvg(arr, alpha)
-            case "top" =>
-              import org.apache.spark.sql.types._
-              val ty = resolveTypeCached(base, args.head)
-              val integral = ty.exists(intTypes)
-              val numeric = ty.exists {
-                case _: NumericType => true
-                case _              => false
-              }
-              // non-numeric `top` (doc surface runs it over strings)
-              // keeps the Column formulation's cast semantics
-              if (splitV.isEmpty && numeric)
-                graft.functions.FrameAgg.aggArg(col(arrName),
-                  if (integral) "topk_int" else "topk_double",
-                  args(1).trim.toInt.toDouble, Some(fld))
-              else WindowOps.aggTopK(arr, args(1).trim.toInt,
-                integral = integral)
+              if (alpha == 0.0) frameAgg("avg") else frameAgg("ew_avg", alpha)
+            case "top" => frameAgg("top", args(1).trim.toInt)
             case f if SessionState.of(base.sparkSession).userFns.get(f)
                 .exists(_.isAggregate) =>
               // CREATE AGGREGATE FUNCTION over a window frame: fold the

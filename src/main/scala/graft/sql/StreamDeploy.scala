@@ -1,11 +1,13 @@
 package graft.sql
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.functions.FrameKernel
 import graft.operators.Ttl
 
 /** Generic streaming DEPLOY: serve an arbitrary deployed SELECT over a
@@ -24,10 +26,11 @@ import graft.operators.Ttl
   *      buffer of pre-computed argument values only (not whole rows),
   *      TTL-bounded exactly like the reference's index eviction
   *      (fe_type.proto:35-41).
-  *   3. Frame membership per request replicates
-  *      [[graft.operators.WindowOps.frameArray]] (range bound, EXCLUDE
-  *      CURRENT_TIME / CURRENT_ROW, ROWS caps, OPEN / PRECEDING upper
-  *      bounds, MAXSIZE) over the buffer slice at-or-before the request.
+  *   3. Frame membership and the aggregates per request are the batch
+  *      path's own: [[graft.functions.FrameKernel]] (range bound,
+  *      EXCLUDE CURRENT_TIME / CURRENT_ROW, ROWS caps, OPEN / PRECEDING
+  *      upper bounds, MAXSIZE) over the buffer slice at-or-before the
+  *      request.
   *   4. Outer projections (scalar expressions wrapping window results)
   *      are evaluated AFTER the stateful stage as native Columns again.
   *
@@ -60,17 +63,14 @@ object StreamDeploy {
     * row-count bucket of n rows by arrival ordinal (the reference's
     * WindowType::kRowsNum, serves ROWS frames). */
   private case class WinSpec(id: String, fn: String, argIdx: Int,
-      lagK: Int, frameless: Boolean, p: FrameParams, outType: DataType,
-      wrapSum: Option[DataType], ignoreNulls: Boolean = false,
-      boolNullFalse: Boolean = false, inw: Boolean = false,
-      lwBucket: Long = 0L, run: String = "") {
+      frameless: Boolean, p: FrameKernel.Frame, argType: DataType,
+      arg: Double, lwBucket: Long = 0L, run: String = "") {
     def metrics: LwMetrics.Counters = LwMetrics.forRun(run)
+    def outType: DataType = FrameKernel.resultType(fn, argType)
+    @transient lazy val score: FrameKernel.Values => Any =
+      FrameKernel.agg(fn, argType, arg)
+    @transient lazy val partials = new FrameKernel.Partials(argType)
   }
-
-  /** Per-(bucketMs, bucket, argSlot) partial: non-null count, Long and
-    * Double accumulations (the spec's output typing picks one), and
-    * running min/max. Public only for the Kryo state encoder. */
-  case class Part(cnt: Long, lsum: Long, dsum: Double, mn: Any, mx: Any)
 
   /** Observability for the long-window serving path (read by
     * LongWindowServeSpec to prove requests are answered from the MV
@@ -124,12 +124,6 @@ object StreamDeploy {
     object rawRowsScanned { def sum: Long = live.map(_.rawRowsScanned.sum).sum }
   }
 
-  /** Frame parameters ported from the batch planner's groupCols
-    * derivation (GraftSql.planWindows): same bound arithmetic, same
-    * filter order. */
-  private case class FrameParams(precedingMs: Long, rowCap: Int,
-      hiMs: Long, skipNewest: Int, exclSelf: Boolean, exclCT: Boolean)
-
   /** ms view of the ORDER BY key: a native TimestampType key reads as
     * epoch MILLISECONDS — `.cast(LongType)` would truncate to seconds
     * and silently widen every range frame 1000× (caught by
@@ -140,45 +134,12 @@ object StreamDeploy {
       case _                   => expr(text)
     }
 
-  private def frameParams(w: WinDef): FrameParams = {
-    val hiOffset: Long = w.hi match {
-      case CurrentRow    => 0L
-      case Prec(h, open) => h + (if (open) 1 else 0)
-      case Unbounded =>
-        throw new IllegalArgumentException("UNBOUNDED upper frame bound")
-    }
-    if (w.isRows) {
-      val n = w.lo match {
-        case Prec(n0, open) => n0 - (if (open) 1 else 0)
-        case Unbounded      => -1L
-        case CurrentRow     => 0L
-      }
-      val h = hiOffset.toInt
-      val frameCap =
-        if (n < 0) 0
-        else if (h > 0) (n - h + 1).toInt
-        else (n + (if (w.exclCR) 0 else 1)).toInt
-      val cap =
-        if (w.maxSize > 0 && frameCap > 0) math.min(w.maxSize, frameCap)
-        else math.max(w.maxSize, math.max(frameCap, 0))
-      FrameParams(Long.MaxValue / 4, cap, 0L, h,
-        exclSelf = w.exclCR && h == 0, exclCT = w.exclCT)
-    } else {
-      val p = w.lo match {
-        case Prec(n, open) => n - (if (open) 1 else 0)
-        case Unbounded     => Long.MaxValue / 4
-        case CurrentRow    => 0L
-      }
-      FrameParams(p, w.maxSize, hiOffset, 0,
-        exclSelf = w.exclCR, exclCT = w.exclCT)
-    }
-  }
-
   /** Buffered history row: event-time, per-key arrival sequence (the
-    * ingestion-order uid of the batch path), pre-computed arg values,
-    * and whether the row came from the PRIMARY table (WINDOW UNION
-    * side-table rows buffer as history but never answer requests).
-    * Public only because the Kryo state encoder requires it. */
+    * ingestion-order uid of the batch path), pre-computed arg values
+    * (Catalyst-internal, as the frame kernel reads them), and whether
+    * the row came from the PRIMARY table (WINDOW UNION side-table rows
+    * buffer as history but never answer requests). Public only because
+    * the Kryo state encoder requires it. */
   case class BufRow(ts: Long, seq: Long, args: Array[Any],
       primary: Boolean = true)
   /** `ordered` tracks whether every arrival so far came in per-key
@@ -190,7 +151,7 @@ object StreamDeploy {
     * the key permanently falls back to raw serving for row-bucket specs
     * (time-bucket partials key by ts and are unaffected). */
   case class Buf(seq: Long, rows: List[BufRow],
-      partials: Map[(Long, Long, Int), Part] = Map.empty,
+      partials: Map[(Long, Long, Int), FrameKernel.Partial] = Map.empty,
       ordered: Boolean = true)
 
   /** Count-retention membership. With `exclCTSlack` (some served
@@ -219,7 +180,7 @@ object StreamDeploy {
     * index TTL from its window clauses). Rows are kept while inside the
     * widest RANGE span OR among the newest maxRows — AND-eviction.
     * A ROWS frame with an UNBOUNDED lower bound and no MAXSIZE has no
-    * finite row cap (frameParams reports cap 0, which means "no cap",
+    * finite row cap (frameOf reports cap 0, which means "no cap",
     * not "keep 1"): its retention is the full history. */
   private[sql] def deriveTtl(specs: Seq[WinDef], lagDepth: Int): Ttl = {
     val spans = specs.map { w =>
@@ -231,7 +192,7 @@ object StreamDeploy {
       }
     }
     val rowCounts = specs.map { w =>
-      val fp = frameParams(w)
+      val fp = frameOf(w)
       if (w.isRows) {
         if (w.lo == Unbounded && fp.rowCap == 0) Int.MaxValue
         else fp.rowCap + fp.skipNewest + 1
@@ -239,33 +200,6 @@ object StreamDeploy {
     } :+ (lagDepth + 1)
     Ttl.AbsAndLat(spans.foldLeft(1L)(math.max),
       rowCounts.foldLeft(1)(math.max))
-  }
-
-  /** Long view of an aggregate input (integral-sum accumulation). */
-  private def toL(v: Any): Long = v match {
-    case n: java.lang.Number  => n.longValue
-    case b: java.lang.Boolean => if (b) 1L else 0L
-    case other => throw new IllegalArgumentException(
-      s"non-numeric aggregate input: $other (${other.getClass})")
-  }
-
-  private def toD(v: Any): Double = v match {
-    case d: Double              => d
-    case f: Float               => f.toDouble
-    case n: java.lang.Number    => n.doubleValue
-    case b: java.lang.Boolean   => if (b) 1.0 else 0.0
-    case other => throw new IllegalArgumentException(
-      s"non-numeric aggregate input: $other (${other.getClass})")
-  }
-
-  /** Runtime ordering matching Spark's array_min/array_max for the
-    * value types the engine supports. */
-  private def lt(a: Any, b: Any): Boolean = (a, b) match {
-    case (x: String, y: String)   => x < y
-    case (x: java.sql.Date, y: java.sql.Date) => x.before(y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.before(y)
-    case (x: java.lang.Boolean, y: java.lang.Boolean) => !x && y
-    case (x, y)                   => toD(x) < toD(y)
   }
 
   /** Serve `events` through a deployment previously registered with
@@ -480,8 +414,8 @@ object StreamDeploy {
           (fnRaw.stripSuffix("_where"),
             s"CASE WHEN ${as(1)} THEN ${as(0)} END")
         } else (fnRaw, argRaw)
-      // the ONLINE evaluator supports the incremental aggregates only —
-      // narrower than the batch extAggs (no median/top1_ratio/...)
+      // the aggregates served online — narrower than the batch extAggs
+      // (no top1_ratio, topn_frequency, top, ew_avg, drawdown, ...)
       val streamableAggs = Set("sum", "count", "avg", "min", "max",
         "distinct_count", "median", "lag", "at", "first_value",
         "last_value")
@@ -491,16 +425,23 @@ object StreamDeploy {
       val lagK =
         if (!isOffset) 0
         else if (args.length > 1) args(1).trim.toInt else 1
-      val argText = if (argText0 == "*") "1L" else args.head
+      val argText =
+        if (argText0 == "*") "1L"
+        // a NULL bool reads as false in the reference's distinct set
+        // (test_udaf_function.yaml id 6 row 4), like the batch path
+        else if (fn == "distinct_count" &&
+            resolveTypeCached(base, args.head).contains(BooleanType))
+          s"coalesce(${args.head}, false)"
+        else args.head
       // first_value(c, true)/last_value(c, true): ignore-null variant
       // (test_window.yaml id 38) — the flag is a literal second arg
       val ign = (fn == "first_value" || fn == "last_value") &&
         args.length > 1 && args(1).trim.equalsIgnoreCase("true")
-      // under WINDOW UNION the batch planner serves lag through the
-      // frame array (the native frameless branch requires !hasUnion) —
-      // frame-bounded positions, mirrored here
+      // under WINDOW UNION or EXCLUDE CURRENT_TIME the batch planner
+      // serves lag through the frame array (its native frameless branch
+      // requires neither) — frame-bounded positions, mirrored here
       Pre(id, if (fn == "at") "lag" else fn, argText, lagK,
-        isOffset && !hasUnion, w, ignoreNulls = ign)
+        isOffset && !hasUnion && !w.exclCT, w, ignoreNulls = ign)
     }
     pres.foreach(p => slot(p.argText))
 
@@ -605,8 +546,8 @@ object StreamDeploy {
       case Some(bms) if bms > 0 && !p.frameless && !p.w.isRows &&
           p.w.unions.isEmpty && !p.w.inw && !p.w.exclCT && !p.w.exclCR &&
           p.w.maxSize == 0 && p.w.hi == CurrentRow &&
-          Set("sum", "count", "avg", "min", "max")(p.fn) =>
-        val fp = frameParams(p.w)
+          FrameKernel.decomposable(p.fn) =>
+        val fp = frameOf(p.w)
         if (fp.precedingMs >= bms &&
             fp.precedingMs < graft.operators.WindowOps.UnboundedMs &&
             ttlCovers(fp.precedingMs)) bms
@@ -617,8 +558,8 @@ object StreamDeploy {
       case Some(bneg) if bneg < 0 && !p.frameless && p.w.isRows &&
           p.w.unions.isEmpty && !p.w.inw && !p.w.exclCT && !p.w.exclCR &&
           p.w.maxSize == 0 && p.w.hi == CurrentRow &&
-          Set("sum", "count", "avg", "min", "max")(p.fn) =>
-        val fp = frameParams(p.w)
+          FrameKernel.decomposable(p.fn) =>
+        val fp = frameOf(p.w)
         if (fp.rowCap > 0 && fp.rowCap >= -bneg && fp.skipNewest == 0 &&
             ttlCoversRows(fp.rowCap)) bneg
         else 0L
@@ -628,25 +569,16 @@ object StreamDeploy {
     val lwRun = LwMetrics.newRun() // one counter scope per plan build
     val specs: Seq[WinSpec] = pres.map { p =>
       val si = argSlots(p.argText)
-      val at = argTypes(si)
-      val integralSum = p.fn == "sum" && (at match {
-        case IntegerType | ShortType | LongType => true
-        case _                                  => false
-      })
-      val outType = p.fn match {
-        case "sum" if integralSum         => LongType // exact Long accumulation
-        case "sum" if at == FloatType     => FloatType // batch sum(float) stays float
-        case "sum" | "avg" | "median"     => DoubleType
-        case "count" | "distinct_count"   => LongType
-        case _                            => at
-      }
-      WinSpec(p.id, p.fn, si, p.lagK, p.frameless, frameParams(p.w),
-        outType, if (integralSum) Some(at) else None,
-        ignoreNulls = p.ignoreNulls,
-        // a NULL bool reads as false in the reference's distinct set
-        // (test_udaf_function.yaml id 6 row 4), like the batch path
-        boolNullFalse = p.fn == "distinct_count" && at == BooleanType,
-        inw = p.w.inw,
+      // frameless lag/at see the whole at-or-before history
+      // (window_attributes.yaml id 0)
+      val frame =
+        if (p.frameless) FrameKernel.Frame(FrameKernel.UnboundedMs)
+        else frameOf(p.w)
+      WinSpec(p.id, p.fn, si, p.frameless, frame, argTypes(si),
+        // the kernel's literal parameter: lag's frame position, or
+        // first/last_value's ignore-nulls flag
+        if (p.fn == "lag") frame.lagPosition(p.lagK)
+        else if (p.ignoreNulls) 1.0 else 0.0,
         lwBucket = lwBucketFor(p), run = lwRun)
     }
 
@@ -656,16 +588,11 @@ object StreamDeploy {
     val nSlots = argSlots.size
 
     // ---- long-window MV maintenance plan: which (bucketMs, argSlot)
-    // partials to keep in state, and which accumulator fields each
-    // needs (sum/avg read the numeric sums; min/max read the compares)
-    case class LwMaint(bms: Long, si: Int, needNum: Boolean, needCmp: Boolean)
+    // partials to keep in state, with the slot's partial arithmetic
+    case class LwMaint(bms: Long, si: Int, ops: FrameKernel.Partials)
     val lwMaints: Seq[LwMaint] = specs.filter(_.lwBucket != 0)
       .map(s => (s.lwBucket, s.argIdx)).distinct.map { case (bms, si) =>
-        LwMaint(bms, si,
-          needNum = specs.exists(s => s.lwBucket == bms && s.argIdx == si &&
-            (s.fn == "sum" || s.fn == "avg")),
-          needCmp = specs.exists(s => s.lwBucket == bms && s.argIdx == si &&
-            (s.fn == "min" || s.fn == "max")))
+        LwMaint(bms, si, new FrameKernel.Partials(argTypes(si)))
       }
 
     // ---- stateful stage ----
@@ -728,7 +655,8 @@ object StreamDeploy {
             var i = 0
             while (i < nSlots) {
               val fi = slotIdx(i)
-              args(i) = if (r.isNullAt(fi)) null else r.get(fi)
+              args(i) = if (r.isNullAt(fi)) null
+                else CatalystTypeConverters.convertToCatalyst(r.get(fi))
               i += 1
             }
             val (newer, older) = rows.span(b => b.ts > ts)
@@ -763,13 +691,8 @@ object StreamDeploy {
                   val key =
                     if (m.bms > 0) (m.bms, Math.floorDiv(ts, m.bms), m.si)
                     else (m.bms, Math.floorDiv(seq - 1, -m.bms), m.si)
-                  val p0 = partials.getOrElse(key, Part(0L, 0L, 0.0, null, null))
-                  partials = partials.updated(key, Part(
-                    p0.cnt + 1,
-                    if (m.needNum) p0.lsum + toL(v) else 0L,
-                    if (m.needNum) p0.dsum + toD(v) else 0.0,
-                    if (m.needCmp && (p0.mn == null || lt(v, p0.mn))) v else p0.mn,
-                    if (m.needCmp && (p0.mx == null || lt(p0.mx, v))) v else p0.mx))
+                  partials = partials.updated(key, m.ops.add(
+                    partials.getOrElse(key, FrameKernel.EmptyPartial), v))
                 }
               }
               // prune buckets no future frame can reach: time buckets
@@ -787,14 +710,14 @@ object StreamDeploy {
             if (isPrimary) {
               // history at-or-before the request (strict (ts, seq) order)
               val basis = rows.dropWhile(b =>
-                b.ts > ts || (b.ts == ts && b.seq > seq))
-              val vals = specs.map(sp =>
-                evalSpec(sp, basis, ts, seq, partials, ordered))
+                b.ts > ts || (b.ts == ts && b.seq > seq)).toArray
               val outVals = new Array[Any](baseWidth + specs.length)
               var j = 0
               while (j < baseWidth) { outVals(j) = r.get(j); j += 1 }
-              vals.zipWithIndex.foreach { case (v, k) =>
-                outVals(baseWidth + k) = v }
+              specs.zipWithIndex.foreach { case (sp, k) =>
+                outVals(baseWidth + k) = CatalystTypeConverters.convertToScala(
+                  evalSpec(sp, basis, ts, seq, partials, ordered), sp.outType)
+              }
               out += new GenericRowWithSchema(outVals, outSchema)
             }
           }
@@ -804,129 +727,34 @@ object StreamDeploy {
           }
       }
 
-    // integral-typed sum: wraparound cast back to the input type,
-    // identical to the batch path (test_window.yaml id 21)
-    var withIds: DataFrame = served
-    specs.foreach { sp =>
-      sp.wrapSum.foreach { t =>
-        val half = t match {
-          case IntegerType => 1L << 31
-          case ShortType   => 1L << 15
-          case _           => 0L
-        }
-        val c = col(sp.id)
-        val wrapped =
-          if (half == 0L) c.cast(t)
-          else {
-            val full = 2 * half
-            val l = c.cast("long")
-            ((((l + half) % full + full) % full) - half).cast(t)
-          }
-        withIds = withIds.withColumn(sp.id, wrapped)
-      }
-    }
+    served
+  }
 
-    withIds
+  /** The buffered history, newest first, as the frame kernel's rows. */
+  private final class BufRows(rows: Array[BufRow]) extends FrameKernel.Rows {
+    def length: Int = rows.length
+    def ts(i: Int): Long = rows(i).ts
+    def seq(i: Int): Long = rows(i).seq
+    def primary(i: Int): Boolean = rows(i).primary
   }
 
   /** Evaluate one window aggregate for the request at (ts, seq) over
-    * `basis` = buffered rows at-or-before the request, newest-first.
-    * Filter order matches WindowOps.frameArray. */
-  private def evalSpec(sp: WinSpec, basis: List[BufRow], ts: Long,
-      seq: Long, partials: Map[(Long, Long, Int), Part] = Map.empty,
-      ordered: Boolean = true): Any = {
+    * `basis` = buffered rows at-or-before the request, newest-first:
+    * the frame kernel's membership, then its aggregate. */
+  private def evalSpec(sp: WinSpec, basis: Array[BufRow], ts: Long,
+      seq: Long, partials: Map[(Long, Long, Int), FrameKernel.Partial],
+      ordered: Boolean): Any = {
     if (sp.lwBucket > 0) return evalLongWindow(sp, basis, ts, partials)
     // row-bucket pre-agg requires the key's feed to have stayed in
     // order (ordinal buckets align with frame order); otherwise fall
     // through to the raw full-frame path below — correct, unoptimized
     if (sp.lwBucket < 0 && ordered)
       return evalLongWindowRows(sp, basis, seq, partials)
-    if (sp.frameless) {
-      // lag/at are frameless positional lookups over ingestion order
-      // (window_attributes.yaml id 0) — index from the request row.
-      // Under EXCLUDE CURRENT_TIME lag skips same-time predecessors,
-      // like the batch frame-array path (window_attributes id 9 row 6)
-      val b0 =
-        if (sp.p.exclCT) basis.filter(b => b.ts != ts || b.seq == seq)
-        else basis
-      val tgt = b0.drop(sp.lagK)
-      return tgt.headOption.map(_.args(sp.argIdx)).orNull
-    }
-    val p = sp.p
-    var frame = basis
-    if (p.precedingMs < graft.operators.WindowOps.UnboundedMs)
-      frame = frame.takeWhile(_.ts >= ts - p.precedingMs)
-    // INSTANCE_NOT_IN_WINDOW: frames hold union-side rows plus the
-    // request row itself (WindowOps.frameArray filter order)
-    if (sp.inw) frame = frame.filter(b => !b.primary || b.seq == seq)
-    if (p.exclCT) frame = frame.filter(b => b.ts != ts || b.seq == seq)
-    if (p.exclSelf) frame = frame.filter(_.seq != seq)
-    if (p.hiMs > 0) frame = frame.dropWhile(_.ts > ts - p.hiMs)
-    if (p.skipNewest > 0) frame = frame.drop(p.skipNewest)
-    if (p.rowCap > 0) frame = frame.take(p.rowCap)
-
-    val vs = frame.map(_.args(sp.argIdx))
-    sp.metrics.rawRowsScanned.add(vs.length)
-    lazy val nn = vs.filter(_ != null)
-    sp.fn match {
-      case "count" => nn.length.toLong
-      case "sum" if sp.wrapSum.isDefined =>
-        // integral inputs accumulate in Long (wrap arithmetic), exactly
-        // like Spark's native long sum on the batch path — a Double
-        // accumulator loses exactness past 2^53
-        // empty frame => NULL, like the batch engine and the corpus
-        // (test_window.yaml id 3: ROWS 5 PRECEDING AND 3 PRECEDING)
-        if (nn.isEmpty) null
-        else nn.foldLeft(0L)((acc, v) =>
-          acc + v.asInstanceOf[java.lang.Number].longValue)
-      case "sum" =>
-        if (nn.isEmpty) null
-        // newest-first fold, same accumulation order as aggSum; float
-        // inputs return float like the batch planner's sum typing
-        else {
-          val d = nn.foldLeft(0.0)((acc, v) => acc + toD(v))
-          if (sp.outType == FloatType) d.toFloat else d
-        }
-      case "avg" =>
-        if (nn.isEmpty) null
-        else nn.foldLeft(0.0)((acc, v) => acc + toD(v)) / nn.length
-      case "median" =>
-        // sorted-doubles middle / mean-of-middles (WindowOps.aggMedian)
-        if (nn.isEmpty) null
-        else {
-          val sorted = nn.map(toD).sorted
-          val n = sorted.length
-          if (n % 2 == 1) sorted(n / 2)
-          else (sorted(n / 2 - 1) + sorted(n / 2)) / 2.0
-        }
-      case "min" => if (nn.isEmpty) null else nn.reduce((a, b) => if (lt(b, a)) b else a)
-      case "max" => if (nn.isEmpty) null else nn.reduce((a, b) => if (lt(a, b)) b else a)
-      // NULL counts as a distinct value (test_udaf_function.yaml id 5;
-      // matches WindowOps.aggDistinctCount)
-      case "distinct_count" =>
-        val v2 = if (sp.boolNullFalse)
-          vs.map(v => if (v == null) java.lang.Boolean.FALSE else v)
-        else vs
-        v2.distinct.length.toLong
-      case "lag" =>
-        // frame-bounded lag (the WINDOW UNION path — batch serves it
-        // through aggLag over the frame array, index shifted when the
-        // newest positions are cut; GraftSql window dispatch)
-        val effSkip = math.max(p.skipNewest, if (p.exclSelf) 1 else 0)
-        val n = if (effSkip == 0) sp.lagK else sp.lagK - effSkip + 1 - 1
-        if (effSkip > 0 && sp.lagK - effSkip + 1 < 1) null
-        else frame.drop(n).headOption.map(_.args(sp.argIdx)).orNull
-      case "first_value" =>
-        val f = if (sp.ignoreNulls)
-          frame.filter(_.args(sp.argIdx) != null) else frame
-        f.lastOption.map(_.args(sp.argIdx)).orNull
-      case "last_value"  =>
-        val f = if (sp.ignoreNulls)
-          frame.filter(_.args(sp.argIdx) != null) else frame
-        f.headOption.map(_.args(sp.argIdx)).orNull
-      case other => throw new IllegalArgumentException(
-        s"unsupported online aggregate '$other'")
-    }
+    val picked = new Array[Int](basis.length)
+    val m = FrameKernel.members(sp.p, new BufRows(basis), ts, seq, picked)
+    if (!sp.frameless) sp.metrics.rawRowsScanned.add(m)
+    sp.score(new FrameKernel.ArrayValues(
+      Array.tabulate[Any](m)(j => basis(picked(j)).args(sp.argIdx))))
   }
 
   /** Long-window evaluation: raw tail (request bucket, a prefix of the
@@ -941,8 +769,8 @@ object StreamDeploy {
     * raw path — a last-ulp association difference inherent to
     * pre-aggregation (the reference's pre-agg has the same property);
     * integral sums/counts/min/max are exact. */
-  private def evalLongWindow(sp: WinSpec, basis: List[BufRow], ts: Long,
-      partials: Map[(Long, Long, Int), Part]): Any = {
+  private def evalLongWindow(sp: WinSpec, basis: Array[BufRow], ts: Long,
+      partials: Map[(Long, Long, Int), FrameKernel.Partial]): Any = {
     val bms = sp.lwBucket
     val hb = Math.floorDiv(ts, bms)
     val lb = Math.floorDiv(ts - sp.p.precedingMs, bms)
@@ -966,10 +794,8 @@ object StreamDeploy {
         Math.floorDiv(b.ts, bms) < hb)
     sp.metrics.preAggRequests.increment()
     sp.metrics.preAggRowsScanned.add(tail.length + rawEdge.length)
-
-    val edge = (tail.iterator ++ rawEdge.iterator)
-      .map(_.args(sp.argIdx)).filter(_ != null).toList
-    mergeLw(sp, edge, (bEdge + 1) until hb map (b => (bms, b)), partials)
+    mergeLw(sp, tail ++ rawEdge, (bEdge + 1) until hb map (b => (bms, b)),
+      partials)
   }
 
   /** Row-bucket long-window evaluation (the reference's kRowsNum
@@ -980,8 +806,8 @@ object StreamDeploy {
     * = newest `rowCap` ordinals at-or-before the request; full aligned
     * buckets inside it answer from partials, the two cut edges scan
     * raw. Per-request work is O(edge rows + buckets-in-frame). */
-  private def evalLongWindowRows(sp: WinSpec, basis: List[BufRow],
-      seq: Long, partials: Map[(Long, Long, Int), Part]): Any = {
+  private def evalLongWindowRows(sp: WinSpec, basis: Array[BufRow],
+      seq: Long, partials: Map[(Long, Long, Int), FrameKernel.Partial]): Any = {
     val c = -sp.lwBucket
     val minSeq = basis.lastOption.map(_.seq).getOrElse(seq)
     // raw-path truncation: the frame holds the surviving newest rows
@@ -992,8 +818,7 @@ object StreamDeploy {
     sp.metrics.preAggRequests.increment()
     if (bHi < bLo) {
       // frame narrower than one aligned bucket: all raw (still <= cap)
-      val edge = basis.takeWhile(_.seq >= lo).map(_.args(sp.argIdx))
-        .filter(_ != null).toList
+      val edge = basis.takeWhile(_.seq >= lo)
       sp.metrics.preAggRowsScanned.add(edge.length)
       mergeLw(sp, edge, Nil, partials)
     } else {
@@ -1002,48 +827,26 @@ object StreamDeploy {
       val tail = basis.takeWhile(_.seq > (bHi + 1) * c)
       val head = basis.dropWhile(_.seq > bLo * c).takeWhile(_.seq >= lo)
       sp.metrics.preAggRowsScanned.add(tail.length + head.length)
-      val edge = (tail.iterator ++ head.iterator)
-        .map(_.args(sp.argIdx)).filter(_ != null).toList
-      mergeLw(sp, edge, bLo to bHi map (b => (sp.lwBucket, b)), partials)
+      mergeLw(sp, tail ++ head, bLo to bHi map (b => (sp.lwBucket, b)),
+        partials)
     }
   }
 
-  /** Merge raw edge values with full-bucket partials — the reference's
+  /** Merge raw edge rows with full-bucket partials — the reference's
     * RequestAggUnionRunner combine of base-table edges and agg-table
-    * rows (runner.cc:1571+). */
-  private def mergeLw(sp: WinSpec, edge: List[Any],
+    * rows (runner.cc:1571+) — through the frame kernel's partials. */
+  private def mergeLw(sp: WinSpec, edge: Array[BufRow],
       buckets: Seq[(Long, Long)],
-      partials: Map[(Long, Long, Int), Part]): Any = {
-    var cnt = edge.length.toLong
-    var fullL = 0L; var fullD = 0.0
-    var mn: Any = null; var mx: Any = null
+      partials: Map[(Long, Long, Int), FrameKernel.Partial]): Any = {
+    val ops = sp.partials
+    var p = FrameKernel.EmptyPartial
     buckets.foreach { case (bms, b) =>
-      partials.get((bms, b, sp.argIdx)).foreach { p =>
-        cnt += p.cnt; fullL += p.lsum; fullD += p.dsum
-        if (p.mn != null && (mn == null || lt(p.mn, mn))) mn = p.mn
-        if (p.mx != null && (mx == null || lt(mx, p.mx))) mx = p.mx
-      }
+      partials.get((bms, b, sp.argIdx)).foreach(q => p = ops.merge(p, q))
     }
-    sp.fn match {
-      case "count" => cnt
-      case "sum" if sp.wrapSum.isDefined =>
-        if (cnt == 0) null
-        else edge.foldLeft(fullL)((acc, v) => acc + toL(v))
-      case "sum" =>
-        if (cnt == 0) null
-        else {
-          val d = edge.foldLeft(fullD)((acc, v) => acc + toD(v))
-          if (sp.outType == FloatType) d.toFloat else d
-        }
-      case "avg" =>
-        if (cnt == 0) null
-        else edge.foldLeft(fullD)((acc, v) => acc + toD(v)) / cnt
-      case "min" =>
-        edge.foldLeft(mn)((acc, v) => if (acc == null || lt(v, acc)) v else acc)
-      case "max" =>
-        edge.foldLeft(mx)((acc, v) => if (acc == null || lt(acc, v)) v else acc)
-      case other => throw new IllegalArgumentException(
-        s"long_windows: non-pre-aggregable aggregate '$other'")
+    edge.foreach { r =>
+      val v = r.args(sp.argIdx)
+      if (v != null) p = ops.add(p, v)
     }
+    ops.finish(sp.fn, p)
   }
 }

@@ -34,13 +34,13 @@ class FrameAggSpec extends SparkSpec {
       "dcount_null counts the null") {
     for (df <- Seq(frameDf(Nil), frameDf(Seq(null, null)))) {
       val r = df.select(
-        FrameAgg.agg(col("arr"), "sum_double").as("s"),
+        FrameAgg.agg(col("arr"), "sum").as("s"),
         FrameAgg.agg(col("arr"), "avg").as("a"),
         FrameAgg.agg(col("arr"), "min").as("mn"),
         FrameAgg.agg(col("arr"), "max").as("mx"),
         FrameAgg.agg(col("arr"), "count").as("c"),
         FrameAgg.agg(col("arr"), "dcount").as("d"),
-        FrameAgg.agg(col("arr"), "dcount_null").as("dn"),
+        FrameAgg.agg(col("arr"), "distinct_count").as("dn"),
         FrameAgg.agg(col("arr"), "median").as("md"),
         FrameAgg.agg(col("arr"), "top1_ratio").as("t1"),
         FrameAgg.agg(col("arr"), "drawdown").as("dd")).collect()(0)
@@ -60,18 +60,18 @@ class FrameAggSpec extends SparkSpec {
     // newest-first: 4.0, 1.0, null, 2.0, 1.0
     val df = frameDf(Seq(4.0, 1.0, null, 2.0, 1.0))
     val r = df.select(
-      FrameAgg.agg(col("arr"), "sum_double").as("s"),
+      FrameAgg.agg(col("arr"), "sum").as("s"),
       FrameAgg.agg(col("arr"), "median").as("md"),
       FrameAgg.agg(col("arr"), "top1_ratio").as("t1"),
       FrameAgg.agg(col("arr"), "dcount").as("d"),
-      FrameAgg.agg(col("arr"), "dcount_null").as("dn"),
+      FrameAgg.agg(col("arr"), "distinct_count").as("dn"),
       // drawdown walks newest-first keeping min of NEWER values:
       // 4: cur 0 (no newer min < 4 yet) mn=4; 1: mn 4>1 → cur 0, mn=1;
       // 2: mn=1 < 2 → (2-1)/2 = 0.5; 1: mn 1 !< 1 → 0 ⇒ dd = 0.5
       FrameAgg.agg(col("arr"), "drawdown").as("dd"),
       FrameAgg.aggArg(col("arr"), "ew_avg", 0.5).as("ew"),
-      FrameAgg.aggArg(col("arr"), "topn_freq", 2).as("tf"),
-      FrameAgg.aggArg(col("arr"), "topk_double", 2).as("tk")).collect()(0)
+      FrameAgg.aggArg(col("arr"), "topn_frequency", 2).as("tf"),
+      FrameAgg.aggArg(col("arr"), "top", 2).as("tk")).collect()(0)
     assert(r.getDouble(0) == 8.0)
     assert(r.getDouble(1) == 1.5) // sorted 1,1,2,4 → (1+2)/2
     assert(r.getDouble(2) == 0.5) // two 1.0s of four
@@ -93,8 +93,8 @@ class FrameAggSpec extends SparkSpec {
         .as("arr"))
     val r = df.select(
       WindowOps.wrapToLongRange(
-        FrameAgg.agg(col("arr"), "sum_long")).as("s"),
-      FrameAgg.aggArg(col("arr"), "topk_int", 2).as("tk")).collect()(0)
+        FrameAgg.agg(col("arr"), "sum")).as("s"),
+      FrameAgg.aggArg(col("arr"), "top", 2).as("tk")).collect()(0)
     // exact: (2^63-2)*2 + 5 ≡ 1 mod 2^64... compute via BigInt
     val expect = ((BigInt(big) * 2 + 5) mod (BigInt(1) << 64)).toLong
     assert(r.getLong(0) == expect)
@@ -111,9 +111,9 @@ class FrameAggSpec extends SparkSpec {
         struct(lit(null).cast("double").as("a"), lit("y").as("b")).as("v"))
     ).as("arr"))
     val r = df.select(
-      FrameAgg.agg(col("arr"), "sum_double", Some("a")).as("s"),
+      FrameAgg.agg(col("arr"), "sum", Some("a")).as("s"),
       FrameAgg.agg(col("arr"), "count", Some("b")).as("c"),
-      FrameAgg.agg(col("arr"), "dcount_null", Some("a")).as("dn"))
+      FrameAgg.agg(col("arr"), "distinct_count", Some("a")).as("dn"))
       .collect()(0)
     assert(r.getDouble(0) == 10.0)
     assert(r.getLong(1) == 2L) // "x" and "y"; the null struct skipped
@@ -131,7 +131,7 @@ class FrameAggSpec extends SparkSpec {
       struct(lit(3L).as("ts"), lit(1.0d).as("v"))).as("arr"))
     val r = df.select(
       FrameAgg.agg(col("arr"), "dcount").as("d"),
-      FrameAgg.agg(col("arr"), "dcount_null").as("dn"),
+      FrameAgg.agg(col("arr"), "distinct_count").as("dn"),
       FrameAgg.agg(col("arr"), "top1_ratio").as("t1")).collect()(0)
     assert(r.getLong(0) == 2L)   // {0.0, 1.0} — not three
     assert(r.getLong(1) == 2L)

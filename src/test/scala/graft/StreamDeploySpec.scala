@@ -24,8 +24,12 @@ class StreamDeploySpec extends SparkSpec {
     Ev("u1", 50L, 5.5, 5L, "a"), Ev("u2", 15L, 10.0, 6L, "x"),
     Ev("u2", 40L, 20.0, 7L, "y"), Ev("u3", 5L, 7.0, 8L, "z"))
 
+  // NaN != NaN under ==: compare it by name
   private def sorted(df: DataFrame): Seq[Seq[Any]] =
-    df.collect().toSeq.map(_.toSeq).sortBy(_.mkString("|"))
+    df.collect().toSeq.map(_.toSeq.map {
+      case d: Double if d.isNaN => "NaN"
+      case x                    => x
+    }).sortBy(_.mkString("|"))
 
   /** serve() on the batch DataFrame (flatMapGroupsWithState executes
     * identically in batch mode) vs the plain batch window planner. */
@@ -84,6 +88,45 @@ class StreamDeploySpec extends SparkSpec {
       FROM events
       WINDOW w AS (PARTITION BY user ORDER BY ts
         ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)""")
+  }
+
+  // One value ordering per type (Catalyst's): longs compare exactly past
+  // 2^53 and NaN sorts above every double, online as in batch.
+  private val big = Seq(Ev("u1", 1L, 1.0, (1L << 53) + 1, "a"),
+    Ev("u1", 2L, Double.NaN, 1L << 53, "b"))
+  private val minMaxSql = """SELECT user, ts, max(qty) OVER w AS mxq,
+    min(qty) OVER w AS mnq, min(amt) OVER w AS mna, max(amt) OVER w AS mxa
+    FROM events
+    WINDOW w AS (PARTITION BY user ORDER BY ts
+      ROWS_RANGE BETWEEN 100 PRECEDING AND CURRENT ROW)"""
+  private def assertMinMax(r: Row): Unit = {
+    assert(r.getAs[Long]("mxq") == (1L << 53) + 1, s"max(qty): $r")
+    assert(r.getAs[Long]("mnq") == (1L << 53), s"min(qty): $r")
+    assert(r.getAs[Double]("mna") == 1.0, s"min(amt): $r")
+    assert(r.getAs[Double]("mxa").isNaN, s"max(amt): $r")
+  }
+
+  test("min/max: BIGINT past 2^53 and NaN order like the batch planner") {
+    check(minMaxSql, big.toDF())
+    val served = StreamDeploy.serve(spark, minMaxSql, big.toDF())
+    assertMinMax(served.filter(col("ts") === 2L).head())
+  }
+
+  test("min/max through long-window partials: BIGINT past 2^53 and NaN") {
+    // bucket 10: the first value sits in a full-bucket partial of the
+    // second row's frame [11, 51], the second is its raw edge; the row
+    // at ts 0 is outside that frame but, under the explicit TTL, still
+    // buffered, so the partial is not cut to raw
+    val evs2 = (Ev("u1", 0L, 5.0, 5L, "f") +:
+      Seq(big(0).copy(ts = 25L), big(1).copy(ts = 51L))).toDF()
+    val sql = minMaxSql.replace("100 PRECEDING", "40 PRECEDING")
+    StreamDeploy.LwMetrics.reset()
+    val served = StreamDeploy.serve(spark, sql, evs2,
+      ttl = Some(AbsoluteTime(1000L)), longWindows = Map("w" -> 10L))
+    assert(sorted(served) == sorted(GraftSql.sql(spark, sql,
+      Map("events" -> evs2))))
+    assertMinMax(served.filter(col("ts") === 51L).head())
+    assert(StreamDeploy.LwMetrics.preAggRequests.sum > 0)
   }
 
   test("integral sum keeps its type (wraparound cast)") {
