@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, LastJoin, Multimodal, Packing, RequestMode, Sampling, Similarity, TextOps, WindowOps}
+import graft.operators.{Dedup, LastJoin, Multimodal, Packing, Sampling, Similarity, TextOps, WindowOps}
 import graft.functions.{FeatureSignature => FS, GraftAggregates => A, GraftScalars => F}
 import graft.sql.GraftSql
 
@@ -1040,18 +1040,21 @@ object SparkEntry {
     },
 
     // batch request mode: point-in-time features for request rows
-    // (BuildBatchRequestModePhysicalPlan, RequestUnionRunner)
+    // (BuildBatchRequestModePhysicalPlan, RequestUnionRunner); a request
+    // frame holds history plus the row itself, never another request
     "q_request_mode" -> q { (s, d) =>
-      val ev = T(s, d, "events")
-      // one scan: filter+unionWithHistory would read events twice
-      val u = RequestMode.tagRequests(ev, col("event_id") % 97 === 0)
-      val arr = RequestMode.pointInTimeFrame(u, col("value"), col("ts_ms"),
-        col("event_id"), Seq(col("user_id")), 600000L)
+      val flag = "__graft_is_request"
+      // one scan: filter+union of requests and history reads events twice
+      val u = T(s, d, "events")
+        .withColumn(flag, coalesce(col("event_id") % 97 === 0, lit(false)))
+      val arr = WindowOps.frameArray(col("value"), col("ts_ms"),
+        col("event_id"), Seq(col("user_id")), 600000L,
+        isPrimary = col(flag), instanceNotInWindow = true)
       u.select(col("event_id"),
           round(WindowOps.aggSum(arr), 3).as("pit_sum"),
           WindowOps.aggCount(arr).as("pit_cnt"),
-          col(RequestMode.FlagCol))
-        .filter(col(RequestMode.FlagCol)).drop(RequestMode.FlagCol)
+          col(flag))
+        .filter(col(flag)).drop(flag)
     },
 
     // full-table Aggregate (physical_op.h:814 — one output row, no keys)

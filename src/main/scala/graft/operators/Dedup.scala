@@ -15,36 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** Eagerly materialize `result` (localCheckpoint truncates its lineage
-    * to the checkpointed blocks) then free the wide cached intermediates
-    * it was built from. Without this every invocation leaks signature /
-    * vector caches for the session lifetime; the results here are narrow
-    * (ids + one score), so the checkpoint footprint is small next to
-    * what it releases. */
-  private[operators] def materializeAndFree(result: DataFrame,
-      cached: DataFrame*): DataFrame = {
-    val out = result.localCheckpoint(true)
-    cached.foreach(_.unpersist(false))
-    out
-  }
-
-  /** Free the pinned blocks under a `localCheckpoint(true)`-produced
-    * Dataset. `Dataset.unpersist` only clears CacheManager entries and
-    * a local checkpoint never registers there — its blocks live on the
-    * RDD inside the plan's LogicalRDD leaf, and they are NOT evictable
-    * (truncated lineage = only copy), so an iterative algorithm that
-    * checkpoints per round pins every round's edges until session end.
-    * Measured: connectedComponents at sf1 exhausted an 8 GiB heap this
-    * way (q_dedup_keep / q_dedup_components OOM) while every round's
-    * LIVE working set was a fraction of it. Call only once every
-    * consumer of `df` has been materialized. */
-  private[operators] def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ => ()
-    }
-
   /** Exact dedup: group identical texts by md5, keep the smallest id. */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.groupBy(md5(col(textCol)).as("text_hash"))
@@ -90,7 +60,8 @@ object Dedup {
     // span string from the once-materialized token array — building a
     // chunk-struct array inside a transform lambda re-runs split() per
     // element (no CSE inside lambdas), which measured ~4x slower here
-    val spans = docs.select(col(idCol).as("doc_id"),
+    val in = Materialize.once(docs) // read for the spans and the counts
+    val spans = in.select(col(idCol).as("doc_id"),
         TextOps.words(col(textCol)).as("ws"),
         length(trim(col(textCol))).as("tl"))
       .where(col("tl") > 0)
@@ -115,7 +86,7 @@ object Dedup {
           .as("text_dedup"))
     // span count is closed-form from the token count — no reason to
     // build the chunk strings a second time just to size() them
-    docs.select(col(idCol).as("doc_id"),
+    in.select(col(idCol).as("doc_id"),
         when(length(trim(col(textCol))) > 0,
           floor((size(TextOps.words(col(textCol))) - 1) / spanTokens) + 1)
           .otherwise(0L).cast("long").as("n_spans"))
@@ -216,22 +187,24 @@ object Dedup {
     val (result, buckets) =
       lshFirstSeenPlan(docs, idCol, textCol, bands, rowsPerBand, shingleN,
         maxBucketSize)
-    materializeAndFree(result, buckets)
+    Materialize.andFree(result, buckets)
   }
 
   /** [[lshFirstSeen]] WITHOUT the materialization barrier — the public
-    * operator's localCheckpoint truncates the lineage to
-    * `Scan ExistingRDD`, which hides the banded groupBy/join shape from
-    * the plan gate (Plans/PlanQualitySpec read this form instead).
+    * operator's [[Materialize.andFree]] checkpoint truncates the lineage
+    * to `Scan ExistingRDD`, which hides the banded groupBy/join shape
+    * from the plan gate (Plans/PlanQualitySpec read this form instead).
     * Returns (result, buckets cache); callers other than the plan gate
-    * must hand both to [[materializeAndFree]] or the signature cache
+    * must hand both to [[Materialize.andFree]] or the signature cache
     * leaks. */
   private[graft] def lshFirstSeenPlan(docs: DataFrame, idCol: String,
       textCol: String, bands: Int = 4, rowsPerBand: Int = 3,
       shingleN: Int = 3, maxBucketSize: Int = 0): (DataFrame, DataFrame) = {
     // the bucket stream feeds BOTH the per-bucket minima and the join
-    // back — cache it so the shingle/signature work runs once
-    val buckets0 = lshBuckets(docs, idCol, textCol, bands, rowsPerBand,
+    // back — cache it so the shingle/signature work runs once; the
+    // result joins back to the docs, their second read
+    val in = Materialize.once(docs)
+    val buckets0 = lshBuckets(in, idCol, textCol, bands, rowsPerBand,
       shingleN).cache()
     // Hot-bucket cap, mirroring [[minhashLshPairs]]'s production
     // hygiene: a band bucket holding more than `maxBucketSize` docs is
@@ -259,7 +232,7 @@ object Dedup {
     // entries by plan equality, so handing back the filter-derived
     // frame would no-op and leak the shingle/signature cache on every
     // capped call.
-    (docs.select(col(idCol).as("doc_id"))
+    (in.select(col(idCol).as("doc_id"))
       .join(matched, Seq("doc_id"), "left")
       .select(col("doc_id"), col("matched_id").isNotNull.as("is_dup"),
         col("matched_id")), buckets0)
@@ -296,7 +269,7 @@ object Dedup {
       .filter(col("s1") =!= col("s2") || col("d1") < col("d2"))
       .select(least(col("d1"), col("d2")).as("id1"),
         greatest(col("d1"), col("d2")).as("id2"), col("jaccard"))
-    materializeAndFree(pairs, sets)
+    Materialize.andFree(pairs, sets)
   }
 
   /** Near-dup cluster assignment, computed WITHOUT materializing doc
@@ -330,18 +303,19 @@ object Dedup {
       .agg(min(col("doc_id")).as("component"))
     val out = labeled.join(minDoc, "__lbl")
       .select(col("doc_id"), col("component"))
-    materializeAndFree(out, sets)
+    Materialize.andFree(out, sets)
   }
 
   /** Shared machinery of [[jaccardPairs]] / [[jaccardComponents]]:
     * distinct token sets, PPJoin prefix candidates, exact
     * verification. Returns (verified set pairs (s1,s2,jaccard),
     * identical-set self pairs, doc↔set membership, the persisted sets
-    * handle — callers free it via [[materializeAndFree]]). */
+    * handle — callers free it via [[Materialize.andFree]]). */
   private def jaccardSetGraph(docs: DataFrame, idCol: String,
       textCol: String, threshold: Double)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val docSets = docs.select(col(idCol).as("doc_id"),
+    // read twice: into the persisted sets and the doc↔set membership
+    val docSets = Materialize.once(docs).select(col(idCol).as("doc_id"),
       array_sort(tokens(col(textCol))).as("toks"))
     // distinct token sets, keyed by set hash; persisted — referenced by
     // the prefix index, the verify join (twice), and the expansion
@@ -418,13 +392,12 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String,
       bCol: String, maxRounds: Int = 50): DataFrame = {
-    var edges = pairs
+    var edges = Materialize.andFree(pairs
       .select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
       .select(greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
 
     // large-star: every neighbor v > u links to m(u) = min(N(u) ∪ u);
     // small-star: every neighbor v < u (and u itself) links to m(u).
@@ -458,12 +431,12 @@ object Dedup {
       // eager checkpoint materializes `next` BEFORE the previous
       // round's blocks are released — local-checkpoint blocks are
       // pinned (not evictable), so skipping the release accumulates
-      // every round's edge set on the heap (see freeLocalCheckpoint)
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+      // every round's edge set on the heap (see Materialize.free)
+      val next = Materialize.andFree(smallStar(largeStar(edges)))
       val nextSig = edgeSig(next)
       stable = nextSig == sig
       sig = nextSig
-      freeLocalCheckpoint(edges)
+      Materialize.free(edges)
       edges = next
       round += 1
     }
@@ -689,16 +662,17 @@ object Dedup {
   def decontaminate(train: DataFrame, probes: DataFrame, idCol: String,
       textCol: String, n: Int = 3,
       broadcastProbes: Boolean = true): DataFrame = {
+    val in = Materialize.once(train) // read for the hits and the join
     val pg0 = probes
       .select(explode(shingleHashes(col(textCol), n)).as("__g")).distinct()
     val probeGrams = if (broadcastProbes) broadcast(pg0) else pg0
     // narrow (id, gram) rows through the join; partial-agg distinct
     // collapses duplicate hits map-side before the id shuffle
-    val hits = train.select(col(idCol).as("__cid"),
+    val hits = in.select(col(idCol).as("__cid"),
         explode(shingleHashes(col(textCol), n)).as("__g"))
       .join(probeGrams, "__g")
       .select(col("__cid")).distinct()
-    train.join(hits, train(idCol) === hits("__cid"), "left")
+    in.join(hits, in(idCol) === hits("__cid"), "left")
       .withColumn("contaminated", col("__cid").isNotNull)
       .drop("__cid")
   }
@@ -765,12 +739,13 @@ object Dedup {
     val mightContain = CatalystBridge.column(
       BloomFilterMightContain(Literal(pf.bytes),
         CatalystBridge.expression(col("__g"))))
-    val hits = train.select(col(idCol).as("__cid"),
+    val in = Materialize.once(train) // read for the hits and the join
+    val hits = in.select(col(idCol).as("__cid"),
         explode(shingleHashes(col(textCol), pf.n)).as("__g"))
       .where(mightContain)
       .join(pf.grams, "__g")
       .select(col("__cid")).distinct()
-    train.join(hits, train(idCol) === hits("__cid"), "left")
+    in.join(hits, in(idCol) === hits("__cid"), "left")
       .withColumn("contaminated", col("__cid").isNotNull)
       .drop("__cid")
   }
@@ -827,9 +802,7 @@ object Dedup {
       .join(vecs.select(col("vec_id").as("id2"), col("e").as("e2")), "id2")
       .select(col("id1"), col("id2"),
         Similarity.cosine(col("e1"), col("e2")).as("cos"))
-      .localCheckpoint(true)
-    vecs.unpersist(false); keyed.unpersist(false)
-    scored.filter(col("cos") >= threshold)
+    Materialize.andFree(scored, vecs, keyed).filter(col("cos") >= threshold)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -874,7 +847,7 @@ object Dedup {
       maxClusterSize: Int = 0, nprobe: Int = 1): DataFrame = {
     val (out, assigned) = semanticDedupPlan(docs, idCol, vecCol,
       threshold, nlist, iters, centroidsIn, maxClusterSize, nprobe)
-    materializeAndFree(out, assigned)
+    Materialize.andFree(out, assigned)
   }
 
   /** [[semanticDedup]] before its materialization barrier — (result,
@@ -913,9 +886,11 @@ object Dedup {
       centroidsIn: Option[Seq[Seq[Double]]] = None,
       maxClusterSize: Int = 0, nprobe: Int = 1): (DataFrame, DataFrame) = {
     // the paper's production shape clusters ONCE and reuses the
-    // centroids across corpus snapshots — accept them precomputed
+    // centroids across corpus snapshots — accept them precomputed;
+    // deriving them here reads the docs a second time
+    val in = if (centroidsIn.isEmpty) Materialize.once(docs) else docs
     val centroids = centroidsIn.getOrElse(
-      Similarity.kmeansCentroids(docs, idCol, vecCol, nlist, iters))
+      Similarity.kmeansCentroids(in, idCol, vecCol, nlist, iters))
     // one argmin pass yields the cluster id and keep-rule distance;
     // the probe list (nprobe > 1) is computed HERE, from the same RAW
     // vector and the same raw-space metric as the assignment — probing
@@ -930,7 +905,7 @@ object Dedup {
     // r19: normalization is one imperative pass with the norm computed
     // ONCE (functions.NormalizeExpr) — the transform lambda re-folded
     // the norm aggregate under every element (O(d²) per doc)
-    val assigned = docs.select(col(idCol).as("doc_id"),
+    val assigned = in.select(col(idCol).as("doc_id"),
         Similarity.toDoubleVec(col(vecCol)).as("v0"))
       .withColumn("__a", Similarity.nearestCentroidAssign(col("v0"), centroids))
       .select(col("doc_id"),

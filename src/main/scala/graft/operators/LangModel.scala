@@ -46,7 +46,10 @@ object LangModel {
       vocabSize: Int, model: DataFrame = null,
       broadcastBudgetBytes: Long = TextOps.VocabBroadcastBudget)
       : DataFrame = {
-    val corpus = Option(model).getOrElse(docs)
+    // docs feed the scoring bigrams and the final join, the corpus the
+    // vocabulary and the training bigrams: each is read more than once
+    val in = Materialize.once(docs)
+    val corpus = Option(model).map(Materialize.once).getOrElse(in)
     val vocab = vocabulary(corpus, textCol, vocabSize)
 
     def bigrams(src: DataFrame, id: Column): DataFrame = {
@@ -85,7 +88,7 @@ object LangModel {
     // broadcast instead of a driver-side collect)
     val vSize = vocab.agg((count(lit(1)) + 1).cast("double").as("v"))
 
-    val scored = mapped(bigrams(docs, idCol))
+    val scored = mapped(bigrams(in, idCol))
       .join(c2, Seq("w1", "w2"), "left")
       .join(broadcast(c1), Seq("w1"), "left")
       .crossJoin(broadcast(vSize))
@@ -108,7 +111,7 @@ object LangModel {
         round(col("__sum") / col("n_bigrams"), 6).as("avg_logprob"),
         round(exp(-col("__sum") / col("n_bigrams")), 4).as("ppl"))
 
-    docs.select(idCol.as("doc_id"))
+    in.select(idCol.as("doc_id"))
       .join(scored, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),

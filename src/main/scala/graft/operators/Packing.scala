@@ -97,13 +97,15 @@ object Packing {
   def packTexts(docs: DataFrame, idCol: Column, textCol: Column,
       budget: Long, shards: Int = 1024,
       salt: String = "pack"): DataFrame = {
+    // read twice: the layout, then the join back
+    val in = Materialize.once(docs)
     val spans = packSequences(
-      docs.select(idCol.as("doc_id"), textCol.as("__text")),
+      in.select(idCol.as("doc_id"), textCol.as("__text")),
       col("doc_id"), TextOps.tokenCount(col("__text")), budget, shards, salt)
     val toks = slice(TextOps.words(col("__text")),
       (col("doc_off") + 1).cast("int"), col("span_len").cast("int"))
     spans
-      .join(docs.select(idCol.as("doc_id"), textCol.as("__text")), "doc_id")
+      .join(in.select(idCol.as("doc_id"), textCol.as("__text")), "doc_id")
       .select(col("shard"), col("pack_id"),
         struct(col("pack_off"), toks.as("toks")).as("__sp"))
       .groupBy("shard", "pack_id")

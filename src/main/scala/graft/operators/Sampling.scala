@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Reproducible sampling for training-data pipelines.
   *
@@ -65,47 +68,25 @@ object Sampling {
     * achievable total under downsampling-only is
     * N' = min over strata of (n_s / p_s); each stratum keeps with rate
     * p_s · N' / n_s (the limiting stratum keeps everything). Strata
-    * absent from the map are dropped.
-    *
-    * Scale: stratum counts are a stratum-cardinality aggregate
-    * (partial-aggregated wordcount shape) joined BACK as a broadcast —
-    * the corpus side stays a pure filter on the content-addressed
-    * coordinate, so pushdown still applies and any engine/retry keeps
-    * identical rows.
+    * absent from the map are dropped. Scale: [[downsample]].
     *
     * Every target stratum must be PRESENT in the corpus: a requested
     * stratum with zero rows makes the mix unsatisfiable (its n_s/p_s
     * bound is 0), so rather than silently ignoring it and shipping a
-    * corpus that cannot match the requested shares, this fails fast.
-    * The check collects the stratum-count table — bounded by
-    * |targetShares| rows — and persists it, so the corpus is still
-    * scanned once. */
+    * corpus that cannot match the requested shares, this fails fast
+    * on the collected counts. */
   def rebalance(df: DataFrame, stratum: Column, key: Column,
       targetShares: Map[String, Double],
       salt: String = "graft"): DataFrame = {
     require(targetShares.nonEmpty && targetShares.values.forall(_ > 0.0),
       "target shares must be positive")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val shares = targetShares.toSeq.toDF("__stratum", "__share")
-    val counts = df.groupBy(stratum.as("__stratum"))
-      .agg(count(lit(1)).cast("double").as("__n"))
-      .join(shares, "__stratum")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val present = counts.select(col("__stratum").cast("string"))
-      .as[String].collect().toSet
-    val missing = targetShares.keySet -- present
-    require(missing.isEmpty,
-      "rebalance: target strata absent from the corpus (unsatisfiable " +
-        s"mix): ${missing.toSeq.sorted.mkString(", ")}")
-    val nPrime = counts.agg(min(col("__n") / col("__share")).as("__np"))
-    val rates = counts.crossJoin(broadcast(nPrime))
-      .select(col("__stratum").as("__rate_s"),
-        least(lit(1.0), col("__share") * col("__np") / col("__n"))
-          .as("__rate"))
-    df.join(broadcast(rates), stratum === col("__rate_s"), "inner")
-      .where(sampleFraction(key, salt) < col("__rate"))
-      .drop("__rate", "__rate_s")
+    downsample(df, stratum, key, salt, quantize = false) { counts =>
+      val missing = targetShares.keySet -- counts.map(_._1)
+      require(missing.isEmpty,
+        "rebalance: target strata absent from the corpus (unsatisfiable " +
+          s"mix): ${missing.toSeq.sorted.mkString(", ")}")
+      counts.map(c => targetShares.getOrElse(c._1, 0.0))
+    }
   }
 
   /** Temperature-flattened mixture sampling — the multilingual/T5
@@ -115,30 +96,49 @@ object Sampling {
     * achievable total is N' = min_s(n_s / p_s) and stratum s keeps
     * with rate p_s · N' / n_s — the limiting stratum keeps all rows.
     *
-    * Scale: identical shape to [[rebalance]] — one stratum-cardinality
-    * aggregate, unit-sized share/total relations riding along as
-    * broadcasts, and the corpus side stays a pure filter on the
-    * content-addressed coordinate (pushdown applies; any engine/retry
-    * keeps identical rows). Unlike rebalance's dyadic literal shares,
-    * the pow() rates are NOT binary-exact across runtimes, so rates
-    * quantize to 1e-6 before the coordinate compare — the same
-    * discipline as the suite's quality-score gates — and any engine
-    * replays the identical keep set. */
+    * Scale: [[downsample]], as [[rebalance]]; n_s^(1/T) is
+    * `StrictMath.pow`, as Spark's `pow`. Unlike rebalance's dyadic
+    * literal shares, the pow() rates are NOT binary-exact across
+    * runtimes, so rates quantize to 1e-6 before the coordinate compare
+    * — the same discipline as the suite's quality-score gates — and
+    * any engine replays the identical keep set. */
   def temperatureMix(df: DataFrame, stratum: Column, key: Column,
       temperature: Double, salt: String = "graft"): DataFrame = {
     require(temperature > 0.0, "temperature must be positive")
-    val invT = 1.0 / temperature
-    val counts = df.groupBy(stratum.as("__stratum"))
+    downsample(df, stratum, key, salt, quantize = true) { counts =>
+      val w = counts.map(c => StrictMath.pow(c._2, 1.0 / temperature))
+      val tot = w.sum
+      w.map(_ / tot)
+    }
+  }
+
+  /** The downsample-to-shares path of [[rebalance]] and
+    * [[temperatureMix]]: the (stratum as string, n_s) counts come to
+    * the driver once, `shares` maps them to p_s, and stratum s keeps
+    * with rate min(1, p_s · N' / n_s) (floored to 1e-6 if `quantize`).
+    * The rates join back as a broadcast literal relation, so the corpus
+    * side stays a pure filter on the content-addressed coordinate. The
+    * corpus is read for the counts and the filter: [[Materialize.once]]. */
+  private def downsample(df: DataFrame, stratum: Column, key: Column,
+      salt: String, quantize: Boolean)(
+      shares: Seq[(String, Double)] => Seq[Double]): DataFrame = {
+    val in = Materialize.once(df)
+    val counts = in.groupBy(stratum.as("__rate_s"))
       .agg(count(lit(1)).cast("double").as("__n"))
-    val tot = counts.agg(sum(pow(col("__n"), invT)).as("__tot"))
-    val p = counts.crossJoin(broadcast(tot))
-      .withColumn("__p", pow(col("__n"), invT) / col("__tot"))
-    val nPrime = p.agg(min(col("__n") / col("__p")).as("__np"))
-    val rates = p.crossJoin(broadcast(nPrime))
-      .select(col("__stratum").as("__rate_s"),
-        (floor(least(lit(1.0), col("__p") * col("__np") / col("__n"))
-          * 1e6) / 1e6).as("__rate"))
-    df.join(broadcast(rates), stratum === col("__rate_s"), "inner")
+    val rows = counts.select(col("__rate_s"),
+      col("__rate_s").cast("string"), col("__n")).collect().toSeq
+    val ns = rows.map(_.getDouble(2))
+    val ps = shares(rows.map(_.getString(1)).zip(ns))
+    // an empty corpus has no strata, no rates and keeps nothing
+    val nPrime = ns.zip(ps).map(np => np._1 / np._2)
+      .foldLeft(Double.PositiveInfinity)(math.min)
+    val rates = rows.indices.map { i =>
+      val r = math.min(1.0, ps(i) * nPrime / ns(i))
+      Row(rows(i).get(0), if (quantize) math.floor(r * 1e6) / 1e6 else r)
+    }
+    val rel = in.sparkSession.createDataFrame(rates.asJava, StructType(Seq(
+      counts.schema("__rate_s"), StructField("__rate", DoubleType))))
+    in.join(broadcast(rel), stratum === col("__rate_s"), "inner")
       .where(sampleFraction(key, salt) < col("__rate"))
       .drop("__rate", "__rate_s")
   }

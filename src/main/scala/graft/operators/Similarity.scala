@@ -125,8 +125,9 @@ object Similarity {
   def ivfTopK(queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int,
       nlist: Int = 16, nprobe: Int = 4, iters: Int = 3): DataFrame = {
-    val centroids = kmeansCentroids(corpus, idCol, vecCol, nlist, iters)
-    val c = corpus.select(col(idCol).as("vec_id"),
+    val in = Materialize.once(corpus) // read for the centroids and the lists
+    val centroids = kmeansCentroids(in, idCol, vecCol, nlist, iters)
+    val c = in.select(col(idCol).as("vec_id"),
         toDoubleVec(col(vecCol)).as("ce"))
       .withColumn("cid", nearestCentroid(col("ce"), centroids))
     val q = broadcast(queries.select(col(idCol).as("qid"),
@@ -176,7 +177,7 @@ object Similarity {
       .orderBy(col("cos").desc, col("vec_id"))
     val topk = scored.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
-    Dedup.materializeAndFree(topk, c)
+    Materialize.andFree(topk, c)
   }
   /** Symmetric per-vector int8 quantization: scale = max|x|/127,
     * q_i = floor(x_i/scale + 0.5) clamped to [-127, 127], stored as

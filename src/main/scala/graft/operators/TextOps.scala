@@ -181,9 +181,10 @@ object TextOps {
   def vocab(docs: org.apache.spark.sql.DataFrame, textCol: Column,
       k: Int): org.apache.spark.sql.DataFrame = {
     val ws = words(textCol)
-    val tf = docs.select(explode(ws).as("term"))
+    val in = Materialize.once(docs) // read for tf and for df
+    val tf = in.select(explode(ws).as("term"))
       .groupBy("term").agg(count(lit(1)).as("tf"))
-    val df = docs.select(explode(array_distinct(ws)).as("term"))
+    val df = in.select(explode(array_distinct(ws)).as("term"))
       .groupBy("term").agg(count(lit(1)).as("df"))
     tf.join(df, "term")
       .orderBy(col("tf").desc, col("term"))
@@ -246,14 +247,15 @@ object TextOps {
       textCol: Column, k: Int,
       broadcastBudgetBytes: Long = VocabBroadcastBudget)
       : org.apache.spark.sql.DataFrame = {
-    val tc = docs.select(idCol.as("doc_id"),
+    val in = Materialize.once(docs) // read for the term counts and N
+    val tc = in.select(idCol.as("doc_id"),
         explode(words(textCol)).as("term"))
       .groupBy("doc_id", "term").agg(count(lit(1)).as("cnt"))
     // fixedBytes: 8 (df long) + ~24 string/row overhead.
     val dfTab = gatedVocabBroadcast(
       tc.groupBy("term").agg(count(lit(1)).as("df")),
       "term", 32, broadcastBudgetBytes)
-    val n = docs.agg(count(lit(1)).as("n_docs"))
+    val n = in.agg(count(lit(1)).as("n_docs"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term").asc)
@@ -294,7 +296,9 @@ object TextOps {
       k1: Double = 1.2, b: Double = 0.75,
       broadcastBudgetBytes: Long = VocabBroadcastBudget)
       : org.apache.spark.sql.DataFrame = {
-    val base = docs.select(idCol.as("doc_id"), words(textCol).as("ws"))
+    // read for the postings and the (N, avgdl) stats
+    val base = Materialize.once(docs)
+      .select(idCol.as("doc_id"), words(textCol).as("ws"))
       .select(col("doc_id"), col("ws"),
         size(col("ws")).cast("double").as("dl"))
     val tc = base

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{RequestMode, WindowOps, Multimodal, TextOps}
+import graft.operators.{WindowOps, Multimodal, TextOps}
 import graft.sources.Sources
 
 class RequestModeSourcesSpec extends SparkSpec {
@@ -14,12 +14,17 @@ class RequestModeSourcesSpec extends SparkSpec {
     val requests = Seq(
       (10L, "u1", 25L, 0.5), (11L, "u1", 25L, 0.7) // same key+ts requests
     ).toDF("id", "k", "ts", "v")
-    val u = RequestMode.unionWithHistory(requests, history)
-    val arr = RequestMode.pointInTimeFrame(u, col("v"), col("ts"), col("id"),
-      Seq(col("k")), precedingMs = 20L)
-    val out = u.select(col("id"), WindowOps.aggSum(arr).as("s"),
-        col(RequestMode.FlagCol))
-      .filter(col(RequestMode.FlagCol))
+    // requests ∪ history with a provenance flag; a request row's frame
+    // is history plus itself (instanceNotInWindow)
+    val flag = "__graft_is_request"
+    val u = requests.withColumn(flag, lit(true))
+      .unionByName(history.withColumn(flag, lit(false)),
+        allowMissingColumns = true)
+    val arr = WindowOps.frameArray(col("v"), col("ts"), col("id"),
+      Seq(col("k")), precedingMs = 20L,
+      isPrimary = col(flag), instanceNotInWindow = true)
+    val out = u.select(col("id"), WindowOps.aggSum(arr).as("s"), col(flag))
+      .filter(col(flag))
       .select("id", "s").as[(Long, Double)].collect().toMap
     // frame [5,25]: history rows 10,20 + the request row itself;
     // the other same-ts request must NOT leak in

@@ -132,6 +132,17 @@ class SamplingSpec extends SparkSpec {
     assert(again == out.collect().map(_.getLong(0)).toSet)
   }
 
+  test("rebalance leaves no persisted RDD behind") {
+    import spark.implicits._
+    val df = (0L until 300L).map(i => (i, if (i % 3 == 0) "a" else "b"))
+      .toDF("id", "s")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Sampling.rebalance(df, col("s"), col("id"),
+      Map("a" -> 0.5, "b" -> 0.5)).collect()
+    assert(out.nonEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+  }
+
   test("rebalance fails fast on a target stratum absent from the corpus") {
     import spark.implicits._
     val df = Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("id", "s")
