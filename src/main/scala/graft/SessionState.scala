@@ -72,6 +72,9 @@ private[graft] final class SessionState {
   /** Serving keys whose template cannot be built, by last-touched
     * tick (LRU-evicted): they take the dynamic path without retrying. */
   val serveUncacheable = TrieMap[ServeKey, Long]()
+  /** `GraftSql.resolveTypeCached`'s memo: (schema, expression text) →
+    * the text's resolved type; CREATE/DROP FUNCTION clears it. */
+  val typeProbes = TrieMap[(String, String), Option[DataType]]()
 }
 
 private[graft] object SessionState {

@@ -368,16 +368,16 @@ object GraftAggregates {
   }
 
   /** Expose the UDAFs to SQL texts. The *_cate family registers twice:
-    * the plain name formats values as doubles, the __graft-prefixed
-    * variant as integers — GraftSql picks by probing the value
-    * expression's type (the reference formats by input type,
-    * containers.h OutputString). */
+    * `__graft_<m>_cate` formats values as doubles, `__graft_<m>_cate_int`
+    * as integers — the dialect's `<m>_cate` builder picks by the value
+    * operand's resolved type (the reference formats by input type,
+    * containers.h OutputString; graft.sql.DialectFunctions). */
   def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
     spark.udf.register("entropy", udaf(new Entropy))
     spark.udf.register("top1_ratio", udaf(new Top1Ratio))
     spark.udf.register("drawdown", udaf(new Drawdown))
     Seq("sum", "count", "avg", "min", "max").foreach { m =>
-      spark.udf.register(s"${m}_cate", udaf(new CateVKAgg(m, false)))
+      spark.udf.register(s"__graft_${m}_cate", udaf(new CateVKAgg(m, false)))
       spark.udf.register(s"__graft_${m}_cate_int", udaf(new CateVKAgg(m, true)))
       spark.udf.register(s"__graft_topnk_$m", udaf(new TopNKeyCateAgg(m, false)))
       spark.udf.register(s"__graft_topnk_${m}_int",

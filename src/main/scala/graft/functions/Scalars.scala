@@ -56,9 +56,10 @@ object GraftScalars {
 
   /** hash64 / farm_fingerprint: bit-compatible FarmHash Fingerprint64
     * ([[FarmHash]]; pinned by feature_signature_query.yaml ids 22/23).
-    * The Column helpers hash the STRING rendering; the SQL front-end
-    * dispatches to the typed byte encodings per operand type
-    * (GraftSql.rewriteDialect). */
+    * The Column helpers hash the STRING rendering, as does the SQL
+    * name `hash64` registered here; the dialect's `hash64` dispatches
+    * to the typed byte encodings per operand type
+    * (graft.sql.DialectFunctions). */
   def hash64(c: Column): Column =
     call_udf("__graft_farm64_str", c.cast("string"))
   def farm_fingerprint(c: Column): Column = hash64(c)
@@ -261,7 +262,8 @@ object GraftScalars {
     // escape string (docs LIKE ... ESCAPE; Spark restricts escape
     // placement and rejects ESCAPE ''). The hot path rewrites literal
     // patterns at plan time (GraftSql.rewriteDialect); these UDFs serve
-    // non-literal pattern/escape operands only.
+    // non-literal pattern/escape operands and the dialect's
+    // three-argument like_match (graft.sql.DialectFunctions).
     spark.udf.register("like_match_esc", (s: String, p: String, e: String) =>
       if (s == null || p == null || e == null) null.asInstanceOf[java.lang.Boolean]
       else java.lang.Boolean.valueOf(

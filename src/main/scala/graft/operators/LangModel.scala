@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** N-gram language-model quality scoring — the CCNet/KenLM-style
   * perplexity filter every large-scale training-data pipeline runs:
@@ -50,7 +53,12 @@ object LangModel {
     // vocabulary and the training bigrams: each is read more than once
     val in = Materialize.once(docs)
     val corpus = Option(model).map(Materialize.once).getOrElse(in)
-    val vocab = vocabulary(corpus, textCol, vocabSize)
+    // at most vocabSize words: ranked once on the driver and broadcast
+    // as a local relation (as Sampling.downsample's rates), so neither
+    // vocab lookup nor the smoothing denominator re-plans the top-k
+    val words = vocabulary(corpus, textCol, vocabSize).collect()
+    val vocab = in.sparkSession.createDataFrame(words.toSeq.asJava,
+      StructType(Seq(StructField("w", StringType))))
 
     def bigrams(src: DataFrame, id: Column): DataFrame = {
       val t = toks(textCol)
@@ -84,17 +92,15 @@ object LangModel {
       length(col("w1")) + length(col("w2")) + lit(56),
       broadcastBudgetBytes)
     val c1 = c2.groupBy("w1").agg(sum("c2").as("c1"))
-    // smoothing denominator: |vocab| + 1 (ride along as a 1-row
-    // broadcast instead of a driver-side collect)
-    val vSize = vocab.agg((count(lit(1)) + 1).cast("double").as("v"))
+    // smoothing denominator: |vocab| + 1
+    val vSize = lit((words.length + 1).toDouble)
 
     val scored = mapped(bigrams(in, idCol))
       .join(c2, Seq("w1", "w2"), "left")
       .join(broadcast(c1), Seq("w1"), "left")
-      .crossJoin(broadcast(vSize))
       .select(col("doc_id"), col("pos"),
         log((coalesce(col("c2"), lit(0L)) + lit(1.0)) /
-          (coalesce(col("c1"), lit(0L)) + col("v"))).as("lp"))
+          (coalesce(col("c1"), lit(0L)) + vSize)).as("lp"))
       .groupBy("doc_id")
       // r19: the document-order fold is one imperative walk
       // (functions.StructFieldSumExpr) instead of an interpreted

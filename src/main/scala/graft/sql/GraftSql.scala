@@ -15,9 +15,11 @@ import graft.operators.{LastJoin, Ttl, WindowOps}
   *
   * Architecture (SURVEY §7.1): a hand-rolled recursive-descent parser
   * covers the STRUCTURAL dialect (clauses, joins, window specs); scalar
-  * expression text is delegated verbatim to Spark's `expr()` — the
-  * overlap in expression syntax is near-total once GraftScalars
-  * registers the dialect-specific function names. Planning emits plain
+  * expression text is delegated to Spark's `expr()` — the overlap in
+  * expression syntax is near-total once GraftScalars registers the
+  * dialect-specific function names and [[DialectFunctions]] the calls
+  * the dialect types by their operands, whose builders see the
+  * arguments as Spark's analyzer resolved them. Planning emits plain
   * DataFrame operators: plain frames → `Window.rowsBetween/rangeBetween`
   * (whole-stage codegen), extended frames → the
   * [[graft.operators.WindowOps.frameArray]] pipeline, LAST JOIN →
@@ -710,7 +712,7 @@ object GraftSql {
       val reqCols = selC.configValues.zip(hist.schema.fields.toSeq).map {
         case (vt, f) =>
           import org.apache.spark.sql.types._
-          val e = expr(rewriteDialect(vt, _ => None).mkString(" "))
+          val e = expr(rewriteDialect(vt).mkString(" "))
           val eTy = try Some(spark.range(1).select(e).schema.head.dataType)
             catch { case _: Throwable => None }
           // ms semantics across the ts/numeric boundary: a TIMESTAMP
@@ -2672,6 +2674,7 @@ object GraftSql {
             throw new IllegalArgumentException(s"function '$fn' does not exist")
           case Some(f) =>
             userFnsVersion.incrementAndGet()
+            SessionState.of(spark).typeProbes.clear()
             if (!f.isAggregate)
               // scalar registrations live in the session function registry
               spark.sql(s"DROP TEMPORARY FUNCTION IF EXISTS ${quoteId(fn)}")
@@ -2717,6 +2720,7 @@ object GraftSql {
         registerUserFn(spark, fn)
         SessionState.of(spark).userFns.put(fname, fn)
         userFnsVersion.incrementAndGet()
+        SessionState.of(spark).typeProbes.clear()
         None
 
       case "CREATE" =>
@@ -3276,8 +3280,8 @@ object GraftSql {
         val all = struct(df.columns.toIndexedSeq.map(c =>
           col(quoteId(c))): _*)
         val ord = ordExpr match {
-          case Some(e) => struct(expr(rewriteDialect(tokenize(e),
-            t => resolveTypeCached(df, t)).mkString(" ")), all)
+          case Some(e) =>
+            struct(expr(rewriteDialect(tokenize(e)).mkString(" ")), all)
           case None    => all
         }
         val picked = if (keepLast) max_by(all, ord) else min_by(all, ord)
@@ -3482,14 +3486,12 @@ object GraftSql {
         // reference compiles here too, engine.cc — the first POST/CALL
         // otherwise pays the build's optimizer sweep). Best-effort:
         // any shape the template cannot serve just falls back per
-        // request. Long-window deployments serve through the pre-agg
-        // partials path, not requestMode — nothing to pre-compile.
-        if (!opts.contains("long_windows"))
-          try serveRequest(ctx, rest.mkString(" "),
-            spark.createDataFrame(
-              java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-              requestSchemaFor(spark, name)), Map.empty)
-          catch { case scala.util.control.NonFatal(_) => () }
+        // request.
+        try serveRequest(ctx, rest.mkString(" "),
+          spark.createDataFrame(
+            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            requestSchemaFor(spark, name)), Map.empty)
+        catch { case scala.util.control.NonFatal(_) => () }
         None
 
       case "SELECT" | "WITH" =>
@@ -4273,9 +4275,7 @@ object GraftSql {
       // `t.dt < all.date - 0` needs the ms-shift rewrite; ambiguous
       // names just resolve to None and stay unrewritten)
       val probe = try df.crossJoin(right) catch { case _: Throwable => df }
-      val cond = coerceOperands(
-        rewriteDialect(condToks, t => resolveTypeCached(probe, t)),
-        probe).mkString(" ")
+      val cond = coerceOperands(rewriteDialect(condToks), probe).mkString(" ")
       df = jc.kind match {
         case "left" => df.join(right, expr(cond), "left")
         case "full" | "right" =>
@@ -4470,10 +4470,7 @@ object GraftSql {
     s.fromAlias.foreach(a => df = df.alias(a))
     df = applyJoins(ctx, df, s.joins, scope)
 
-    // dialect token rewrites over every expression position (the type
-    // resolver sees the post-join schema)
-    val rt: String => Option[org.apache.spark.sql.types.DataType] =
-      t => resolveTypeCached(df, t)
+    // dialect token rewrites over every expression position
     val dbs = knownDbs(ctx, scope)
     // duplicate projections with the same alias that resolve to the
     // SAME source attribute collapse to one — the reference keys
@@ -4510,19 +4507,19 @@ object GraftSql {
         val named =
           if (p.alias.isDefined || isStarProj(p.tokens)) p
           else p.copy(alias = Some(projName(p, pi)))
-        named.copy(tokens = rewriteDialect(named.tokens, rt))
+        named.copy(tokens = rewriteDialect(named.tokens))
       },
       where = s.where.map { w =>
         val t = stripDbPrefixes(ctx, dbs, tokenize(w)); rejectIntervalLits(t)
-        rewriteDialect(t, rt).mkString(" ")
+        rewriteDialect(t).mkString(" ")
       },
       having = s.having.map { h =>
         val t = stripDbPrefixes(ctx, dbs, tokenize(h)); rejectIntervalLits(t)
-        rewriteDialect(t, rt).mkString(" ")
+        rewriteDialect(t).mkString(" ")
       },
       groupBy = s.groupBy.map { g =>
         val t = stripDbPrefixes(ctx, dbs, tokenize(g)); rejectIntervalLits(t)
-        rewriteDialect(t, rt).mkString(" ")
+        rewriteDialect(t).mkString(" ")
       })
 
     s1.where.foreach(w =>
@@ -4552,9 +4549,8 @@ object GraftSql {
       else if (s1.projs.length == 1 && s1.projs.head.exprText == "*") df
       else df.select(s1.projs.zipWithIndex.map { case (pr, i) =>
         if (isStarProj(pr.tokens)) starCol(pr.tokens)
-        else expr(rewriteAggFns(
-          coerceDateFns(coerceOperands(pr.tokens, df), df), df,
-          grouped = true).mkString(" "))
+        else expr(expandUserAggs(coerceOperands(pr.tokens, df),
+          df.sparkSession, grouped = true).mkString(" "))
           .as(projName(pr, i)) } ++
         // request-row identity passes through projections (requestMode
         // derived-side re-alignment)
@@ -4593,10 +4589,6 @@ object GraftSql {
   // timestamp model, LIKE ... ESCAPE, IN-list literal coercion
   // ------------------------------------------------------------------
 
-  private val castFnRenames = Map(
-    "int16" -> "smallint", "int32" -> "int", "int64" -> "bigint",
-    "bool" -> "boolean")
-
   /** dialect type spellings → Spark type keywords (CAST targets) */
   private val castTypeRenames = Map(
     "int16" -> "SMALLINT", "int32" -> "INT", "int64" -> "BIGINT",
@@ -4627,18 +4619,6 @@ object GraftSql {
     "window_split",
     "window_split_by_key", "window_split_by_value", "fz_window_split",
     "fz_window_split_by_key", "fz_window_split_by_value")
-
-  /** math functions whose operands must be numeric: bool coerces,
-    * string/date reject (test_calculate.yaml) */
-  private val mathFns1 = Set("abs", "ceil", "ceiling", "floor", "round",
-    "truncate", "sqrt", "sin", "cos", "tan", "asin", "acos", "atan",
-    "atan2", "cot", "exp", "ln", "log", "log2", "log10", "degrees",
-    "radians", "pow", "power", "mod", "pmod")
-
-  /** the trig/sqrt family additionally rejects BOOL operands
-    * (test_calculate.yaml id 8) */
-  private val mathNoBool = Set("cos", "cot", "sin", "tan", "acos",
-    "asin", "atan", "atan2", "sqrt")
 
   private def isQuoted(t: String): Boolean =
     t.length >= 2 && (t.head == '\'' || t.head == '"')
@@ -4699,39 +4679,20 @@ object GraftSql {
     }.headOption
   }
 
-  /** FarmHash UDF variant for an operand type — the reference hashes
-    * each type's little-endian value bytes (literal_traits.h
-    * to_bytes_ref); unresolvable operands fall back to string bytes. */
-  private def farmFnFor(
-      t: Option[org.apache.spark.sql.types.DataType]): String = {
-    import org.apache.spark.sql.types._
-    t match {
-      case Some(ShortType)   => "__graft_farm64_i16"
-      case Some(IntegerType) => "__graft_farm64_i32"
-      case Some(LongType)    => "__graft_farm64_i64"
-      case Some(FloatType)   => "__graft_farm64_f32"
-      case Some(DoubleType)  => "__graft_farm64_f64"
-      case Some(BooleanType) => "__graft_farm64_bool"
-      case Some(DateType)    => "__graft_farm64_date"
-      case Some(_: org.apache.spark.sql.types.DecimalType) =>
-        "__graft_farm64_f64" // fractional literal pre-D-suffix
-      case _                 => "__graft_farm64_str"
-    }
-  }
-
   /** Expand a `csv(...)` / `gcformat(...)` / `libsvm(...)` feature
     * instance format into a single SQL string expression
     * (feature_signature_def.cc CSV :292, GCFormat :213, LIBSVM :344).
     * Slot numbers (and GCFormat's per-slot FarmFingerprint of the slot
     * id) are static at plan time; value formatting follows the
-    * reference's std::to_string semantics per operand type. */
-  private def featureFormatText(kind: String, inner: Vector[String],
-      resolveTy: String => Option[org.apache.spark.sql.types.DataType])
+    * reference's std::to_string semantics per operand type, and a
+    * discrete slot hashes its operand's typed bytes — both picked by
+    * [[DialectFunctions]] builders (`__graft_fmt_cont`, `__graft_farm64`)
+    * from the resolved operand. */
+  private def featureFormatText(kind: String, inner: Vector[String])
       : String = {
-    import org.apache.spark.sql.types._
     val sigKinds = Set("continuous", "discrete", "binary_label",
       "multiclass_label", "regression_label", "gcformat_index")
-    case class SigArg(sk: String, vText: String, vType: Option[DataType],
+    case class SigArg(sk: String, vText: String,
         bucket: Option[Option[Long]]) // None=unbucketed; Some(None)=null
     val args = splitTokenArgs(inner).map { at =>
       val head = at.headOption.getOrElse("").toLowerCase
@@ -4749,17 +4710,9 @@ object GraftSql {
             case _ => Some(None) // non-literal (e.g. int("null")) → null
           }
         } else None
-      SigArg(head, vText, resolveTy(callArgs.head.mkString(" ")), bucket)
+      SigArg(head, vText, bucket)
     }
-    def contFmt(a: SigArg): String = a.vType match {
-      case Some(FloatType) | Some(DoubleType) | Some(_: DecimalType) =>
-        // C-printf %.6f incl. inf/nan spellings and exact-binary
-        // expansion for large magnitudes
-        s"__graft_fmt6(CAST(${a.vText} AS DOUBLE))"
-      case Some(BooleanType) =>
-        s"CAST(CAST(${a.vText} AS INT) AS STRING)"
-      case _ => s"CAST(${a.vText} AS STRING)"
-    }
+    def contFmt(a: SigArg): String = s"__graft_fmt_cont(${a.vText})"
     def labelFmt(a: SigArg): String = a.sk match {
       case "binary_label" =>
         s"CAST(CAST(CAST(${a.vText} AS BOOLEAN) AS INT) AS STRING)"
@@ -4770,7 +4723,7 @@ object GraftSql {
     // discrete hash text: NULL when the value is null or the bucket is
     // invalid (Discrete with bucket<=0/null yields a null slot)
     def dHashText(a: SigArg): Option[String] = {
-      val h = s"${farmFnFor(a.vType)}(${a.vText})"
+      val h = s"__graft_farm64(${a.vText})"
       a.bucket match {
         case None                       => Some(h)
         case Some(Some(b)) if b > 0     => Some(s"__graft_umod($h, ${b}L)")
@@ -4876,150 +4829,21 @@ object GraftSql {
     }
   }
 
-  /** Token-level rewrites for dialect surface Spark lacks:
-    *  - type-cast function names int16/int32/int64/bool
-    *  - `timestamp(x)` / `CAST(x AS timestamp)` under the int64-ms
-    *    model (docs date_and_time_types.md: timestamp(bigint) takes
-    *    MILLISECONDS, not Spark-cast seconds; strings are UTC+8 wall
-    *    clock) — const_query.yaml ids 5/7/9
-    *  - `date(ms)` = calendar date of the ms instant at UTC+8
+  /** Token-level rewrites for dialect surface Spark lacks. None needs
+    * an operand type: a call typed by its operands is renamed to its
+    * [[DialectFunctions]] builder, which the analyzer hands the
+    * resolved arguments.
+    *  - typed calls and casts → their builders (`timestamp(x)`,
+    *    `CAST(x AS BIGINT)`, `hour(x)`, `concat(...)`, the math
+    *    functions, ...; DialectFunctions.callRenames/castRenames)
     *  - `[NOT] LIKE/ILIKE pat ESCAPE 'e'` with arbitrary or empty
     *    escape → like_match_esc/ilike_match_esc UDFs (Spark restricts
     *    escape placement and rejects ESCAPE '')
     *  - IN lists mixing string and numeric literals compare
     *    numerically (simple_query.yaml in_predicate_type_cast_3/4)
     */
-  private[sql] def rewriteDialect(toks0: Vector[String],
-      resolveTy: String => Option[org.apache.spark.sql.types.DataType])
-      : Vector[String] = {
-    import org.apache.spark.sql.types._
-
-    def asBigint(v: Vector[String]): Vector[String] =
-      Vector("CAST", "(") ++ v ++ Vector("AS", "BIGINT", ")")
-
-    // the reference's timestamp domain starts at the epoch: a negative
-    // ms value yields NULL, not a pre-1970 instant (const_query.yaml
-    // ids 10/11 expect NULL for timestamp(-1))
-    def nonNegBigint(v: Vector[String]): Vector[String] = {
-      val b = asBigint(v)
-      Vector("(", "CASE", "WHEN", "(") ++ b ++
-        Vector(")", "<", "0L", "THEN", "CAST", "(", "NULL", "AS",
-          "BIGINT", ")", "ELSE") ++ b ++ Vector("END", ")")
-    }
-
-    // timestamp() returns a native TimestampType holding the correct
-    // instant; wall-clock strings parse at the reference's pinned GMT+8
-    // (date_and_time_types.md:10-14), integral operands are epoch MS
-    def tsWrap(v: Vector[String]): Vector[String] =
-      Vector("timestamp_millis", "(") ++ v ++ Vector(")")
-    def tsCall(inner: Vector[String]): Vector[String] =
-      if (inner.length == 1 && isNumericLit(inner.head))
-        tsWrap(asBigint(inner))
-      else if (inner.length == 1 && inner.head.equalsIgnoreCase("null"))
-        Vector("CAST", "(", "NULL", "AS", "TIMESTAMP", ")")
-      else if (inner.length == 1 && isQuoted(inner.head))
-        parseWallClockMs(stripQuotes(inner.head)) match {
-          case Some(ms) => tsWrap(Vector(ms.toString))
-          case None     => Vector("CAST", "(", "NULL", "AS", "TIMESTAMP", ")")
-        }
-      else resolveTy(inner.mkString(" ")) match {
-        case Some(TimestampType) => Vector("(") ++ inner ++ Vector(")")
-        case Some(StringType) | Some(DateType) =>
-          Vector("to_utc_timestamp", "(",
-            "to_timestamp", "(") ++ inner ++
-            Vector(")", ",", "'GMT+8'", ")")
-        case _ => tsWrap(nonNegBigint(inner))
-      }
-
-    def dateCall(inner: Vector[String]): Vector[String] = {
-      // date() accepts timestamp/string/date; the reference rejects it
-      // over every numeric type now that TIMESTAMP is a distinct type
-      // (test_type.yaml ids 26/27/28 expect-error for smallint/bigint/int)
-      val ty = resolveTy(inner.mkString(" "))
-      ty match {
-        case Some(ShortType) | Some(IntegerType) | Some(LongType) |
-            Some(FloatType) | Some(DoubleType) | Some(BooleanType) =>
-          throw new IllegalArgumentException(
-            "date() expects a timestamp/string/date operand, not " +
-              ty.get.toString)
-        case _ if inner.length == 1 && isNumericLit(inner.head) =>
-          throw new IllegalArgumentException(
-            "date() expects a timestamp/string/date operand, not a number")
-        case _ => ()
-      }
-      if (ty.contains(TimestampType))
-        // calendar date of the instant at the reference's GMT+8
-        Vector("CAST", "(", "from_utc_timestamp", "(") ++ inner ++
-          Vector(",", "'GMT+8'", ")", "AS", "DATE", ")")
-      else Vector("date", "(") ++ inner ++ Vector(")")
-    }
-
-    // cast-to-string: float/double use the C++ shortest rendering
-    // ("30", not Java's "30.0" — test_type.yaml ids 0/19). For typing
-    // purposes an inline `... OVER w` is stripped — the window changes
-    // WHICH rows aggregate, never the value type
-    // (test_udaf_function.yaml id 44 string(sum(c4) OVER w1)).
-    def stripOverForTyping(v: Vector[String]): Vector[String] = {
-      // nav window functions type as their first argument; the bare
-      // call (minus OVER) does not analyze standalone, so for typing
-      // substitute `lag(ts, 1) OVER w` → `( ts )` (autox usecase:
-      // bigint(lag(std_ts,1) over w1) must read epoch MS, not seconds)
-      val navFns = Set("lag", "lead", "at", "first_value", "last_value",
-        "nth_value", "nth_value_where")
-      val out = scala.collection.mutable.ArrayBuffer.empty[String]
-      def replaceNavCall(): Unit = {
-        if (out.isEmpty || out.last != ")") return
-        var d = 0; var j = out.length - 1; var open = -1
-        while (j >= 0 && open < 0) {
-          if (out(j) == ")") d += 1
-          if (out(j) == "(") { d -= 1; if (d == 0) open = j }
-          j -= 1
-        }
-        if (open <= 0 || !navFns(out(open - 1).toLowerCase)) return
-        val args = out.slice(open + 1, out.length - 1)
-        var depth = 0; var cut = args.length; var m = 0
-        while (m < args.length && cut == args.length) {
-          if (args(m) == "(") depth += 1
-          if (args(m) == ")") depth -= 1
-          if (args(m) == "," && depth == 0) cut = m
-          m += 1
-        }
-        val first = args.take(cut)
-        out.remove(open - 1, out.length - (open - 1))
-        out += "("; out ++= first; out += ")"
-      }
-      var k = 0
-      while (k < v.length) {
-        if (v(k).equalsIgnoreCase("OVER") && k + 1 < v.length) {
-          replaceNavCall()
-          if (v(k + 1) == "(") {
-            var d = 0; var j = k + 1; var stop = -1
-            while (j < v.length && stop < 0) {
-              if (v(j) == "(") d += 1
-              if (v(j) == ")") { d -= 1; if (d == 0) stop = j }
-              j += 1
-            }
-            k = if (stop < 0) v.length else stop + 1
-          } else k += 2
-        } else { out += v(k); k += 1 }
-      }
-      out.toVector
-    }
-    // ts → the GMT+8 wall clock, seconds precision
-    // (udf.cc:376 timestamp_to_string "%Y-%m-%d %H:%M:%S")
-    def tsWallText(pre: Vector[String]): Vector[String] =
-      Vector("date_format", "(", "from_utc_timestamp", "(") ++ pre ++
-        Vector(",", "'GMT+8'", ")", ",", "'yyyy-MM-dd HH:mm:ss'", ")")
-
-    def strCastText(pre: Vector[String]): Vector[String] =
-      resolveTy(stripOverForTyping(pre).mkString(" ")) match {
-        case Some(FloatType) =>
-          Vector("__graft_num2str_f32", "(") ++ pre ++ Vector(")")
-        case Some(DoubleType) =>
-          Vector("__graft_num2str_f64", "(") ++ pre ++ Vector(")")
-        case Some(TimestampType) => tsWallText(pre)
-        case _ => Vector("CAST", "(") ++ pre ++ Vector("AS", "STRING", ")")
-      }
+  private[sql] def rewriteDialect(toks0: Vector[String]): Vector[String] = {
+    import DialectFunctions.{callRenames, castRenames}
 
     // recursive descent over call trees (innermost args rewritten first)
     def go(ts: Vector[String]): Vector[String] = {
@@ -5032,35 +4856,31 @@ object GraftSql {
         if (isCall) {
           val close = matchClose(ts, i + 1)
           val inner = go(ts.slice(i + 2, close))
-          // CAST(ts AS <numeric>) reads the int64 MS value — int(ts)
-          // wraps 1590115420000 to 977520480, never epoch seconds
-          // (test_type.yaml ids 14-18/25)
-          val numCastNames = Map(
-            "smallint" -> "SMALLINT", "int" -> "INT", "integer" -> "INT",
-            "bigint" -> "BIGINT", "float" -> "FLOAT", "double" -> "DOUBLE",
-            "int16" -> "SMALLINT", "int32" -> "INT", "int64" -> "BIGINT")
-          def innerIsTs: Boolean =
-            resolveTy(stripOverForTyping(inner).mkString(" "))
-              .contains(TimestampType)
-          def msCastText(pre: Vector[String], target: String): Vector[String] =
-            Vector("CAST", "(", "unix_millis", "(") ++ pre ++
-              Vector(")", "AS", target, ")")
-          if (castFnRenames.contains(low)) {
-            val renamed = castFnRenames(low)
-            if (numCastNames.contains(renamed) && innerIsTs)
-              out ++= msCastText(inner, numCastNames(renamed))
-            else {
-              out += renamed; out += "("; out ++= inner; out += ")"
-            }
-          } else if (numCastNames.contains(low) && innerIsTs) {
-            out ++= msCastText(inner, numCastNames(low))
-          } else if (low == "cast" && inner.length >= 2 &&
-              numCastNames.contains(inner.last.toLowerCase) &&
-              inner(inner.length - 2).equalsIgnoreCase("as") &&
-              resolveTy(stripOverForTyping(inner.dropRight(2))
-                .mkString(" ")).contains(TimestampType)) {
-            out ++= msCastText(inner.dropRight(2),
-              numCastNames(inner.last.toLowerCase))
+          def lastIs(k: Int, t: String) =
+            inner.length > k && inner(inner.length - 1 - k).equalsIgnoreCase(t)
+          // CAST(x AS <type>) whose meaning depends on x's type; a
+          // VARCHAR(n) length is storage metadata (test_type.yaml ids
+          // 33-35; the inner varchar(n) already reads string(n))
+          val castTo: Option[(String, Int)] =
+            if (low != "cast") None
+            else if (lastIs(1, "as"))
+              castRenames.get(inner.last.toLowerCase).map((_, 2))
+            else if (lastIs(4, "as") && lastIs(3, "string") &&
+                inner.last == ")") Some(("__graft_string", 5))
+            else None
+          if (castTo.isDefined) {
+            out += castTo.get._1; out += "("
+            out ++= inner.dropRight(castTo.get._2); out += ")"
+          } else if (callRenames.contains(low)) {
+            out += callRenames(low); out += "("; out ++= inner; out += ")"
+          } else if (low == "bool") {
+            out += "boolean"; out += "("; out ++= inner; out += ")"
+          } else if (low == "count_where" && inner.headOption.contains("*") &&
+              inner.lift(1).contains(",")) {
+            // count_where(*, cond) counts rows: a star is not legal
+            // inside CASE (test_udaf_function.yaml id 17)
+            out += ts(i); out += "("; out += "1"; out ++= inner.tail
+            out += ")"
           } else if (low == "identity") {
             // identity(x) is the reference's pass-through marker
             // (udf/default_udf_library.cc identity; fz_sql.yaml id 0)
@@ -5122,26 +4942,6 @@ object GraftSql {
             // make_tuple builds the reference's tuple value (used as a
             // compound argument carrier) — Spark's struct is the analog
             out += "struct"; out += "("; out ++= inner; out += ")"
-          } else if (low == "cast" && inner.length >= 2 &&
-              inner(inner.length - 1).equalsIgnoreCase("timestamp") &&
-              inner(inner.length - 2).equalsIgnoreCase("as")) {
-            out ++= tsCall(inner.dropRight(2))
-          } else if (low == "cast" && inner.length >= 2 &&
-              (inner(inner.length - 1).equalsIgnoreCase("varchar") ||
-                inner(inner.length - 1).equalsIgnoreCase("string")) &&
-              inner(inner.length - 2).equalsIgnoreCase("as")) {
-            // VARCHAR is the dialect's alias for STRING
-            // (test_type.yaml ids 33-35)
-            out ++= strCastText(inner.dropRight(2))
-          } else if (low == "cast" && inner.length >= 5 &&
-              inner(inner.length - 1) == ")" &&
-              (inner(inner.length - 4).equalsIgnoreCase("varchar") ||
-                inner(inner.length - 4).equalsIgnoreCase("string")) &&
-              inner(inner.length - 5).equalsIgnoreCase("as")) {
-            // VARCHAR(n): the length is storage metadata, drop it
-            out ++= strCastText(inner.dropRight(5))
-          } else if (low == "string") {
-            out ++= strCastText(inner)
           } else if (low == "cast" && {
             var d = 0; var asAt = -1; var k = 0
             while (k < inner.length) {
@@ -5171,171 +4971,17 @@ object GraftSql {
             out += ")"
           } else if (low == "varchar") {
             out += "string"; out += "("; out ++= inner; out += ")"
-          } else if (low == "hash64" || low == "farm_fingerprint") {
-            // FarmHash Fingerprint64 over the operand's typed byte
-            // encoding (udf.cc:1444; literal_traits.h to_bytes_ref);
-            // a Timestamp hashes its int64 ms value
-            resolveTy(inner.mkString(" ")) match {
-              case Some(TimestampType) =>
-                out += "__graft_farm64_i64"
-                out += "("; out ++= Vector("unix_millis", "(") ++ inner ++
-                  Vector(")"); out += ")"
-              case t =>
-                out += farmFnFor(t)
-                out += "("; out ++= inner; out += ")"
-            }
           } else if (low == "csv" || low == "gcformat" || low == "libsvm") {
             // feature-signature instance formats expand to one pure
             // string expression (feature_signature_def.cc CSV/GCFormat/
             // LIBSVM; slot numbering is static at plan time)
-            out ++= tokenize(featureFormatText(low, inner, resolveTy))
-          } else if (low == "concat" || low == "concat_ws") {
-            // args stringify with the reference's renderings: ts → the
-            // GMT+8 wall clock, float/double → C++ shortest form
-            // ("30", not "30.0"); and concat_ws propagates NULL (Spark
-            // would silently skip null parts) — test_string.yaml ids 0/3
-            val as = splitTokenArgs(inner)
-            val rendered = as.map { a =>
-              resolveTy(a.mkString(" ")) match {
-                case Some(TimestampType | FloatType | DoubleType) =>
-                  strCastText(a)
-                case _ => a
-              }
-            }
-            def call: Vector[String] = {
-              val b = Vector.newBuilder[String]
-              b += ts(i); b += "("
-              rendered.zipWithIndex.foreach { case (a, ai) =>
-                if (ai > 0) b += ","
-                b ++= a
-              }
-              b += ")"
-              b.result()
-            }
-            if (low == "concat_ws" && as.length > 1) {
-              out ++= Vector("(", "CASE", "WHEN")
-              as.zipWithIndex.foreach { case (a, ai) =>
-                if (ai > 0) out += "OR"
-                out ++= Vector("(", "(") ++ a ++
-                  Vector(")", "IS", "NULL", ")")
-              }
-              out ++= Vector("THEN", "CAST", "(", "NULL", "AS", "STRING",
-                ")", "ELSE") ++ call ++ Vector("END", ")")
-            } else out ++= call
-          } else if (low == "week") {
-            // reference week() = ISO week number (udf_query.yaml id 4)
-            out += "weekofyear"; out += "("; out ++= inner; out += ")"
-          } else if (low == "date_format" &&
-              splitTokenArgs(inner).length == 2 &&
-              isQuoted(splitTokenArgs(inner)(1).headOption.getOrElse(""))) {
-            // C-style format codes over the GMT+8 wall clock
-            // (test_date.yaml id 0; udf date_format %Y-%m-%d %H:%M:%S)
-            val as = splitTokenArgs(inner)
-            val fmt = unescapeSqlLiteral(stripQuotes(as(1).head))
-              .replace("%Y", "yyyy").replace("%m", "MM").replace("%d", "dd")
-              .replace("%H", "HH").replace("%M", "mm").replace("%S", "ss")
-            val a0 = as(0)
-            val wrapped: Vector[String] =
-              resolveTy(a0.mkString(" ")) match {
-                case Some(TimestampType) =>
-                  Vector("from_utc_timestamp", "(") ++ a0 ++
-                    Vector(",", "'GMT+8'", ")")
-                case Some(DateType) | None | Some(NullType) => a0
-                case Some(t) =>
-                  // only timestamp/date operands format — including
-                  // bigint now that TIMESTAMP is a distinct type
-                  // (test_date.yaml id 1 expects failure otherwise)
-                  throw new IllegalArgumentException(
-                    s"illegal operand type $t for date_format")
-              }
-            out += "date_format"; out += "("
-            out ++= wrapped; out += ","; out += quoteSqlLiteral(fmt)
-            out += ")"
-          } else if ((low == "like_match" || low == "ilike_match") &&
-              splitTokenArgs(inner).exists(a =>
-                a.length == 1 && a.head.equalsIgnoreCase("null"))) {
-            // untyped NULL literal arguments fail the reference's
-            // overload resolution (test_like_match.yaml id 17)
-            throw new IllegalArgumentException(
-              s"$low: NULL literal argument is not allowed")
-          } else if ((low == "like_match" || low == "ilike_match") && {
-            val t = resolveTy(splitTokenArgs(inner).head.mkString(" "))
-            t.isDefined && !t.contains(StringType) && !t.contains(NullType)
-          }) {
-            // the matched operand must be a STRING
-            // (test_like_match.yaml ids 19-26)
-            throw new IllegalArgumentException(
-              s"illegal operand type for '$low' (string required)")
+            out ++= tokenize(featureFormatText(low, inner))
           } else if (low == "count" && inner.length == 1 &&
               isNumericLit(inner.head)) {
             // the reference rejects count over a constant
             // (v040/test_udaf.yaml id 1 "un-support const node")
             throw new IllegalArgumentException(
               "count over a constant is unsupported (un-support const node)")
-          } else if (low == "atan" && splitTokenArgs(inner).length == 2) {
-            // the reference's atan(Y, X) two-arg form IS atan2
-            // (udfs_8h.md atan: "atan(Y, X) is equivalent to atan2")
-            out += "atan2"; out += "("; out ++= inner; out += ")"
-          } else if (mathFns1(low)) {
-            // math functions: bool operands coerce to double (except
-            // the trig/sqrt family, which the reference rejects —
-            // test_calculate.yaml id 8); string and date operands are
-            // rejected everywhere (ids 0/5/7/9, both arguments)
-            val as = splitTokenArgs(inner)
-            as.foreach { a =>
-              val t = resolveTy(a.mkString(" "))
-              t match {
-                case Some(StringType) | Some(DateType) |
-                    Some(TimestampType) =>
-                  throw new IllegalArgumentException(
-                    s"illegal operand type ${t.get} for '$low'")
-                case Some(BooleanType) if mathNoBool(low) =>
-                  throw new IllegalArgumentException(
-                    s"illegal operand type boolean for '$low'")
-                case _ => ()
-              }
-            }
-            val t0 = resolveTy(as.head.mkString(" "))
-            if (t0.contains(BooleanType) &&
-                Set("log", "ln", "log2", "log10")(low) && as.length == 1) {
-              // log(bool): log(1)=0, log(0)=-Inf — Spark's non-ANSI
-              // log(0) would be NULL (test_calculate.yaml id 4)
-              out ++= tokenize(s"(CASE WHEN (${as.head.mkString(" ")}) " +
-                "THEN 0.0D ELSE CAST('-Infinity' AS DOUBLE) END)")
-            } else if (t0.contains(BooleanType)) {
-              out += ts(i); out += "("
-              out ++= Vector("CAST", "(") ++ as.head ++
-                Vector("AS", "DOUBLE", ")")
-              as.tail.foreach { a => out += ","; out ++= a }
-              out += ")"
-            } else { out += ts(i); out += "("; out ++= inner; out += ")" }
-          } else if (low == "strcmp") {
-            // strcmp demands two STRING operands (test_string.yaml 5/6)
-            splitTokenArgs(inner).foreach { a =>
-              val t = resolveTy(a.mkString(" "))
-              if (t.isDefined && !t.contains(StringType) &&
-                  !t.contains(NullType))
-                throw new IllegalArgumentException(
-                  s"illegal operand type ${t.get} for strcmp")
-            }
-            out += ts(i); out += "("; out ++= inner; out += ")"
-          } else if (low == "substr" || low == "substring") {
-            // substr demands a STRING source (test_string.yaml id 8)
-            val t = resolveTy(splitTokenArgs(inner).head.mkString(" "))
-            if (t.isDefined && !t.contains(StringType) &&
-                !t.contains(NullType))
-              throw new IllegalArgumentException(
-                s"illegal operand type ${t.get} for '$low'")
-            out += ts(i); out += "("; out ++= inner; out += ")"
-          } else if (low == "at" && splitTokenArgs(inner).length == 2 &&
-              resolveTy(stripOverForTyping(
-                splitTokenArgs(inner).head).mkString(" "))
-                .exists(_.isInstanceOf[org.apache.spark.sql.types.ArrayType])) {
-            // scalar at(array, i): 0-based element access
-            // (test_udf_function.yaml id 7)
-            val as = splitTokenArgs(inner)
-            out ++= tokenize(s"element_at(${as(0).mkString(" ")}, " +
-              s"(${as(1).mkString(" ")}) + 1)")
           } else if (low == "isin" || low == "array_contains") {
             // null-safe membership: the reference's contains treats a
             // NULL probe/element as an ordinary value and returns
@@ -5379,58 +5025,6 @@ object GraftSql {
               out ++= kv(0); out += ","; out ++= kv(1)
             }
             out += ")"
-          } else if (low == "array_combine") {
-            // array_combine(delim, a1..an): delimiter-joined CARTESIAN
-            // combinations in argument order, null elements dropped,
-            // every element rendered as string; null delimiter joins
-            // without a separator (udf_query.yaml array_combine*)
-            val as = splitTokenArgs(inner)
-            val d = s"coalesce(CAST((${as.head.mkString(" ")}) AS STRING), '')"
-            val arrs = as.tail.map(_.mkString(" "))
-            // element rendering is type-aware: timestamp elements print
-            // their GMT+8 wall clock (udf_query.yaml array_combine_2 c2)
-            def clean(a: String) = {
-              val probe = {
-                val t = a.trim
-                if (t.startsWith("[") && t.endsWith("]"))
-                  "array ( " + t.drop(1).dropRight(1) + " )"
-                else t
-              }
-              val render = resolveTy(probe) match {
-                case Some(ArrayType(TimestampType, _)) =>
-                  "date_format(from_utc_timestamp(__c, 'GMT+8'), " +
-                    "'yyyy-MM-dd HH:mm:ss')"
-                case _ => "CAST(__c AS STRING)"
-              }
-              s"filter(transform($a, __c -> $render), __c -> __c IS NOT NULL)"
-            }
-            val vars = arrs.indices.map(k => s"__e$k")
-            def nest(k: Int): String =
-              if (k == arrs.length - 1)
-                s"transform(${clean(arrs(k))}, ${vars(k)} -> " +
-                  s"concat_ws($d, ${vars.mkString(", ")}))"
-              else
-                s"flatten(transform(${clean(arrs(k))}, ${vars(k)} -> ${nest(k + 1)}))"
-            out ++= tokenize(nest(0))
-          } else if ((low == "like_match" || low == "ilike_match") &&
-              splitTokenArgs(inner).length == 3) {
-            // the 2-arg UDF registration cannot overload; the 3-arg
-            // form routes to the _esc variant (udf_query.yaml like_udf)
-            out += (if (low == "like_match") "like_match_esc"
-                    else "ilike_match_esc")
-            out += "("; out ++= inner; out += ")"
-          } else if (low == "timestamp") out ++= tsCall(inner)
-          else if (low == "date") out ++= dateCall(inner)
-          else if (low == "unix_timestamp" && inner.nonEmpty &&
-              (isQuoted(inner.head) ||
-                resolveTy(inner.mkString(" ")).contains(StringType))) {
-            // unix_timestamp over a wall-clock STRING: the corpus
-            // convention reads those at UTC+8 (Tables loader,
-            // tsCall) — Spark's builtin would use the session zone.
-            // Date/timestamp operands keep the builtin (oracle-pinned).
-            out ++= Vector("floor", "(", "unix_millis", "(",
-              "to_utc_timestamp", "(", "to_timestamp", "(") ++ inner ++
-              Vector(")", ",", "'GMT+8'", ")", ")", "/", "1000", ")")
           } else if (low == "get_json_object" &&
               splitTokenArgs(inner).length == 2 &&
               splitTokenArgs(inner)(1).length == 1 &&
@@ -5683,61 +5277,6 @@ object GraftSql {
     toks.lastOption.contains("*") && (toks.length == 1 ||
       (toks.length >= 3 && toks(toks.length - 2) == "."))
   private def starCol(toks: Vector[String]): Column = col(toks.mkString(""))
-
-  private val dateFns = Set("month", "year", "day", "dayofmonth",
-    "dayofweek", "dayofyear", "weekofyear", "week", "hour", "minute",
-    "second")
-
-  /** The engine's canonical timestamp is an int64-ms column (SURVEY
-    * §1.2); Spark's date functions want TIMESTAMP. Wrap integral-typed
-    * arguments of date functions in timestamp_millis so dialect queries
-    * like month(std_ts + col2) analyze (udaf_query.yaml id 2). */
-  private def coerceDateFns(toks: Vector[String], df: DataFrame): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var i = 0
-    while (i < toks.length) {
-      if (dateFns(toks(i).toLowerCase) && i + 1 < toks.length &&
-          toks(i + 1) == "(") {
-        val fnLow = toks(i).toLowerCase
-        val close = matchClose(toks, i + 1)
-        val inner = coerceDateFns(toks.slice(i + 2, close), df)
-        // the reference's date parts accept TIMESTAMP (int64 ms here)
-        // and — except hour/minute/second — DATE; anything else is a
-        // type error (test_date.yaml ids 3/5)
-        locally {
-          import org.apache.spark.sql.types._
-          resolveTypeCached(df, inner.mkString(" ")) match {
-            case Some(DateType)
-                if Set("hour", "minute", "second")(fnLow) =>
-              throw new IllegalArgumentException(
-                s"illegal operand type date for '$fnLow'")
-            case Some(t @ (StringType | ShortType | IntegerType |
-                FloatType | DoubleType | BooleanType)) =>
-              throw new IllegalArgumentException(
-                s"illegal operand type $t for '$fnLow'")
-            case _ => ()
-          }
-        }
-        out += toks(i); out += "("
-        resolveTypeCached(df, inner.mkString(" ")) match {
-          case Some(org.apache.spark.sql.types.LongType) =>
-            // ms-epoch operand: date parts read the GMT+8 wall clock
-            // (date_and_time_types.md; udf_query.yaml id 5 hour=10)
-            out ++= Vector("from_utc_timestamp", "(", "timestamp_millis",
-              "(") ++ inner ++ Vector(")", ",", "'GMT+8'", ")")
-          case Some(org.apache.spark.sql.types.TimestampType) =>
-            // native ts: shift the instant so UTC field extraction
-            // reads the GMT+8 wall clock
-            out ++= Vector("from_utc_timestamp", "(") ++ inner ++
-              Vector(",", "'GMT+8'", ")")
-          case _ => out ++= inner
-        }
-        out += ")"
-        i = close + 1
-      } else { out += toks(i); i += 1 }
-    }
-    out.result()
-  }
 
   private val cmpOpSet = Set("=", "==", "!=", "<>", "<", "<=", ">", ">=")
   private val arithOpSet = Set("+", "-", "*", "/", "%", "mod", "div")
@@ -6143,17 +5682,14 @@ object GraftSql {
   }
 
   // ------------------------------------------------------------------
-  // Plan-time type probes, memoized. The dialect rewrites
-  // (rewriteDialect / coerceOperands / coerceDateFns) resolve operand
-  // types by analyzing tiny `df.select(expr(text))` plans — dozens per
-  // query, each a full analyzer pass. The result is deterministic per
-  // (resolved output attributes, text), so memoize globally: repeated
-  // planning of the same query (request serving, benchmark re-runs)
-  // skips every probe. Mirrors the reference's compiled-query LRU
-  // (hybridse/src/vm/engine.cc EngineLRUCache) at the analysis level.
+  // Plan-time type probes, memoized. coerceOperands and the window,
+  // join and aggregate planners resolve operand types by analyzing
+  // tiny `df.select(expr(text))` plans, each a full analyzer pass. The
+  // result is deterministic per (resolved output attributes, text) and
+  // session function registry, so each session memoizes its own
+  // (SessionState.typeProbes); CREATE/DROP FUNCTION clears it, since a
+  // function's new definition changes what the same text resolves to.
   // ------------------------------------------------------------------
-  private val typeProbeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Option[org.apache.spark.sql.types.DataType]]()
   // full rendered attribute list, not its hashCode — a 32-bit collision
   // between two schemas probing the same text would silently return the
   // wrong type and mis-rewrite the query
@@ -6163,8 +5699,9 @@ object GraftSql {
       .mkString(";")
   private[sql] def resolveTypeCached(df: DataFrame, text: String)
       : Option[org.apache.spark.sql.types.DataType] = {
-    if (typeProbeCache.size > 65536) typeProbeCache.clear()
-    typeProbeCache.computeIfAbsent((probeKey(df), text), _ =>
+    val memo = SessionState.of(df.sparkSession).typeProbes
+    if (memo.size > 65536) memo.clear()
+    memo.getOrElseUpdate((probeKey(df), text),
       try Some(df.select(expr(text)).schema.head.dataType)
       catch { case _: Throwable => None })
   }
@@ -6184,15 +5721,11 @@ object GraftSql {
         spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         graft.functions.GraftScalars.registerAll(spark)
         graft.functions.GraftAggregates.registerAll(spark)
+        DialectFunctions.register(spark)
       }
     }
   }
 
-  private val whereBases = Set("sum", "count", "avg", "min", "max")
-  private val intTypes: Set[org.apache.spark.sql.types.DataType] = Set(
-    org.apache.spark.sql.types.IntegerType,
-    org.apache.spark.sql.types.ShortType,
-    org.apache.spark.sql.types.LongType)
 
   /** split tokens at depth-0 commas */
   private def splitTokenArgs(toks: Vector[String]): Seq[Vector[String]] = {
@@ -6209,23 +5742,16 @@ object GraftSql {
     out.result()
   }
 
-  /** Dialect aggregate families in arbitrary expression positions:
-    *  - {sum,count,avg,min,max}_where(v, cond) -> base(CASE WHEN cond
-    *    THEN v END) (udf_registry *_where UDAFs; group_query.yaml id 7)
-    *  - {sum,min,max}_cate(v, k) over an integral v renames to the
-    *    integer-formatting registration (group_query.yaml id 8 expects
-    *    "aa:160" for a bigint value column). */
-  private def rewriteAggFns(toks: Vector[String], df: DataFrame,
+  /** CREATE AGGREGATE FUNCTION calls expand to their codegen'd
+    * higher-order fold (see registerUserFn scaladoc). In a grouped
+    * position (`grouped`: GROUP BY, or a SELECT with no window) `sum`
+    * is reached through its dialect builder, which keeps a TIMESTAMP
+    * operand's type (DialectFunctions `__graft_sum`); the window
+    * planner dispatches the plain name itself. The typed aggregate
+    * families (`*_where`, `*_cate`, top-n, ...) are DialectFunctions
+    * builders under their own names. */
+  private def expandUserAggs(toks: Vector[String], spark: SparkSession,
       winBound: Boolean = false, grouped: Boolean = false): Vector[String] = {
-    // a TIMESTAMP category key renders as its GMT+8 wall clock
-    // ("2020-05-29 15:56:30":v — test_udaf_function ids 20-24/27-31)
-    def tsKeyRender(a: Vector[String]): Vector[String] =
-      resolveTypeCached(df, a.mkString(" ")) match {
-        case Some(org.apache.spark.sql.types.TimestampType) =>
-          Vector("date_format", "(", "from_utc_timestamp", "(") ++ a ++
-            Vector(",", "'GMT+8'", ")", ",", "'yyyy-MM-dd HH:mm:ss'", ")")
-        case _ => a
-      }
     val out = Vector.newBuilder[String]
     var i = 0
     while (i < toks.length) {
@@ -6233,7 +5759,7 @@ object GraftSql {
       val isCall = i + 1 < toks.length && toks(i + 1) == "("
       val userAgg =
         if (isCall)
-          SessionState.of(df.sparkSession).userFns.get(t).filter(_.isAggregate)
+          SessionState.of(spark).userFns.get(t).filter(_.isAggregate)
           // `fn(v) OVER w` belongs to the window planner (the window
           // dispatch folds the frame array) — only bare calls expand
           // to the grouped collect_list fold here. The projection's
@@ -6248,267 +5774,17 @@ object GraftSql {
               .exists(_.equalsIgnoreCase("over")))
         else None
       if (userAgg.isDefined) {
-        // registered CREATE AGGREGATE FUNCTION: expand the call site to
-        // its codegen'd higher-order fold (see registerUserFn scaladoc)
         val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
+        val args = splitTokenArgs(expandUserAggs(toks.slice(i + 2, close), spark))
         require(args.length == userAgg.get.params.length,
           s"$t expects ${userAgg.get.params.length} argument(s)")
         // emitted as ONE opaque token: the fold body holds lambda
         // arrows and literals the dialect tokenizer must not re-split
         out += udafGroupedSql(userAgg.get, args.head.mkString(" "))
         i = close + 1
-      } else if (isCall && grouped &&
-          Set("distinct_count", "topn_frequency", "top", "ew_avg",
-            "heavy_hitters")(t) &&
-          // belt-and-braces: never touch a window-bound call (grouped
-          // selects cannot carry OVER in this dialect, but guard anyway)
-          !toks.lift(matchClose(toks, i + 1) + 1)
-            .exists(_.equalsIgnoreCase("over"))) {
-        import org.apache.spark.sql.types._
-        val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
-        val argSql = args.map(_.mkString(" "))
-        t match {
-          case "distinct_count" =>
-            require(args.length == 1, "distinct_count expects (value)")
-            val x0 = argSql.head
-            // NULL counts as a distinct value (test_udaf_function id 5);
-            // a bool NULL reads as false first (id 6)
-            val x = if (resolveTypeCached(df, x0).contains(BooleanType))
-              s"coalesce($x0, false)" else x0
-            out += s"( count ( DISTINCT $x ) + " +
-              s"CAST(max(CASE WHEN ($x) IS NULL THEN 1 ELSE 0 END) AS BIGINT) )"
-          case "topn_frequency" =>
-            require(args.length == 2, "topn_frequency expects (value, n)")
-            val n = argSql(1).trim.toInt
-            // the frame kernel's topn_frequency rule (count desc,
-            // then value asc) over the group's collected values;
-            // grouped groups always have rows, so short key lists pad
-            // with "NULL" to n entries
-            val vv = s"collect_list(CAST(${argSql.head} AS STRING))"
-            out += "array_join(concat(" +
-              s"slice(transform(array_sort(transform(array_distinct($vv), " +
-              s"__d -> struct(-size(filter($vv, __y -> __y = __d)) AS negc, " +
-              s"__d AS k))), __e -> __e.k), 1, $n), " +
-              s"array_repeat('NULL', greatest($n - size(array_distinct($vv)), 0))" +
-              "), ',')"
-          case "top" =>
-            require(args.length == 2, "top expects (value, k)")
-            val k = argSql(1).trim.toInt
-            val integral = resolveTypeCached(df, argSql.head).exists(intTypes)
-            val fmt =
-              if (integral) "CAST(CAST(__x AS BIGINT) AS STRING)"
-              else "format_string('%.6f', CAST(__x AS DOUBLE))"
-            out += "array_join(transform(slice(reverse(array_sort(" +
-              s"collect_list(${argSql.head}))), 1, $k), __x -> $fmt), ',')"
-          case "ew_avg" =>
-            // exponential weights need a row order; grouped aggregation
-            // has none (the reference iterates its ts index) — direct
-            // users to the windowed form
-            throw new IllegalArgumentException(
-              "ew_avg requires an ordered frame: use ew_avg(value, alpha) OVER w")
-          case "heavy_hitters" =>
-            // engine extension (pipeline surface in SQL): Misra–Gries
-            // heavy-hitters sketch as a grouped aggregate —
-            // heavy_hitters(x, k) → map<string, bigint> of ≤k survivors
-            // with the mergeable-summaries undercount guarantee
-            // (functions/Aggregates.HeavyHitters). k counters shuffle
-            // per partition instead of every distinct term.
-            require(args.length == 2, "heavy_hitters expects (value, k)")
-            val k = argSql(1).trim.toInt
-            require(k >= 1, s"heavy_hitters capacity must be >= 1, got $k")
-            out += s"( __graft_heavy_hitters(CAST(${argSql.head} " +
-              s"AS STRING), $k) ).m"
-        }
-        i = close + 1
-      } else if (isCall && t.endsWith("_where") &&
-          whereBases(t.stripSuffix("_where"))) {
-        val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
-        require(args.length == 2, s"$t expects (value, condition)")
-        // sum/avg/max/min_where take NUMERIC values only
-        // (test_udaf_function.yaml id 18)
-        if (t != "count_where") {
-          import org.apache.spark.sql.types._
-          resolveTypeCached(df, args(0).mkString(" ")) match {
-            case Some(v @ (StringType | DateType | BooleanType |
-                TimestampType)) =>
-              throw new IllegalArgumentException(
-                s"illegal value type $v for '$t'")
-            case _ => ()
-          }
-        }
-        // count_where(*, cond) counts rows: a star is not legal inside
-        // CASE (test_udaf_function.yaml id 17)
-        val v0 = if (args(0) == Vector("*")) Vector("1") else args(0)
-        out += t.stripSuffix("_where")
-        out ++= Vector("(", "CASE", "WHEN") ++ args(1) ++
-          Vector("THEN") ++ v0 ++ Vector("END", ")")
-        i = close + 1
-      } else if (isCall &&
-          (t.startsWith("top_n_key_") || t.startsWith("top_n_value_")) &&
-          (t.endsWith("_cate_where") || t.endsWith("_ratio_cate"))) {
-        // top_n_{key|value}_{m}_cate_where(v, cond, k, n) and the
-        // ratio variants → the n-aware SQL UDAFs over a
-        // condition-masked key (sum_by_category_def.cc:275-305;
-        // key variants order by key DESC, value variants by aggregate
-        // value DESC; ratio = per-key row share)
-        val byValue = t.startsWith("top_n_value_")
-        val m = t.stripPrefix("top_n_key_").stripPrefix("top_n_value_")
-          .stripSuffix("_cate_where").stripSuffix("_cate")
-        val fam = if (byValue) "topnv" else "topnk"
-        val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
-        require(args.length == 4, s"$t expects (value, cond, key, n)")
-        // type rules (test_udaf_function.yaml ids 39/40): numeric
-        // values only; float/double/bool keys rejected
-        locally {
-          import org.apache.spark.sql.types._
-          // count/ratio ignore the value's magnitude — any type counts
-          if (m != "count" && m != "ratio")
-            resolveTypeCached(df, args(0).mkString(" ")) match {
-              case Some(v @ (StringType | DateType | BooleanType |
-                  TimestampType)) =>
-                throw new IllegalArgumentException(
-                  s"illegal value type $v for '$t'")
-              case _ => ()
-            }
-          resolveTypeCached(df, args(2).mkString(" ")) match {
-            case Some(v @ (FloatType | DoubleType | BooleanType)) =>
-              throw new IllegalArgumentException(
-                s"illegal key type $v for '$t'")
-            case _ => ()
-          }
-        }
-        if (m == "ratio") {
-          // ratio = per-key fraction of rows matching the condition
-          // (matched/total) — exactly an AVG over the 0/1 indicator
-          // with the key UNmasked (test_udaf_function.yaml id 66)
-          out += s"__graft_${fam}_avg"
-          out ++= Vector("(", "CAST", "(") ++ tsKeyRender(args(2)) ++
-            Vector("AS", "STRING", ")", ",",
-              "CAST", "(", "CASE", "WHEN") ++ args(1) ++
-            Vector("THEN", "1.0D", "ELSE", "0.0D", "END",
-              "AS", "DOUBLE", ")", ",", "CAST", "(") ++
-            args(3) ++ Vector("AS", "INT", ")", ")")
-        } else {
-          val integral =
-            resolveTypeCached(df, args(0).mkString(" ")).exists(intTypes)
-          out += (if (integral) s"__graft_${fam}_${m}_int"
-                  else s"__graft_${fam}_$m")
-          // count mode: only the value's NULL-ness matters (the value
-          // may be any type — id 62 counts a string column)
-          val vToks: Vector[String] =
-            if (m == "count")
-              Vector("CAST", "(", "CASE", "WHEN", "(") ++ args(0) ++
-                Vector(")", "IS", "NOT", "NULL", "THEN", "1.0D", "END",
-                  "AS", "DOUBLE", ")")
-            else Vector("CAST", "(") ++ args(0) ++
-              Vector("AS", "DOUBLE", ")")
-          out ++= Vector("(", "CAST", "(", "CASE", "WHEN") ++ args(1) ++
-            Vector("THEN") ++ tsKeyRender(args(2)) ++
-            Vector("END", "AS", "STRING", ")", ",") ++ vToks ++
-            Vector(",", "CAST", "(") ++
-            args(3) ++ Vector("AS", "INT", ")", ")")
-        }
-        i = close + 1
-      } else if (isCall && t.endsWith("_cate_where") &&
-          Set("sum", "count", "avg", "min", "max")(
-            t.stripSuffix("_cate_where"))) {
-        // {m}_cate_where(v, cond, k): the condition masks the KEY —
-        // non-matching rows contribute no category
-        // (sum_by_category_def.cc CateWhere; q_cate_where's shape)
-        val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
-        require(args.length == 3, s"$t expects (value, cond, key)")
-        out ++= rewriteAggFns(
-          Vector(t.stripSuffix("_where"), "(") ++ args(0) ++
-            Vector(",", "CASE", "WHEN") ++ args(1) ++
-            Vector("THEN") ++ tsKeyRender(args(2)) ++
-            Vector("END", ")"), df)
-        i = close + 1
-      } else if (isCall && t == "topn_frequency" && {
-        val close = matchClose(toks, i + 1)
-        splitTokenArgs(toks.slice(i + 2, close)).headOption.exists(a =>
-          resolveTypeCached(df, a.mkString(" ")) match {
-            case Some(org.apache.spark.sql.types.FloatType |
-                org.apache.spark.sql.types.DoubleType) => true
-            case _ => false
-          })
-      }) {
-        // float/double keys render with C printf %f ("1.100000")
-        // in the reference's topn_frequency output
-        // (test_feature_zero_function.yaml id 4 r4/r5)
-        val close = matchClose(toks, i + 1)
-        val as = splitTokenArgs(rewriteAggFns(toks.slice(i + 2, close), df))
-        out += "topn_frequency"; out += "("
-        // NULL stays NULL — format_string would print "null"
-        out ++= Vector("CASE", "WHEN", "(") ++ as.head ++
-          Vector(")", "IS", "NULL", "THEN", "CAST", "(", "NULL", "AS",
-            "STRING", ")", "ELSE", "format_string", "(", "'%f'", ",") ++
-          as.head ++ Vector(")", "END")
-        as.tail.foreach { a => out += ","; out ++= a }
-        out += ")"
-        i = close + 1
-      } else if (isCall && t == "sum" && {
-        val close = matchClose(toks, i + 1)
-        resolveTypeCached(df, toks.slice(i + 2, close).mkString(" "))
-          .contains(org.apache.spark.sql.types.TimestampType)
-      }) {
-        // sum over TIMESTAMP returns a TIMESTAMP of the summed ms
-        // (test_udaf_function.yaml id 7 sum-timestamp); an immediately
-        // following OVER clause stays inside the timestamp_millis wrap
-        val close = matchClose(toks, i + 1)
-        val arg = rewriteAggFns(toks.slice(i + 2, close), df)
-        var end = close
-        if (close + 1 < toks.length &&
-            toks(close + 1).equalsIgnoreCase("OVER"))
-          end = if (close + 2 < toks.length && toks(close + 2) == "(")
-            matchClose(toks, close + 2)
-          else close + 2
-        out ++= Vector("timestamp_millis", "(", "sum", "(",
-          "unix_millis", "(") ++ arg ++ Vector(")", ")") ++
-          toks.slice(close + 1, end + 1) ++ Vector(")")
-        i = end + 1
-      } else if (isCall && t.endsWith("_cate") &&
-          Set("sum", "count", "avg", "min", "max")(t.stripSuffix("_cate"))) {
-        val close = matchClose(toks, i + 1)
-        val args = splitTokenArgs(toks.slice(i + 2, close))
-        // type rules (test_udaf_function.yaml ids 25/26): numeric
-        // values; no float/double/bool keys
-        locally {
-          import org.apache.spark.sql.types._
-          args.headOption.foreach { a =>
-            resolveTypeCached(df, a.mkString(" ")) match {
-              case Some(v @ (StringType | DateType | BooleanType |
-                  TimestampType)) =>
-                throw new IllegalArgumentException(
-                  s"illegal value type $v for '$t'")
-              case _ => ()
-            }
-          }
-          args.lift(1).foreach { a =>
-            resolveTypeCached(df, a.mkString(" ")) match {
-              case Some(v @ (FloatType | DoubleType | BooleanType)) =>
-                throw new IllegalArgumentException(
-                  s"illegal key type $v for '$t'")
-              case _ => ()
-            }
-          }
-        }
-        val integral = args.headOption.exists { a =>
-          resolveTypeCached(df, a.mkString(" ")).exists(intTypes)
-        }
-        val renamed = Set("sum", "min", "max")(t.stripSuffix("_cate"))
-        out += (if (integral && renamed) s"__graft_$t" + "_int" else t)
-        out += "("
-        args.zipWithIndex.foreach { case (a, ai) =>
-          if (ai > 0) out += ","
-          out ++= (if (ai == 1) tsKeyRender(a) else a)
-        }
-        out += ")"
-        i = close + 1
+      } else if (grouped && isCall && t == "sum" &&
+          !toks.lift(i + 2).exists(_.equalsIgnoreCase("distinct"))) {
+        out += "__graft_sum"; i += 1
       } else { out += toks(i); i += 1 }
     }
     out.result()
@@ -6567,9 +5843,8 @@ object GraftSql {
     // collide with projections that re-select the group key by name
     val hidden = s.projs.indices.map(i => s"__graft_p$i")
     val aggCols = s.projs.zipWithIndex.map { case (pr, i) =>
-      expr(rewriteAggFns(
-        coerceDateFns(coerceOperands(pr.tokens, df), df), df,
-        grouped = true).mkString(" "))
+      expr(expandUserAggs(coerceOperands(pr.tokens, df),
+        df.sparkSession, grouped = true).mkString(" "))
         .as(hidden(i)) }
     val hid = "__graft_having"
     val withHaving = s.having match {
@@ -6580,9 +5855,8 @@ object GraftSql {
         // condition gets the same grouped-dialect rewrite as the
         // projections: `HAVING count_where(c4, c3>20) > 1` is legal
         // (integration_test/select/test_full_table.yaml ids 3/4)
-        val hExpr = expr(rewriteAggFns(
-          coerceDateFns(coerceOperands(tokenize(h), df), df), df,
-          grouped = true).mkString(" "))
+        val hExpr = expr(expandUserAggs(coerceOperands(tokenize(h), df),
+          df.sparkSession, grouped = true).mkString(" "))
         grouped.agg(aggCols.head, aggCols.tail :+ hExpr.as(hid): _*)
           .filter(col(hid))
     }
@@ -6693,6 +5967,11 @@ object GraftSql {
     "ew_avg", "top", "drawdown") ++
     windowSplitFns.keySet
 
+  /** whether expression text references an extracted window result
+    * (`__graft_wN`, extractWinCalls) */
+  private[sql] def refsWindowResult(t: String): Boolean =
+    "__graft_w[0-9]".r.findFirstIn(t).isDefined
+
   /** split an argument list at top-level commas */
   private[sql] def splitArgs(t: String): Seq[String] = {
     val out = Seq.newBuilder[String]
@@ -6756,15 +6035,9 @@ object GraftSql {
         "fz_window_split_by_key", "fz_window_split_by_value") ++
       aggHeads.map(_ + "_cate")
 
-    // the dialect rewrite may already have renamed a cate/top-n family
-    // call to its registered __graft_* UDAF before extraction
-    // (auto_gen_case_0) — those are window heads too; so are the
-    // session's CREATE AGGREGATE FUNCTION registrations
+    // so are the session's CREATE AGGREGATE FUNCTION registrations
     def isWinHead(t: String): Boolean = winHeads(t) ||
       SessionState.of(base.sparkSession).userFns.get(t).exists(_.isAggregate) ||
-      t.startsWith("__graft_topnk_") ||
-      t.startsWith("__graft_topnv_") ||
-      (t.startsWith("__graft_") && t.endsWith("_cate_int")) ||
       (t.startsWith("top_n_") &&
         (t.endsWith("_cate") || t.endsWith("_cate_where")))
 
@@ -6891,9 +6164,8 @@ object GraftSql {
     }
 
     val outerTokens: Seq[Vector[String]] = s.projs.map { pr =>
-      val pt = rewriteAggFns(
-        coerceDateFns(coerceOperands(pr.tokens, base), base), base,
-        winBound = pr.over.isDefined)
+      val pt = expandUserAggs(coerceOperands(pr.tokens, base),
+        base.sparkSession, winBound = pr.over.isDefined)
       pr.over match {
         case Some(ref) =>
           // the aggregate's argument may itself nest a window call
@@ -6931,7 +6203,18 @@ object GraftSql {
       }
     }
 
-    (outerTokens, winExprs.result())
+    // sum over TIMESTAMP sums the int64 ms and returns a TIMESTAMP of
+    // the total (test_udaf_function.yaml id 7 sum-timestamp)
+    val tsSums = winExprs.result().collect { case (id, fnText, _)
+      if splitCall(fnText)._1 == "sum" && resolveTypeCached(base,
+        splitCall(fnText)._2).contains(org.apache.spark.sql.types.TimestampType) => id
+    }.toSet
+    (outerTokens.map(_.flatMap(t =>
+      if (tsSums(t)) Vector("timestamp_millis", "(", t, ")") else Vector(t))),
+     winExprs.result().map { case e @ (id, fnText, w) =>
+       if (tsSums(id)) (id, s"sum ( unix_millis ( ${splitCall(fnText)._2} ) )", w)
+       else e
+     })
   }
 
   /** Compute each extracted window call as a hidden window column, then
@@ -7031,7 +6314,7 @@ object GraftSql {
         gexprs: Seq[(String, String, WinDef)]): DataFrame = {
       if (cols.isEmpty) return df0
       val dependent = gexprs.collect {
-        case (id, fnText, _) if fnText.contains("__graft_w") => id
+        case (id, fnText, _) if refsWindowResult(fnText) => id
       }.toSet
       val (later, first0) = cols.partition(nc => dependent(nc._1))
       // duplicate prep names collapse (same name ⇒ same content-derived
@@ -7275,10 +6558,10 @@ object GraftSql {
     val winCols: Seq[(String, Column)] = gexprs.map { case (id, fnText0, w) =>
       val (fnRaw, argRaw) = splitCall(fnText0)
       // reference type checks over aggregate arguments
-      // (test_udaf_function.yaml ids 8/9/18/25/26/33): *_where and
-      // plain sum/avg values must be numeric (bool allowed only for
-      // count/distinct_count); *_cate values numeric, keys must not be
-      // float/double/bool
+      // (test_udaf_function.yaml ids 8/9/18/33): *_where and plain
+      // sum/avg values must be numeric (bool allowed only for
+      // count/distinct_count); the *_cate builders check their own
+      // (DialectFunctions)
       locally {
         import org.apache.spark.sql.types._
         val fl = fnRaw.toLowerCase
@@ -7290,12 +6573,6 @@ object GraftSql {
               s"illegal value type $v for '$fl'")
           case _ => ()
         }
-        def rejectKey(t: String): Unit = ty(t) match {
-          case Some(v @ (FloatType | DoubleType | BooleanType)) =>
-            throw new IllegalArgumentException(
-              s"illegal key type $v for '$fl'")
-          case _ => ()
-        }
         val as0 = splitArgs(argRaw)
         if (Set("sum_where", "avg_where", "max_where", "min_where")(fl) &&
             as0.nonEmpty) rejectValue(as0(0))
@@ -7305,19 +6582,13 @@ object GraftSql {
               throw new IllegalArgumentException(
                 s"illegal value type $v for '$fl'")
             // avg over TIMESTAMP is a type error in the reference
-            // (test_udaf_function.yaml id 8); sum(ts) never reaches
-            // here raw — rewriteAggFns wraps it in unix_millis
+            // (test_udaf_function.yaml id 8); sum sums its ms
+            // (extractWinCalls)
             case Some(TimestampType) if fl == "avg" =>
               throw new IllegalArgumentException(
                 s"illegal value type timestamp for '$fl'")
             case _ => ()
           })
-        else if (fl.endsWith("_cate") && as0.length == 2) {
-          rejectValue(as0(0)); rejectKey(as0(1))
-        } else if (fl.endsWith("_cate_where") && as0.length == 3 &&
-            !fl.startsWith("top_n_")) {
-          rejectValue(as0(0)); rejectKey(as0(2))
-        }
       }
       // the *_where family over windows = the base aggregate over a
       // CASE WHEN guard (udf_registry: *_where UDAFs; udaf_query.yaml id 4)
@@ -7391,7 +6662,7 @@ object GraftSql {
         .exists(_.isAggregate)
       // an argument referencing a window result (__graft_wN) needs the
       // current-row-binding HOF path — never the native window branches
-      val windowBound = argText.contains("__graft_w")
+      val windowBound = refsWindowResult(argText)
       val decomposable = !windowBound && Set("sum", "count", "avg")(fn)
       val isOffsetFn = fn == "lag" || fn == "lead" || fn == "at"
       // ORDER BY is optional in the reference's window clause
@@ -7495,13 +6766,11 @@ object GraftSql {
           prepCols ++= prep
           agg
         } else {
-          // registered __graft UDAF heads with window-result-bound
-          // arguments fall through to the native-frame fallback below
-          val graftUdafHead = fn.startsWith("__graft_topnk_") ||
-            fn.startsWith("__graft_topnv_") ||
-            (fn.startsWith("__graft_") && fn.endsWith("_cate_int"))
-          if (!extAggs(fn) && fn != "fz_join" && !graftUdafHead &&
-              !isUserAgg)
+          // the category families with window-result-bound arguments
+          // fall through to the native-frame fallback below
+          val cateHead = windowBound &&
+            (fn.endsWith("_cate") || fn.endsWith("_cate_where"))
+          if (!extAggs(fn) && fn != "fz_join" && !cateHead && !isUserAgg)
             throw new IllegalArgumentException(
               s"unsupported aggregate '$fn' over an extended window")
           // nth_value_where(v, n, cond) frames carry (value, cond)
@@ -7573,7 +6842,7 @@ object GraftSql {
                   Some(!col(if (requestMode && !(w.inw && hasUnion))
                     RequestFlagCol else FlagCol))
                 else None)
-          } else if (argText.contains("__graft_w")) {
+          } else if (refsWindowResult(argText)) {
             // The argument references a window result (explicit nested
             // OVER or an implicit nav fn) — the reference binds those to
             // the CURRENT row while the rest of the argument evaluates
@@ -7661,8 +6930,10 @@ object GraftSql {
           // are cast BEFORE they are collected (the same Catalyst Cast
           // the per-element lambdas applied): the numeric statistics over
           // non-numeric values, and topn_frequency over types whose
-          // string rendering is not plain (decimal, date, timestamp)
-          val valueCast: Option[String] =
+          // string rendering is not plain (decimal, date, timestamp);
+          // float/double topn_frequency keys render with C printf %f
+          // ("1.100000" — test_feature_zero_function.yaml id 4 r4/r5)
+          val valueCast: Option[(String, Column => Column)] =
             if (splitV.isDefined || argText == "*") None
             else {
               import org.apache.spark.sql.types._
@@ -7671,12 +6942,15 @@ object GraftSql {
                 case "median" | "drawdown" | "ew_avg" if !argType.exists {
                     case _: NumericType | BooleanType => true
                     case _                            => false
-                  } => Some("double")
+                  } => Some(("double", _.cast("double")))
+                case "topn_frequency"
+                    if argType.exists(t => t == FloatType || t == DoubleType) =>
+                  Some(("f6", c => when(c.isNotNull, format_string("%f", c))))
                 case "topn_frequency" if !argType.exists {
                     case _: DecimalType                            => false
                     case _: NumericType | StringType | BooleanType => true
                     case _                                         => false
-                  } => Some("string")
+                  } => Some(("string", _.cast("string")))
                 case _ => None
               }
             }
@@ -7687,8 +6961,8 @@ object GraftSql {
                   .contains(org.apache.spark.sql.types.BooleanType))
               s"dcb:${args.head}"
             else if (argText == "*") "*"
-            else valueCast.fold(args.head)(c => s"$c:${args.head}"),
-            valueCast.fold(v)(c => expr(args.head).cast(c)),
+            else valueCast.fold(args.head)(c => s"${c._1}:${args.head}"),
+            valueCast.fold(v)(_._2(expr(args.head))),
             sv => WindowOps.frameArray(sv, ts, wUid,
               partCols(w), preceding,
               maxSize = rowCap,

@@ -301,12 +301,8 @@ object StreamDeploy {
     // (CAST(float AS STRING) → %g rendering, ts-cast ms semantics,
     // operand coercions) — without them serving would render values
     // differently than training (udaf corpus id 44)
-    val sel2 = {
-      val rt: String => Option[DataType] =
-        t => resolveTypeCached(base, t)
-      sel1.copy(projs = sel1.projs.map(p =>
-        p.copy(tokens = rewriteDialect(p.tokens, rt))))
-    }
+    val sel2 = sel1.copy(projs = sel1.projs.map(p =>
+      p.copy(tokens = rewriteDialect(p.tokens))))
     val (outerTokens, winExprs) = extractWinCalls(sel2, base)
     // long-window buckets by resolved window definition (named windows
     // only — an inline OVER(...) cannot be named in the option)
@@ -406,7 +402,7 @@ object StreamDeploy {
         frameless: Boolean, w: WinDef, ignoreNulls: Boolean = false)
     val pres = winExprs.map { case (id, fnText0, w) =>
       val (fnRaw, argRaw) = splitCall(fnText0)
-      if (argRaw.contains("__graft_w"))
+      if (refsWindowResult(argRaw))
         notStreamable(s"nested window call in '$fnText0'")
       val (fn, argText0) =
         if (fnRaw.endsWith("_where") && extAggs(fnRaw.stripSuffix("_where"))) {

@@ -247,6 +247,26 @@ class GraftSqlSpec extends SparkSpec {
     assert(out.count() == 2) // u1 rows with v in {2.0, 3.0}
   }
 
+  test("typed dialect calls see a window result's planned type") {
+    // the dialect functions type their operands in Spark's analyzer, so
+    // a window result is typed as planned — including a projection-level
+    // OVER and the FLOAT the reference keeps for sum(float)
+    spark.createDataFrame(java.util.Arrays.asList(
+        org.apache.spark.sql.Row("u1", 1L, new java.sql.Timestamp(1000L), 0.1f, 30.0),
+        org.apache.spark.sql.Row("u1", 2L, new java.sql.Timestamp(2000L), 0.2f, 1.5)),
+      org.apache.spark.sql.types.StructType.fromDDL(
+        "pk STRING, o BIGINT, t TIMESTAMP, f FLOAT, d DOUBLE"))
+      .createOrReplaceTempView("tw")
+    val w = "WINDOW w AS (PARTITION BY pk ORDER BY o " +
+      "ROWS BETWEEN 1 PRECEDING AND CURRENT ROW)"
+    val out = GraftSql.sql(spark,
+      s"""SELECT o, bigint(lag(t, 1)) OVER w AS ms, string(sum(f) OVER w) AS sf,
+         |  concat('d=', sum(d) OVER w) AS cd FROM tw $w""".stripMargin)
+      .collect().map(r => (r.getLong(0), r.get(1), r.getString(2),
+        r.getString(3))).sortBy(_._1).toSeq
+    assert(out == Seq((1L, null, "0.1", "d=30"), (2L, 1000L, "0.3", "d=31.5")))
+  }
+
   test("no-FROM constant select") {
     val out = GraftSql.sql(spark,
       "SELECT 1 + 2 AS a, upper('x') AS b").collect()(0)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import graft.sql.GraftSql
 
 /** A JVM scalar function for the CLASS registration path — must be a
@@ -184,5 +185,29 @@ class UserFunctionsSpec extends SparkSpec {
       finally stmt("SET @@window_skew_opt = 'false'")
     assert(skewed == plain, "skewed fold diverged")
     stmt("DROP FUNCTION sum2_agg")
+  }
+
+  test("a redefined function's result type is never served stale, in " +
+      "this session or another") {
+    Seq(0L, 1L, 2L).toDF("c").createOrReplaceTempView("uf_ft")
+    val q = "SELECT c, string(f_retype(c)) AS s FROM uf_ft"
+    def run(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      GraftSql.sql(s, q).collect().map(r => String.valueOf(r.get(1))).sorted.toSeq
+    stmt("CREATE FUNCTION f_retype(x BIGINT) RETURNS DOUBLE " +
+      "OPTIONS (RETURN = 'x * 1.5')")
+    try {
+      assert(run(spark) == Seq("0", "1.5", "3"))
+      stmt("DROP FUNCTION f_retype")
+      stmt("CREATE FUNCTION f_retype(x BIGINT) RETURNS STRING " +
+        "OPTIONS (RETURN = 'concat(\"k\", x)')")
+      assert(run(spark) == Seq("k0", "k1", "k2"))
+      // a second session that only ever saw the STRING definition
+      val s2 = spark.newSession()
+      GraftSql.statement(s2, "CREATE FUNCTION f_retype(x BIGINT) " +
+        "RETURNS STRING OPTIONS (RETURN = 'concat(\"k\", x)')")
+      s2.createDataFrame(spark.table("uf_ft").collect().toList.asJava,
+        spark.table("uf_ft").schema).createOrReplaceTempView("uf_ft")
+      assert(run(s2) == Seq("k0", "k1", "k2"))
+    } finally stmt("DROP FUNCTION IF EXISTS f_retype")
   }
 }

@@ -221,4 +221,21 @@ class ServeTemplateSpec extends SparkSpec {
     assert(GraftSql.serveTemplateBuilds.get() == b0 + 1)
     assert(graft.SessionState.of(s).serveTemplates.size == 1)
   }
+
+  test("a long_windows deployment is compiled at DEPLOY too: its " +
+      "first CALL builds no template") {
+    GraftSql.resetDeployments(spark)
+    hist.createOrReplaceTempView("sv_hist")
+    GraftSql.statement(spark,
+      s"""DEPLOY sv_lw OPTIONS(long_windows="w0:1s")
+         |${q2win.replace("MAXSIZE 10", "")}""".stripMargin)
+    try {
+      val b0 = GraftSql.serveTemplateBuilds.get()
+      val out = GraftSql.statement(spark, "CALL sv_lw ('u1', 'gA', 25, 100.0)")
+        .get.collect()
+      assert(out.length == 1 && out(0).getDouble(2) == 103.0)
+      assert(GraftSql.serveTemplateBuilds.get() == b0,
+        "the first CALL of a long_windows deployment rebuilt its template")
+    } finally GraftSql.resetDeployments(spark)
+  }
 }
