@@ -230,7 +230,7 @@ object GraftAggregates {
       if (integral) v.toLong.toString else fmtDouble(v)
     private def aggValue(a: CateAcc): Double = mode match {
       case "sum"   => a.sum
-      case "count" | "ratio" => a.cnt.toDouble
+      case "count" => a.cnt.toDouble
       case "avg"   => a.sum / a.cnt
       case "min"   => a.mn
       case "max"   => a.mx
@@ -246,14 +246,10 @@ object GraftAggregates {
             Ordering.Tuple2(Ordering[Double].reverse, Ordering[String].reverse))
           if (topN >= 0) s.take(topN) else s
       }
-      val total = b.m.values.map(_.cnt).sum.toDouble
       entries.map { case (k, a) =>
         val v = mode match {
           case "count" => a.cnt.toString
           case "avg"   => fmtDouble(a.sum / a.cnt)
-          // ratio: this key's row share of the whole window
-          // (top_n_*_ratio_cate — udaf corpus id 66)
-          case "ratio" => fmtDouble(a.cnt / total)
           case _       => fmt(aggValue(a))
         }
         s"$k:$v"
@@ -387,10 +383,6 @@ object GraftAggregates {
       spark.udf.register(s"__graft_topnv_${m}_int",
         udaf(new TopNKeyCateAgg(m, true, "value_desc")))
     }
-    spark.udf.register("__graft_topnk_ratio",
-      udaf(new TopNKeyCateAgg("ratio", false)))
-    spark.udf.register("__graft_topnv_ratio",
-      udaf(new TopNKeyCateAgg("ratio", false, "value_desc")))
     spark.udf.register("__graft_heavy_hitters", udaf(new HeavyHittersK))
   }
 

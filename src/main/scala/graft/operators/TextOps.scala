@@ -198,14 +198,17 @@ object TextOps {
     * the only way to get a broadcast join — but on a 100 TB web
     * corpus the distinct-token table (typos, URLs, hashes) can reach
     * billions of rows and an unconditional hint OOMs the driver.
-    * Instead: persist the table (it feeds both the measuring job and
-    * the join — without the persist the wordcount would recompute),
-    * MEASURE it with one cheap agg job (row count + total term bytes;
-    * `fixedBytes` covers the numeric columns + per-row overhead), and
-    * hint only under `budgetBytes`. Past the budget the hint drops
-    * away and the join degrades to a shuffle join — the correct shape
-    * at that size. The persist stays registered (LRU-evicted), same
-    * rationale as the sig cache in `Dedup.scala`. */
+    * Instead: materialize the table through [[Materialize.once]] (it
+    * feeds both the measuring job and the join — read twice, the
+    * wordcount would recompute), MEASURE it with one cheap agg job (row
+    * count + total term bytes; `fixedBytes` covers the numeric columns
+    * + per-row overhead), and hint only under `budgetBytes`. Past the
+    * budget the hint drops away and the join degrades to a shuffle
+    * join — the correct shape at that size. The checkpoint is not a
+    * CacheManager entry: its blocks, and the broadcasts of the plan
+    * that built it, are freed once the caller's result is unreachable,
+    * where a registered persist stayed for the session's lifetime, one
+    * per call. */
   private[graft] def gatedVocabBroadcast(t: org.apache.spark.sql.DataFrame,
       termCol: String, fixedBytes: Int,
       budgetBytes: Long): org.apache.spark.sql.DataFrame =
@@ -217,8 +220,7 @@ object TextOps {
   private[graft] def gatedBroadcastBy(t: org.apache.spark.sql.DataFrame,
       rowBytes: Column,
       budgetBytes: Long): org.apache.spark.sql.DataFrame = {
-    val cached = t.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cached = Materialize.once(t)
     val bytes = cached
       .agg(coalesce(sum(rowBytes.cast("long")), lit(0L))).head().getLong(0)
     if (bytes < budgetBytes) broadcast(cached) else cached

@@ -791,33 +791,23 @@ object GraftSql {
       tables: Map[String, DataFrame]): DataFrame = {
     import ctx.spark
     ensureFunctions(spark)
-    val parser = new Parser(tokenize(text))
-    val q = parser.parseQuery()
-    if (parser.p != parser.toks.length) parser.fail("trailing tokens")
+    val q = parseQueryText(text)
     // Tag each request row with an identity: the reference executes each
     // request independently, so two requests with IDENTICAL join keys
     // must still re-align with their own derived-side rows
-    // (fz_ddl/test_myhug.yaml carries two reqId2 requests). Checkpoint
-    // pins the nondeterministic ids — every derived sub-plan re-reads
-    // them. Projections pass the column through (planSelect) and
-    // request-derived LAST JOIN sides join on it.
-    // Serving fast path: a LITERAL request batch (LocalRelation — what
-    // the HTTP/CALL surfaces build) gets its uids assigned driver-side
-    // into a new LocalRelation: deterministic by construction, so the
-    // id-pinning checkpoint job (and its scheduling latency, ~100 ms of
-    // every online request) disappears. Arbitrary request plans keep
-    // the checkpoint.
-    val tagged = requests.queryExecution.optimizedPlan match {
-      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-        val rows = requests.collect().toIndexedSeq.zipWithIndex.map {
-          case (r, i) => org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i.toLong)
-        }
-        spark.createDataFrame(
-          java.util.Arrays.asList(rows: _*),
-          org.apache.spark.sql.types.StructType(requests.schema.fields :+
-            org.apache.spark.sql.types.StructField(ReqUidCol,
-              org.apache.spark.sql.types.LongType, nullable = false)))
-      case _ =>
+    // (fz_ddl/test_myhug.yaml carries two reqId2 requests). Projections
+    // pass the column through (planSelect) and request-derived LAST JOIN
+    // sides join on it. A literal batch gets its uids assigned
+    // driver-side into a new LocalRelation: deterministic by
+    // construction, so it needs no job. Any other request plan is
+    // checkpointed to pin its nondeterministic ids — every derived
+    // sub-plan re-reads them.
+    val tagged = literalRows(requests) match {
+      case Some(rows) =>
+        org.apache.spark.sql.GraftServe.localDf(spark,
+          org.apache.spark.sql.GraftServe.tagRows(rows, requests.schema),
+          withReqUid(requests.schema))
+      case None =>
         requests
           .withColumn(ReqUidCol, monotonically_increasing_id())
           .localCheckpoint(true)
@@ -826,29 +816,44 @@ object GraftSql {
     out.drop(out.columns.filter(_.startsWith(ReqUidCol)).toIndexedSeq: _*)
   }
 
+  private def withReqUid(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType(schema.fields :+
+      org.apache.spark.sql.types.StructField(ReqUidCol,
+        org.apache.spark.sql.types.LongType, nullable = false))
+
+  /** The rows of a literal request batch — the LocalRelation every
+    * serving surface (HTTP POST, CALL, embedded) builds — or None for
+    * any other request plan. The logical plan is matched first, so the
+    * hot surfaces cost no analyzer run; expression-built rows (CALL's
+    * literal projection) fold to a LocalRelation in optimize. */
+  private def literalRows(requests: DataFrame)
+      : Option[Seq[org.apache.spark.sql.catalyst.InternalRow]] = {
+    def rowsOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+      p match {
+        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+          Some(l.data)
+        case _ => None
+      }
+    rowsOf(requests.queryExecution.logical)
+      .orElse(rowsOf(requests.queryExecution.optimizedPlan))
+  }
+
   // ------------------------------------------------------------------
   // Compiled serving templates — the reference compiles a DEPLOYed
-  // query ONCE and reuses the JIT'd plan per request (EngineLRUCache'd
-  // CompileInfo, hybridse/src/vm/engine.cc:149), then answers each
-  // request from the request key's skiplist segment
-  // (src/storage/mem_table.cc) — it never re-plans and never scans.
-  // serveRequest is the Spark analog of BOTH halves (r18 planning,
-  // r19 execution):
-  //  * the query is optimized ONCE against opaque RDD placeholder
-  //    relations (request rows + each pruned FROM history); each
-  //    request transform-copies the prepared physical plan swapping
-  //    only those RDDs — no parse/analyze/optimize per request.
-  //  * bounded online histories are collected ONCE per template into
-  //    a driver-side key→row-positions index; a request substitutes
-  //    exactly its keys' rows (the skiplist-seek analog). Oversized
-  //    histories fall back to a ServeKeyMembership scan filter whose
-  //    key set is injected driver-side — either way ZERO extra jobs.
-  //  * the per-request working set coalesces to ONE partition, so
-  //    SinglePartition satisfies every window/join distribution and
-  //    the plan has ZERO exchanges: one job, one stage, one task per
-  //    request (ServeTemplateSpec pins the 1-job property;
-  //    SERVING_BENCH_r19: embedded p50 68.5 ms c=1, 125.8 RPS c=10 —
-  //    r17 dynamic path: 601 ms / 15.5).
+  // query ONCE and runs the compiled plan per request (EngineLRUCache'd
+  // CompileInfo, hybridse/src/vm/engine.cc:149), reading each request
+  // key's skiplist segment (src/storage/mem_table.cc). serveRequest
+  // answers a request one of two ways:
+  //  * a literal batch of at most MaxTemplateBatch rows runs its cached
+  //    template: a physical plan prepared ONCE against opaque RDD
+  //    placeholders (request rows + each pruned FROM history), copied
+  //    per request with only those RDDs swapped. Bounded histories are
+  //    indexed ONCE per template (key→row positions, so a request reads
+  //    its keys' rows); larger ones keep a ServeKeyMembership filter
+  //    whose key set is injected driver-side. One partition, no
+  //    exchanges: one job per request (ServeTemplateSpec pins it).
+  //  * everything else, and a template that fails, goes to requestMode.
   // ------------------------------------------------------------------
 
   /** One serving-template build. While it is planned, plan
@@ -895,27 +900,25 @@ object GraftSql {
       lists: IndexedSeq[(Seq[(Int, org.apache.spark.sql.types.DataType)],
         java.util.HashMap[Any, Array[Int]])])
 
+  /** A referenced table: (name, stored temp-view relation instance,
+    * analyzed unwrapped plan). */
+  private[graft] type ServeSource = (String, Option[AnyRef],
+    org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+
   private[graft] final case class ServeTemplate(
-      optimized: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       placeholder: org.apache.spark.rdd.RDD[
         org.apache.spark.sql.catalyst.InternalRow],
       reqSig: Seq[(String, org.apache.spark.sql.types.DataType)],
-      taggedSchema: org.apache.spark.sql.types.StructType,
       outSchema: org.apache.spark.sql.types.StructType,
       fromInternal: org.apache.spark.sql.catalyst.InternalRow =>
         org.apache.spark.sql.Row,
-      // per referenced table: (name, stored temp-view relation
-      // instance at build time, analyzed unwrapped plan). The instance
-      // identity check is the per-request fast path; the sameResult
-      // fallback tolerates benign re-registrations of an identical
-      // view.
-      sources: Seq[(String, Option[AnyRef],
-        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
-      // prepared physical template (exchanges at serving parallelism,
-      // static-side broadcasts SHARED across requests); None when
-      // physical substitution is unsafe — execution then re-plans
-      // physical from `optimized` per request
-      phys: Option[org.apache.spark.sql.execution.SparkPlan],
+      // the instance identity check is the per-request fast path; the
+      // sameResult fallback tolerates re-registrations of an identical
+      // view (and records the new instance)
+      sources: Seq[ServeSource],
+      // prepared physical plan (exchanges at serving parallelism,
+      // static-side broadcasts SHARED across requests)
+      phys: org.apache.spark.sql.execution.SparkPlan,
       // ServeKeyMembership lists by listIdx: each list's key fields as
       // (ordinal, type) in the REQUEST schema — the per-request
       // injector extracts key-tuple sets from the literal rows with
@@ -932,7 +935,7 @@ object GraftSql {
     * [[SessionState.serveUncacheable]]: (query text, db, ts hints,
     * request signature, user-function registry version). The version
     * component makes CREATE/DROP FUNCTION invalidate compiled templates
-    * — the per-request sourcesFresh check only watches TABLES. */
+    * — the per-request freshSources check only watches TABLES. */
   private[graft] type ServeKey = (String, String, String, String, Long)
   /** Template (re)builds — observable for specs pinning cache reuse. */
   private[sql] val serveTemplateBuilds =
@@ -942,6 +945,10 @@ object GraftSql {
   // var: specs lower it to exercise eviction without 64 real builds
   private[sql] var serveTemplateCap = 64
   private val serveUncacheableCap = 512
+  /** Literal batches up to this many rows run the template (planned for
+    * one partition); larger ones go to requestMode at the session's
+    * parallelism. */
+  private val MaxTemplateBatch = 1024
 
   /** Evict down to `cap`, oldest-touched one at a time — a fleet
     * serving cap+1 hot deployments loses ONE template per new build, not
@@ -995,29 +1002,35 @@ object GraftSql {
       case _ => name
     }
 
-  private def sourcesFresh(ctx: PlanCtx, t: ServeTemplate): Boolean =
-    t.sources.forall { case (n, raw, p) =>
+  /** The template's sources when each still reads the data it was built
+    * on, else None. A view re-registered with an identical plan is
+    * judged by `sameResult` (an analyzer run) and its new instance
+    * recorded, so later requests take the identity test again. */
+  private def freshSources(ctx: PlanCtx, t: ServeTemplate)
+      : Option[Seq[ServeSource]] = {
+    val now = t.sources.map { case s @ (n, raw, p) =>
       val rawNow = org.apache.spark.sql.GraftServe.rawTempView(
         ctx.spark, resolvedViewName(ctx, n))
-      (raw, rawNow) match {
-        case (Some(a), Some(b)) if a eq b => true // no analyzer run
-        case _ =>
+      if (raw.exists(a => rawNow.exists(_ eq a))) Some(s) // no analyzer run
+      else {
+        val same =
           try {
             val cur = currentSource(ctx, n)
             (cur eq p) || cur.sameResult(p)
           } catch { case scala.util.control.NonFatal(_) => false }
+        if (!same) None
+        else Some(if (rawNow.isEmpty) s else (n, rawNow, p))
       }
     }
-
-  private def reqSigOf(df: DataFrame): Seq[(String, org.apache.spark.sql.types.DataType)] =
-    df.schema.fields.toSeq.map(f => (f.name, f.dataType))
+    if (now.contains(None)) None else Some(now.flatten)
+  }
 
   /** Serving entry point: requestMode semantics, compiled-plan reuse.
-    * Falls back to [[requestMode]] whenever the template path cannot
-    * apply (non-literal request batches, explicit table maps, offline
-    * mode, template build/execution failure) — never fails a request
-    * the dynamic path would answer. `db` overrides the session's
-    * current db (a deployment serves in its home db). */
+    * A literal batch of at most MaxTemplateBatch rows runs its cached
+    * template; everything else, and any template that fails, goes to
+    * [[requestMode]] — never fails a request the dynamic path would
+    * answer. `db` overrides the session's current db (a deployment
+    * serves in its home db). */
   def serveRequest(spark: SparkSession, text: String, requests: DataFrame,
       tables: Map[String, DataFrame] = Map.empty,
       db: Option[String] = None): DataFrame =
@@ -1026,186 +1039,174 @@ object GraftSql {
   private def serveRequest(ctx: PlanCtx, text: String, requests: DataFrame,
       tables: Map[String, DataFrame]): DataFrame = {
     val viaTemplate =
-      try serveViaTemplate(ctx, text, requests, tables)
-      catch { case scala.util.control.NonFatal(_) => None }
+      if (tables.nonEmpty) None
+      else try {
+        for {
+          rows <- literalRows(requests) if rows.length <= MaxTemplateBatch
+          t <- templateFor(ctx, text, requests.schema)
+        } yield runTemplate(ctx.spark, t, rows, requests.schema)
+      } catch { case scala.util.control.NonFatal(_) => None }
     viaTemplate.getOrElse(requestMode(ctx, text, requests, tables))
   }
 
-  private def serveViaTemplate(ctx: PlanCtx, text: String,
-      requests: DataFrame, tables: Map[String, DataFrame])
-      : Option[DataFrame] = {
-    import org.apache.spark.sql.GraftServe
-    import ctx.spark
-    if (tables.nonEmpty || ctx.offline) return None
-    val st = SessionState.of(spark)
-    val sig = reqSigOf(requests)
+  /** The compiled template serving `text` to request rows of `schema`:
+    * the cached one while its sources are fresh, else a new build. None
+    * in offline mode (templates read the online store) and when no
+    * template can serve the query (the key is then recorded in
+    * serveUncacheable). DEPLOY calls this alone, to compile up front. */
+  private def templateFor(ctx: PlanCtx, text: String,
+      schema: org.apache.spark.sql.types.StructType)
+      : Option[ServeTemplate] = {
+    if (ctx.offline) return None
+    val st = SessionState.of(ctx.spark)
+    val sig = schema.fields.toSeq.map(f => (f.name, f.dataType))
     val key: ServeKey = (text, ctx.db.getOrElse(""),
       ctx.tsHints.toSeq.sorted.mkString(","),
       sig.map { case (n, t) => s"$n:${t.sql}" }.mkString(","),
       userFnsVersion.get)
     if (st.serveUncacheable.contains(key)) return None
-    // literal request batches only — the shape every serving surface
-    // (HTTP POST, CALL, SDK-style embedded) builds. Logical-plan match
-    // first: the hot surfaces build LocalRelation directly, so the
-    // per-request check costs NO analyzer run; expression-built rows
-    // (CALL's literal projection) fold to LocalRelation in optimize.
-    val reqRowsInternal: Seq[org.apache.spark.sql.catalyst.InternalRow] =
-      (requests.queryExecution.logical match {
-        case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-          Some(l.data)
-        case _ => requests.queryExecution.optimizedPlan match {
-          case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-            Some(l.data)
-          case _ => None
-        }
-      }).getOrElse(return None)
-
-    def buildTemplate(): Option[ServeTemplate] = {
-      serveTemplateBuilds.incrementAndGet()
-      ensureFunctions(spark)
-      val parser = new Parser(tokenize(text))
-      val q = parser.parseQuery()
-      if (parser.p != parser.toks.length) parser.fail("trailing tokens")
-      // LIMIT keeps the dynamic path: row-count-dependent rewrites
-      if (q.selects.exists(_.limit.isDefined)) return None
-      val names = tableRefNames(q)
-      if (names.isEmpty) return None
-      val sources = names.map { n =>
-        (n, org.apache.spark.sql.GraftServe.rawTempView(
-          spark, resolvedViewName(ctx, n)), currentSource(ctx, n))
-      }
-      val taggedSchema = org.apache.spark.sql.types.StructType(
-        requests.schema.fields :+ org.apache.spark.sql.types.StructField(
-          ReqUidCol, org.apache.spark.sql.types.LongType, nullable = false))
-      val placeholder = spark.sparkContext.parallelize(
-        Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
-      val tagged = GraftServe.internalRddDf(spark, placeholder,
-        taggedSchema, 16L * 1024)
-      val build = new TemplateBuild(placeholder)
-      val out = requestModeQuery(ctx.copy(template = Some(build)), q,
-        tagged, Map.empty)
-      def reqFieldsOf(keys: Seq[String]): Seq[
-          (Int, org.apache.spark.sql.types.DataType)] =
-        keys.map { k =>
-          val o = requests.schema.fields.indexWhere(
-            _.name.equalsIgnoreCase(k))
-          (o, requests.schema.fields(o).dataType)
-        }
-      // key names (validated present in the request schema by
-      // pruneHistoryForRequests) → request-schema ordinals + types,
-      // for the per-request key-set extraction
-      val pruneLists = build.pruneLists.toIndexedSeq.map(reqFieldsOf)
-      // collect each indexed history ONCE (template build / DEPLOY
-      // time) and build its key→positions maps — per-request lookups
-      // are then O(request keys), the reference's skiplist-seek analog
-      val histSlots = build.histSlots.toIndexedSeq.map { s0 =>
-        val rows = s0.history.queryExecution.executedPlan.executeCollect()
-        val hSchema = s0.history.schema
-        val lists = s0.keyLists.toIndexedSeq.map { keys =>
-          val hFields = keys.map { k =>
-            val o = hSchema.fields.indexWhere(_.name.equalsIgnoreCase(k))
-            (o, hSchema.fields(o).dataType)
+    val cached = st.serveTemplates.get(key).filter(_.reqSig == sig)
+      .flatMap { t =>
+        freshSources(ctx, t).map { srcs =>
+          if (srcs.corresponds(t.sources)(_ eq _)) t
+          else {
+            val t2 = t.copy(sources = srcs)
+            st.serveTemplates.replace(key, t, t2)
+            t2
           }
-          val acc = new java.util.HashMap[Any,
-            scala.collection.mutable.ArrayBuffer[Int]]()
-          var i = 0
-          while (i < rows.length) {
-            val k = graft.functions.ServeKeyPrune.keyOf(rows(i), hFields)
-            var b = acc.get(k)
-            if (b == null) {
-              b = scala.collection.mutable.ArrayBuffer.empty[Int]
-              acc.put(k, b)
-            }
-            b += i
-            i += 1
-          }
-          val idx = new java.util.HashMap[Any, Array[Int]](acc.size * 2)
-          acc.forEach((k, b) => idx.put(k, b.toArray))
-          (reqFieldsOf(keys), idx)
         }
-        HistSlot(s0.placeholder, rows, lists)
       }
-      val outD = out.drop(
-        out.columns.filter(_.startsWith(ReqUidCol)).toIndexedSeq: _*)
-      val optimized = GraftServe.optimizedPlan(outD)
-      // an eager checkpoint inside planning (multi-signature window
-      // groups) swallows the placeholder — the template would serve
-      // frozen placeholder data; refuse it. Same for every indexed
-      // history placeholder: substitution missing one would serve
-      // frames with NO history.
-      if (GraftServe.placeholderCount(optimized, placeholder) == 0)
-        return None
-      if (histSlots.exists(s =>
-          GraftServe.placeholderCount(optimized, s.placeholder) == 0))
-        return None
-      val phys = GraftServe.preparePhysicalTemplate(spark, optimized,
-        placeholder, shufflePartitions = 1,
-        required = histSlots.map(_.placeholder))
-      Some(ServeTemplate(optimized, placeholder, sig, taggedSchema,
-        outD.schema, GraftServe.fromInternal(outD.schema), sources, phys,
-        pruneLists, histSlots))
-    }
-
-    val cached = st.serveTemplates.get(key).filter(t =>
-      t.reqSig == sig && sourcesFresh(ctx, t))
     cached.foreach(_.touched.set(serveClock.incrementAndGet()))
-    val tpl = cached.orElse {
-      buildTemplate() match {
+    cached.orElse {
+      val built = buildTemplate(ctx, text, schema)
+      built match {
         case Some(t) =>
           t.touched.set(serveClock.incrementAndGet())
           st.serveTemplates.put(key, t)
           evictLru(st.serveTemplates, serveTemplateCap)(_.touched.get)
-          Some(t)
         case None =>
           st.serveUncacheable.put(key, serveClock.incrementAndGet())
           evictLru(st.serveUncacheable, serveUncacheableCap)(identity)
-          None
       }
+      built
     }
-    tpl.map { t =>
-      val internal = GraftServe.tagRows(reqRowsInternal, requests.schema)
-      val newRdd = spark.sparkContext.parallelize(internal, 1)
-      // per-request pruning key sets, extracted from the literal rows
-      // on the driver (no Spark job) and injected into the plan copy —
-      // history pruning rides the main job (see ServeKeyMembership)
-      val pruneSets: IndexedSeq[java.util.HashSet[Any]] =
-        t.pruneLists.map(fields =>
-          graft.functions.ServeKeyPrune.keySetOf(reqRowsInternal, fields))
-      // indexed histories: look up the request keys' row positions
-      // (driver-side, no job, no scan), preserve original scan order —
-      // identical rows and order to what the pruning filter would pass
-      val histSwaps = t.histSlots.map { slot =>
-        val posBuf = scala.collection.mutable.ArrayBuffer.empty[Int]
-        slot.lists.foreach { case (rFields, idx) =>
-          reqRowsInternal.foreach { r =>
-            val hits = idx.get(
-              graft.functions.ServeKeyPrune.keyOf(r, rFields))
-            if (hits != null) posBuf ++= hits
+  }
+
+  private def buildTemplate(ctx: PlanCtx, text: String,
+      schema: org.apache.spark.sql.types.StructType)
+      : Option[ServeTemplate] = {
+    import org.apache.spark.sql.GraftServe
+    import ctx.spark
+    serveTemplateBuilds.incrementAndGet()
+    ensureFunctions(spark)
+    val q = parseQueryText(text)
+    // LIMIT keeps the dynamic path: row-count-dependent rewrites
+    if (q.selects.exists(_.limit.isDefined)) return None
+    val names = tableRefNames(q)
+    if (names.isEmpty) return None
+    val sources = names.map { n =>
+      (n, GraftServe.rawTempView(spark, resolvedViewName(ctx, n)),
+        currentSource(ctx, n))
+    }
+    val placeholder = spark.sparkContext.parallelize(
+      Seq.empty[org.apache.spark.sql.catalyst.InternalRow], 1)
+    val tagged = GraftServe.internalRddDf(spark, placeholder,
+      withReqUid(schema), 16L * 1024)
+    val build = new TemplateBuild(placeholder)
+    val out = requestModeQuery(ctx.copy(template = Some(build)), q,
+      tagged, Map.empty)
+    val outD = out.drop(
+      out.columns.filter(_.startsWith(ReqUidCol)).toIndexedSeq: _*)
+    // refused (None) when the prepared plan lost the request
+    // placeholder or an indexed history's: an eager checkpoint inside
+    // planning (multi-signature window groups) swallows it, and the
+    // template would serve frozen placeholder rows or frames with NO
+    // history
+    val phys = GraftServe.preparePhysicalTemplate(spark,
+      outD.queryExecution.optimizedPlan,
+      placeholder +: build.histSlots.toSeq.map(_.placeholder))
+      .getOrElse(return None)
+    def reqFieldsOf(keys: Seq[String]): Seq[
+        (Int, org.apache.spark.sql.types.DataType)] =
+      keys.map { k =>
+        val o = schema.fields.indexWhere(_.name.equalsIgnoreCase(k))
+        (o, schema.fields(o).dataType)
+      }
+    // key names (validated present in the request schema by
+    // pruneHistoryForRequests) → request-schema ordinals + types,
+    // for the per-request key-set extraction
+    val pruneLists = build.pruneLists.toIndexedSeq.map(reqFieldsOf)
+    // collect each indexed history ONCE (template build / DEPLOY
+    // time) and build its key→positions maps — per-request lookups
+    // are then O(request keys), the reference's skiplist-seek analog
+    val histSlots = build.histSlots.toIndexedSeq.map { s0 =>
+      val rows = s0.history.queryExecution.executedPlan.executeCollect()
+      val hSchema = s0.history.schema
+      val lists = s0.keyLists.toIndexedSeq.map { keys =>
+        val hFields = keys.map { k =>
+          val o = hSchema.fields.indexWhere(_.name.equalsIgnoreCase(k))
+          (o, hSchema.fields(o).dataType)
+        }
+        val acc = new java.util.HashMap[Any,
+          scala.collection.mutable.ArrayBuffer[Int]]()
+        var i = 0
+        while (i < rows.length) {
+          val k = graft.functions.ServeKeyPrune.keyOf(rows(i), hFields)
+          var b = acc.get(k)
+          if (b == null) {
+            b = scala.collection.mutable.ArrayBuffer.empty[Int]
+            acc.put(k, b)
           }
+          b += i
+          i += 1
         }
-        val pos = posBuf.distinct.sortInPlace()
-        val rows = pos.map(slot.rows(_)).toIndexedSeq
-        (slot.placeholder, spark.sparkContext.parallelize(rows, 1))
+        val idx = new java.util.HashMap[Any, Array[Int]](acc.size * 2)
+        acc.forEach((k, b) => idx.put(k, b.toArray))
+        (reqFieldsOf(keys), idx)
       }
-      val swaps = (t.placeholder, newRdd) +: histSwaps
-      // serving-shaped batches run the prepared physical template
-      // (1-partition exchanges, shared dim broadcasts); larger batches
-      // re-plan physical at the session's parallelism
-      val collected =
-        t.phys match {
-          case Some(p) if internal.length <= 1024 =>
-            GraftServe.executeCollectPhysical(spark,
-              GraftServe.substitutePhysical(p, swaps, pruneSets))
-          case _ =>
-            val sub = GraftServe.substituteRdd(t.optimized, swaps,
-              spark, 16L * 1024, pruneSets)
-            GraftServe.executeCollect(spark, sub)
-        }
-      val resRows: Seq[org.apache.spark.sql.Row] =
-        collected.toIndexedSeq.map(t.fromInternal)
-      spark.createDataFrame(
-        java.util.Arrays.asList(resRows: _*), t.outSchema)
+      HistSlot(s0.placeholder, rows, lists)
     }
+    Some(ServeTemplate(placeholder,
+      schema.fields.toSeq.map(f => (f.name, f.dataType)), outD.schema,
+      GraftServe.fromInternal(outD.schema), sources, phys, pruneLists,
+      histSlots))
+  }
+
+  /** Answer literal request rows from a template: the request rows,
+    * their pruning key sets and their keys' indexed-history rows are
+    * swapped into a copy of the prepared physical plan, which runs as
+    * one job. */
+  private def runTemplate(spark: SparkSession, t: ServeTemplate,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val reqRdd = spark.sparkContext.parallelize(
+      org.apache.spark.sql.GraftServe.tagRows(rows, schema), 1)
+    // per-request pruning key sets, extracted from the literal rows
+    // on the driver (no Spark job) and injected into the plan copy —
+    // history pruning rides the main job (see ServeKeyMembership)
+    val pruneSets: IndexedSeq[java.util.HashSet[Any]] =
+      t.pruneLists.map(fields =>
+        graft.functions.ServeKeyPrune.keySetOf(rows, fields))
+    // indexed histories: look up the request keys' row positions
+    // (driver-side, no job, no scan), preserve original scan order —
+    // identical rows and order to what the pruning filter would pass
+    val histSwaps = t.histSlots.map { slot =>
+      val posBuf = scala.collection.mutable.ArrayBuffer.empty[Int]
+      slot.lists.foreach { case (rFields, idx) =>
+        rows.foreach { r =>
+          val hits = idx.get(graft.functions.ServeKeyPrune.keyOf(r, rFields))
+          if (hits != null) posBuf ++= hits
+        }
+      }
+      val pos = posBuf.distinct.sortInPlace()
+      (slot.placeholder,
+        spark.sparkContext.parallelize(pos.map(slot.rows(_)).toIndexedSeq, 1))
+    }
+    val collected = org.apache.spark.sql.GraftServe.executeTemplate(spark,
+      t.phys, (t.placeholder, reqRdd) +: histSwaps, pruneSets)
+    spark.createDataFrame(
+      java.util.Arrays.asList(collected.toIndexedSeq.map(t.fromInternal): _*),
+      t.outSchema)
   }
 
   private def requestModeQuery(ctx: PlanCtx, q: Query,
@@ -3482,16 +3483,13 @@ object GraftSql {
             s"deployment '$name' already exists (use OPTIONS(overwrite=true))")
         c.deployments.put(name, Deployment(rest.mkString(" "), ctx.db,
           opts.map { case (k, v) => k -> stripQuotes(v) }))
-        // pre-compile the serving template at DEPLOY time (the
-        // reference compiles here too, engine.cc — the first POST/CALL
-        // otherwise pays the build's optimizer sweep). Best-effort:
-        // any shape the template cannot serve just falls back per
-        // request.
-        try serveRequest(ctx, rest.mkString(" "),
-          spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-            requestSchemaFor(spark, name)), Map.empty)
-        catch { case scala.util.control.NonFatal(_) => () }
+        // compile the serving template at DEPLOY time (the reference
+        // compiles here too, engine.cc — the first POST/CALL otherwise
+        // pays the build). Best-effort: a query no template can serve
+        // goes to requestMode per request.
+        try templateFor(ctx, rest.mkString(" "),
+          requestSchemaFor(spark, name))
+        catch { case scala.util.control.NonFatal(_) => None }
         None
 
       case "SELECT" | "WITH" =>

@@ -2,7 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Statistics}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation,
+  LogicalPlan, Statistics}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
 import org.apache.spark.sql.types.StructType
@@ -15,10 +16,10 @@ import org.apache.spark.sql.types.StructType
   * A deployment's request-mode query is planned ONCE against an
   * opaque RDD-backed placeholder relation (LogicalRDD — the optimizer
   * cannot constant-fold its rows the way it folds a LocalRelation, so
-  * the optimized plan stays request-value-independent); each request
-  * then swaps the placeholder's RDD and runs physical planning +
-  * execution only. Lives in this package for the `private[sql]`
-  * constructors; nothing in Spark is modified.
+  * the plan stays request-value-independent) and prepared as a physical
+  * plan; each request copies that plan with the placeholder scans
+  * swapped for its rows and executes it. Lives in this package for the
+  * `private[sql]` constructors; nothing in Spark is modified.
   */
 object GraftServe {
 
@@ -37,72 +38,25 @@ object GraftServe {
     classic.Dataset.ofRows(s, plan)
   }
 
-  def optimizedPlan(df: DataFrame): LogicalPlan =
-    df.queryExecution.optimizedPlan
-
-  /** How many leaves of `plan` still read the placeholder RDD — a
-    * template is usable only when ≥1 survive optimization (an eager
-    * checkpoint inside planning would have swallowed them). */
-  def placeholderCount(plan: LogicalPlan, rdd: RDD[InternalRow]): Int =
-    plan.collectLeaves().count {
-      case l: LogicalRDD => l.rdd eq rdd
-      case _             => false
-    }
-
-  /** Swap every placeholder leaf (request relation + any indexed
-    * history slots) for this request's rows, and inject this request's
-    * pruning key sets into any ServeKeyMembership markers (indexed by
-    * listIdx; missing indices stay unsubstituted = keep-everything,
-    * never wrong). */
-  def substituteRdd(plan: LogicalPlan,
-      swaps: Seq[(RDD[InternalRow], RDD[InternalRow])],
-      spark: SparkSession, sizeHintBytes: Long,
-      pruneSets: IndexedSeq[java.util.HashSet[Any]] = IndexedSeq.empty)
-      : LogicalPlan = {
-    val swapped = plan.transform {
-      case l: LogicalRDD =>
-        swaps.find(_._1 eq l.rdd) match {
-          case Some((_, to)) =>
-            LogicalRDD(l.output, to)(cs(spark),
-              Some(Statistics(sizeInBytes = BigInt(sizeHintBytes))), None)
-          case None => l
-        }
-    }
-    if (pruneSets.isEmpty) swapped
-    else swapped.transformAllExpressions {
-      case m: graft.functions.ServeKeyMembership
-          if m.keySet.isEmpty && m.listIdx < pruneSets.length =>
-        m.copy(keySet = Some(pruneSets(m.listIdx)))
-    }
-  }
-
-  /** Physical-plan + execute an ALREADY-OPTIMIZED logical plan: no
-    * re-parse, no analysis, no optimizer sweep — the per-request cost
-    * is physical planning and the job itself. Uses Spark's own
-    * subquery-preparation path (static plan, fresh instance per call,
-    * safe under concurrent requests). */
-  def executeCollect(spark: SparkSession,
-      plan: LogicalPlan): Array[InternalRow] = {
-    SparkSession.setActiveSession(spark)
-    QueryExecution.prepareExecutedPlan(cs(spark), plan).executeCollect()
-  }
+  /** DataFrame over a LocalRelation of InternalRows (a literal batch). */
+  def localDf(spark: SparkSession, rows: Seq[InternalRow],
+      schema: StructType): DataFrame =
+    classic.Dataset.ofRows(cs(spark),
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** Prepare a reusable PHYSICAL template from the optimized logical
     * plan: exchange/subquery reuse disabled (a ReusedExchange pointing
     * into the substitution path would serve another request's rows)
-    * and exchanges planned at `shufflePartitions` (the pruned serving
-    * working set is key-bounded — one partition is the right
-    * parallelism for a per-request job at ANY table scale; large batch
-    * requests take the dynamic path instead). Returns None when the
+    * and exchanges planned at ONE partition (the pruned serving working
+    * set is key-bounded — one partition is the right parallelism for a
+    * per-request job at ANY table scale). Returns None when a
     * placeholder does not appear as a plain RDD scan (or hides inside
     * a subquery), i.e. when physical substitution would be unsafe. */
   def preparePhysicalTemplate(spark: SparkSession, plan: LogicalPlan,
-      placeholder: RDD[InternalRow], shufflePartitions: Int,
-      required: Seq[RDD[InternalRow]] = Nil)
-      : Option[execution.SparkPlan] = {
+      placeholders: Seq[RDD[InternalRow]]): Option[execution.SparkPlan] = {
     SparkSession.setActiveSession(spark)
     val conf = cs(spark).sessionState.conf.clone()
-    conf.setConf(internal.SQLConf.SHUFFLE_PARTITIONS, shufflePartitions)
+    conf.setConf(internal.SQLConf.SHUFFLE_PARTITIONS, 1)
     conf.setConf(internal.SQLConf.EXCHANGE_REUSE_ENABLED, false)
     conf.setConf(internal.SQLConf.SUBQUERY_REUSE_ENABLED, false)
     // per-request plan copies would re-GENERATE whole-stage sources
@@ -120,20 +74,25 @@ object GraftServe {
       }
     def inSubquery(rdd: RDD[InternalRow]): Boolean =
       phys.subqueriesAll.exists(leafCount(_, rdd) > 0)
-    val all = placeholder +: required
-    if (all.exists(r => leafCount(phys, r) == 0 || inSubquery(r))) None
+    if (placeholders.exists(r => leafCount(phys, r) == 0 || inSubquery(r)))
+      None
     else Some(phys)
   }
 
-  /** Swap the physical placeholder scans for this request's rows.
-    * Ancestors of the swapped leaves are fresh copies (safe under
-    * concurrent requests); untouched static subtrees stay SHARED, so
+  /** Run a prepared template on one request: copy it with the
+    * placeholder scans swapped for this request's rows and this
+    * request's pruning key sets injected into its ServeKeyMembership
+    * markers (indexed by listIdx; a missing index stays unsubstituted =
+    * keep-everything, never wrong), then execute the copy. Ancestors of
+    * the swapped leaves are fresh copies (safe under concurrent
+    * requests); untouched static subtrees stay SHARED, so
     * dimension-table broadcasts build once per template, not per
-    * request. */
-  def substitutePhysical(plan: execution.SparkPlan,
+    * request. The active session is set first: each copied node takes
+    * its session from the calling thread. */
+  def executeTemplate(spark: SparkSession, plan: execution.SparkPlan,
       swaps: Seq[(RDD[InternalRow], RDD[InternalRow])],
-      pruneSets: IndexedSeq[java.util.HashSet[Any]] = IndexedSeq.empty)
-      : execution.SparkPlan = {
+      pruneSets: IndexedSeq[java.util.HashSet[Any]]): Array[InternalRow] = {
+    SparkSession.setActiveSession(spark)
     val swapped = plan.transform {
       case r: execution.RDDScanExec =>
         swaps.find(_._1 eq r.rdd) match {
@@ -141,18 +100,14 @@ object GraftServe {
           case None          => r
         }
     }
-    if (pruneSets.isEmpty) swapped
-    else swapped.transformAllExpressions {
-      case m: graft.functions.ServeKeyMembership
-          if m.keySet.isEmpty && m.listIdx < pruneSets.length =>
-        m.copy(keySet = Some(pruneSets(m.listIdx)))
-    }
-  }
-
-  def executeCollectPhysical(spark: SparkSession,
-      plan: execution.SparkPlan): Array[InternalRow] = {
-    SparkSession.setActiveSession(spark)
-    plan.executeCollect()
+    val injected =
+      if (pruneSets.isEmpty) swapped
+      else swapped.transformAllExpressions {
+        case m: graft.functions.ServeKeyMembership
+            if m.keySet.isEmpty && m.listIdx < pruneSets.length =>
+          m.copy(keySet = Some(pruneSets(m.listIdx)))
+      }
+    injected.executeCollect()
   }
 
   /** The stored temp-view relation INSTANCE a name currently resolves

@@ -135,4 +135,14 @@ class TextOpsSpec extends SparkSpec {
     assert(hintCount(bHint) == 2 && hintCount(bShuf) == 1)
     assert(bHint.collect().nonEmpty)
   }
+
+  test("the size gate registers no cache entry for the table it measures") {
+    // a registered entry outlives the caller's result, with the
+    // broadcasts of the plan that built it: one per call, for the
+    // session's lifetime
+    val t = Seq("a", "b", "a").toDF("term").groupBy("term").count()
+    val gated = TextOps.gatedVocabBroadcast(t, "term", 8, 1L << 20)
+    assert(t.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+    assert(gated.as[(String, Long)].collect().toSet == Set(("a", 2L), ("b", 1L)))
+  }
 }

@@ -238,4 +238,62 @@ class ServeTemplateSpec extends SparkSpec {
         "the first CALL of a long_windows deployment rebuilt its template")
     } finally GraftSql.resetDeployments(spark)
   }
+
+  test("a warm template answers a request on a thread with no active " +
+      "session") {
+    hist.createOrReplaceTempView("sv_hist")
+    val r = req(("u1", "gA", 25L, 100.0))
+    GraftSql.serveRequest(spark, q2win, r).collect() // warm build
+    val b0 = GraftSql.serveTemplateBuilds.get()
+    @volatile var out: scala.util.Try[org.apache.spark.sql.DataFrame] = null
+    val th = new Thread(() => {
+      org.apache.spark.sql.SparkSession.clearActiveSession()
+      out = scala.util.Try(GraftSql.serveRequest(spark, q2win, r))
+    })
+    th.start()
+    th.join()
+    // a template answer is a LocalRelation of the collected rows; a
+    // requestMode answer is a plan over the history
+    assert(out.get.queryExecution.logical.isInstanceOf[
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+      "the request was answered by requestMode, not the template")
+    assert(out.get.collect()(0).getDouble(2) == 103.0)
+    assert(GraftSql.serveTemplateBuilds.get() == b0)
+  }
+
+  test("a view re-registered with an identical plan keeps the template " +
+      "and is recorded on it") {
+    val q = q2win.replace("AS s_pk", "AS s_pk_rereg")
+    hist.createOrReplaceTempView("sv_hist")
+    val r = req(("u1", "gA", 25L, 100.0))
+    GraftSql.serveRequest(spark, q, r).collect()
+    hist.createOrReplaceTempView("sv_hist") // same plan, new instance
+    val b0 = GraftSql.serveTemplateBuilds.get()
+    assert(GraftSql.serveRequest(spark, q, r).collect()(0).getDouble(2) ==
+      103.0)
+    assert(GraftSql.serveTemplateBuilds.get() == b0,
+      "an identical re-registration rebuilt the template")
+    val t = graft.SessionState.of(spark).serveTemplates
+      .collectFirst { case (k, t) if k._1 == q => t }.get
+    val now = org.apache.spark.sql.GraftServe.rawTempView(spark, "sv_hist")
+    assert(now.isDefined && t.sources.exists { case (n, raw, _) =>
+      n == "sv_hist" && raw.exists(_ eq now.get) },
+      "the template still records the replaced view instance")
+  }
+
+  test("a literal batch over 1024 rows is answered by requestMode and " +
+      "builds no template") {
+    hist.createOrReplaceTempView("sv_hist")
+    val q = q2win.replace("AS s_pk", "AS s_pk_big")
+    val big = req((1 to 1025).map(i =>
+      (s"u${i % 3 + 1}", if (i % 2 == 0) "gA" else "gB", i.toLong,
+        i.toDouble)): _*)
+    val b0 = GraftSql.serveTemplateBuilds.get()
+    val served = GraftSql.serveRequest(spark, q, big)
+    assert(sortedRows(served) ==
+      sortedRows(GraftSql.requestMode(spark, q, big)))
+    assert(served.count() == 1025)
+    assert(GraftSql.serveTemplateBuilds.get() == b0,
+      "a batch over 1024 rows built a template")
+  }
 }
